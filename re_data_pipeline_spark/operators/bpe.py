@@ -32,6 +32,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from re_data_pipeline_spark.operators.ids import release_local_checkpoint
+from re_data_pipeline_spark.operators.layout import narrow_small_frame
+
 # '|' never occurs inside tokens: build_word_table keeps [a-z0-9]+ words.
 _SEP = "|"
 
@@ -109,13 +112,7 @@ def bpe_train(
     distributed.  The word table is localCheckpointed per round so round
     r+1's plan doesn't replay rounds 1..r.
     """
-    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
-
-    from re_data_pipeline_spark.operators.dedup import narrow_small_frame
-
     spark = df.sparkSession
-    # size-derived narrow before the checkpoint (r19): every merge round
-    # re-reads the checkpointed blocks — see narrow_small_frame
     words = narrow_small_frame(
         build_word_table(df, text_col, max_word_len)
     ).localCheckpoint()

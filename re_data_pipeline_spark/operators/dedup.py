@@ -46,7 +46,6 @@ md5 hex) and the fastest correct variant in this engine.
 
 from __future__ import annotations
 
-import os as _os
 import warnings
 
 from pyspark.sql import Column, DataFrame
@@ -57,6 +56,16 @@ from re_data_pipeline_spark.functions.text import (
     tokens,
     word_shingles,
     word_shingles_of,
+)
+from re_data_pipeline_spark.operators.ids import (
+    carry_caches,
+    carry_spines,
+    release_local_checkpoint,
+)
+from re_data_pipeline_spark.operators.layout import (
+    narrow_small_frame,
+    widen_for_pairs,
+    widen_small_frame,
 )
 
 
@@ -119,7 +128,7 @@ def minhash_signature(
     # 1.3-2.4 s stages on the 1-row-group local parquet — spreads to all
     # cores.  The stats gate skips it when the scan already has ≥cores
     # natural splits (a real 100 TB input).
-    sh_df = _widen_small_frame(df).withColumn(
+    sh_df = widen_small_frame(df).withColumn(
         "__toks", tokens(F.col(text_col))
     ).withColumn(
         "__sh", word_shingles_of(F.col("__toks"), shingle_words)
@@ -363,8 +372,6 @@ def near_dedup_pipeline(
     # four times (scoping union ×2, intersection join, final left join) and
     # each reference would otherwise replay the bucket self-join+distinct.
     # Measured on sf0.1 documents: 7.6 s → 1.1 s for the whole pipeline.
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     cands = lsh_candidate_pairs(df, id_col, text_col, num_hashes, shingle_words, bands)
     verified = jaccard_on_pairs(cands, df, id_col, text_col, shingle_words)
     losers = (
@@ -376,7 +383,7 @@ def near_dedup_pipeline(
     # carry the verifier's shingle pin AND the pair-list checkpoint: both
     # back the returned lineage, so they are only releasable by the caller
     # after materialization (release_spines handles both kinds) (r14)
-    return _carry_caches(verified, out, cands)
+    return carry_caches(verified, out, cands)
 
 
 def connected_components(
@@ -406,10 +413,7 @@ def connected_components(
         .distinct()
         # materialize: the edge list is referenced 2× per iteration, and its
         # lineage may be an expensive candidate-generation pipeline
-        # (size-derived narrow first — r19, see narrow_small_frame)
     ).localCheckpoint()
-    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
-
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -431,14 +435,15 @@ def connected_components(
             # partition (a full count, never limit(1) — a short-circuiting action
             # would truncate lineage with partitions missing from the cache),
             # caches the blocks, and returns the probe in the same pass.
-            new_labels = narrow_small_frame(
+            new_labels = (
                 labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
                 .select(
                     "node",
                     F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias("comp"),
                     (F.coalesce(F.col("nmin"), F.col("comp")) < F.col("comp")).alias("__changed"),
                 )
-            ).localCheckpoint(eager=False)
+                .localCheckpoint(eager=False)
+            )
             changed = new_labels.where(F.col("__changed")).count()
             # the count fully materialized new_labels, so the previous round's
             # checkpoint is no longer anyone's lineage root — release its blocks
@@ -471,9 +476,7 @@ def connected_components(
     # carry the final label checkpoint's handle so callers/harnesses can
     # release it after materialization (r15 — without this the block
     # survived clearCache for the session; same contract as pagerank_fixed)
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
-    return _carry_caches(out, out, prev_ckpt)
+    return carry_caches(out, out, prev_ckpt)
 
 
 def connected_components_bss(
@@ -542,20 +545,13 @@ def connected_components_bss(
         rewired = d.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
         return _dedup_edges(rewired.union(mins.select(F.col("u"), F.col("m").alias("v"))))
 
-    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
-
-    # size-derived narrow before each round checkpoint (r19, see
-    # narrow_small_frame) — the star-contraction loop re-scans the round's
-    # edge set 3× (large-star's union view + the probe union)
     edges = narrow_small_frame(
         _dedup_edges(pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
     ).localCheckpoint()
     new_edges = None
     try:
         for _ in range(max_iterations):
-            new_edges = narrow_small_frame(
-                _small_star(_large_star(edges))
-            ).localCheckpoint(eager=False)
+            new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
             # exact fixpoint probe AND checkpoint materializer in one job:
             # both sides are distinct (u, v) sets, so a group with exactly
             # one tagged member ⟺ the symmetric difference is non-empty.
@@ -593,9 +589,7 @@ def connected_components_bss(
     out = leaves.unionByName(roots).distinct()
     # carry the final star-forest checkpoint's handle (the returned frame
     # recomputes through it) — release_spines frees it after materialization
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
-    return _carry_caches(out, out, edges)
+    return carry_caches(out, out, edges)
 
 
 def cluster_dedup_pipeline(
@@ -631,11 +625,6 @@ def cluster_dedup_pipeline(
     # frame for release-after-materialization (r15; the old
     # release_spines(verified) call was a no-op — jaccard_on_pairs
     # deliberately attaches no handles since the r14 A/B rejection).
-    from re_data_pipeline_spark.operators.ids import (
-        carry_spines,
-        release_local_checkpoint,
-    )
-
     try:
         comps = connected_components(confirmed.select("id_a", "id_b"))
     finally:
@@ -697,11 +686,6 @@ def cluster_dedup_keep_best(
     # frame); CC's final label checkpoint backs comps and its carried
     # handle rides onto the returned frame (same discipline as
     # cluster_dedup_pipeline, r15)
-    from re_data_pipeline_spark.operators.ids import (
-        carry_spines,
-        release_local_checkpoint,
-    )
-
     try:
         comps = connected_components(confirmed.select("id_a", "id_b"))
     finally:
@@ -718,100 +702,6 @@ def cluster_dedup_keep_best(
         .select(id_col)
     )
     return carry_spines(comps, df.join(losers, id_col, "left_anti"))
-
-
-def _env_int(name: str, default: int) -> int:
-    """Parse an integer tuning knob from the environment, falling back to
-    the default on a malformed value (a bad knob must disable itself, not
-    break every import of the operators package — ADVICE r18)."""
-    raw = _os.environ.get(name)
-    if raw is None:
-        return default
-    try:
-        return int(raw)
-    except ValueError:
-        import warnings
-
-        warnings.warn(
-            f"{name}={raw!r} is not an integer; using default {default}"
-        )
-        return default
-
-
-_VERIFY_WIDEN_BYTES = _env_int("SPARK_GRAFT_VERIFY_WIDEN_BYTES", 32 << 20)
-
-
-def widen_small_frame(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a SMALL frame to full core parallelism
-    before a compute-dense verify stage (guide §2.5 input-parallelism:
-    a broadcast join's probe side inherits the scan's partitioning, so a
-    few-MB/few-split input serializes per-candidate work that is
-    QUADRATIC in bucket size onto a handful of cores — measured on
-    q215's SRP-cosine verify: 6.3 s → 2.4 s at 32 cores over a
-    2,075-row corpus).  Scale-adaptive, not a local-mode constant: fires
-    only when the optimizer's size estimate says the frame is under
-    ``cores × SPARK_GRAFT_VERIFY_WIDEN_BYTES`` (default 32 MB).  The gate
-    is deliberately CONSERVATIVE: with the default
-    ``spark.sql.files.maxPartitionBytes`` of 128 MB, frames between
-    cores×32 MB and cores×128 MB get neither the widen nor ≥cores natural
-    splits — in that band the per-partition work is ≥32 MB of input, big
-    enough that the scan partitions amortize their compute and the extra
-    exchange measured as a loss (the r18 corpus-scan probe); unknown
-    stats leave the frame untouched.  Row-set-preserving (round-robin
-    repartition; deterministic under retries via Spark's
-    sort-before-repartition default), so downstream join/CC results are
-    unchanged."""
-    from re_data_pipeline_spark.operators.selection import _plan_stats_bytes
-
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    nb = _plan_stats_bytes(df)
-    if nb is not None and 0 < nb < _VERIFY_WIDEN_BYTES * cores:
-        return df.repartition(cores)
-    return df
-
-
-# pre-r19 private name; widen_small_frame is now cross-module API (the LM
-# trainer and the fingerprint/verify paths share it), so it is public
-_widen_small_frame = widen_small_frame
-
-
-_NARROW_TARGET_BYTES = _env_int("SPARK_GRAFT_NARROW_TARGET_BYTES", 16 << 20)
-
-
-def narrow_small_frame(df: DataFrame) -> DataFrame:
-    """``widen_small_frame``'s dual: coalesce a SMALL shuffle-output frame
-    to a size-derived partition count before it is persisted/checkpointed
-    and re-scanned by an iterative loop (guide §2.4 tiny-task overhead /
-    §6 partition sizing).  A groupBy output inherits
-    ``spark.sql.shuffle.partitions`` (2×cores locally), AQE cannot
-    re-coalesce a CACHED plan (``canChangeCachedPlanOutputPartitioning``
-    is false by default), and every EM/merge round then pays ~70 near-empty
-    task launches per job — measured r19 on the unigram word table
-    (254 KB cached in 64 partitions, scanned by 34 jobs): q211 4.2 → 3.5 s,
-    q218 5.9 → 4.9 s, q212 4.4 → 3.8 s.
-
-    Scale-adaptive, not a local-mode constant: the partition count is
-    ``ceil(optimizer size estimate / SPARK_GRAFT_NARROW_TARGET_BYTES)``
-    (default 16 MB/partition; ≤ 0 disables), so a corpus-scale table keeps
-    ≥ its shuffle layout (the helper no-ops when the target count reaches
-    ``spark.sql.shuffle.partitions``) and unknown/inflated stats — e.g. a
-    child that is an unmaterialized cache — leave the frame untouched.
-    ``coalesce`` adds NO exchange and never touches the map side: the
-    expensive corpus scan/explode upstream keeps its parallelism; only the
-    post-shuffle reduce side narrows.  Row-set-preserving, so aggregates,
-    joins and results are unchanged."""
-    if _NARROW_TARGET_BYTES <= 0:
-        return df
-    from re_data_pipeline_spark.operators.selection import plan_stats_bytes
-
-    nb = plan_stats_bytes(df)
-    if nb is None or nb <= 0:
-        return df
-    n = int(nb // _NARROW_TARGET_BYTES) + 1
-    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    if n >= sp:
-        return df
-    return df.coalesce(n)
 
 
 def semantic_dedup_pipeline(
@@ -848,7 +738,7 @@ def semantic_dedup_pipeline(
     # side inherits this frame's partitioning (the build side broadcasts
     # at batch scale), and the per-pair cosine fold is the operator's
     # dominant compute — a 3-split local scan serialized it onto 3 cores
-    bucketed = _widen_small_frame(df).select(
+    bucketed = widen_small_frame(df).select(
         F.col(id_col), F.col(vec_col), srp_bucket(F.col(vec_col), planes).alias("__b")
     )
     a = bucketed.select(
@@ -869,8 +759,6 @@ def semantic_dedup_pipeline(
         F.col("node").alias(id_col)
     )
     # thread the star-forest checkpoint handle through to the caller (r15)
-    from re_data_pipeline_spark.operators.ids import carry_spines
-
     return carry_spines(comps, df.join(losers, id_col, "left_anti"))
 
 
@@ -1956,8 +1844,6 @@ def cross_corpus_contamination(
         .groupBy("train_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("__i"))
     )
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     out = (
         inter.join(za, "train_id")
         .join(zb, "bench_id")
@@ -1975,7 +1861,7 @@ def cross_corpus_contamination(
     )
     # the pair-list checkpoint backs the returned lineage (the
     # intersection base) — carry it so release_spines frees its blocks
-    return _carry_caches(out, out, cands)
+    return carry_caches(out, out, cands)
 
 
 def source_dup_rates(
@@ -2138,14 +2024,6 @@ def _es_bind(expr, fn):
 
 
 _ES_EMPTY_ANCH = "cast(array() as array<struct<p:int,v:bigint>>)"
-
-# Probe-side widening fires only when the guard's exact candidate estimate
-# promises at least this much extension work PER CORE — below it the extra
-# exchange/query-stage costs more than the spread buys (measured: q197's
-# 720k candidates win 9.4 → 6.2 s; q125/q219's sparse span tiers LOSE
-# 0.5-0.9 s under an unconditional widen).  Env-tunable.
-_ES_WIDEN_PAIRS_PER_CORE = _env_int("SPARK_GRAFT_ES_WIDEN_PAIRS_PER_CORE", 2048)
-
 
 def _es_anchor_table(
     t: DataFrame, id_col: str, min_len: int, k: int, w: int
@@ -2453,17 +2331,12 @@ def _exact_substring_merged_spans(
             on_degradation,
             "self-join",
         )
-        # Candidate-volume-gated probe widening (guide §2.5): the
-        # candidate join's probe side — where the per-candidate
+        # Candidate-volume-gated probe widening (layout.widen_for_pairs):
+        # the candidate join's probe side — where the per-candidate
         # extension folds run — inherits the anchor CACHE's partitioning,
         # and a 1-split local scan serialized the whole verify/extend
-        # stage onto one core (q197: a single 5.0 s task; 9.4 → 6.2 s
-        # A/B).  The guard's est_pairs — already on the driver — says
-        # whether there is enough extension work to amortize the extra
-        # exchange: sparse-candidate corpora (q125/q219's span tiers)
-        # measured a 0.5-0.9 s LOSS from an unconditional widen, so gate
-        # on ≥ _ES_WIDEN_PAIRS_PER_CORE candidates per core.  Reads from
-        # the cache; row-set preserving.  CAVEAT (ADVICE r18): the widened
+        # stage onto one core (q197: a single 5.0 s task).  The guard's
+        # est_pairs is already on the driver.  CAVEAT (ADVICE r18): the widened
         # partitioning only survives into the verify stage while one side
         # of the self-join broadcasts; if the anchor table outgrows
         # autoBroadcastJoinThreshold the fallback sort-merge join
@@ -2471,9 +2344,7 @@ def _exact_substring_merged_spans(
         # measured local-mode win that is size-bounded by construction —
         # the anchor cache of a corpus whose est_pairs clears the gate at
         # 32 cores is ~MBs here; re-measure before raising the gate).
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        if int(stats["est_pairs"] or 0) >= _ES_WIDEN_PAIRS_PER_CORE * cores:
-            anch = anch.repartition(cores)
+        anch = widen_for_pairs(anch, int(stats["est_pairs"] or 0))
 
     a, b = anch.alias("a"), anch.alias("b")
     cand = a.join(
@@ -2751,9 +2622,7 @@ def exact_substring_decontaminate(
         # candidate-volume-gated probe widening of the TRAINING-side
         # anchors (see _exact_substring_merged_spans — same trade, same
         # gate); the bench side stays as-is (broadcast-sized)
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        if int(stats["est_pairs"] or 0) >= _ES_WIDEN_PAIRS_PER_CORE * cores:
-            anch_a = anch_a.repartition(cores)
+        anch_a = widen_for_pairs(anch_a, int(stats["est_pairs"] or 0))
 
     a, b = anch_a.alias("a"), anch_b.alias("b")
     cand = a.join(b, F.col("a.__h") == F.col("b.__h")).select(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from re_data_pipeline_spark.functions.text import tokens
+from re_data_pipeline_spark.operators.ids import carry_caches
 
 _FIXED = 10**6
 
@@ -69,8 +70,6 @@ def token_js_divergence(
     # row), the same storage class as an ordinal spine — bounded by
     # Heaps-law vocab growth, never the corpus.  The handle rides the
     # result for ids.release_spines / engine.release.
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     joined = (
         ca.join(cb, ["__s", "__tok"], "full_outer")
         .select(
@@ -115,7 +114,7 @@ def token_js_divergence(
             F.round(F.col("js_micro") / float(_FIXED), 6).alias("js"),
         )
     )
-    return _carry_caches(out, out, joined)
+    return carry_caches(out, out, joined)
 
 
 def embedding_centroid_drift(

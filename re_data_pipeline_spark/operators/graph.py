@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.operators.ids import release_local_checkpoint
+from re_data_pipeline_spark.operators.ids import carry_caches, release_local_checkpoint
+from re_data_pipeline_spark.operators.layout import narrow_small_frame
 
 
 def pagerank_fixed(
@@ -50,16 +51,10 @@ def pagerank_fixed(
     ``_ordinal_caches`` so ``ids.release_spines`` frees it after
     materialization — it is a checkpoint scan, so release only after the
     result is consumed (the standard carry contract)."""
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
-    from re_data_pipeline_spark.operators.dedup import narrow_small_frame
-
     nodes = narrow_small_frame(
         edges.select(F.col(src).alias("n"))
         .union(edges.select(F.col(dst).alias("n")))
         .distinct()
-        # size-derived narrow before the checkpoint the loop re-reads
-        # (r19, see narrow_small_frame)
     ).localCheckpoint()
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).localCheckpoint()
     deg = e.groupBy("e_src").agg(F.count(F.lit(1)).alias("out_deg"))
@@ -75,7 +70,7 @@ def pagerank_fixed(
                 .select(F.col("e_dst").alias("n2"), "c")
             )
             incoming = contrib.groupBy("n2").agg(F.sum("c").alias("inc"))
-            new_ranks = narrow_small_frame(
+            new_ranks = (
                 nodes.join(incoming, nodes.n == incoming.n2, "left")
                 .select(
                     "n",
@@ -84,7 +79,8 @@ def pagerank_fixed(
                         + F.expr("85 * coalesce(inc, 0L) DIV 100")
                     ).alias("rank_f"),
                 )
-            ).localCheckpoint()  # eager: materializes, so prev is dead
+                .localCheckpoint()  # eager: materializes, so prev is dead
+            )
             release_local_checkpoint(prev)
             prev = ranks = new_ranks
     except BaseException:
@@ -99,13 +95,13 @@ def pagerank_fixed(
         # final round's checkpoint — the seed/edge checkpoints are dead.
         release_local_checkpoint(nodes)
         release_local_checkpoint(e)
-        return _carry_caches(out, out, ranks)
+        return carry_caches(out, out, ranks)
     # iterations=0 returns the uniform seed, which still recomputes THROUGH
     # the nodes checkpoint — carry ITS handle so release_spines frees it
     # after the caller materializes; the edge checkpoint is provably dead
     # (nothing in the returned lineage reads it), release it now (r15).
     release_local_checkpoint(e)
-    return _carry_caches(out, out, nodes)
+    return carry_caches(out, out, nodes)
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

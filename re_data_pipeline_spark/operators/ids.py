@@ -133,17 +133,13 @@ def carry_caches(src_df: DataFrame, out: DataFrame, new_cache) -> DataFrame:
     return out
 
 
-# pre-r19 private name, kept for the existing call sites
-_carry_caches = carry_caches
-
-
 def carry_spines(src_df: DataFrame, out: DataFrame) -> DataFrame:
     """Copy spine-cache handles from ``src_df`` onto ``out`` — for bodies
     that finish with ``.select(...)``/``.withColumn(...)``, which return a
     NEW DataFrame without the ``_ordinal_cache(s)`` attributes.  Without
     this, the final projection silently strips the only release handle and
     the persisted spine stays pinned for the session's lifetime."""
-    return _carry_caches(src_df, out, getattr(src_df, "_ordinal_cache", None))
+    return carry_caches(src_df, out, getattr(src_df, "_ordinal_cache", None))
 
 
 def release_local_checkpoint(df: DataFrame | None, blocking: bool = False) -> bool:
@@ -387,7 +383,7 @@ def grouped_prefix_sums(
         .withColumn(out_col, (F.col("__gps_cum") - F.col("__gps_base")).cast("bigint"))
         .drop("__gps_cum", "__gps_base", "__gps_ord")
     )
-    return _carry_caches(df, out, ps._ordinal_cache)
+    return carry_caches(df, out, ps._ordinal_cache)
 
 
 def exact_quantiles(
@@ -429,7 +425,7 @@ def exact_quantiles(
         .join(o, "__q_ord")
         .select("q_num", "q_den", F.col(value_col).alias(out_value_col))
     )
-    return _carry_caches(df, out, o._ordinal_cache)
+    return carry_caches(df, out, o._ordinal_cache)
 
 
 def grouped_exact_quantiles(
@@ -492,7 +488,7 @@ def grouped_exact_quantiles(
         .join(o.select(F.col("__gq_g"), F.col(value_col)), "__gq_g")
         .select(*group_cols, "q_num", "q_den", F.col(value_col).alias(out_value_col))
     )
-    return _carry_caches(df, out, o._ordinal_cache)
+    return carry_caches(df, out, o._ordinal_cache)
 
 
 def weighted_quantiles(
@@ -560,7 +556,7 @@ def weighted_quantiles(
             F.col("__wq_cum").alias("cum_weight"),
         )
     )
-    return _carry_caches(df, out, ps._ordinal_cache)
+    return carry_caches(df, out, ps._ordinal_cache)
 
 
 def rank_features(
@@ -608,7 +604,7 @@ def rank_features(
             else F.round(ord_c / F.lit(float(n - 1)), digits)
         )
         out = out.withColumn(percent_rank_col, pr)
-    return _carry_caches(df, out.drop("__ord_rf"), o._ordinal_cache)
+    return carry_caches(df, out.drop("__ord_rf"), o._ordinal_cache)
 
 
 def exact_ntile(

@@ -27,6 +27,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from re_data_pipeline_spark.functions.text import tokens, ws_tokens
+from re_data_pipeline_spark.operators.ids import (
+    assign_prefix_sums,
+    carry_caches,
+    carry_spines,
+)
 
 
 def inverted_index(
@@ -182,8 +187,6 @@ def pmi_collocations(
     # anchor corpus it is 32% FASTER (5.35 → 3.65 s) because the four
     # saved corpus explodes grow linearly while the vocab store grows
     # sublinearly — the scale-correct side of the trade.
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     cb = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_12")).persist()
     left = cb.groupBy("w1").agg(F.sum("n_12").alias("__c1"))
     right = cb.groupBy("w2").agg(F.sum("n_12").alias("__c2"))
@@ -219,7 +222,7 @@ def pmi_collocations(
             "rnk",
         )
     )
-    return _carry_caches(out, out, cb)
+    return carry_caches(out, out, cb)
 
 
 def vocab_coverage(
@@ -247,8 +250,6 @@ def vocab_coverage(
     cumulative-mass monotonicity makes ``min(cum | qualifying)`` the mass
     at the minimal k — no re-join to look it up.
     """
-    from re_data_pipeline_spark.operators.ids import assign_prefix_sums, carry_spines
-
     counts = (
         # ws_tokens: '' from empty docs is not a vocabulary type and its
         # occurrences are not token mass (r13 fix)

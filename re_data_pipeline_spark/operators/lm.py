@@ -42,6 +42,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from re_data_pipeline_spark.operators.ids import assign_ordinals, carry_caches
+from re_data_pipeline_spark.operators.layout import narrow_small_frame
+
 __all__ = ["ngram_lm_nll", "ngram_lm_train", "perplexity_buckets"]
 
 
@@ -98,12 +101,9 @@ def _train_tables(
     # same-mode); deployments that KNOW the model is reference-corpus-
     # bounded (CCNet-faithful) opt back into map-only scoring with
     # ``broadcast_model=True`` instead of relying on AQE to guess.
-    from re_data_pipeline_spark.operators.dedup import narrow_small_frame
-
     caches: list[DataFrame] = []
-    # size-derived narrow before each persist (r19, see narrow_small_frame)
-    # — when ``base`` is an unmaterialized cache its inflated size estimate
-    # makes this a documented no-op, preserving the r14 plan-hash notes
+    # when ``base`` is an unmaterialized cache its inflated size estimate
+    # makes narrow_small_frame a no-op, preserving the r14 plan-hash notes
     uni = narrow_small_frame(
         base.select(F.explode("__t").alias("__w")).groupBy("__w").agg(
             F.count(F.lit(1)).alias("__c1")
@@ -224,8 +224,6 @@ def ngram_lm_train(
     paid once per reference-corpus refresh instead of once per scoring
     run.
     """
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     t = _toks(text_col)
     base = train_df.select(t.alias("__t")).where(F.size("__t") > 0)
     tri_model, bi_model, uni_model, stats, caches = _train_tables(
@@ -247,7 +245,7 @@ def ngram_lm_train(
     }
     for k, df in out.items():
         for c in caches:
-            df = _carry_caches(df, df, c)
+            df = carry_caches(df, df, c)
         out[k] = df
     return out
 
@@ -337,10 +335,8 @@ def ngram_lm_nll(
     # pressure, not a win.  Turn it on when the INPUT lineage is expensive
     # (joins, filters over other operators) — or better, persist that
     # small upstream frame yourself (q206 persists its survivor set).
-    # Handles ride the spine-cache protocol (_carry_caches) so callers'
+    # Handles ride the spine-cache protocol (carry_caches) so callers'
     # release_spines/carry_spines free them after materialization.
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     caches: list[DataFrame] = []
     sc = score_df.select(F.col(id_col), t.alias("__t"))
     if cache_tokens:
@@ -439,7 +435,7 @@ def ngram_lm_nll(
     # hand the persisted-token handles to the caller via the spine-cache
     # protocol (release_spines / carry_spines free them after the action)
     for c in caches:
-        out = _carry_caches(out, out, c)
+        out = carry_caches(out, out, c)
     return out
 
 
@@ -469,8 +465,6 @@ def perplexity_buckets(
     ordinal, group sizes and first-ordinals from one |groups|-row agg
     broadcast back (the ``curriculum_interleave`` discipline).
     """
-    from re_data_pipeline_spark.operators.ids import _carry_caches, assign_ordinals
-
     if len(labels) < 2:
         raise ValueError(f"need ≥ 2 labels; got {labels!r}")
     b = len(labels)
@@ -498,5 +492,5 @@ def perplexity_buckets(
     # carry the INPUT's cache handles too (ngram_lm_nll's persisted token
     # frames ride scored_df._ordinal_caches) — carrying only the spine
     # would strip the caller's release handle for them (r13 fix, the
-    # standard ids._carry_caches protocol)
-    return _carry_caches(scored_df, out, getattr(o, "_ordinal_cache", None))
+    # standard ids.carry_caches protocol)
+    return carry_caches(scored_df, out, getattr(o, "_ordinal_cache", None))

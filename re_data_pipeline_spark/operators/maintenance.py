@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from re_data_pipeline_spark.operators.ids import carry_caches
+
 
 def plan_compaction(
     files: DataFrame,
@@ -518,7 +520,6 @@ def incremental_corpus_update(
         lsh_bands,
         minhash_signature,
     )
-    from re_data_pipeline_spark.operators.ids import _carry_caches
 
     if content_cols is None:
         content_cols = [text_col, "lang"]
@@ -554,9 +555,9 @@ def incremental_corpus_update(
     manifest = merge_shard_manifests(m_a, m_b)
     # live handles ride the kept frame: its own checkpoint + the span
     # tier's anchor pins (manifest recomputes through kept)
-    kept = _carry_caches(kept, kept, b_ded)
+    kept = carry_caches(kept, kept, b_ded)
     for c in getattr(es, "_anchor_caches", []) or []:
-        kept = _carry_caches(kept, kept, c)
+        kept = carry_caches(kept, kept, c)
     return {
         "kept": kept,
         "dropped": r["dropped"],

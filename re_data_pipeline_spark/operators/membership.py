@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from re_data_pipeline_spark.operators.ids import carry_caches
+
 
 def _bit_position(key: F.Column, salt: int, m_bits: int) -> F.Column:
     """i-th Bloom hash: md5-prefix (60 bits) of ``key#salt`` mod m."""
@@ -84,8 +86,6 @@ def bloom_prefilter_anti_join(
     KB-scale at any corpus size; its release handle rides the result
     (``ids.release_spines`` / ``engine.release``).
     """
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     bitmap = bloom_bitmap(corpus, key_col, m_bits, k).persist()
     key = F.col(key_col)
     probed = batch
@@ -122,7 +122,7 @@ def bloom_prefilter_anti_join(
         corpus.select(key_col), on=key_col, how="left_anti"
     )
     out = definitely_new.unionByName(verified_new)
-    return _carry_caches(out, out, bitmap)
+    return carry_caches(out, out, bitmap)
 
 
 def domain_blocklist_filter(

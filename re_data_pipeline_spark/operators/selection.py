@@ -31,6 +31,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from re_data_pipeline_spark.functions.text import tokens
+from re_data_pipeline_spark.operators.ids import (
+    assign_ordinals,
+    assign_prefix_sums,
+    carry_caches,
+    carry_spines,
+    release_local_checkpoint,
+)
+from re_data_pipeline_spark.operators.layout import (
+    KCENTER_PARTITION_BYTES,
+    partition_count,
+    plan_stats_bytes,
+)
 
 # Fixed-point scale for order-independent floating sums (see module doc).
 # 1e6 — NOT finer: the pre-round boundary test |frac(x·scale) − 0.5| must
@@ -109,8 +121,6 @@ def dsir_log_weights(
             .alias("lw_fixed"),
         )
     )
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     out = (
         tok.join(F.broadcast(model), "__b")
         .groupBy(id_col)
@@ -119,7 +129,7 @@ def dsir_log_weights(
             F.round(F.sum("lw_fixed") / float(_FIXED), 6).alias("dsir_logweight"),
         )
     )
-    return _carry_caches(out, out, bucket_counts)
+    return carry_caches(out, out, bucket_counts)
 
 
 def classifier_weight(bucket: Column, n_buckets: int) -> Column:
@@ -209,8 +219,6 @@ def mixture_allocation(
     # bounded-global-window: x is the |domains|-row quota table (one row
     # per domain after the groupBy), never the corpus
     w = Window.orderBy(F.desc("rem"), F.asc(domain_col))
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     out = (
         x.crossJoin(F.broadcast(leftover))
         .withColumn("__rk", F.row_number().over(w))
@@ -225,7 +233,7 @@ def mixture_allocation(
             .alias("quota"),
         )
     )
-    return _carry_caches(out, out, counts)
+    return carry_caches(out, out, counts)
 
 
 def grouped_split(
@@ -341,8 +349,6 @@ def quota_sample(
     """
     from pyspark.sql.window import Window
 
-    from re_data_pipeline_spark.operators.ids import carry_spines
-
     q_full = mixture_allocation(
         df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("__n")),
         domain_col,
@@ -393,8 +399,6 @@ def temperature_quotas(
     after operates on domain-cardinality data (same 100 TB story as
     ``mixture_allocation``).
     """
-    from re_data_pipeline_spark.operators.ids import carry_spines
-
     s = F.col(size_col) if isinstance(size_col, str) else size_col
     counts = df.groupBy(domain_col).agg(
         F.sum(s).cast("decimal(38,0)").alias("__n")
@@ -446,8 +450,6 @@ def snake_shards(
     single-partition sort stage.  The shard id is then pure row-local
     arithmetic.
     """
-    from re_data_pipeline_spark.operators.ids import assign_ordinals, carry_spines
-
     if num_shards < 1:
         raise ValueError(f"num_shards must be ≥ 1; got {num_shards}")
     s = F.col(size_col) if isinstance(size_col, str) else size_col
@@ -562,13 +564,11 @@ def char_bigram_nll(
             ),
         )
     )
-    from re_data_pipeline_spark.operators.ids import _carry_caches
-
     out = scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
         F.round(F.sum("__t") / (F.count(F.lit(1)) * 1e6), 6).alias("nll"),
     )
-    return _carry_caches(out, out, big)
+    return carry_caches(out, out, big)
 
 
 def curriculum_interleave(
@@ -599,8 +599,6 @@ def curriculum_interleave(
     within-tier rank is ``global ordinal − first ordinal of the tier``,
     with the T first-ordinals from a T-row agg broadcast back.
     """
-    from re_data_pipeline_spark.operators.ids import assign_ordinals, carry_spines
-
     t = F.col(tier_col)
     o = assign_ordinals(
         df.withColumn("__t", t.cast("int")),
@@ -646,8 +644,6 @@ def length_bucketed_batches(
     the bucket's first ordinal (|buckets|-row broadcast); the batch id is
     row-local integer division.
     """
-    from re_data_pipeline_spark.operators.ids import assign_ordinals, carry_spines
-
     if batch_rows < 1:
         raise ValueError(f"batch_rows must be ≥ 1; got {batch_rows}")
     s = F.col(size_col)
@@ -804,8 +800,6 @@ def train_quality_classifier(
         # the weights are driver rows — nothing downstream derives from the
         # feature checkpoint, so its storage blocks release on EVERY exit
         # (a mid-iteration failure otherwise leaks them)
-        from re_data_pipeline_spark.operators.ids import release_local_checkpoint
-
         release_local_checkpoint(feat)
     out = spark.createDataFrame(
         [(b, w[b]) for b in range(n_buckets)], "bucket bigint, weight_fixed bigint"
@@ -877,8 +871,6 @@ def contiguous_pack(
     proportional, never corpus-quadratic).  No further shuffle: the
     explode pipelines into the scan's output.
     """
-    from re_data_pipeline_spark.operators.ids import assign_prefix_sums, carry_spines
-
     if ctx_len < 1:
         raise ValueError(f"ctx_len must be ≥ 1; got {ctx_len}")
     spine = assign_prefix_sums(df, order_cols, size_col, out_col="__cum")
@@ -913,44 +905,6 @@ def contiguous_pack(
 # projection, so codegen/analysis cost grows O(k·dim) per round and the
 # route stops being viable long before the k≈10³ of coreset practice.
 _KCENTER_GREEDY_MAX_K = 64
-
-# Target partition size for the k-times-rescanned selection frame (r18,
-# guide §2.2/§6: fewer-larger partitions).  Every k-center round launches
-# one job over the frame's partitions, so per-round task-launch overhead
-# multiplies by k — a tiny frame split 16 ways pays k×16 task launches to
-# scan a few MB.  Coalesce the frame toward ~this many bytes per
-# partition, derived from the optimizer's OWN size estimate
-# (scale-adaptive: a multi-TB corpus keeps its full scan parallelism —
-# the coalesce only fires when the whole frame is below 1024 partitions'
-# worth).  Env-tunable for cluster profiles; the local default matches
-# spark.sql.files.maxPartitionBytes guidance (128 MB).
-_KCENTER_PARTITION_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_KCENTER_PARTITION_BYTES", str(128 << 20)
-    )
-)
-
-
-def plan_stats_bytes(df: DataFrame) -> int | None:
-    """The optimizer's size-in-bytes estimate for ``df`` (file-size-exact
-    for a bare parquet scan), or None when unavailable.
-
-    PUBLIC inter-module contract: every stats-gated rebalance
-    (``widen_small_frame``, the k-center coalesce probe) keys off this.
-    Fails open — any JVM/bridge error returns None and the caller
-    no-ops."""
-    try:
-        v = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        # py4j converts scala.math.BigInt to a Python int; older bridges
-        # hand back the Java object — str() covers both
-        return int(str(v))
-    except Exception:
-        return None
-
-
-# pre-r19 private name, kept for the existing call sites
-_plan_stats_bytes = plan_stats_bytes
-
 
 def kcenter_select(
     df: DataFrame,
@@ -1045,16 +999,14 @@ def kcenter_select(
     e = df.select(F.col(id_col), F.col(vec_col)).where(
         F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
     )
-    # Scale-adaptive narrowing (r18): the frame is re-scanned k times (one
-    # argmax job per round), so per-round task-launch overhead multiplies
-    # by k.  Target ~_KCENTER_PARTITION_BYTES per partition from the
-    # optimizer's size estimate; unknown stats (huge sentinel) or big
-    # inputs leave the scan parallelism untouched.  coalesce, not
-    # repartition: a narrow merge, no shuffle, no row-order change the
+    # the frame is re-scanned once per round: coalesce it toward
+    # KCENTER_PARTITION_BYTES per partition (see operators/layout.py);
+    # unknown stats (huge sentinel) or big inputs keep the scan parallelism.
+    # coalesce, not repartition: no shuffle, no row-order change the
     # argmax could see (the argmax is a total order anyway).
-    nb = _plan_stats_bytes(e)
-    if nb is not None and 0 < nb < _KCENTER_PARTITION_BYTES * 1024:
-        e = e.coalesce(max(1, -(-nb // _KCENTER_PARTITION_BYTES)))
+    nb = plan_stats_bytes(e)
+    if nb is not None and 0 < nb < KCENTER_PARTITION_BYTES * 1024:
+        e = e.coalesce(partition_count(nb, KCENTER_PARTITION_BYTES))
     seed = e.orderBy(F.asc(id_col)).limit(1).collect()
     if not seed:
         return df.sparkSession.createDataFrame([], out_schema)
@@ -1093,10 +1045,6 @@ def kcenter_select(
     # checkpoint blocks are invisible to unpersist()/clearCache(); release
     # via the shared helper, gated on the NEXT checkpoint being
     # materialized (see release_local_checkpoint's recompute caveat)
-    from re_data_pipeline_spark.operators.ids import (
-        release_local_checkpoint as _release_ckpt,
-    )
-
     frame = (
         e.where(F.col(id_col) != F.lit(seed[0][id_col]))
         .withColumn("__md", d_micro(list(seed[0][vec_col])))
@@ -1111,7 +1059,7 @@ def kcenter_select(
             far = frame.orderBy(F.desc("__md"), F.asc(id_col)).limit(1).collect()
             if prev is not None:
                 # no-op when prev IS a checkpoint (CacheManager doesn't
-                # hold it) — checkpoints release via _release_ckpt below
+                # hold it) — checkpoints release via release_local_checkpoint below
                 prev.unpersist()  # materialized child no longer needs it
             prev = frame
             if not far:
@@ -1132,7 +1080,7 @@ def kcenter_select(
                 # lineage root the moment the new one is materialized
                 # (even when it is still `prev`: prev's only remaining
                 # use is a no-op unpersist next round)
-                _release_ckpt(last_ckpt)
+                release_local_checkpoint(last_ckpt)
                 last_ckpt = frame
             else:
                 frame = frame.persist()
@@ -1145,7 +1093,7 @@ def kcenter_select(
                     pass
         # prev may still BE last_ckpt on early exhaustion — the loop is
         # over either way, so nothing can recompute through it anymore
-        _release_ckpt(last_ckpt)
+        release_local_checkpoint(last_ckpt)
         if frame is not last_ckpt:
-            _release_ckpt(frame)
+            release_local_checkpoint(frame)
     return df.sparkSession.createDataFrame(chosen, out_schema)

@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from re_data_pipeline_spark.operators.layout import narrow_small_frame
+
 __all__ = ["unigram_lm_train", "unigram_word_fertility"]
 
 _VOCAB_SCHEMA = StructType(
@@ -68,11 +70,6 @@ def _word_table(df: DataFrame, text_col: str, max_word_len: int) -> DataFrame:
     """(word, freq) over lowercase [a-z0-9]+ words of bounded length —
     includes single-character words (unlike ``bpe.build_word_table``: the
     unigram model must price every character)."""
-    from re_data_pipeline_spark.operators.dedup import narrow_small_frame
-
-    # size-derived narrow BEFORE the persist/rescan (r19): the EM loop
-    # re-scans this table once per round and a 2×cores-partition cached
-    # layout made every round's job ~70 near-empty task launches
     return narrow_small_frame(
         df.select(
             F.explode(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+")).alias("w")

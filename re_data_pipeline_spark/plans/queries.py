@@ -4302,10 +4302,10 @@ def q107_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both kept frames recompute through their batch's persisted bucket
     # table — carry the pins so release_spines frees them after the one
     # materialization (r15 leak audit: 2 tables pinned per call before)
-    from re_data_pipeline_spark.operators.ids import _carry_caches
+    from re_data_pipeline_spark.operators.ids import carry_caches
 
-    out = _carry_caches(out, out, r1["new_buckets"])
-    return _carry_caches(out, out, r2["new_buckets"])
+    out = carry_caches(out, out, r1["new_buckets"])
+    return carry_caches(out, out, r2["new_buckets"])
 
 
 @query(
@@ -5899,9 +5899,9 @@ def q153_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both engines filter on the same double quotient: with set sizes
     # ≤ ~60, neighbouring ratios are ≥ 5e-5 apart — far beyond one ulp, so
     # the float comparison cannot disagree with the exact rational test
-    from re_data_pipeline_spark.operators.ids import _carry_caches
+    from re_data_pipeline_spark.operators.ids import carry_caches
 
-    return _carry_caches(
+    return carry_caches(
         verified,
         verified.where(F.col("jaccard") >= 0.8).select(
             "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
@@ -6035,9 +6035,9 @@ def q152_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the .select strips the Python-side `_frontier_cache` attr — register
     # the range-partitioned pin on the spine protocol so release_spines
     # frees it after materialization (r15 leak audit)
-    from re_data_pipeline_spark.operators.ids import _carry_caches
+    from re_data_pipeline_spark.operators.ids import carry_caches
 
-    return _carry_caches(fr, out, getattr(fr, "_frontier_cache", None))
+    return carry_caches(fr, out, getattr(fr, "_frontier_cache", None))
 
 
 _Q148_SQL = """
@@ -7232,9 +7232,9 @@ def q165_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bfs returns its final visited CHECKPOINT frame directly; the cast
     # projection hides it from release_local_checkpoint(result), so carry
     # the checkpoint frame itself as the release handle (r15 leak audit)
-    from re_data_pipeline_spark.operators.ids import _carry_caches
+    from re_data_pipeline_spark.operators.ids import carry_caches
 
-    return _carry_caches(
+    return carry_caches(
         out, out.select("node", F.col("dist").cast("int").alias("dist")), out
     )
 
@@ -9662,9 +9662,9 @@ def q206_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = shard_manifest(deduped, "doc_id", ["text", "lang"], num_shards=16)
     # carry BOTH release handles (the buckets' ordinal spine and the
     # survivors persist) so release_spines after materialization frees them
-    from re_data_pipeline_spark.operators.ids import _carry_caches, carry_spines
+    from re_data_pipeline_spark.operators.ids import carry_caches, carry_spines
 
-    return _carry_caches(buck, carry_spines(buck, out), survivors)
+    return carry_caches(buck, carry_spines(buck, out), survivors)
 
 
 _Q207_SQL = r"""
@@ -10803,7 +10803,7 @@ def q219_fineweb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier; one map-combined manifest agg); stages chain through
     (doc_id)-keyed joins, never widening beyond the corpus."""
     from re_data_pipeline_spark.operators.dedup import exact_substring_dedup
-    from re_data_pipeline_spark.operators.ids import _carry_caches, carry_spines
+    from re_data_pipeline_spark.operators.ids import carry_caches, carry_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_nll, perplexity_buckets
     from re_data_pipeline_spark.operators.maintenance import shard_manifest
 
@@ -10839,8 +10839,8 @@ def q219_fineweb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = shard_manifest(final, "doc_id", ["text", "lang"], num_shards=16)
     # carry the live handles: the s2 checkpoint (the returned frame
     # recomputes through it) and the span tier's anchor cache
-    out = _carry_caches(out, out, s2)
-    return _carry_caches(out, out, getattr(es, "_anchor_cache", None))
+    out = carry_caches(out, out, s2)
+    return carry_caches(out, out, getattr(es, "_anchor_cache", None))
 
 
 def _q220_snapshot_cuts(
@@ -11086,7 +11086,7 @@ def q220_incremental_crawl_update(spark: SparkSession, sf_dir: str) -> DataFrame
     `code/airflow_gcp/dags/tasks/property_listings/get_AV_listings.py:117-124`
     generalized to corpus curation."""
     from re_data_pipeline_spark.operators.ids import (
-        _carry_caches,
+        carry_caches,
         carry_spines,
         release_local_checkpoint,
     )
@@ -11112,7 +11112,7 @@ def q220_incremental_crawl_update(spark: SparkSession, sf_dir: str) -> DataFrame
     # anchor pins (carried on upd["kept"]) and the a_fin checkpoint (the
     # manifest recomputes through both)
     out = carry_spines(upd["kept"], upd["manifest"])
-    return _carry_caches(out, out, a_fin)
+    return carry_caches(out, out, a_fin)
 
 
 _Q221_SQL = f"""

@@ -293,7 +293,7 @@ def streaming_incremental_dedup(
         # (block-manager resident), so the directory can go
         shutil.rmtree(ckpt, ignore_errors=True)
     from re_data_pipeline_spark.operators.ids import (
-        _carry_caches,
+        carry_caches,
         release_local_checkpoint,
     )
 
@@ -306,7 +306,7 @@ def streaming_incremental_dedup(
     # release_spines frees them once the caller has materialized
     out = state["kept"]
     for k in state["kept_ckpts"]:
-        out = _carry_caches(out, out, k)
+        out = carry_caches(out, out, k)
     return out
 
 

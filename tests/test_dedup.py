@@ -1178,34 +1178,3 @@ def test_incremental_lsh_kept_rides_new_buckets_handle(spark):
     assert persistent_ids(spark) - before, "bucket table should be pinned after materialization"
     assert release_handles(r["kept"]) >= 1
     assert not (persistent_ids(spark) - before)
-
-
-def test_narrow_small_frame_coalesces_and_preserves_rows(spark):
-    """narrow_small_frame (r19): a small shuffle-output frame coalesces to
-    a size-derived partition count with its row set intact; the knob's
-    disable value and the shuffle-layout ceiling both no-op."""
-    import re_data_pipeline_spark.operators.dedup as D
-
-    agg = (
-        spark.range(0, 1000)
-        .selectExpr("id % 97 AS k")
-        .groupBy("k")
-        .count()
-    )
-    base = sorted((r.k, r["count"]) for r in agg.collect())
-
-    narrowed = D.narrow_small_frame(agg)
-    # a few-KB agg output must land far below the 2x-cores shuffle layout
-    assert narrowed.rdd.getNumPartitions() < int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    assert sorted((r.k, r["count"]) for r in narrowed.collect()) == base
-
-    old = D._NARROW_TARGET_BYTES
-    try:
-        D._NARROW_TARGET_BYTES = 0  # env disable -> identity
-        assert D.narrow_small_frame(agg) is agg
-        D._NARROW_TARGET_BYTES = 1  # 1-byte target -> n >= shuffle layout -> no-op
-        assert D.narrow_small_frame(agg) is agg
-    finally:
-        D._NARROW_TARGET_BYTES = old

@@ -546,6 +546,9 @@ def test_kcenter_select_matches_bruteforce_reference(spark):
     # farthest-first: the selection-time radius is non-increasing
     radii = [t[2] for t in got[1:]]
     assert radii == sorted(radii, reverse=True)
+    # a vector column named after a SQL keyword selects the same centers
+    od = d.withColumnRenamed("embedding", "order")
+    assert [tuple(r) for r in kcenter_select(od, 4, vec_col="order").collect()] == expect
 
 
 def test_kcenter_select_degenerate_cases(spark):
