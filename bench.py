@@ -8,31 +8,34 @@ Each query is fully executed via the `noop` sink (computes everything,
 writes nothing — no driver collect bottleneck, no result materialization
 skew), which is how you'd benchmark a cluster job.
 
-Per-query time is the min of three executions (steady state): the first run
-of an expression-heavy plan pays Janino/whole-stage-codegen compilation
-(seconds of single-threaded JVM work that a long-lived cluster session
-amortizes away and that varies with host load); later runs measure the
-actual data-path cost, and min-of-3 absorbs host-load spikes that round-2
-showed can swing an unchanged plan by 1.7×.  Both runs recompute from the
-parquet scan — nothing is cached between them (`noop` materializes no
-result and no .persist() is involved).
+Per-query time is the min of three executions (SPARK_GRAFT_BENCH_RUNS sets
+the count): the first run of an expression-heavy plan pays Janino/whole-
+stage-codegen compilation (seconds of single-threaded JVM work that a
+long-lived cluster session amortizes away and that varies with host load);
+later runs measure the actual data-path cost, and min-of-3 absorbs
+host-load spikes that can swing an unchanged plan by 1.7×.  Every run
+starts from a cleared cache, so each recomputes from the parquet scan.
 
 Each query also records a PLAN HASH (md5 of the formatted physical plan
 with exec-ids/locations/codegen-stage numbers normalized out): if a later
 round's timing moves but the plan hash is unchanged, the delta is host
-noise, not a plan regression — attributable mechanically, no wall-of-text
-diffing.  Before printing, the hashes are DIFFED against the most recent
-recorded round (highest BENCH_r*.json in the repo root): every changed
-hash emits a `plan-change` warning line on stderr, so an unintended plan
-regression (a lost broadcast, a new shuffle, a pushdown that stopped
-firing) is flagged the moment it appears instead of surfacing as an
-unexplained timing drift a round later.  Intentional changes are expected
-to arrive with a commit that explains them.  Set SPARK_GRAFT_BENCH_RUNS
-to override the run count.
+noise, not a plan regression.  Every hash that differs from the reference
+record (the highest-numbered .benchmarks/bench_rNN.json) prints a
+`plan-change` warning on stderr, so a lost broadcast, a new shuffle or a
+pushdown that stopped firing is flagged in the run where it appears
+instead of as unexplained timing drift a round later.  Intentional
+changes arrive with a commit that explains them.
+
+Usage: python bench.py [query ...]   (default: every HEADLINE query)
+
+The payload is also written to .benchmarks/bench_rNN.json when
+SPARK_GRAFT_ROUND=NN is set (the round's committed record), otherwise to
+.benchmarks/bench_latest.json (git-ignored, never a reference).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -40,6 +43,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".benchmarks")
 
 HEADLINE = [
     "q01_pricing_summary",    # scan → filter → hash agg
@@ -191,116 +195,61 @@ def plan_hash(df) -> str:
     return hashlib.md5(normalize_plan_text(txt).encode("utf-8")).hexdigest()[:16]
 
 
-def prior_plan_hashes(root: str | None = None) -> tuple[str, dict[str, str]]:
-    """plan_hashes from the newest recorded round — the highest-numbered
-    BENCH_r*.json (driver record) OR .benchmarks/bench_r*.json (the
-    complete local record this tool writes), whichever round is newer.
-    The driver stores the bench stdout as a TAIL string field, and from
-    r13 on that tail truncates BEFORE plan_hashes — scanning only the
-    driver records silently fell back to r12's hashes and emitted 21
-    stale plan-change warnings per run (found r16).  The local records
-    are full JSON, so the newest round always yields real hashes.
-    Returns ("", {}) when no prior round (or no parseable hashes)
-    exists.  ``root`` overrides the scan directory (unit tests build a
-    synthetic record tree; the default is the repo root)."""
-    import glob
-
-    here = root or os.path.dirname(os.path.abspath(__file__))
-    cands: list[tuple[int, int, str]] = []
-    for pat, pref in (
-        (os.path.join(here, "BENCH_r*.json"), 1),
-        (os.path.join(here, ".benchmarks", "bench_r*.json"), 0),
-    ):
-        for f in glob.glob(pat):
-            if m := re.search(r"r(\d+)\.json$", f):
-                # driver record preferred on round ties (old behavior)
-                cands.append((int(m.group(1)), pref, f))
-    for _, _, path in sorted(cands, reverse=True):
+def prior_plan_hashes(bdir: str = BENCH_DIR) -> tuple[str, dict[str, str]]:
+    """plan_hashes from the newest parseable round record bench_rNN.json in
+    ``bdir``; ("", {}) when no such record holds plan hashes."""
+    rounds = sorted(
+        (int(m.group(1)), f)
+        for f in glob.glob(os.path.join(bdir, "bench_r*.json"))
+        if (m := re.search(r"bench_r(\d+)\.json$", f))
+    )
+    for _, path in reversed(rounds):
         try:
-            raw = open(path).read()
-            i = raw.find("plan_hashes")
-            if i < 0:
-                continue
-            j = raw.index("{", i)
-            depth, k = 0, j
-            while k < len(raw):
-                if raw[k] in "{}":
-                    depth += 1 if raw[k] == "{" else -1
-                    if depth == 0:
-                        break
-                k += 1
-            if k >= len(raw):
-                continue  # truncated tail: unbalanced braces, try older file
-            blob = raw[j : k + 1]
-            # the driver's tail field stores the line re-escaped ("\"q01\"")
-            if '\\"' in blob:
-                blob = blob.replace('\\"', '"')
-            return os.path.basename(path), json.loads(blob)
-        except (ValueError, OSError, IndexError, json.JSONDecodeError):
+            with open(path) as f:
+                hashes = json.load(f).get("plan_hashes")
+        except (OSError, ValueError, AttributeError):
             continue
+        if hashes:
+            return os.path.basename(path), hashes
     return "", {}
 
 
-def initial_round_slot(filed_rounds: list[int]) -> int:
-    """Default local-record slot: one past the newest driver-filed
-    BENCH_rN.json, floored by DRIVER_WINDOW_ROUND.  The driver can skip a
-    round (it filed no r10 records), so max(filed)+1 alone can point at the
-    skipped round's slot and clobber its local record (r11 verdict task 2);
-    the repo's own current-round stamp breaks that tie."""
-    nxt = max(filed_rounds) + 1 if filed_rounds else 1
-    try:
-        from re_data_pipeline_spark.plans.queries import DRIVER_WINDOW_ROUND
-
-        nxt = max(nxt, DRIVER_WINDOW_ROUND)
-    except Exception:
-        pass
-    return nxt
-
-
-def resolve_round_slot(bdir: str, nxt: int, payload_query_keys) -> tuple[int, str]:
-    """First slot >= nxt whose local record is absent, unreadable, or holds
-    the SAME query-key set as the new payload.  A differing key set means
-    the existing file is a DIFFERENT round's bench — never overwrite it
-    (bench_r10.json was lost exactly this way); slide forward instead."""
-    want = set(payload_query_keys)
-    while True:
-        target = os.path.join(bdir, f"bench_r{nxt:02d}.json")
-        if not os.path.exists(target):
-            return nxt, target
-        try:
-            with open(target) as f:
-                existing_keys = set(json.load(f).get("queries", {}))
-        except Exception:
-            # unreadable record: overwriting loses nothing parseable
-            return nxt, target
-        if existing_keys == want:
-            return nxt, target
-        print(
-            f"bench_r{nxt:02d}.json holds a different query set; "
-            "sliding to the next round slot",
-            file=sys.stderr,
-        )
-        nxt += 1
+def warn_plan_changes(plans: dict[str, str], bdir: str = BENCH_DIR) -> None:
+    """One `plan-change` line on stderr per hash that differs from the
+    reference record's; multi-job queries ("n/a") are never compared."""
+    ref_file, prior = prior_plan_hashes(bdir)
+    for name, h in plans.items():
+        old = prior.get(name)
+        if old and h != "n/a" and old != "n/a" and h != old:
+            print(
+                f"plan-change: {name} {old} -> {h} (vs {ref_file}) — "
+                "verify intentional (new shuffle / lost broadcast / pushdown?)",
+                file=sys.stderr,
+            )
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    runs = os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")
+    try:
+        n_runs = int(runs)
+    except ValueError:
+        n_runs = 0
     if n_runs < 1:
-        # 0 would leave every timing at float('inf'), and json.dumps
-        # emits the non-standard token Infinity — an unparseable record
-        # instead of a loud failure
-        raise SystemExit(f"SPARK_GRAFT_BENCH_RUNS must be >= 1; got {n_runs}")
+        # 0 would leave every timing at float('inf'), which json.dumps
+        # emits as the non-standard token Infinity: an unparseable record
+        raise SystemExit(f"SPARK_GRAFT_BENCH_RUNS must be >= 1; got {runs}")
 
     from re_data_pipeline_spark.plans.queries import QUERIES
     from re_data_pipeline_spark.session import get_spark
 
-    # Host load at run start (1/5/15-min): two same-code r12 records
-    # differed 1.47x median on IDENTICAL plan hashes (builder vs loaded
-    # judging host); recording it makes the noise band self-documenting
-    # instead of re-derived every judging round (r12 verdict, next #8).
+    names = sys.argv[1:] or HEADLINE
+    if unknown := [n for n in names if n not in QUERIES]:
+        raise SystemExit(f"unknown queries: {' '.join(unknown)}")
+
+    # host load at run start (1/5/15-min) explains drift on unchanged plans
     loadavg = list(os.getloadavg())
 
     spark = get_spark(app_name="bench")
@@ -311,7 +260,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     plans: dict[str, str] = {}
-    for name in HEADLINE:
+    for name in names:
         fn = QUERIES[name]
         # hash FIRST, on a cold catalog: hashing after the timed runs
         # raced the query's own spine-cache release (async unpersist) —
@@ -357,15 +306,7 @@ def main() -> None:
         timings[name] = round(best, 3)
         spark.catalog.clearCache()
 
-    ref_file, prior = prior_plan_hashes()
-    for name, h in plans.items():
-        old = prior.get(name)
-        if old and h != "n/a" and old != "n/a" and h != old:
-            print(
-                f"plan-change: {name} {old} -> {h} (vs {ref_file}) — "
-                "verify intentional (new shuffle / lost broadcast / pushdown?)",
-                file=sys.stderr,
-            )
+    warn_plan_changes(plans)
 
     total = round(sum(timings.values()), 3)
     payload = {
@@ -383,80 +324,15 @@ def main() -> None:
         "timing_protocol": "cold-cache-runs",
     }
     print(json.dumps(payload))
-    # ALSO write the complete record locally: the driver stores only a
-    # stdout TAIL, which truncated BENCH_r07's first seven headline rows
-    # (r7 verdict, What's missing #2) — .benchmarks/bench_r<N>.json keeps
-    # the repo's own full per-round record.  N: explicit SPARK_GRAFT_ROUND
-    # env var wins; otherwise initial_round_slot() (max(BENCH_r*)+1 floored
-    # by DRIVER_WINDOW_ROUND for driver-skipped rounds), EXCEPT when the
-    # newest BENCH_rN carries the same plan hashes as this run (same code
-    # state → a re-run of round N's bench after the driver filed it, so
-    # overwrite bench_rN instead of polluting the N+1 slot — r8 advice);
-    # resolve_round_slot() then refuses to overwrite any record holding a
-    # different query-key set (the r10 record was lost to that in r11).
+    # the complete record: the driver keeps only a truncated stdout tail
     try:
-        import glob
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        ns = [
-            int(m.group(1))
-            for f in glob.glob(os.path.join(here, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)", f))
-        ]
         env_round = os.environ.get("SPARK_GRAFT_ROUND")
-        if env_round:
-            nxt = int(env_round)
-        else:
-            nxt = initial_round_slot(ns)
-            try:
-                # Same-round re-run detection.  BENCH_rN.json is a DRIVER
-                # record (keys n/rc/cpus/sf/tail/parsed) whose bench payload
-                # only exists as an escaped string inside "tail", so
-                # json.load(...).get("plan_hashes") is always None and the
-                # old equality could never fire (r9 advice).  Reuse
-                # prior_plan_hashes(), which brace-parses the tail; the sf
-                # cross-check uses the COMPLETE local record bench.py itself
-                # wrote for that round (hash-identical plans at a different
-                # sf are possible — Location/Statistics are masked).
-                prior_name, prior_hashes = prior_plan_hashes()
-                same_sf = True
-                local_prev = os.path.join(
-                    here, ".benchmarks", f"bench_r{max(ns):02d}.json"
-                )
-                if os.path.exists(local_prev):
-                    with open(local_prev) as f:
-                        same_sf = json.load(f).get("sf") == payload["sf"]
-                if (
-                    # only when the floor didn't advance the slot: a
-                    # driver-skipped round with unchanged code would
-                    # otherwise relabel THIS round's run as the old one
-                    nxt == max(ns) + 1
-                    # round-number match, not exact filename: the newest
-                    # parseable hashes may come from the LOCAL record
-                    # (bench_rN.json) when the driver tail truncates (r16)
-                    and prior_name.lower().endswith(f"r{max(ns):02d}.json")
-                    and prior_hashes
-                    and prior_hashes == payload["plan_hashes"]
-                    and same_sf
-                ):
-                    nxt = max(ns)
-            except Exception:
-                pass
-        bdir = os.path.join(here, ".benchmarks")
-        os.makedirs(bdir, exist_ok=True)
-        nxt, target = resolve_round_slot(bdir, nxt, payload["queries"])
-        with open(target, "w") as f:
+        label = f"r{int(env_round):02d}" if env_round else "latest"
+        os.makedirs(BENCH_DIR, exist_ok=True)
+        with open(os.path.join(BENCH_DIR, f"bench_{label}.json"), "w") as f:
             json.dump(payload, f, indent=1)
     except Exception as e:  # the record is best-effort; never fail the bench
         print(f"local bench record not written: {e}", file=sys.stderr)
-    # Keep README's driver-window paragraph generated (r8 verdict: the
-    # hand-written paragraph drifted two rounds running)
-    try:
-        from tools.gen_window_doc import main as _gen_window_doc
-
-        _gen_window_doc()
-    except Exception as e:
-        print(f"window doc not regenerated: {e}", file=sys.stderr)
 
 
 if __name__ == "__main__":

@@ -1057,8 +1057,8 @@ def prefix_filter_pairs(
     df size is under ``spark.sql.autoBroadcastJoinThreshold`` — the
     size-bounded gate, for free.
 
-    Input-sensitivity caveat (measured, tools/scale_probe.py): candidate
-    volume grows ~n²/|V| — prefix filtering is effective exactly when
+    Input-sensitivity caveat (measured, SCALING.md §Measured scaling):
+    candidate volume grows ~n²/|V| — prefix filtering is effective exactly when
     rarest-first prefix tokens are rare.  Real text obeys Heaps' law
     (vocabulary grows with the corpus) and stays near-linear; a
     low-diversity corpus (fixed small vocabulary: logs, templated text)
@@ -1182,8 +1182,8 @@ def simhash_radius_pairs(
     (:func:`simhash_multi`), so width is unbounded — the r7 single-BIGINT
     representation capped bands at ~16 bits at radius 3, a quadratic
     candidate floor no skew-handling can fix.  Measured
-    (tools/scale_probe.py): at fixed radius and adequate width, candidate
-    rows grow ~linearly with docs; at the capped width they grow ~n².
+    (SCALING.md §Measured scaling): at fixed radius and adequate width,
+    candidate rows grow ~linearly with docs; at the capped width they grow ~n².
 
     ``on_degradation`` guards the band join the way
     ``prefix_filter_pairs`` guards its prefix join: one map-combined
@@ -1413,10 +1413,10 @@ def _containment_candidates(
 ) -> DataFrame:
     """Candidate cut of :func:`containment_best` — ``(id_a, __na, id_b)``
     from the prefix-vs-postings equi-join over a ``(id_col, tok)``
-    distinct-token table.  Factored out so measurement tooling
-    (tools/verify_attr_probe.py) exercises the SAME expressions the
-    operator runs instead of a hand-copied replica that could silently
-    diverge (r15 review finding)."""
+    distinct-token table.  Factored out so a measurement exercises the
+    SAME expressions the operator runs instead of a hand-copied replica
+    that could silently diverge; the candidate/verify split it measured is
+    in SCALING.md §sf1 anchor ("q153/q169 verify-stage attribution")."""
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ordered = toks.join(dfreq, "tok").select(
         id_col, F.struct(F.col("df"), F.col("tok")).alias("key")

@@ -132,6 +132,9 @@ def _train_tables(
         .withColumn("__w1", F.split(F.col("__g2"), " ")[0])
     ).persist()
     caches.append(bi)
+    # tri is NOT narrowed: narrow_small_frame targets persisted tables that
+    # are re-scanned, and tri is neither persisted nor read by anything but
+    # tri_model, so its groupBy output is consumed once by the join below
     tri = (
         base.select(
             F.explode(

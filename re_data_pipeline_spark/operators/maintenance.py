@@ -751,7 +751,8 @@ def corpus_receipt_diff(
     flat fixture reads every row and filters in the scan.  With it, the
     literal IN predicate lands on the partition column itself and
     becomes REAL partition pruning: only the divergent shards' files
-    are opened (measured by ``tools/q222_pruning_probe.py``).  Layout
+    are opened (measured in SCALING.md §sf1 anchor, "q222 receipt
+    audit").  Layout
     contract: the stored column must equal ``pmod(md5_60(id),
     num_shards)`` — what :func:`shard_manifest` shards by; a corpus
     written by this engine's receipt family satisfies it by

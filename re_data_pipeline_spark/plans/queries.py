@@ -10851,12 +10851,12 @@ def _q220_snapshot_cuts(
     — the frozen curated corpus A and the gated new batch B that feed
     `operators/maintenance.incremental_corpus_update`.  Shared VERBATIM
     (the r16 `_curation_s1` precedent: one code path, one plan) by q220
-    and `tools/q220_production_probe.py`, which stages these frames to
-    parquet and times the maintenance core's production (injected
-    frozen-state) path against the fixture recompute path.  Upstream
-    pins (LM model tables, rank spine, survivor frame) are released
-    HERE, once the checkpoints materialize; the caller owns the two
-    checkpoint handles.
+    and any measurement that stages these frames to parquet and times the
+    maintenance core's production (injected frozen-state) path against
+    the fixture recompute path; SCALING.md §sf1 anchor holds the last
+    such measurement.  Upstream pins (LM model tables, rank spine,
+    survivor frame) are released HERE, once the checkpoints materialize;
+    the caller owns the two checkpoint handles.
 
     ``frozen_out`` (r18, probe-only): when a dict is passed, the gating
     tier's remaining frozen pieces are stashed into it — ``a1`` (the

@@ -1,14 +1,5 @@
-"""Regression tests for bench.py's local-record round-slot logic.
-
-Round-11 verdict task 2: the driver filed no BENCH_r10.json, so during
-round 11 ``max(filed)+1`` pointed the r11 payload at bench_r10.json and
-destroyed round 10's local record.  Two guards now prevent that:
-
-* ``initial_round_slot`` floors the slot by ``DRIVER_WINDOW_ROUND`` so a
-  driver-skipped round cannot pull the slot backwards, and
-* ``resolve_round_slot`` refuses to overwrite an existing record whose
-  query-key set differs from the new payload's (a different round's
-  bench), sliding forward instead.
+"""Tests for bench.py's plan-hash normalization, reference-record lookup,
+plan-change warning and run-count and query-name validation.
 
 Pure-Python tests — no SparkSession needed.
 """
@@ -25,62 +16,21 @@ import bench  # noqa: E402
 from re_data_pipeline_spark.plans.queries import DRIVER_WINDOW_ROUND  # noqa: E402
 
 
-def _write(bdir, n, queries):
-    path = os.path.join(bdir, f"bench_r{n:02d}.json")
-    with open(path, "w") as f:
-        json.dump({"queries": {q: 1.0 for q in queries}, "sf": 0.1}, f)
-    return path
+def _record(bdir, name, hashes):
+    (bdir / name).write_text(json.dumps({"plan_hashes": hashes}))
 
 
-def test_initial_slot_floored_by_window_round():
-    # Driver skipped a round: newest filed record is two rounds back.
-    filed = [DRIVER_WINDOW_ROUND - 2]
-    assert bench.initial_round_slot(filed) == DRIVER_WINDOW_ROUND
+def test_bench_runs_must_be_an_integer(monkeypatch):
+    # validated before Spark is imported, so no session starts
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "x")
+    with pytest.raises(SystemExit, match=">= 1; got x"):
+        bench.main()
 
 
-def test_initial_slot_normal_progression():
-    # Newest filed record IS the current round: next slot is current+1,
-    # ahead of the floor.
-    filed = [DRIVER_WINDOW_ROUND]
-    assert bench.initial_round_slot(filed) == DRIVER_WINDOW_ROUND + 1
-    assert bench.initial_round_slot([]) == max(1, DRIVER_WINDOW_ROUND)
-
-
-def test_resolve_slot_free(tmp_path):
-    nxt, target = bench.resolve_round_slot(str(tmp_path), 10, {"qa", "qb"})
-    assert nxt == 10 and target.endswith("bench_r10.json")
-
-
-def test_resolve_slot_same_keyset_overwrites(tmp_path):
-    # Same query-key set = re-run of the same round's bench: keep the slot.
-    _write(str(tmp_path), 10, ["qa", "qb"])
-    nxt, target = bench.resolve_round_slot(str(tmp_path), 10, {"qb", "qa"})
-    assert nxt == 10 and target.endswith("bench_r10.json")
-
-
-def test_resolve_slot_skipped_round_clobber(tmp_path):
-    # THE r11 incident: slot 10 holds round 10's record (different query
-    # set); the new payload must slide to 11, leaving r10 intact.
-    p10 = _write(str(tmp_path), 10, ["qa", "qb"])
-    before = open(p10).read()
-    nxt, target = bench.resolve_round_slot(str(tmp_path), 10, {"qa", "qb", "qc"})
-    assert nxt == 11 and target.endswith("bench_r11.json")
-    assert open(p10).read() == before
-
-
-def test_resolve_slot_slides_past_multiple(tmp_path):
-    _write(str(tmp_path), 10, ["qa"])
-    _write(str(tmp_path), 11, ["qb"])
-    nxt, target = bench.resolve_round_slot(str(tmp_path), 10, {"qc"})
-    assert nxt == 12 and target.endswith("bench_r12.json")
-
-
-def test_resolve_slot_unreadable_record_is_overwritable(tmp_path):
-    path = os.path.join(str(tmp_path), "bench_r10.json")
-    with open(path, "w") as f:
-        f.write("{not json")
-    nxt, target = bench.resolve_round_slot(str(tmp_path), 10, {"qa"})
-    assert nxt == 10 and target == path
+def test_unknown_query_name_rejected_before_spark(monkeypatch):
+    monkeypatch.setattr(sys, "argv", ["bench.py", "q01_pricing_summary", "q_nope"])
+    with pytest.raises(SystemExit, match="unknown queries: q_nope"):
+        bench.main()
 
 
 def test_normalize_plan_text_masks_rdd_callsite():
@@ -129,37 +79,32 @@ def test_normalize_plan_text_masks_query_stage_ids():
 
 
 def test_prior_plan_hashes_resolves_newest_parseable_record(tmp_path):
-    """r16: the driver's BENCH_r*.json stdout tails truncate BEFORE
-    plan_hashes from r13 on, and the old scanner (repo-root driver
-    records only) silently fell back to r12's hashes — 21 stale
-    plan-change warnings per bench run.  Synthetic record tree (r17
-    advice: unit-level, decoupled from the live repo's release-process
-    state): a truncated driver record at the newest round must be skipped
-    in favor of the same round's complete local record; an older full
-    driver record must not win; escaped driver-tail hashes still parse."""
-    bdir = tmp_path / ".benchmarks"
-    bdir.mkdir()
-    # r12 driver record: full, with tail-escaped plan_hashes (old format)
-    (tmp_path / "BENCH_r12.json").write_text(
-        '{"tail": "... \\"plan_hashes\\": {\\"q01\\": \\"aaaa\\"} ..."}'
+    """The highest-numbered parseable bench_rNN.json wins; an unparseable
+    newest record is skipped; session/latest records never count."""
+    _record(tmp_path, "bench_r09.json", {"q01": "aaaa"})
+    _record(tmp_path, "bench_r10.json", {"q01": "bbbb", "q02": "cccc"})
+    _record(tmp_path, "bench_r11_end_session.json", {"q01": "ffff"})
+    _record(tmp_path, "bench_latest.json", {"q01": "ffff"})
+    assert bench.prior_plan_hashes(str(tmp_path)) == (
+        "bench_r10.json",
+        {"q01": "bbbb", "q02": "cccc"},
     )
-    # r13 driver record: tail TRUNCATED mid-hashes (the incident shape)
-    (tmp_path / "BENCH_r13.json").write_text(
-        '{"tail": "... \\"plan_hashes\\": {\\"q01\\": \\"bb'
-    )
-    # r13 local record: complete JSON with hashes — must win
-    (bdir / "bench_r13.json").write_text(
-        json.dumps({"plan_hashes": {"q01": "cccc", "q02": "dddd"}})
-    )
-    name, hashes = bench.prior_plan_hashes(root=str(tmp_path))
-    assert name == "bench_r13.json" and hashes == {"q01": "cccc", "q02": "dddd"}
-    # without the local r13 record the scanner falls back PAST the
-    # truncated r13 driver tail to r12's escaped-but-parseable hashes
-    (bdir / "bench_r13.json").unlink()
-    name, hashes = bench.prior_plan_hashes(root=str(tmp_path))
-    assert name == "BENCH_r12.json" and hashes == {"q01": "aaaa"}
-    # empty tree: graceful empty result
-    assert bench.prior_plan_hashes(root=str(tmp_path / "nowhere")) == ("", {})
+    (tmp_path / "bench_r11.json").write_text('{"plan_hashes": {"q01": "dd')
+    assert bench.prior_plan_hashes(str(tmp_path))[0] == "bench_r10.json"
+    assert bench.prior_plan_hashes(str(tmp_path / "nowhere")) == ("", {})
+
+
+def test_plan_change_warned_only_on_differing_hash(tmp_path, capsys):
+    _record(tmp_path, "bench_r05.json", {"q01": "aaaa", "q02": "n/a"})
+    plans = {"q01": "bbbb", "q02": "cccc", "q03": "dddd"}
+    bench.warn_plan_changes(plans, str(tmp_path))
+    err = capsys.readouterr().err.splitlines()
+    assert err == [
+        "plan-change: q01 aaaa -> bbbb (vs bench_r05.json) — "
+        "verify intentional (new shuffle / lost broadcast / pushdown?)"
+    ]
+    bench.warn_plan_changes({"q01": "aaaa"}, str(tmp_path))
+    assert capsys.readouterr().err == ""
 
 
 @pytest.mark.repo_gate

@@ -1,11 +1,14 @@
-"""Capture `.explain("formatted")` for headline queries into plans/<round>/.
+"""Capture `.explain("formatted")` for the queries a change touches into
+plans/<round>/.
 
-Usage: python tools/capture_plans.py <suffix> [query ...]
+Usage: python tools/capture_plans.py <suffix> <query> [query ...]
 
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt (round defaults
-to r19) for each named query (default: every bench HEADLINE query).  For iterative multi-job pipelines the returned
-frame is the final (tiny) result frame — the file still records it, plus a
-note that the query's cost is in its driver rounds, not this plan.
+to r19) for each named query.  Untouched queries need no dump: their plan
+hashes are in every bench record.  For iterative multi-job pipelines the
+returned frame is the final (tiny) result frame — the file still records
+it, plus a note that the query's cost is in its driver rounds, not this
+plan.
 
 Evidence artifact for the optimization round: the judge diffs the _before
 and _after files against the claims in OPTIMIZATION_r18.md.
@@ -22,12 +25,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    from bench import HEADLINE
+    if len(sys.argv) < 3:
+        raise SystemExit("usage: capture_plans.py <suffix> <query> [query ...]")
+    suffix, names = sys.argv[1], sys.argv[2:]
     from re_data_pipeline_spark.plans.queries import QUERIES
     from re_data_pipeline_spark.session import get_spark
 
-    names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="capture_plans")
     spark.sparkContext.setLogLevel("ERROR")

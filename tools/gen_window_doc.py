@@ -1,12 +1,12 @@
 """Regenerate README.md's driver-window paragraph from the actual
 ``DRIVER_WINDOW`` list — the paragraph drifted from the shipped window in
 rounds 7 AND 8 (hand-written counts went stale as queries landed late in
-the round), so it is now generated and can't drift.
+the round), so it is now generated.
 
-Runs standalone (``python tools/gen_window_doc.py``) and is also invoked
-best-effort at the end of every ``bench.py`` run.  Rewrites only the text
-between the ``DRIVER_WINDOW:BEGIN``/``END`` markers; exits 1 if the
-markers are missing.
+Run it (``python tools/gen_window_doc.py``) whenever ``DRIVER_WINDOW``
+changes.  Rewrites only the text between the
+``DRIVER_WINDOW:BEGIN``/``END`` markers; exits 1 if the markers are
+missing.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Cumulative stage metrics via the Spark status REST API — the ONE copy.
 
-Used by bench-family tools (shuffle_audit, scale_probe, sf1_anchor) to
+Used by bench-family tools (shuffle_audit, sf1_anchor) to
 diff shuffle/input volume around a query execution.  Shared here because
 the same eviction bug was previously patched in three separate copies.
 

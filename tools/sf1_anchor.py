@@ -1,7 +1,7 @@
 """sf1 same-host anchor for the heavy operator family.
 
-BENCH_r*.json times the headline queries at sf0.1; the scale probe covers
-synthetic corpora to 50k docs.  This tool closes the gap between them: it
+BENCH_r*.json times the headline queries at sf0.1; SCALING.md §Measured
+scaling covers synthetic corpora to 50k docs; this tool closes the gap: it
 runs the heaviest BENCH queries — q71 near-dedup, q82 connected
 components, q128 keep-best dedup, q136 PageRank, q153 prefix-filter join,
 q167 simhash radius (120-bit bands), q169 containment join —
@@ -214,7 +214,7 @@ def main() -> int:
                 # cold cache per run (r13 fix): a plan-identical rebuild is
                 # otherwise served run 1's pinned cache, so run 2's wall
                 # and shuffle delta measured the warm path — exactly the
-                # failure scale_probe.run_probe documents and defends
+                # failure bench.py's cold-cache protocol defends
                 spark.catalog.clearCache()
                 before = _shuffle_records(ui, app_id)
                 t0 = time.time()
@@ -289,7 +289,7 @@ def main() -> int:
             nxt = tail.find("\n## ")
             old_sec, rest = (tail[:nxt], tail[nxt:]) if nxt >= 0 else (tail, "\n")
             # preserve hand-written reading subsections (### ...) below the
-            # table — the r12 scale_probe/bench clobber lessons apply here
+            # table — the r12 clobber lessons apply here
             sub = old_sec.find("\n### ")
             if sub >= 0:
                 section = section.rstrip() + "\n" + old_sec[sub:].rstrip() + "\n"
