@@ -1402,76 +1402,6 @@ def hamming_radius_pairs_on_words(
     return out
 
 
-def _containment_candidates(
-    toks: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    threshold_num: int,
-    threshold_den: int,
-    on_degradation: str,
-    cap_pairs_per_doc: int,
-) -> DataFrame:
-    """Candidate cut of :func:`containment_best` — ``(id_a, __na, id_b)``
-    from the prefix-vs-postings equi-join over a ``(id_col, tok)``
-    distinct-token table.  Factored out so a measurement exercises the
-    SAME expressions the operator runs instead of a hand-copied replica
-    that could silently diverge; the candidate/verify split it measured is
-    in SCALING.md §sf1 anchor ("q153/q169 verify-stage attribution")."""
-    dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    ordered = toks.join(dfreq, "tok").select(
-        id_col, F.struct(F.col("df"), F.col("tok")).alias("key")
-    )
-    per_doc = ordered.groupBy(id_col).agg(
-        F.array_sort(F.collect_list("key")).alias("keys")
-    )
-    sz = F.size("keys")
-    ceil_t = F.floor(
-        (F.lit(threshold_num) * sz + F.lit(threshold_den - 1)) / F.lit(threshold_den)
-    )
-    prefix_len = (sz - ceil_t + F.lit(1)).cast("int")
-    pre = per_doc.select(
-        F.col(id_col).alias("id_a"),
-        sz.alias("__na"),
-        F.explode(F.slice("keys", 1, prefix_len)).alias("k"),
-    ).select("id_a", "__na", F.col("k.tok").alias("tok"))
-    full_b = toks.select(F.col(id_col).alias("id_b"), "tok")
-    if on_degradation != "off":
-        # EXACT pre-filter candidate volume of the prefix-vs-full equi-join:
-        # Σ_tok pre(tok)·df(tok) — every (prefix row, posting row) token
-        # match becomes one candidate row before the id_a≠id_b filter and
-        # distinct.  Cost: one pass over the prefix lineage + the
-        # (vocab-sized) token-df agg; n_docs is a cheap input count.
-        stats = (
-            pre.groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("pc"))
-            .join(dfreq, "tok")
-            .agg(
-                F.sum(F.col("pc") * F.col("df")).alias("est_pairs"),
-                F.max("df").alias("max_df"),
-            )
-            .first()
-        )
-        n_docs = df.count()
-        est = int(stats["est_pairs"] or 0)
-        if est > cap_pairs_per_doc * max(n_docs, 1):
-            msg = (
-                f"containment_best degradation: ~{est} candidate rows for "
-                f"{n_docs} docs (cap {cap_pairs_per_doc}/doc; max token df "
-                f"{stats['max_df']}) — low-diversity vocabulary; every prefix "
-                "token is common, so the prefix-vs-postings join is degrading "
-                "toward all-pairs."
-            )
-            if on_degradation == "error":
-                raise RuntimeError(msg)
-            warnings.warn(msg)
-    return (
-        pre.join(full_b, "tok")
-        .where(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "__na", "id_b")
-        .distinct()
-    )
-
-
 def containment_best(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1530,9 +1460,59 @@ def containment_best(
     toks = df.select(
         F.col(id_col), F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok")
     ).persist()
-    cands = _containment_candidates(
-        toks, df, id_col, threshold_num, threshold_den,
-        on_degradation, cap_pairs_per_doc,
+    # candidates: prefix tokens (rarest-first) equi-joined to the postings
+    dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    ordered = toks.join(dfreq, "tok").select(
+        id_col, F.struct(F.col("df"), F.col("tok")).alias("key")
+    )
+    per_doc = ordered.groupBy(id_col).agg(
+        F.array_sort(F.collect_list("key")).alias("keys")
+    )
+    sz = F.size("keys")
+    ceil_t = F.floor(
+        (F.lit(threshold_num) * sz + F.lit(threshold_den - 1)) / F.lit(threshold_den)
+    )
+    prefix_len = (sz - ceil_t + F.lit(1)).cast("int")
+    pre = per_doc.select(
+        F.col(id_col).alias("id_a"),
+        sz.alias("__na"),
+        F.explode(F.slice("keys", 1, prefix_len)).alias("k"),
+    ).select("id_a", "__na", F.col("k.tok").alias("tok"))
+    full_b = toks.select(F.col(id_col).alias("id_b"), "tok")
+    if on_degradation != "off":
+        # EXACT pre-filter candidate volume of the prefix-vs-full equi-join:
+        # Σ_tok pre(tok)·df(tok) — every (prefix row, posting row) token
+        # match becomes one candidate row before the id_a≠id_b filter and
+        # distinct.  Cost: one pass over the prefix lineage + the
+        # (vocab-sized) token-df agg; n_docs is a cheap input count.
+        stats = (
+            pre.groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("pc"))
+            .join(dfreq, "tok")
+            .agg(
+                F.sum(F.col("pc") * F.col("df")).alias("est_pairs"),
+                F.max("df").alias("max_df"),
+            )
+            .first()
+        )
+        n_docs = df.count()
+        est = int(stats["est_pairs"] or 0)
+        if est > cap_pairs_per_doc * max(n_docs, 1):
+            msg = (
+                f"containment_best degradation: ~{est} candidate rows for "
+                f"{n_docs} docs (cap {cap_pairs_per_doc}/doc; max token df "
+                f"{stats['max_df']}) — low-diversity vocabulary; every prefix "
+                "token is common, so the prefix-vs-postings join is degrading "
+                "toward all-pairs."
+            )
+            if on_degradation == "error":
+                raise RuntimeError(msg)
+            warnings.warn(msg)
+    cands = (
+        pre.join(full_b, "tok")
+        .where(F.col("id_a") != F.col("id_b"))
+        .select("id_a", "__na", "id_b")
+        .distinct()
     )
     # exact |T(a) ∩ T(b)| per candidate: a's tokens matched against b's
     ta = toks.select(F.col(id_col).alias("id_a"), "tok")

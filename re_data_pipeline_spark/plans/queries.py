@@ -4847,8 +4847,8 @@ def q118_global_ordinals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the r17 record, builder-parity-verified), which touches q202/q210
 # (r14-green, ALSO the two oldest-band rows the fill would claim
 # anyway), q203/q206 (compose ngram_lm_nll), q219/q220 (LM inside the
-# curation tiers; q220 additionally: `_q220_snapshot_cuts` grew the
-# probe-only `frozen_out` stash — default path byte-identical); plus
+# curation tiers; q220 additionally: a since-removed probe hook in
+# `_q220_snapshot_cuts` — default path byte-identical); plus
 # q221 (r17-green; `corpus_retraction` now passes its pre-distinct id
 # frame to the index prune — PHYSICAL plan hash unchanged, Catalyst was
 # already collapsing the nested distinct; in by the r17 q220
@@ -4872,7 +4872,7 @@ DRIVER_WINDOW: list[str] = [
     # (a) never driver-checked: this round's net-new query
     "q222_corpus_receipt_diff",
     # (b) changed this round after their last driver check (LM
-    # injected-model refactor; q220 frozen_out stash; q221 distinct
+    # injected-model refactor; q220 probe hook; q221 distinct
     # hand-off — all plan hashes pinned identical to the r17 records)
     "q202_ngram_lm_nll", "q210_ngram_lm_pruned", "q203_ccnet_buckets",
     "q206_curation_v3", "q219_fineweb_trace",
@@ -10843,34 +10843,13 @@ def q219_fineweb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     return carry_caches(out, out, getattr(es, "_anchor_cache", None))
 
 
-def _q220_snapshot_cuts(
-    spark: SparkSession, d: DataFrame, frozen_out: dict | None = None
-):
+def _q220_snapshot_cuts(spark: SparkSession, d: DataFrame):
     """q220's policy tiers: the snapshot split plus the frozen-LM CCNet
     cut, returning the two stage-boundary checkpoints ``(a_fin, b_cur)``
     — the frozen curated corpus A and the gated new batch B that feed
-    `operators/maintenance.incremental_corpus_update`.  Shared VERBATIM
-    (the r16 `_curation_s1` precedent: one code path, one plan) by q220
-    and any measurement that stages these frames to parquet and times the
-    maintenance core's production (injected frozen-state) path against
-    the fixture recompute path; SCALING.md §sf1 anchor holds the last
-    such measurement.  Upstream pins (LM model tables, rank spine,
-    survivor frame) are released HERE, once the checkpoints materialize;
-    the caller owns the two checkpoint handles.
-
-    ``frozen_out`` (r18, probe-only): when a dict is passed, the gating
-    tier's remaining frozen pieces are stashed into it — ``a1`` (the
-    A-half survivor set the reference LM trains on), ``thr`` (the frozen
-    per-language CCNet thresholds, eagerly checkpointed — its lineage
-    crosses the rank spine released below, and spine recomputes are not
-    evaluation-stable; the caller releases the |langs|-row handle), and
-    ``b_pre`` (B's pre-LM blocklist/Gopher survivors, the frame a
-    production daily ingest actually starts scoring from).  References
-    to frames the body already builds (plus one extra filter over
-    ``s1`` and the tiny thr checkpoint) — the returned ``(a_fin,
-    b_cur)`` plan is unchanged.  ``a1``/``b_pre`` recompute through the
-    deterministic pre-LM curation lineage (the ``s1`` pin is released
-    here as always), so stage them to parquet before heavy reuse."""
+    `operators/maintenance.incremental_corpus_update`.  Upstream pins (LM
+    model tables, rank spine, survivor frame) are released HERE, once the
+    checkpoints materialize; the caller owns the two checkpoint handles."""
     from re_data_pipeline_spark.operators.ids import carry_spines, release_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_nll, perplexity_buckets
 
@@ -10902,15 +10881,6 @@ def _q220_snapshot_cuts(
     # blocklist→Gopher→LM tree (r15 stage-boundary discipline)
     a_fin = s1.join(a_kept.select("doc_id"), "doc_id").localCheckpoint()
     b_cur = s1.join(b_keep_ids, "doc_id").localCheckpoint()
-    if frozen_out is not None:
-        frozen_out["a1"] = a1
-        # thr flows through the rank spine released below, and a spine
-        # recompute is NOT stable across evaluations (two references to
-        # the unpinned ordinals can disagree → bucket index out of
-        # range): materialize it NOW, before the release — |langs| rows;
-        # the caller owns (and releases) the checkpoint handle
-        frozen_out["thr"] = thr.localCheckpoint()
-        frozen_out["b_pre"] = s1.where(F.col("doc_id") % 2 == 1)
     # the checkpoints materialized the curation tier — every upstream pin
     # (LM model tables, the rank spine, the survivor frame) is dead NOW
     release_spines(buck)

@@ -12,8 +12,10 @@ Usage: python tools/profile_query.py <query> [more queries...]
        [--runs N] (default 1 timed run after the plan-hash probe)
 
 Per query prints: wall, sum(job durations), gap = wall - sum(jobs),
-job count, top jobs by duration with their group/description, and the
-cumulative shuffle/input deltas across the run.
+job count, compiles (generated classes compiled during the timed run; a
+steady run that still compiles is thrashing the codegen cache), top jobs
+by duration with their group/description, and the cumulative
+shuffle/input deltas across the run.
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ def main() -> None:
         release_spines,
     )
     from re_data_pipeline_spark.plans.queries import QUERIES
-    from re_data_pipeline_spark.session import get_spark
+    from re_data_pipeline_spark.session import codegen_compiles, get_spark
     from tools.rest_metrics import stage_totals
 
     spark = get_spark(
@@ -73,10 +75,12 @@ def main() -> None:
             pre_jobs = {j["jobId"] for j in jobs_snapshot(ui, app_id)}
             pre_stage = stage_totals(ui, app_id)
             spark.sparkContext.setJobDescription(f"profile: {name}")
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
+            compiles = codegen_compiles(spark) - c0
             release_spines(df)
             release_local_checkpoint(df)
             post = [
@@ -84,8 +88,8 @@ def main() -> None:
             ]
             post_stage = stage_totals(ui, app_id)
             if best is None or wall < best[0]:
-                best = (wall, post, pre_stage, post_stage)
-        wall, post, pre_stage, post_stage = best
+                best = (wall, post, pre_stage, post_stage, compiles)
+        wall, post, pre_stage, post_stage, compiles = best
         # job wall from submission->completion timestamps (ISO GMT)
         from datetime import datetime
 
@@ -96,7 +100,8 @@ def main() -> None:
             ts(j["completionTime"]) - ts(j["submissionTime"]) for j in post
         )
         print(f"\n=== {name}: wall={wall:.2f}s jobs={len(post)} "
-              f"job_time={tot_job:.2f}s driver_gap={wall - tot_job:.2f}s")
+              f"job_time={tot_job:.2f}s driver_gap={wall - tot_job:.2f}s "
+              f"compiles={compiles}")
         top = sorted(
             post,
             key=lambda j: ts(j["completionTime"]) - ts(j["submissionTime"]),
