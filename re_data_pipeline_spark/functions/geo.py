@@ -11,9 +11,8 @@ types, so this kernel represents geometry as plain columns:
   for both the R-tree (J3) and the 4096-cell nested loop (J10): a cell id is
   a shuffle key, so spatial joins become equi-joins Catalyst can plan.
 
-Everything except ray-casting is a pure Column expression.  Ray-casting for
-arbitrary polygons is a vectorized pandas UDF (Arrow-batched); axis-aligned
-cells use the expression fast path.
+Everything is a pure Column expression except the pandas-UDF (Arrow-batched)
+forms of the ray cast, which share one numpy kernel (``_raycast_batch``).
 """
 
 from __future__ import annotations
@@ -66,25 +65,6 @@ def euclidean_distance(x1, y1, x2, y2) -> Column:
     dx = _c(x1) - _c(x2)
     dy = _c(y1) - _c(y2)
     return F.sqrt(dx * dx + dy * dy)
-
-
-def haversine_m(lat1, lon1, lat2, lon2) -> Column:
-    """Great-circle distance in meters (pure expressions)."""
-    rlat1, rlat2 = F.radians(_c(lat1)), F.radians(_c(lat2))
-    dlat = F.radians(_c(lat2) - _c(lat1))
-    dlon = F.radians(_c(lon2) - _c(lon1))
-    a = (
-        F.sin(dlat / 2) * F.sin(dlat / 2)
-        + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon / 2) * F.sin(dlon / 2)
-    )
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
-
-
-def point_in_rect(x, y, xmin: Column, ymin: Column, xmax: Column, ymax: Column) -> Column:
-    """Axis-aligned containment — the expression fast path for grid cells.
-    Matches shapely ``within`` edge semantics (strict on max edges, inclusive
-    handled by caller as needed)."""
-    return (_c(x) >= xmin) & (_c(x) < xmax) & (_c(y) >= ymin) & (_c(y) < ymax)
 
 
 def utm_project(lat: Column | str, lon: Column | str, zone: int = 12) -> tuple[Column, Column]:
@@ -238,37 +218,20 @@ def point_in_rings_expr(
     return point_in_edges_expr(x, y, rings_to_edges(rings))
 
 
-def point_in_polygon_udf():
-    """Ray-casting pandas UDF: (x, y, ring) → bool, ``ring`` a single
-    array<struct<x,y>> (closed or open).  Used by the point-in-polygon join
-    (J2) *after* a bbox prefilter has cut candidates, so cost is
-    proportional to candidate pairs, not |points| × |polygons|; the edge
-    arithmetic itself is one numpy pass per Arrow batch (no per-row Python
-    loop in the join path).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(BooleanType())
-    def _pip(x: pd.Series, y: pd.Series, ring: pd.Series) -> pd.Series:
-        return _raycast_batch(x, y, [None if r is None else [r] for r in ring])
-
-    return _pip
-
-
 def point_in_multipolygon_udf():
     """Ray-casting pandas UDF for multi-ring geometries: (x, y, rings) →
     bool, ``rings`` an array<array<struct<x,y>>> — outer ring(s) plus
     interior holes, even-odd across all rings.  This is the reference's
     zoning-geometry shape (MultiPolygons with holes,
-    ``get_zoning_data.py:33-34,53-56``); same vectorized kernel as the
-    single-ring UDF.
+    ``get_zoning_data.py:33-34,53-56``); same vectorized kernel as
+    ``point_in_flat_rings_udf``.
 
     CAVEAT: pyspark's Arrow→pandas conversion rejects RAGGED nested lists
     (rings of differing vertex counts in one geometry — e.g. a 50-vertex
     outer ring with an 8-vertex hole) with "inhomogeneous shape".  The PIP
     join therefore feeds the UDF kernel through the flattened encoding
     (``point_in_flat_rings_udf``); this form survives for geometries that
-    are homogeneous by construction and for API compatibility.
+    are homogeneous by construction, and the PIP tests use it as an oracle.
     """
     from pyspark.sql.functions import pandas_udf
 

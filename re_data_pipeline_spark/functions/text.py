@@ -164,17 +164,6 @@ def top_ngram_char_fraction(col: Column | str, n: int) -> Column:
     return top_ngram_char_fraction_of(word_shingles(col, n, distinct=False), c)
 
 
-def duplicate_line_fraction(col: Column | str, sep: str = "\n") -> Column:
-    """Fraction of non-empty lines that duplicate an earlier line —
-    (total − distinct) / total, Gopher's duplicate-line filter.  NULL when
-    there are no non-empty lines."""
-    lines = F.filter(
-        F.transform(F.split(_c(col), sep), lambda l: F.trim(l)),
-        lambda l: l != "",
-    )
-    return F.try_divide(F.size(lines) - F.size(F.array_distinct(lines)), F.size(lines))
-
-
 def quality_score(col: Column | str) -> Column:
     """Deterministic document-quality score in [0, 1].
 

@@ -71,22 +71,6 @@ def canonical_url(col: Column | str) -> Column:
     return F.when(scheme == "", F.trim(c)).otherwise(canonical)
 
 
-def url_host(col: Column | str) -> Column:
-    """Lowercased host of a URL — userinfo and port stripped, bracketed
-    IPv6 literals kept whole — the key a crawl-curation domain filter
-    operates on (scheme-less inputs yield '').  ``user@h:80`` → ``h``;
-    ``[::1]:8080`` → ``[::1]`` (a bare ``:\\d+$`` strip would truncate the
-    address itself)."""
-    c = _c(col)
-    auth = F.regexp_extract(c, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)
-    auth = F.regexp_replace(auth, r"^[^@]*@", "")
-    host = F.when(
-        auth.startswith("["),
-        F.regexp_extract(auth, r"^(\[[^\]]*\])", 1),
-    ).otherwise(F.regexp_replace(auth, r":\d+$", ""))
-    return F.lower(host)
-
-
 def domain_suffixes(host: Column | str) -> Column:
     """All dot-suffix domains of a host, most-specific first:
     ``a.b.example.com`` → [a.b.example.com, b.example.com, example.com,

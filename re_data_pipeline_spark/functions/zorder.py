@@ -54,11 +54,3 @@ def morton_sql(x: str, y: str) -> str:
         return out
 
     return f"({spread(x)} | ({spread(y)} << 1))"
-
-
-def zorder_layout(df, x: str, y: str, num_files: int):
-    """Range-partition + sort by the Morton key — the write-side layout
-    operator: each output file covers a compact z-curve segment, giving
-    tight min/max stats on both ``x`` and ``y`` for scan-time skipping."""
-    keyed = df.withColumn("zkey", morton_key(x, y))
-    return keyed.repartitionByRange(num_files, "zkey").sortWithinPartitions("zkey")

@@ -2444,44 +2444,6 @@ def _exact_substring_merged_spans_grams(
     return _es_merge(sp, id_col)
 
 
-def exact_substring_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = 50,
-    k: int | None = None,
-    on_degradation: str = "warn",
-    cap_pairs_per_doc: int = 64,
-    impl: str = "anchors",
-) -> DataFrame:
-    """Profiling half of the ExactSubstr tier: one row per duplicated span
-    — ``(id_col, span_start, span_end)``, 1-based inclusive token
-    positions, merged (disjoint, adjacent-coalesced) per document.  See
-    :func:`_exact_substring_merged_spans` for semantics, the declarative
-    oracle form, and the 100 TB plan shape; ``impl="grams"`` selects the
-    guaranteed-linear all-grams route
-    (:func:`_exact_substring_merged_spans_grams`)."""
-    if impl == "grams":
-        merged, cache = (
-            _exact_substring_merged_spans_grams(df, id_col, text_col, min_len),
-            None,
-        )
-    elif impl == "anchors":
-        merged, cache = _exact_substring_merged_spans(
-            df, id_col, text_col, min_len, k, on_degradation, cap_pairs_per_doc
-        )
-    else:
-        raise ValueError(f"impl must be 'anchors' or 'grams', got {impl!r}")
-    out = merged.select(F.col(id_col), F.explode("__msp").alias("__x")).select(
-        F.col(id_col),
-        F.col("__x.s").alias("span_start"),
-        F.col("__x.e").alias("span_end"),
-    )
-    if cache is not None:
-        out._anchor_cache = cache
-    return out
-
-
 def exact_substring_dedup(
     df: DataFrame,
     id_col: str = "doc_id",

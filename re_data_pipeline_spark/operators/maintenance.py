@@ -59,17 +59,6 @@ def plan_compaction(
     )
 
 
-def compaction_summary(
-    planned: DataFrame, partition_cols: list[str], size_col: str = "size_bytes"
-) -> DataFrame:
-    """Roll a compaction plan up to one row per output bin: file count and
-    total bytes — the review surface before launching the rewrite jobs."""
-    return planned.groupBy(*[F.col(c) for c in partition_cols], F.col("bin")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_files"),
-        F.sum(size_col).cast("bigint").alias("bin_bytes"),
-    )
-
-
 def scd2_history(
     changes: DataFrame,
     keys: list[str],

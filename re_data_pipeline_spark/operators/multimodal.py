@@ -7,14 +7,12 @@ Design for 100 TB of media:
 - a media row is ``(media_id, kind, content binary, meta struct)`` — the
   binary column is *never* parsed by Catalyst, so scans prune it unless the
   operator actually needs bytes (check ReadSchema in .explain);
-- decode/resize/frame-sample run as ``mapInPandas`` stages — Arrow moves the
+- decode and fingerprint run as ``mapInPandas`` stages — Arrow moves the
   bytes column batch-wise, one decoder instance per task;
 - actual codec work is pluggable.  The default decoder is a clearly-marked
-  deterministic fake (shape/feature math from the byte stream itself);
-  ``decoder="real"`` dispatches to the import-gated PIL/soundfile/PyAV
-  codecs in ``_real_decode`` — the import happens inside the executor task
-  and raises with a clear message when the codec lib is absent (this
-  container ships none of them).  The Spark-side plumbing — schemas,
+  deterministic fake (shape/feature math from the byte stream itself); a
+  real codec is passed in as a callable ``(bytes, kind) -> ndarray`` and
+  runs inside the executor task.  The Spark-side plumbing — schemas,
   batching, partitioning — is real and tested either way.
 """
 
@@ -60,8 +58,8 @@ MEDIA_SCHEMA = StructType(
 
 def _fake_decode(content: bytes, kind: str) -> np.ndarray:
     """Deterministic stand-in for a real decoder: derives a pixel/sample
-    array from the byte stream via a seeded hash.  Marked FAKE — the
-    import-gated real codecs are ``_real_decode``."""
+    array from the byte stream via a seeded hash.  Marked FAKE — a real
+    codec is passed to the operators as a callable."""
     seed = int(hashlib.md5(content or b"").hexdigest()[:8], 16)
     rng = np.random.RandomState(seed)
     if kind == "image":
@@ -73,53 +71,14 @@ def _fake_decode(content: bytes, kind: str) -> np.ndarray:
     raise ValueError(f"unknown media kind: {kind}")
 
 
-def _real_decode(content: bytes, kind: str) -> np.ndarray:
-    """Production decoders, import-gated per media kind (the PyMuPDF
-    pattern, ``sources/pdf.py:33``): the codec import happens at DECODE
-    time inside the executor task, so an environment without the optional
-    lib fails loudly with an ImportError naming the extra to install —
-    never silently, never at driver import time.
-
-    - image → PIL (extra: ``image``), RGB uint8 (H, W, 3)
-    - audio → soundfile (extra: ``audio``), mono float32 samples
-    - video → PyAV (extra: ``video``), stacked RGB frames (N, H, W, 3)
-    """
-    import io
-
-    if kind == "image":
-        from PIL import Image  # optional dependency (install extra: `image`)
-
-        with Image.open(io.BytesIO(content)) as im:
-            return np.asarray(im.convert("RGB"), dtype=np.uint8)
-    if kind == "audio":
-        import soundfile  # optional dependency (install extra: `audio`)
-
-        data, _rate = soundfile.read(io.BytesIO(content), dtype="float32")
-        return data if data.ndim == 1 else data.mean(axis=1).astype(np.float32)
-    if kind == "video":
-        import av  # PyAV — optional dependency (install extra: `video`)
-
-        frames = []
-        with av.open(io.BytesIO(content)) as container:
-            for frame in container.decode(video=0):
-                frames.append(frame.to_ndarray(format="rgb24"))
-        if not frames:
-            raise ValueError("video stream decoded to zero frames")
-        return np.stack(frames)
-    raise ValueError(f"unknown media kind: {kind}")
-
-
 def _decode_fn(decoder):
     """Resolve the ``decoder`` knob: ``"fake"`` (deterministic, testable
-    offline), ``"real"`` (import-gated codecs), or a callable
-    ``(bytes, kind) -> ndarray`` for custom codecs."""
+    offline) or a callable ``(bytes, kind) -> ndarray`` for real codecs."""
     if decoder == "fake":
         return _fake_decode
-    if decoder == "real":
-        return _real_decode
     if callable(decoder):
         return decoder
-    raise ValueError(f"decoder must be 'fake', 'real' or a callable, got {decoder!r}")
+    raise ValueError(f"decoder must be 'fake' or a callable, got {decoder!r}")
 
 
 def decode_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
@@ -130,8 +89,6 @@ def decode_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
     ``decoded_shape array<int>``.  Plumbing contract: the decoder sees Arrow
     batches; feature length is fixed (16) so downstream similarity operators
     (``operators.similarity``) apply unchanged to media embeddings.
-    ``decoder="real"`` routes through the import-gated PIL/soundfile/PyAV
-    codecs (``_real_decode``); the import happens inside the executor task.
     """
     out_fields = [f for f in df.schema.fields if f.name != "content"] + [
         StructField("feature", ArrayType(FloatType())),
@@ -155,78 +112,6 @@ def decode_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
             out["feature"] = feats
             out["decoded_shape"] = shapes
             yield out
-
-    return df.mapInPandas(run, schema)
-
-
-def resize_images(df: DataFrame, width: int, height: int, decoder: str = "fake") -> DataFrame:
-    """Image resize stage: content → resized content bytes (fake:
-    re-encoded deterministic bytes of the target size; real: PIL
-    decode → resize → PNG re-encode, import-gated inside the task)."""
-    schema = StructType(
-        [f for f in df.schema.fields if f.name != "content"]
-        + [StructField("content", BinaryType())]
-    )
-    keep = [f.name for f in df.schema.fields if f.name != "content"]
-
-    def fake_resize(content: bytes) -> bytes:
-        digest = hashlib.md5(content + f"{width}x{height}".encode()).digest()
-        return (digest * ((width * height * 3) // 16 + 1))[: width * height * 3]
-
-    def real_resize(content: bytes) -> bytes:
-        import io
-
-        from PIL import Image  # optional dependency (install extra: `image`)
-
-        with Image.open(io.BytesIO(content)) as im:
-            buf = io.BytesIO()
-            im.convert("RGB").resize((width, height)).save(buf, format="PNG")
-            return buf.getvalue()
-
-    if decoder not in ("fake", "real"):
-        raise ValueError(f"decoder must be 'fake' or 'real', got {decoder!r}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        resize = real_resize if decoder == "real" else fake_resize
-        for pdf in batches:
-            out = pdf[keep].copy()
-            out["content"] = [
-                resize(bytes(c) if c is not None else b"") for c in pdf["content"]
-            ]
-            yield out
-
-    return df.mapInPandas(run, schema)
-
-
-def sample_frames(df: DataFrame, every_n: int = 2, decoder: str = "fake") -> DataFrame:
-    """Video frame sampling: one output row per sampled frame (one-to-many
-    mapInPandas — the UDTF shape of SURVEY X7), with frame index + feature.
-    ``decoder="real"`` routes through the import-gated PyAV codec."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("frame_index", IntegerType()),
-            StructField("feature", ArrayType(FloatType())),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _decode_fn(decoder)
-        for pdf in batches:
-            rows = []
-            for mid, content, kind in zip(pdf["media_id"], pdf["content"], pdf["kind"]):
-                if kind != "video":
-                    continue
-                arr = decode(bytes(content) if content is not None else b"", kind)
-                for idx in range(0, arr.shape[0], every_n):
-                    frame = arr[idx].astype(np.float64).ravel()
-                    chunks = np.array_split(frame, 8)
-                    rows.append(
-                        (int(mid), int(idx), [float(c.mean()) for c in chunks])
-                    )
-            if rows:  # yielding nothing for an all-non-video batch avoids
-                # pandas' all-NA-concat dtype warnings on empty frames
-                yield pd.DataFrame(rows, columns=["media_id", "frame_index", "feature"])
 
     return df.mapInPandas(run, schema)
 
@@ -267,8 +152,8 @@ _AHASH_WORD_BITS = 60  # match operators/dedup's multi-word convention
 def media_ahash_words(
     df: DataFrame, decoder: str = "fake", out_col: str = "phash_words"
 ) -> DataFrame:
-    """Perceptual fingerprints for IMAGE rows: decode (fake / import-gated
-    real / custom callable) → 64-bit aHash → ``array<bigint>`` in the
+    """Perceptual fingerprints for IMAGE rows: decode (fake or a codec
+    callable) → 64-bit aHash → ``array<bigint>`` in the
     same ≤60-bits-per-word encoding ``operators/dedup`` bands over, so
     image near-dup search reuses the exact text machinery
     (``hamming_radius_pairs_on_words``).  Arrow-batched mapInPandas; only

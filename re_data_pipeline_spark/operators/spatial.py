@@ -6,6 +6,8 @@ replacement for the reference's R-tree probe (``get_osm_data.py:63-81``) and
 its 4096-cell nested containment loop (``aggregate_rental_rates.py:122-126``).
 Cell keys are ordinary shuffle keys, so Catalyst/AQE plan these like any hash
 join (broadcast when one side is small, skew-split when a cell is hot).
+These built-in kernels are the only spatial path; no optional geometry
+library is consulted.
 """
 
 from __future__ import annotations
@@ -291,73 +293,6 @@ def point_in_polygon_join(
         if c not in points.columns:
             unmatched = unmatched.withColumn(c, F.lit(None))
     return candidates.unionByName(unmatched)
-
-
-# --------------------------------------------------------------------------
-# Optional Apache Sedona acceleration (SURVEY §7 step 4: "Sedona optional
-# behind a flag").  The built-in kernels above are the reference-semantics
-# path and the only one exercised in CI; when the sedona package and its
-# jars are present AND SPARK_GRAFT_USE_SEDONA=1, callers can route
-# point-in-polygon through ST_Contains instead — same (point_df, polygon_df,
-# pred) contract, Sedona's own spatial partitioning underneath.
-# --------------------------------------------------------------------------
-
-
-def sedona_available() -> bool:
-    """True iff the optional Apache Sedona package is importable."""
-    try:
-        import sedona  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def use_sedona() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_USE_SEDONA", "0") == "1" and sedona_available()
-
-
-def point_in_polygon_join_sedona(
-    points: DataFrame,
-    polygons: DataFrame,
-    x_col: str = "longitude",
-    y_col: str = "latitude",
-    wkt_col: str = "wkt",
-    polygon_cols: list[str] | None = None,
-) -> DataFrame:
-    """ST_Contains-based PIP join for Sedona-enabled clusters.
-
-    Unlike the built-in ``point_in_polygon_join`` (ring structs), this path
-    takes polygons as WKT text in ``wkt_col`` — Sedona parses geometry
-    itself, so the exchange format is the standard one.  ``polygon_cols``
-    selects which polygon attributes ride along (default: all except the
-    WKT, avoiding duplicate-name collisions with point columns).
-
-    Requires the Sedona extensions registered on the session.  Raises
-    ``RuntimeError`` when the flag/package is absent — callers fall back to
-    ``point_in_polygon_join``.
-    """
-    if not use_sedona():
-        raise RuntimeError(
-            "Sedona path disabled: set SPARK_GRAFT_USE_SEDONA=1 with the "
-            "sedona package installed, or use point_in_polygon_join()."
-        )
-    spark = points.sparkSession
-    keep = polygon_cols or [c for c in polygons.columns if c != wkt_col]
-    points.createOrReplaceTempView("__pip_points")
-    polygons.createOrReplaceTempView("__pip_polygons")
-    cols = ", ".join(f"g.{c}" for c in keep)
-    return spark.sql(
-        f"""
-        SELECT p.*, {cols}
-        FROM __pip_points p JOIN __pip_polygons g
-          ON ST_Contains(
-               ST_GeomFromText(g.{wkt_col}),
-               ST_Point(p.{x_col}, p.{y_col}))
-        """
-    )
 
 
 def knn_join(

@@ -48,7 +48,7 @@ def upsert_append(existing: DataFrame, batch: DataFrame, keys: list[str]) -> Dat
     """Insert-if-absent result table: existing ∪ (batch − existing) on the key.
 
     Emulates Delta ``MERGE ... WHEN NOT MATCHED THEN INSERT`` over plain
-    DataFrames; with Delta available the same keys drive a real MERGE.
+    DataFrames.
     """
     return existing.unionByName(anti_join_new_rows(batch, existing, keys))
 
@@ -144,8 +144,7 @@ def merge_upsert(existing: DataFrame, batch: DataFrame, keys: list[str]) -> Data
 
     Batch-internal duplicates collapse deterministically first (min by the
     remaining columns' struct — not dropDuplicates' partition-order
-    winner).  Plan: one anti join + one union; with Delta available the
-    same keys drive a real MERGE.
+    winner).  Plan: one anti join + one union.
     """
     val_cols = [c for c in batch.columns if c not in keys]
     from pyspark.sql.window import Window

@@ -4049,8 +4049,8 @@ def q102_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) layout keys: interleave two dimensions into one
     sort key and profile each coarse z-curve segment's (x, y) bounding box —
     the per-bucket min/max ranges ARE the data-skipping stats a z-ordered
-    parquet layout gives every file (see ``functions.zorder`` and the
-    row-group pruning test).  Pure 64-bit shift/and/or — bit-identical
+    parquet layout gives every file (see ``functions.zorder``).  Pure
+    64-bit shift/and/or — bit-identical
     across engines, so the whole curve construction is oracled.
     """
     from re_data_pipeline_spark.functions.zorder import morton_key
@@ -8542,9 +8542,9 @@ def q191_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``dedup.hamming_radius_pairs_on_words``) at radius 2.  The fixture
     duplicates every image's bytes under a new id (media_id + 100), so
     each image must pair with its copy at Hamming 0 — a lost pair means
-    the decode plumbing, the word encoding, or the banding broke.  The
-    real-codec path swaps ``decoder="real"`` (import-gated PIL) with the
-    identical plan shape."""
+    the decode plumbing, the word encoding, or the banding broke.  A real
+    codec passed as the ``decoder`` callable keeps the identical plan
+    shape."""
     from re_data_pipeline_spark.operators.multimodal import (
         media_phash_pairs,
         synthetic_media,

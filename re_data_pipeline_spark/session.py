@@ -40,6 +40,7 @@ from pyspark.sql import SparkSession
 
 CODEGEN_CACHE_ENTRIES = 2000
 DEFAULT_CPUS = 32
+MAX_PARTITION_BYTES = 32 * 1024 * 1024
 
 
 def _env_cpus() -> int:
@@ -109,11 +110,8 @@ def get_spark(
         # Local files are tiny; without this a 1 MB parquet becomes ONE input
         # partition and map-heavy operators (minhash, simhash) serialize onto
         # a single core.  On a real cluster with 128 MB+ files, raise it back
-        # (env-tunable).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"),
-        )
+        # through ``extra_conf``.
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         # Static SQL conf: must be set before the session exists (see the
         # module docstring for the sizing).
         .config(

@@ -1,4 +1,4 @@
-"""MERGE-capable table sinks (SURVEY §2.2 K2/K4 — the persistence layer
+"""MERGE-capable table sink (SURVEY §2.2 K2/K4 — the persistence layer
 behind the relational upsert/archival operators).
 
 The reference's load step is Postgres ``INSERT ... ON CONFLICT DO NOTHING``
@@ -6,63 +6,28 @@ on natural keys (``combine_broker_listings.py:224-234``,
 ``combine_and_format.py:122-128``) plus key-diff archival deletes
 (``archive_delisted_properties.py:93-147``).  In this engine the *logic*
 lives in ``operators/upsert.py`` as pure DataFrame algebra; this module is
-the sink boundary that persists it, behind one protocol with two
-implementations:
-
-- ``ParquetAntiJoinSink`` — works anywhere: upsert appends only the
-  anti-joined new rows (append-only, no rewrite — the same shuffle Delta
-  plans for ``MERGE WHEN NOT MATCHED``); archival delete rewrites the
-  (semi-joined) survivor set atomically via a temp directory swap.
-- ``DeltaMergeSink`` — when ``delta-spark`` is importable: a REAL
-  transactional ``MERGE WHEN NOT MATCHED THEN INSERT`` and
-  ``WHEN NOT MATCHED BY SOURCE THEN DELETE``.  At 100 TB this is the
-  production path (ACID, concurrent writers, file compaction); the parquet
-  sink is the sandbox/CI fallback with identical row-level semantics.
-
-Swapping is one constructor call — pipeline code holds a ``MergeSink`` and
-never branches on the backend.
+the sink boundary that persists it to a parquet directory:
+``ParquetAntiJoinSink`` upserts by appending only the anti-joined new rows
+(append-only, no rewrite — the same shuffle a ``MERGE WHEN NOT MATCHED``
+plans), and archival delete rewrites the (semi-joined) survivor set, then
+swaps it in by directory rename.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 from pathlib import Path
-from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
 from re_data_pipeline_spark.operators.upsert import anti_join_new_rows
 
 
-class MergeSink(Protocol):
-    """Keyed table with ON-CONFLICT-DO-NOTHING upsert and key-diff delete."""
-
-    def read(self) -> DataFrame:
-        """Current table contents (empty frame with the schema if new)."""
-        ...
-
-    def upsert(self, batch: DataFrame, keys: list[str]) -> None:
-        """Insert batch rows whose natural key is absent (K2)."""
-        ...
-
-    def delete_absent(self, current: DataFrame, keys: list[str]) -> None:
-        """Delete rows whose key no longer appears in ``current`` (K4 —
-        the archival delete)."""
-        ...
-
-
-def delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 class ParquetAntiJoinSink:
-    """MERGE emulation over a parquet directory (see module docstring)."""
+    """Keyed parquet table with ON-CONFLICT-DO-NOTHING upsert (K2) and
+    key-diff delete (K4)."""
 
     def __init__(self, spark: SparkSession, path: str, schema: str):
         self.spark = spark
@@ -70,78 +35,38 @@ class ParquetAntiJoinSink:
         self.schema = schema
 
     def read(self) -> DataFrame:
+        """Current table contents (empty frame with the schema if new)."""
         if not any(Path(self.path).glob("*.parquet")):
             return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(self.path)
 
     def upsert(self, batch: DataFrame, keys: list[str]) -> None:
+        """Insert batch rows whose natural key is absent (K2)."""
         new_rows = anti_join_new_rows(batch, self.read(), keys)
         new_rows.write.mode("append").parquet(self.path)
 
     def delete_absent(self, current: DataFrame, keys: list[str]) -> None:
+        """Delete rows whose key no longer appears in ``current`` (K4 —
+        the archival delete)."""
         survivors = self.read().join(current.select(keys), on=keys, how="left_semi")
-        # materialize BEFORE touching the directory (lazy plans would read
-        # the files being replaced), then swap atomically-enough for a
-        # local sink; the Delta sink does this transactionally
-        tmp = tempfile.mkdtemp(prefix="sink_swap_")
+        # materialize BEFORE touching the table (the lazy plan reads the
+        # files being replaced) into a sibling dir, so both renames stay on
+        # one filesystem.  The old table is renamed aside, not deleted,
+        # until the new one is in place, and renamed back on failure.
+        tmp = tempfile.mkdtemp(
+            prefix=".sink_swap_", dir=os.path.dirname(os.path.abspath(self.path))
+        )
+        aside = None
         try:
             survivors.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(self.path, ignore_errors=True)
-            shutil.move(tmp, self.path)
+            if os.path.exists(self.path):
+                aside = tmp + ".old"
+                os.replace(self.path, aside)
+            os.replace(tmp, self.path)
         except BaseException:
+            if aside is not None and not os.path.exists(self.path):
+                os.replace(aside, self.path)
             shutil.rmtree(tmp, ignore_errors=True)
             raise
-
-
-class DeltaMergeSink:
-    """Real transactional MERGE — requires the ``delta-spark`` package and a
-    Delta-enabled session; raises ImportError otherwise so callers fall
-    back to ``ParquetAntiJoinSink``."""
-
-    def __init__(self, spark: SparkSession, path: str, schema: str):
-        if not delta_available():
-            raise ImportError(
-                "delta-spark not installed — use ParquetAntiJoinSink"
-            )
-        self.spark = spark
-        self.path = path
-        self.schema = schema
-
-    def _table(self):
-        from delta.tables import DeltaTable
-
-        if not DeltaTable.isDeltaTable(self.spark, self.path):
-            self.spark.createDataFrame([], self.schema).write.format(
-                "delta"
-            ).save(self.path)
-        return DeltaTable.forPath(self.spark, self.path)
-
-    def read(self) -> DataFrame:
-        return self._table().toDF()
-
-    def upsert(self, batch: DataFrame, keys: list[str]) -> None:
-        cond = " AND ".join(f"t.{k} <=> b.{k}" for k in keys)
-        (
-            self._table()
-            .alias("t")
-            .merge(batch.dropDuplicates(keys).alias("b"), cond)
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def delete_absent(self, current: DataFrame, keys: list[str]) -> None:
-        cond = " AND ".join(f"t.{k} <=> b.{k}" for k in keys)
-        (
-            self._table()
-            .alias("t")
-            .merge(current.select(keys).dropDuplicates(keys).alias("b"), cond)
-            .whenNotMatchedBySourceDelete()
-            .execute()
-        )
-
-
-def get_merge_sink(spark: SparkSession, path: str, schema: str) -> MergeSink:
-    """Best available sink: Delta when importable, parquet emulation else."""
-    if delta_available():
-        return DeltaMergeSink(spark, path, schema)
-    return ParquetAntiJoinSink(spark, path, schema)
+        if aside is not None:
+            shutil.rmtree(aside, ignore_errors=True)

@@ -56,47 +56,6 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str = "*.pdf") -> Data
     )
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target)`` files (optionally z-order/sorted via
-    ``sort_cols``).  Returns the output file count.
-
-    Why it exists: streaming sinks and per-batch appends leave thousands of
-    KB-sized files; at 100 TB the NameNode/list cost and per-file task
-    overhead dominate scans.  Periodic compaction to ~128-256 MB files
-    (≈ one row group per task) restores scan efficiency.  Sizes come from
-    the Hadoop FileSystem API so the same code runs on HDFS/S3/GCS.
-    """
-    import math
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    it = fs.listFiles(p, True)
-    total = 0
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if not name.startswith(("_", ".")):
-            total += f.getLen()
-    n_files = max(1, math.ceil(total / target_file_bytes))
-
-    df = spark.read.parquet(path)
-    if sort_cols:
-        df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(*sort_cols)
-    else:
-        df = df.repartition(n_files)
-    df.write.mode("overwrite").parquet(out_path)
-    return n_files
-
-
 def read_json_quarantine(
     spark: SparkSession, path_glob: str, schema: StructType
 ) -> tuple[DataFrame, DataFrame]:

@@ -179,33 +179,6 @@ def run_available_now_memory(stream_df: DataFrame, name: str, output_mode: str =
     return q
 
 
-def join_streams_within(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    max_delay: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream inner join bounded by a time-range condition: match
-    right rows arriving within ``max_delay`` AFTER the left row (the
-    view→click attribution shape).  Both sides carry watermarks so the
-    engine can evict join state once ``watermark + max_delay`` has passed —
-    without the range condition the state would grow forever, which is the
-    difference between a demo and something that survives 100 TB/day.
-    """
-    lw = left.withWatermark(left_ts, watermark).alias("l")
-    rw = right.withWatermark(right_ts, watermark).alias("r")
-    return lw.join(
-        rw,
-        F.expr(
-            f"l.{key} = r.{key} AND r.{right_ts} >= l.{left_ts} "
-            f"AND r.{right_ts} <= l.{left_ts} + INTERVAL {max_delay}"
-        ),
-    )
-
-
 def streaming_incremental_dedup(
     spark: SparkSession,
     path: str,

@@ -823,7 +823,7 @@ def test_line_dedup_rewrite_null_text_not_dropped(spark):
 
 
 # ---------------------------------------------------------------------------
-# ExactSubstr tier (exact_substring_spans / exact_substring_dedup)
+# ExactSubstr tier (exact_substring_dedup)
 
 _BP10 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"  # 10 toks
 
@@ -879,6 +879,16 @@ def test_exact_substring_dedup_planted_overlaps(spark):
     assert got[4][2] == 0  # partial planting below threshold: untouched
     assert got[6] == ("", 0, 0) and got[7] == ("", 0, 0)
 
+    # a prefix in one doc aligns with a suffix in the other
+    pair = {1: _BP10 + " x1 x2", 2: "q1 q2 " + _BP10}
+    df = spark.createDataFrame(list(pair.items()), "doc_id long, text string")
+    got = {
+        r["doc_id"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
+        for r in exact_substring_dedup(df, min_len=10, k=5).collect()
+    }
+    assert got == _brute_exactsubstr(pair, 10)
+    assert got == {1: ("x1 x2", 12, 10), 2: ("q1 q2", 12, 10)}
+
 
 def test_exact_substring_dedup_matches_brute_force_randomized(spark):
     """Property check: randomized small-vocab corpora (so natural shared
@@ -920,42 +930,33 @@ def test_exact_substring_dedup_matches_brute_force_randomized(spark):
                 assert got == exp, impl
 
 
-def test_exact_substring_spans_merge_and_alignment(spark):
-    """Span output is 1-based inclusive, merged per doc; alignment is
-    arbitrary (prefix in one doc matches suffix in the other)."""
-    from re_data_pipeline_spark.operators.dedup import exact_substring_spans
-
-    df = spark.createDataFrame(
-        [(1, _BP10 + " x1 x2"), (2, "q1 q2 " + _BP10)],
-        "doc_id long, text string",
-    )
-    got = {
-        (r["doc_id"], r["span_start"], r["span_end"])
-        for r in exact_substring_spans(df, min_len=10, k=5).collect()
-    }
-    assert got == {(1, 1, 10), (2, 3, 12)}
-
-
 def test_exact_substring_dedup_overlapping_spans_merge(spark):
     """Two distinct shared spans overlapping in one doc merge into one
     removal interval (the fold-merge path), and a doc that is entirely
-    boilerplate comes back as an empty string, not dropped."""
+    boilerplate comes back as an empty string, not dropped.  Both
+    implementations agree, with and without a partial carrier."""
     from re_data_pipeline_spark.operators.dedup import exact_substring_dedup
 
     s1 = "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10"
     s2 = "a6 a7 a8 a9 a10 b1 b2 b3 b4 b5"
     carrier = "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10 b1 b2 b3 b4 b5"  # s1 ∪ s2
-    df = spark.createDataFrame(
-        [(1, carrier), (2, s1), (3, s2), (4, "pad " + s1)],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
-        for r in exact_substring_dedup(df, min_len=10, k=5).collect()
-    }
-    assert got[1] == ("", 15, 15)      # overlapping spans merged, all gone
-    assert got[2] == ("", 10, 10)      # entire doc duplicated → empty
-    assert got[4] == ("pad", 11, 10)
+
+    def run(docs, impl):
+        df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
+        return {
+            r["doc_id"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
+            for r in exact_substring_dedup(df, min_len=10, k=5, impl=impl).collect()
+        }
+
+    padded = {1: carrier, 2: s1, 3: s2, 4: "pad " + s1}
+    bare = {1: carrier, 2: s1, 3: s2}
+    for docs in (padded, bare):
+        got = run(docs, "anchors")
+        assert got == run(docs, "grams") == _brute_exactsubstr(docs, 10)
+        assert got[1] == ("", 15, 15)  # overlapping spans merged, all gone
+        assert got[2] == ("", 10, 10)  # entire doc duplicated → empty
+        if 4 in docs:
+            assert got[4] == ("pad", 11, 10)
 
 
 def test_exact_substring_degradation_guard(spark):
@@ -1110,27 +1111,6 @@ def test_intra_substring_dedup_is_map_only(spark):
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     plan = intra_substring_dedup(df, min_len=2)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_exact_substring_spans_grams_impl_equals_anchors(spark):
-    """The spans surface agrees across both implementations on a corpus
-    with overlapping planted spans (the fold-merge path)."""
-    from re_data_pipeline_spark.operators.dedup import exact_substring_spans
-
-    s1 = "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10"
-    s2 = "a6 a7 a8 a9 a10 b1 b2 b3 b4 b5"
-    df = spark.createDataFrame(
-        [(1, s1 + " b1 b2 b3 b4 b5"), (2, s1), (3, s2)],
-        "doc_id long, text string",
-    )
-    def spans(impl):
-        return {
-            (r["doc_id"], r["span_start"], r["span_end"])
-            for r in exact_substring_spans(df, min_len=10, k=5, impl=impl).collect()
-        }
-    a, g = spans("anchors"), spans("grams")
-    assert a == g
-    assert (1, 1, 15) in a  # merged overlap of s1 and s2 inside doc 1
 
 
 def test_exact_substring_decontaminate_same_id_column_names(spark):

@@ -278,31 +278,6 @@ def test_contiguous_pack_invariants(spark):
     out.unpersist()
 
 
-def test_url_host_extraction(spark):
-    from re_data_pipeline_spark.functions.urls import url_host
-
-    d = spark.createDataFrame(
-        [
-            ("https://Sub.Example.COM/path?q=1",),
-            ("http://user:pw@Host.Example.COM:8080/x",),
-            ("https://[::1]:8080/y",),
-            ("ftp://example.org",),
-            ("not a url",),
-            (None,),
-        ],
-        "u string",
-    )
-    got = [r[0] for r in d.select(url_host("u")).collect()]
-    assert got == [
-        "sub.example.com",
-        "host.example.com",
-        "[::1]",
-        "example.org",
-        "",
-        None,
-    ]
-
-
 def test_perplexity_buckets_null_group_is_a_real_partition(spark):
     # lang-id failures are routine: NULL-lang docs must be bucketed as
     # their own group (SQL PARTITION BY semantics), not silently dropped

@@ -1,13 +1,10 @@
-"""Multimodal plumbing: schemas, batch shapes, one-to-many frame sampling,
-binary-column pruning, and the real-decoder stub contract."""
+"""Multimodal plumbing: schemas, batch shapes, decoder-knob validation,
+binary-column pruning, and perceptual-hash pairing."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from re_data_pipeline_spark.operators.multimodal import (
     decode_features,
-    resize_images,
-    sample_frames,
     synthetic_media,
 )
 
@@ -30,78 +27,14 @@ def test_decoded_shapes_by_kind(spark):
     assert shapes["video"] == (4, 8, 8, 3)
 
 
-def test_resize_content_length(spark):
-    out = resize_images(synthetic_media(spark, 6), 4, 4).collect()
-    assert all(len(r.content) == 4 * 4 * 3 for r in out)
-
-
-def test_sample_frames_one_to_many(spark):
-    media = synthetic_media(spark, 9)  # 3 videos (ids 2,5,8), 4 frames each
-    out = sample_frames(media, every_n=2).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r.media_id, []).append(r.frame_index)
-    assert set(by_id) == {2, 5, 8}
-    assert all(sorted(v) == [0, 2] for v in by_id.values())
-    assert all(len(r.feature) == 8 for r in out)
-
-
-def _lib(name):
-    try:
-        __import__(name)
-        return True
-    except ImportError:
-        return False
-
-
-def test_real_decoder_import_gated(spark):
-    """decoder='real' is import-gated like PyMuPDF (sources/pdf.py:33):
-    without the optional codec lib the job fails LOUDLY with an
-    ImportError from inside the task — not silently, not at driver import."""
-    if _lib("PIL"):
-        pytest.skip("PIL installed; gating path not applicable")
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import PythonException
-
-    with pytest.raises((PythonException, Py4JJavaError), match="PIL|ImportError"):
-        decode_features(
-            synthetic_media(spark, 3).where(F.col("kind") == "image"),
-            decoder="real",
-        ).collect()
-
-
 def test_decoder_knob_validates():
     from re_data_pipeline_spark.operators.multimodal import _decode_fn
 
-    with pytest.raises(ValueError, match="decoder must be"):
-        _decode_fn("fast")
+    for bad in ("fast", "real"):
+        with pytest.raises(ValueError, match="decoder must be"):
+            _decode_fn(bad)
     assert _decode_fn("fake")(b"x", "audio").shape == (1600,)
     assert callable(_decode_fn(lambda c, k: None))
-
-
-@pytest.mark.gated
-@pytest.mark.skipif(not _lib("PIL"), reason="PIL not installed")
-def test_real_image_decode_roundtrip(spark):
-    """With PIL present (CI extra `image`): encode a tiny PNG, decode it
-    through the real path, and check shape + feature length."""
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    arr = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    buf = io.BytesIO()
-    Image.fromarray(arr).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [(0, "image", bytearray(buf.getvalue()), None)],
-        synthetic_media(spark, 1).schema,
-    )
-    row = decode_features(media, decoder="real").collect()[0]
-    assert tuple(row.decoded_shape) == (4, 4, 3)
-    assert len(row.feature) == 16
-    resized = resize_images(media, 2, 2, decoder="real").collect()[0]
-    with Image.open(io.BytesIO(bytes(resized.content))) as im:
-        assert im.size == (2, 2)
 
 
 def test_metadata_scan_prunes_binary(spark, tmp_path):
@@ -114,59 +47,6 @@ def test_metadata_scan_prunes_binary(spark, tmp_path):
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "content" not in plan
     assert scan.count() == 6
-
-
-@pytest.mark.gated
-@pytest.mark.skipif(not _lib("soundfile"), reason="soundfile not installed")
-def test_real_audio_decode_roundtrip(spark):
-    """With soundfile present (extra `audio`): encode a tiny WAV, decode
-    through the real path — mono float32 samples, feature length intact."""
-    import io
-
-    import numpy as np
-    import soundfile
-
-    samples = np.sin(np.linspace(0, 3.14, 800)).astype(np.float32)
-    buf = io.BytesIO()
-    soundfile.write(buf, samples, 8000, format="WAV")
-    media = spark.createDataFrame(
-        [(0, "audio", bytearray(buf.getvalue()), None)],
-        synthetic_media(spark, 1).schema,
-    )
-    row = decode_features(media, decoder="real").collect()[0]
-    assert tuple(row.decoded_shape) == (800,)
-    assert len(row.feature) == 16
-
-
-@pytest.mark.gated
-@pytest.mark.skipif(not _lib("av"), reason="PyAV not installed")
-def test_real_video_decode_roundtrip(spark):
-    """With PyAV present (extra `video`): encode 3 tiny frames, decode
-    through the real path — stacked (N, H, W, 3) frames."""
-    import io
-
-    import av
-    import numpy as np
-
-    buf = io.BytesIO()
-    with av.open(buf, "w", format="mp4") as container:
-        stream = container.add_stream("mpeg4", rate=5)
-        stream.width, stream.height = 16, 16
-        stream.pix_fmt = "yuv420p"
-        for i in range(3):
-            arr = np.full((16, 16, 3), i * 40, dtype=np.uint8)
-            frame = av.VideoFrame.from_ndarray(arr, format="rgb24")
-            for packet in stream.encode(frame):
-                container.mux(packet)
-        for packet in stream.encode():
-            container.mux(packet)
-    media = spark.createDataFrame(
-        [(0, "video", bytearray(buf.getvalue()), None)],
-        synthetic_media(spark, 1).schema,
-    )
-    row = decode_features(media, decoder="real").collect()[0]
-    shape = tuple(row.decoded_shape)
-    assert shape[0] == 3 and shape[1:] == (16, 16, 3)
 
 
 def test_media_phash_pairs_finds_byte_copies(spark):

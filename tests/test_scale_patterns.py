@@ -172,27 +172,6 @@ def test_ivf_lists_enable_partition_pruning(spark, sf_dir, tmp_path):
     assert probe.count() == full
 
 
-def test_compaction_reduces_file_count(spark, tmp_path):
-    """Many tiny appended files compact to the size-targeted count."""
-    from re_data_pipeline_spark.sources.registry import compact_parquet
-
-    src = str(tmp_path / "frag")
-    for i in range(12):
-        spark.range(i * 100, (i + 1) * 100).write.mode("append").parquet(src)
-    import glob as g
-
-    assert len(g.glob(f"{src}/part-*.parquet")) >= 12
-
-    out = str(tmp_path / "compacted")
-    total = sum(
-        __import__("os").path.getsize(f) for f in g.glob(f"{src}/part-*.parquet")
-    )
-    n = compact_parquet(spark, src, out, target_file_bytes=max(total // 2, 1))
-    got = g.glob(f"{out}/part-*.parquet")
-    assert n == 2 and len(got) == 2
-    assert spark.read.parquet(out).count() == 1200
-
-
 def test_json_quarantine_is_total_and_lossless(spark, tmp_path):
     """Malformed JSON lines land in the quarantine frame; good rows parse;
     nothing is dropped and nothing throws."""

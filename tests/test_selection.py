@@ -8,10 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from re_data_pipeline_spark.operators.dedup import span_dup_stats
-from re_data_pipeline_spark.operators.maintenance import (
-    compaction_summary,
-    plan_compaction,
-)
+from re_data_pipeline_spark.operators.maintenance import plan_compaction
 from re_data_pipeline_spark.operators.selection import (
     classifier_score,
     dsir_log_weights,
@@ -132,17 +129,6 @@ def test_plan_compaction_first_fit_bins(spark):
     assert [bins[("p1", i)] for i in range(5)] == [0, 0, 0, 1, 1]
     # oversized file occupies its own bin; next file starts in bin 2
     assert bins[("p2", 0)] == 0 and bins[("p2", 1)] == 2
-
-
-def test_compaction_summary_rolls_up(spark):
-    files = spark.createDataFrame(
-        [("p1", 0, 60), ("p1", 1, 60), ("p1", 2, 60)],
-        "part string, file_id bigint, size_bytes bigint",
-    )
-    planned = plan_compaction(files, ["part"], target_bytes=100)
-    s = {r.bin: r for r in compaction_summary(planned, ["part"]).collect()}
-    assert s[0].n_files == 2 and s[0].bin_bytes == 120
-    assert s[1].n_files == 1 and s[1].bin_bytes == 60
 
 
 def test_mixture_allocation_sums_to_budget_exactly(spark):

@@ -5,7 +5,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.functions.geo import cell_corners_str, haversine_m
+from re_data_pipeline_spark.functions.geo import cell_corners_str
 from re_data_pipeline_spark.operators.spatial import (
     grid_aggregate,
     point_in_polygon_join,
@@ -81,13 +81,6 @@ def test_point_in_polygon_join(spark):
     assert got == {1: "sq", 2: "tri", 3: None}
 
 
-def test_haversine(spark):
-    # Edmonton city hall → legislature ≈ 1.66 km (sanity band)
-    df = spark.createDataFrame([(53.5461, -113.4903, 53.5339, -113.5008)], ["a", "b", "c", "d"])
-    m = df.select(haversine_m("a", "b", "c", "d").alias("m")).collect()[0].m
-    assert 1300 < m < 2000
-
-
 def test_band_join_boundary(spark):
     from re_data_pipeline_spark.operators.spatial import band_join
 
@@ -106,25 +99,6 @@ def test_band_join_colliding_names(spark):
     right = spark.createDataFrame([(2, 5.5)], ["id", "v"])
     got = band_join(left, right, "v", "v", 1.0).collect()
     assert len(got) == 1 and got[0].id_r == 2
-
-
-def test_sedona_path_is_gated(spark):
-    """Without the optional sedona package + env flag, the accelerated path
-    must refuse loudly and the built-in kernel remains the default."""
-    import pytest as _pytest
-
-    from re_data_pipeline_spark.operators.spatial import (
-        point_in_polygon_join_sedona,
-        sedona_available,
-        use_sedona,
-    )
-
-    if sedona_available():
-        _pytest.skip("sedona installed in this env; gate test not applicable")
-    assert not use_sedona()
-    pts = spark.range(1).select(F.lit(0.0).alias("longitude"), F.lit(0.0).alias("latitude"))
-    with _pytest.raises(RuntimeError, match="Sedona path disabled"):
-        point_in_polygon_join_sedona(pts, pts)
 
 
 def test_point_in_multipolygon_donut_and_parts(spark):
@@ -329,52 +303,6 @@ def test_knn_join_tiebreak_deterministic(spark):
         left_xy=("x", "y"), right_xy=("px", "py")).collect())
     # all three are at distance 5; ties order by px asc: (0,5) then (3,4)
     assert got == [21, 22]
-
-
-def test_point_in_rect_and_single_ring_udf_compat(spark):
-    """The two small geo API-compat surfaces: point_in_rect's half-open
-    edge semantics, and the single-ring pandas-UDF form agreeing with the
-    expression ray cast on a homogeneous fixture."""
-    import pyspark.sql.functions as F
-
-    from re_data_pipeline_spark.functions.geo import (
-        point_in_polygon_udf,
-        point_in_rect,
-    )
-
-    pts = spark.createDataFrame(
-        [(0.5, 0.5), (1.0, 0.5), (0.0, 0.0), (2.0, 2.0), (0.99, 0.99)],
-        "x double, y double",
-    )
-    rect = pts.select(
-        "x", "y",
-        point_in_rect("x", "y", F.lit(0.0), F.lit(0.0), F.lit(1.0), F.lit(1.0)).alias("in_"),
-    ).collect()
-    # half-open: min edges inclusive, max edges exclusive
-    assert [r["in_"] for r in rect] == [True, False, True, False, True]
-
-    ring = [
-        {"x": 0.0, "y": 0.0}, {"x": 4.0, "y": 0.0},
-        {"x": 4.0, "y": 4.0}, {"x": 0.0, "y": 4.0},
-    ]
-    pip = point_in_polygon_udf()
-    wring = pts.withColumn(
-        "ring",
-        F.array(*[
-            F.struct(F.lit(p["x"]).alias("x"), F.lit(p["y"]).alias("y"))
-            for p in ring
-        ]),
-    )
-    got = [r[0] for r in wring.select(pip("x", "y", "ring")).collect()]
-    assert got == [True, True, True, True, True]
-    far = spark.createDataFrame([(9.0, 9.0)], "x double, y double").withColumn(
-        "ring",
-        F.array(*[
-            F.struct(F.lit(p["x"]).alias("x"), F.lit(p["y"]).alias("y"))
-            for p in ring
-        ]),
-    )
-    assert [r[0] for r in far.select(pip("x", "y", "ring")).collect()] == [False]
 
 
 def test_pip_left_null_passthrough_no_duplicates(spark):

@@ -147,57 +147,6 @@ def test_stateful_sessions_match_builtin_session_window(spark):
     assert got.equals(want)
 
 
-def test_stream_stream_join_matches_batch(spark, tmp_path):
-    """Stream-stream time-range join (views→clicks within 30 min) drained
-    with AvailableNow equals the equivalent batch join."""
-    from re_data_pipeline_spark.streaming.stream_ops import (
-        join_streams_within,
-        read_stream,
-    )
-
-    e = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "user_id", "ts", "event_type", "event_id"
-    )
-    views = e.where(F.col("event_type") == "view")
-    clicks = e.where(F.col("event_type") == "click")
-    vdir, cdir = str(tmp_path / "views"), str(tmp_path / "clicks")
-    views.coalesce(1).write.parquet(vdir)
-    clicks.coalesce(1).write.parquet(cdir)
-
-    vs = read_stream(spark, vdir, views.schema).selectExpr(
-        "user_id", "ts AS v_ts", "event_id AS view_id"
-    )
-    cs = read_stream(spark, cdir, clicks.schema).selectExpr(
-        "user_id", "ts AS c_ts", "event_id AS click_id"
-    )
-    joined = join_streams_within(vs, cs, "user_id", "v_ts", "c_ts", "30 MINUTES").select(
-        "view_id", "click_id"
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r[0], r[1]) for r in spark.table("ssj_out").collect()}
-
-    want = {
-        (r[0], r[1])
-        for r in views.alias("v")
-        .join(
-            clicks.alias("c"),
-            (F.col("v.user_id") == F.col("c.user_id"))
-            & (F.col("c.ts") >= F.col("v.ts"))
-            & (F.col("c.ts") <= F.col("v.ts") + F.expr("INTERVAL 30 MINUTES")),
-        )
-        .select(F.col("v.event_id"), F.col("c.event_id"))
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
 def test_dedup_within_watermark_bounds_state(spark, tmp_path):
     """dropDuplicatesWithinWatermark removes in-window duplicates and keeps
     the first occurrence (bounded-state crawl-frontier dedup)."""

@@ -190,11 +190,9 @@ def test_repetition_metrics_known_values(spark):
     has 6 bigrams {ab,ba,ab,ba,ab,bc} → dup 3/6; top gram 'a b' covers
     3 occurrences x 3 chars = 9 of 13 chars."""
     from re_data_pipeline_spark.functions.text import (
-        duplicate_line_fraction,
         duplicate_ngram_fraction,
         top_ngram_char_fraction,
     )
-    from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         [(1, "a b a b a b c"), (2, "all words here are unique tokens")],
@@ -211,18 +209,6 @@ def test_repetition_metrics_known_values(spark):
     assert abs(got[1]["dup2"] - 3 / 6) < 1e-12
     assert abs(got[1]["top2"] - 9 / 13) < 1e-12
     assert got[2]["dup2"] == 0.0
-
-    lines = spark.createDataFrame(
-        [(1, "x\ny\nx\n\n"), (2, None)], "id long, text string"
-    )
-    vals = {
-        r["id"]: r["dlf"]
-        for r in lines.select(
-            "id", duplicate_line_fraction("text").alias("dlf")
-        ).collect()
-    }
-    assert abs(vals[1] - 1 / 3) < 1e-12  # lines x,y,x -> one repeat of three
-    assert vals[2] is None
 
 
 def test_pmi_collocations_matches_python(spark):

@@ -1,19 +1,8 @@
-"""Z-order layout: key construction + the data-skipping property it buys."""
+"""Z-order (Morton) key construction."""
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-import tempfile
-
-import pyarrow.parquet as pq
-import pyspark.sql.functions as F
-
-from re_data_pipeline_spark.catalog import load_table
-from re_data_pipeline_spark.functions.zorder import morton_key, zorder_layout
-
-SF_DIR = "/root/testdata/sf0.001"
+from re_data_pipeline_spark.functions.zorder import morton_key
 
 
 def test_morton_key_reference_values(spark):
@@ -30,39 +19,3 @@ def test_morton_key_reference_values(spark):
 
     for (x, y), z in got.items():
         assert z == interleave(x, y)
-
-
-def test_zorder_layout_bounds_both_dimensions(spark):
-    """Each z-ordered output file must cover a small (x, y) bounding box —
-    the min/max stats that let a scan skip files on EITHER dimension."""
-    e = load_table(spark, SF_DIR, "events").select(
-        "event_id",
-        (F.col("user_id") % 1024).alias("x"),
-        (F.floor("value").cast("bigint") % 1024).alias("y"),
-    )
-    out = tempfile.mkdtemp(prefix="zorder_")
-    try:
-        zorder_layout(e, "x", "y", num_files=8).write.mode("overwrite").parquet(out)
-        files = sorted(glob.glob(os.path.join(out, "part-*.parquet")))
-        assert len(files) >= 4
-
-        total_area = 0.0
-        for f in files:
-            md = pq.read_metadata(f)
-            mins = {"x": 1 << 30, "y": 1 << 30}
-            maxs = {"x": -1, "y": -1}
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    name = col.path_in_schema
-                    if name in ("x", "y") and col.statistics is not None:
-                        mins[name] = min(mins[name], col.statistics.min)
-                        maxs[name] = max(maxs[name], col.statistics.max)
-            total_area += (maxs["x"] - mins["x"] + 1) * (maxs["y"] - mins["y"] + 1)
-
-        global_area = 1024 * 1024
-        # unordered layout ⇒ every file spans ~the full square ⇒ ratio ~n_files;
-        # z-ordered files tile the square ⇒ ratio close to 1-2
-        assert total_area < 0.6 * len(files) * global_area
-    finally:
-        shutil.rmtree(out, ignore_errors=True)

@@ -98,7 +98,7 @@ def main() -> int:
         print(f"unknown query name(s): {sorted(unknown)}", file=sys.stderr)
         return 2
 
-    spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+    spark = get_spark()
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
