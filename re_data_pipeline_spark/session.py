@@ -107,6 +107,12 @@ def get_spark(
         # TIMESTAMP_NTZ, which withWatermark rejects; with UTC pinned the LTZ
         # reading is wall-clock-identical, so keep the pre-4.1 behavior.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # catalog.load_table turns this on at the first ``events`` load (nanos
+        # timestamps); on from the start, a scan's schema no longer depends on
+        # whether ``events`` was loaded before it, and the catalog's schema
+        # memo keeps one key per table through a session and its restarts.
+        # No other table the engine reads has a nanos column.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Local files are tiny; without this a 1 MB parquet becomes ONE input
         # partition and map-heavy operators (minhash, simhash) serialize onto
         # a single core.  On a real cluster with 128 MB+ files, raise it back

@@ -1,7 +1,6 @@
 from re_data_pipeline_spark.sources.registry import (
     read_binary_dir,
     read_json_glob,
-    read_parquet_table,
 )
 
-__all__ = ["read_json_glob", "read_parquet_table", "read_binary_dir"]
+__all__ = ["read_json_glob", "read_binary_dir"]

@@ -40,11 +40,6 @@ def read_json_glob(
     return reader.json(path_glob)
 
 
-def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar table scan; Catalyst pushes filters + prunes columns."""
-    return spark.read.parquet(path)
-
-
 def read_binary_dir(spark: SparkSession, path: str, glob: str = "*.pdf") -> DataFrame:
     """Binary-document scan (S10, ``REIT_metrics.py:293-314``):
     (path, modificationTime, length, content) rows; extraction is a
