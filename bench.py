@@ -274,33 +274,28 @@ def main() -> None:
         try:
             probe = fn(spark, sf_dir)
             plans[name] = plan_hash(probe)
-            # checkpoint-backed handles (pagerank's final round) survive
-            # clearCache — release them explicitly on the discarded probe,
-            # and the probe itself if it is a checkpoint scan (q59)
+            # free the discarded probe's pins, and the probe itself if it
+            # is a checkpoint scan (q59)
             release_spines(probe)
             release_local_checkpoint(probe)
         except Exception:
             plans[name] = "n/a"  # multi-job pipelines have no single plan
         best = float("inf")
         for _ in range(n_runs):
-            # COLD-cache runs (r13 fix): guard-carrying operators
-            # (q167/q178/q197/q214/...) pin a fingerprint/spine cache per
-            # invocation with the release handle on the discarded result,
-            # and the CacheManager serves a plan-identical rebuild from
-            # that cache — clearing only BETWEEN queries (the old
-            # protocol) made runs 2..n warm, so min-of-n recorded the
-            # cached path and a regression in the cached stage was
-            # invisible.  Clearing before EVERY run also keeps the
-            # session flat between queries.
+            # COLD-cache runs (r13 fix): the CacheManager serves a
+            # plan-identical rebuild from any frame a previous run
+            # persisted, so min-of-n would record the cached path.
+            # Clearing before EVERY run keeps runs cold and the session
+            # flat between queries.
             spark.catalog.clearCache()
             t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
-            # untimed: checkpoint-backed handles survive clearCache, so a
+            # untimed: checkpoint pins survive clearCache, so a
             # checkpointing query would otherwise grow executor storage by
-            # one pinned RDD per run for the session's lifetime (r14); the
-            # discarded result frame itself may be a checkpoint scan too
+            # one RDD per run; the discarded result may be a checkpoint
+            # scan too
             release_spines(df)
             release_local_checkpoint(df)
         timings[name] = round(best, 3)

@@ -82,20 +82,16 @@ class Engine:
 
     # -- cache discipline ---------------------------------------------------
     def release(self, df: DataFrame, blocking: bool = False) -> int:
-        """Unpersist every operator-pinned cache handle riding ``df`` —
-        ordinal spines (``operators/ids``), the skyline's range-partitioned
-        frame (``operators/frontier``), and any incremental-dedup bucket
-        table — after the caller has materialized the result.  Long-lived
-        sessions that chain spine-backed queries (q117 pins three spines
-        per call) MUST release, or persisted frames accumulate for the
-        session's lifetime.  Returns the number of frames released.
+        """Free every pin riding ``df`` — each frame an operator persisted
+        or checkpointed while building it — after the caller has
+        materialized the result.  Long-lived sessions that chain
+        spine-backed queries (q117 pins three spines per call) MUST
+        release, or pinned frames accumulate for the session's lifetime.
+        Returns the number of pins.  Delegates to ``ids.release_spines``,
+        the one release path (``tools/leak_audit.py`` uses it too)."""
+        from re_data_pipeline_spark.operators.ids import release_spines
 
-        The handle-attribute set lives in ``operators/ids.HANDLE_ATTRS`` /
-        ``release_handles`` — shared with ``tools/leak_audit.py`` so the
-        engine and its auditor cannot drift (r16)."""
-        from re_data_pipeline_spark.operators.ids import release_handles
-
-        return release_handles(df, blocking)
+        return release_spines(df, blocking)
 
     # -- convenience operators ---------------------------------------------
     def profile(self, df: DataFrame, cols: list[str] | None = None) -> DataFrame:

@@ -58,8 +58,8 @@ from re_data_pipeline_spark.functions.text import (
     word_shingles_of,
 )
 from re_data_pipeline_spark.operators.ids import (
-    carry_caches,
-    carry_spines,
+    pin,
+    pinning,
     release_local_checkpoint,
 )
 from re_data_pipeline_spark.operators.layout import (
@@ -349,6 +349,7 @@ def jaccard_on_pairs(
     )
 
 
+@pinning
 def near_dedup_pipeline(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -379,13 +380,12 @@ def near_dedup_pipeline(
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    out = df.join(losers, id_col, "left_anti")
-    # carry the verifier's shingle pin AND the pair-list checkpoint: both
-    # back the returned lineage, so they are only releasable by the caller
-    # after materialization (release_spines handles both kinds) (r14)
-    return carry_caches(verified, out, cands)
+    # the pair-list checkpoint backs the returned lineage
+    pin(cands)
+    return df.join(losers, id_col, "left_anti")
 
 
+@pinning
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -472,13 +472,12 @@ def connected_components(
     # the returned frame derives only from the FINAL label checkpoint (kept);
     # the edge list — usually the big relation — is dead at this point
     release_local_checkpoint(edges)
-    out = labels.select(F.col("node"), F.col("comp").alias("component"))
-    # carry the final label checkpoint's handle so callers/harnesses can
-    # release it after materialization (r15 — without this the block
-    # survived clearCache for the session; same contract as pagerank_fixed)
-    return carry_caches(out, out, prev_ckpt)
+    # the final label checkpoint backs the returned frame
+    pin(prev_ckpt)
+    return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 
+@pinning
 def connected_components_bss(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -586,12 +585,12 @@ def connected_components_bss(
     # fixpoint edge set is a star forest oriented (leaf → root)
     roots = edges.select(F.col("v").alias("node")).distinct().withColumn("component", F.col("node"))
     leaves = edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    out = leaves.unionByName(roots).distinct()
-    # carry the final star-forest checkpoint's handle (the returned frame
-    # recomputes through it) — release_spines frees it after materialization
-    return carry_caches(out, out, edges)
+    # the returned frame recomputes through the final star-forest checkpoint
+    pin(edges)
+    return leaves.unionByName(roots).distinct()
 
 
+@pinning
 def cluster_dedup_pipeline(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -621,10 +620,7 @@ def cluster_dedup_pipeline(
     # raise hands the caller no frame, so cands is equally dead there; the
     # old success-only release pinned a corpus-scale block per failed call).
     # The FINAL label checkpoint IS in the returned lineage (comps
-    # recomputes through it), so its handle is carried onto the returned
-    # frame for release-after-materialization (r15; the old
-    # release_spines(verified) call was a no-op — jaccard_on_pairs
-    # deliberately attaches no handles since the r14 A/B rejection).
+    # recomputes through it); connected_components pins it.
     try:
         comps = connected_components(confirmed.select("id_a", "id_b"))
     finally:
@@ -632,9 +628,10 @@ def cluster_dedup_pipeline(
     losers = comps.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
-    return carry_spines(comps, df.join(losers, id_col, "left_anti"))
+    return df.join(losers, id_col, "left_anti")
 
 
+@pinning
 def cluster_dedup_keep_best(
     df: DataFrame,
     quality_col: Column | str,
@@ -683,9 +680,7 @@ def cluster_dedup_keep_best(
     )
     # CC materializes the confirmed pairs, so the pair-list checkpoint is
     # dead on every exit path (on a convergence raise the caller gets no
-    # frame); CC's final label checkpoint backs comps and its carried
-    # handle rides onto the returned frame (same discipline as
-    # cluster_dedup_pipeline, r15)
+    # frame); CC's final label checkpoint backs comps and CC pins it
     try:
         comps = connected_components(confirmed.select("id_a", "id_b"))
     finally:
@@ -701,9 +696,10 @@ def cluster_dedup_keep_best(
         .where(F.col("__rn") > keep_k)
         .select(id_col)
     )
-    return carry_spines(comps, df.join(losers, id_col, "left_anti"))
+    return df.join(losers, id_col, "left_anti")
 
 
+@pinning
 def semantic_dedup_pipeline(
     df: DataFrame,
     planes: list[list[float]],
@@ -758,8 +754,7 @@ def semantic_dedup_pipeline(
     losers = comps.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
-    # thread the star-forest checkpoint handle through to the caller (r15)
-    return carry_spines(comps, df.join(losers, id_col, "left_anti"))
+    return df.join(losers, id_col, "left_anti")
 
 
 _SIMHASH_WORD_BITS = 60  # bits per fingerprint word (15 md5 hex chars < 2^60)
@@ -869,6 +864,7 @@ def simhash(df: DataFrame, text_col: str = "text", bits: int = 60, out_col: str 
     return out.withColumn(out_col, F.element_at("__simhash_w", 1)).drop("__simhash_w")
 
 
+@pinning
 def incremental_lsh_dedup(
     new_docs: DataFrame,
     index_buckets: DataFrame,
@@ -904,11 +900,10 @@ def incremental_lsh_dedup(
     The new batch's bucket table is persisted (it feeds both collision
     checks and the updated index); it is exposed as ``result["new_buckets"]``
     — per-batch drivers should ``unpersist()`` it after writing the updated
-    index, or cached copies accumulate across batches.  The same pin also
-    rides ``result["kept"]`` as its ``new_buckets`` handle attribute, so
-    ``Engine.release(result["kept"])`` / ``ids.release_handles`` ALSO
-    unpin it — write ``result["updated_index"]`` (which reads the pinned
-    table) BEFORE releasing the kept frame, or the index write silently
+    index, or cached copies accumulate across batches.  It is also the
+    result's pin, so ``release_spines(result["kept"])`` ALSO unpins it —
+    write ``result["updated_index"]`` (which reads the pinned table)
+    BEFORE releasing the kept frame, or the index write silently
     recomputes the batch signatures/banding instead of reading the cache
     (slow, not wrong).
 
@@ -918,7 +913,7 @@ def incremental_lsh_dedup(
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signature(new_docs, text_col, num_hashes, shingle_words)
-    nb = lsh_bands(sigs, id_col, "minhash", bands, rows_per_band).persist()
+    nb = pin(lsh_bands(sigs, id_col, "minhash", bands, rows_per_band).persist())
 
     hit_index = (
         nb.join(
@@ -943,14 +938,6 @@ def incremental_lsh_dedup(
     )
     dropped = hit_index.unionByName(hit_batch).distinct()
     kept = new_docs.join(dropped, id_col, "left_anti")
-    # ALSO ride the pin on the kept frame as the ``new_buckets`` handle
-    # attribute, so ``Engine.release(result["kept"])`` /
-    # ``ids.release_handles`` free it without the manual dict access —
-    # the attribute was listed in the shared HANDLE_ATTRS contract but
-    # never attached by any operator until r16 (review finding; the
-    # explicit ``result["new_buckets"].unpersist()`` stays valid,
-    # unpersist is idempotent)
-    kept.new_buckets = nb
     return {
         "kept": kept,
         "dropped": dropped,
@@ -1193,8 +1180,7 @@ def simhash_radius_pairs(
     default — result unchanged; the message says how wide ``bits`` must
     be), raises (``"error"``), or skips the check (``"off"``).  While the
     guard is on, the fingerprint frame is persisted so its Σ-tokens
-    aggregation runs once, not twice; the handle rides the result as
-    ``._fp_cache`` (released by ``Engine.release``).
+    aggregation runs once, not twice, and pinned.
 
     Scale shape: fingerprints cost one shuffle; candidates come from a
     band equi-join — Σ bucket² pairs, never all-pairs; verification is
@@ -1226,6 +1212,7 @@ def simhash_radius_pairs(
     )
 
 
+@pinning
 def hamming_radius_pairs_on_words(
     fp: DataFrame,
     id_col: str,
@@ -1268,14 +1255,12 @@ def hamming_radius_pairs_on_words(
     fp = fp.select(F.col(id_col), F.col(words_col).alias("__w")).where(
         F.col("__w").isNotNull()
     )
-    fp_cache = None
     if on_degradation != "off":
         # persist the fingerprint frame: the guard's bucket aggregate and
         # the band self-join both consume it, and its lineage (e.g. the
         # Σ-tokens explode + bits-wide agg of SimHash, or a mapInPandas
         # decode) is the expensive part of the operator
-        fp_cache = fp.persist()
-        fp = fp_cache
+        fp = pin(fp.persist())
     # Contiguous band slices covering ALL bits with EXACTLY n_bands bands:
     # floor width with the remainder spread over the first (bits mod
     # n_bands) bands.  A ceil width would be WRONG here — ceil(bits/n)
@@ -1397,11 +1382,10 @@ def hamming_radius_pairs_on_words(
         .where(F.col("hamming") <= radius)
         .select("id_a", "id_b", "hamming")
     )
-    if fp_cache is not None:
-        out._fp_cache = fp_cache  # release path for long-lived sessions
     return out
 
 
+@pinning
 def containment_best(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1455,11 +1439,12 @@ def containment_best(
     # sf0.1: 4.2 s → 3.0 s for q169; the guard's eager stats pass warms
     # the cache for the main query).  Unlike q153's self-join persist
     # (which blocked AQE's broadcast upgrade and measured SLOWER), no join
-    # here reads the cache from both sides of one exchange.  Handle rides
-    # the result as ``._fp_cache`` (released by Engine.release).
-    toks = df.select(
-        F.col(id_col), F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok")
-    ).persist()
+    # here reads the cache from both sides of one exchange.
+    toks = pin(
+        df.select(
+            F.col(id_col), F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok")
+        ).persist()
+    )
     # candidates: prefix tokens (rarest-first) equi-joined to the postings
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ordered = toks.join(dfreq, "tok").select(
@@ -1536,10 +1521,10 @@ def containment_best(
             F.round(F.col("__c") / F.col("__na"), 6).alias("containment"),
         )
     )
-    out._fp_cache = toks  # release path for long-lived sessions
     return out
 
 
+@pinning
 def minhash_estimate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1563,15 +1548,17 @@ def minhash_estimate_pairs(
     ratio at 6dp.
 
     Scale shape: ONE signature pass (persisted — it feeds both banding
-    and the estimate join; handle on the result as ``._fp_cache``),
+    and the estimate join; pinned),
     band-bounded candidates, then two signature equi-joins on the pair
     ids; lane agreement is a row-local ``zip_with`` + ``filter`` over
     num_hashes-sized arrays.  Nothing is all-pairs; nothing re-reads
     text after the signature pass.
     """
-    sigs = minhash_signature(
-        df.select(id_col, text_col), text_col, num_hashes, shingle_words
-    ).select(id_col, "minhash").persist()
+    sigs = pin(
+        minhash_signature(
+            df.select(id_col, text_col), text_col, num_hashes, shingle_words
+        ).select(id_col, "minhash").persist()
+    )
     rows_per_band = num_hashes // bands
     nb = lsh_bands(sigs, id_col, "minhash", bands, rows_per_band)
     a, b = nb.alias("a"), nb.alias("b")
@@ -1605,7 +1592,6 @@ def minhash_estimate_pairs(
             F.round(matching / F.lit(float(num_hashes)), 6).alias("est_jaccard"),
         )
     )
-    out._fp_cache = sigs  # release path (Engine.release) for long sessions
     return out
 
 
@@ -1748,6 +1734,7 @@ def dup_cluster_profile(
     )
 
 
+@pinning
 def cross_corpus_contamination(
     train: DataFrame,
     bench: DataFrame,
@@ -1792,8 +1779,9 @@ def cross_corpus_contamination(
     cands = ba.join(bb, ["band", "band_key"]).select("train_id", "bench_id").distinct()
     # the pair list is referenced THREE times below (two semi-join prunes +
     # the intersection base) — materialize it once (small: candidate pairs,
-    # not corpus rows) so the two signature passes don't replay per use
-    cands = cands.localCheckpoint()
+    # not corpus rows) so the two signature passes don't replay per use;
+    # the returned intersection base reads it, so it is pinned
+    cands = pin(cands.localCheckpoint())
 
     def shingle_set(df: DataFrame, out_id: str) -> DataFrame:
         return (
@@ -1839,9 +1827,7 @@ def cross_corpus_contamination(
             ).alias("jaccard"),
         )
     )
-    # the pair-list checkpoint backs the returned lineage (the
-    # intersection base) — carry it so release_spines frees its blocks
-    return carry_caches(out, out, cands)
+    return out
 
 
 def source_dup_rates(
@@ -2244,13 +2230,12 @@ def _exact_substring_merged_spans(
     k: int | None,
     on_degradation: str,
     cap_pairs_per_doc: int,
-) -> tuple[DataFrame, "DataFrame | None"]:
-    """Within-corpus core of the ExactSubstr tier: ``(merged,
-    anchors_cache)`` where ``merged`` is one row per document that LOSES
-    tokens — ``(id_col, __msp array<struct<s:int,e:int>>)``, 1-based
-    inclusive token-position intervals, sorted, disjoint,
-    adjacent-coalesced — and ``anchors_cache`` is the persisted anchor
-    frame to unpersist (or None).
+) -> DataFrame:
+    """Within-corpus core of the ExactSubstr tier: one row per document
+    that LOSES tokens — ``(id_col, __msp array<struct<s:int,e:int>>)``,
+    1-based inclusive token-position intervals, sorted, disjoint,
+    adjacent-coalesced.  The guarded path pins its persisted anchor
+    table.
 
     Semantics (Lee et al. 2022, "Deduplicating Training Data Makes
     Language Models Better", arXiv:2107.06499 — the ExactSubstr tier): a
@@ -2286,14 +2271,12 @@ def _exact_substring_merged_spans(
     k, w = _es_validate(min_len, k, on_degradation)
     t = _es_token_table(df, id_col, text_col)
     anch = _es_anchor_table(t, id_col, min_len, k, w)
-    anch_cache = None
     if on_degradation != "off":
         # persist: the guard's bucket aggregate and BOTH sides of the
         # candidate self-join consume the anchor table, and its lineage
         # (tokenize + O(n·k) gram hashing + O(n·w) winnowing) is the
         # expensive map stage
-        anch_cache = anch.persist()
-        anch = anch_cache
+        anch = pin(anch.persist())
         stats = (
             anch.groupBy("__h")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -2379,7 +2362,7 @@ def _exact_substring_merged_spans(
         )
         .distinct()
     )
-    return _es_merge(sp, id_col), anch_cache
+    return _es_merge(sp, id_col)
 
 
 def _exact_substring_merged_spans_grams(
@@ -2444,6 +2427,7 @@ def _exact_substring_merged_spans_grams(
     return _es_merge(sp, id_col)
 
 
+@pinning
 def exact_substring_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -2475,23 +2459,18 @@ def exact_substring_dedup(
     (:func:`_exact_substring_merged_spans_grams`).
     """
     if impl == "grams":
-        merged, cache = (
-            _exact_substring_merged_spans_grams(df, id_col, text_col, min_len),
-            None,
-        )
+        merged = _exact_substring_merged_spans_grams(df, id_col, text_col, min_len)
     elif impl == "anchors":
-        merged, cache = _exact_substring_merged_spans(
+        merged = _exact_substring_merged_spans(
             df, id_col, text_col, min_len, k, on_degradation, cap_pairs_per_doc
         )
     else:
         raise ValueError(f"impl must be 'anchors' or 'grams', got {impl!r}")
     t = _es_token_table(df, id_col, text_col)
-    out = _es_rewrite(t, merged, id_col, out_col)
-    if cache is not None:
-        out._anchor_cache = cache
-    return out
+    return _es_rewrite(t, merged, id_col, out_col)
 
 
+@pinning
 def exact_substring_decontaminate(
     df: DataFrame,
     bench: DataFrame,
@@ -2538,11 +2517,9 @@ def exact_substring_decontaminate(
     tb_t = _es_token_table(bench, bench_id_col, bench_text_col)
     anch_a = _es_anchor_table(t, id_col, min_len, k, w)
     anch_b = _es_anchor_table(tb_t, bench_id_col, min_len, k, w)
-    caches = []
     if on_degradation != "off":
-        anch_a = anch_a.persist()
-        anch_b = anch_b.persist()
-        caches = [anch_a, anch_b]
+        anch_a = pin(anch_a.persist())
+        anch_b = pin(anch_b.persist())
         ca = anch_a.groupBy("__h").agg(F.count(F.lit(1)).alias("ca"))
         cb = anch_b.groupBy("__h").agg(F.count(F.lit(1)).alias("cb"))
         stats = (
@@ -2591,10 +2568,7 @@ def exact_substring_decontaminate(
         (F.col("__pa") - F.col("__l")).cast("int").alias("__s"),
         (F.col("__pa") + F.lit(k - 1) + F.col("__r")).cast("int").alias("__e"),
     ).distinct()
-    out = _es_rewrite(t, _es_merge(sp, id_col), id_col, out_col)
-    if caches:
-        out._anchor_caches = caches
-    return out
+    return _es_rewrite(t, _es_merge(sp, id_col), id_col, out_col)
 
 
 def intra_substring_dedup(

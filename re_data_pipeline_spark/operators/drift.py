@@ -27,11 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from re_data_pipeline_spark.functions.text import tokens
-from re_data_pipeline_spark.operators.ids import carry_caches
+from re_data_pipeline_spark.operators.ids import pin, pinning
 
 _FIXED = 10**6
 
 
+@pinning
 def token_js_divergence(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -68,9 +69,8 @@ def token_js_divergence(
     # aggregated TWICE (measured: 7 exchanges, zero ReusedExchange, r14).
     # The pinned frame is |union vocabulary|-sized (two longs + token per
     # row), the same storage class as an ordinal spine — bounded by
-    # Heaps-law vocab growth, never the corpus.  The handle rides the
-    # result for ids.release_spines / engine.release.
-    joined = (
+    # Heaps-law vocab growth, never the corpus.
+    joined = pin(
         ca.join(cb, ["__s", "__tok"], "full_outer")
         .select(
             "__s",
@@ -98,7 +98,7 @@ def token_js_divergence(
         + F.when(F.col("__cb") > 0, q * F.log(q / m)).otherwise(F.lit(0.0)) / 2
     )
     fixed = F.round(term * _FIXED, 0).cast("long")
-    out = (
+    return (
         x.withColumn("__f", fixed)
         .groupBy("__s")
         .agg(
@@ -114,7 +114,6 @@ def token_js_divergence(
             F.round(F.col("js_micro") / float(_FIXED), 6).alias("js"),
         )
     )
-    return carry_caches(out, out, joined)
 
 
 def embedding_centroid_drift(

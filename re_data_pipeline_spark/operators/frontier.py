@@ -35,7 +35,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from re_data_pipeline_spark.operators.ids import pin, pinning
 
+
+@pinning
 def pareto_frontier_2d(
     df: DataFrame,
     cost_col: str,
@@ -57,11 +60,12 @@ def pareto_frontier_2d(
         F.col(delay_col).asc(),
         F.col(tiebreak_col).asc(),
     ]
-    parts = (
+    parts = pin(
         df.repartitionByRange(n, *ordering)
         .sortWithinPartitions(*ordering)
         .withColumn("__pid", F.spark_partition_id())
-    ).persist()
+        .persist()
+    )
     # (a) running min over earlier rows within the range partition
     w_local = (
         Window.partitionBy("__pid")
@@ -81,10 +85,8 @@ def pareto_frontier_2d(
     # F.least skips NULLs (earliest row of the earliest partition has both
     # NULL → no earlier row → always on the frontier)
     pm = F.least(F.col("__lm"), F.col("__gm"))
-    out = (
+    return (
         local.join(F.broadcast(prefix), "__pid")
         .where(pm.isNull() | (F.col(delay_col) < pm))
         .drop("__pid", "__lm", "__gm")
     )
-    out._frontier_cache = parts  # release path for long-lived sessions
-    return out

@@ -27,10 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.operators.ids import carry_caches, release_local_checkpoint
+from re_data_pipeline_spark.operators.ids import pin, pinning, release_local_checkpoint
 from re_data_pipeline_spark.operators.layout import narrow_small_frame
 
 
+@pinning
 def pagerank_fixed(
     edges: DataFrame,
     src: str = "src",
@@ -47,10 +48,9 @@ def pagerank_fixed(
     BFS/SSSP protocol; the pre-r14 lazy chain left nodes + edges + every
     round's checkpoint pinned with NO release handle — 7 RDDs per
     invocation surviving ``clearCache`` for the session's lifetime).  The
-    final round's checkpoint backs the returned frame and its handle rides
-    ``_ordinal_caches`` so ``ids.release_spines`` frees it after
-    materialization — it is a checkpoint scan, so release only after the
-    result is consumed (the standard carry contract)."""
+    final round's checkpoint backs the returned frame and is pinned, so
+    ``ids.release_spines`` frees it after materialization — it is a
+    checkpoint scan, so release only after the result is consumed."""
     nodes = narrow_small_frame(
         edges.select(F.col(src).alias("n"))
         .union(edges.select(F.col(dst).alias("n")))
@@ -95,13 +95,14 @@ def pagerank_fixed(
         # final round's checkpoint — the seed/edge checkpoints are dead.
         release_local_checkpoint(nodes)
         release_local_checkpoint(e)
-        return carry_caches(out, out, ranks)
+        pin(ranks)
+        return out
     # iterations=0 returns the uniform seed, which still recomputes THROUGH
-    # the nodes checkpoint — carry ITS handle so release_spines frees it
-    # after the caller materializes; the edge checkpoint is provably dead
-    # (nothing in the returned lineage reads it), release it now (r15).
+    # the nodes checkpoint — pin it; the edge checkpoint is provably dead
+    # (nothing in the returned lineage reads it), release it now.
     release_local_checkpoint(e)
-    return carry_caches(out, out, nodes)
+    pin(nodes)
+    return out
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

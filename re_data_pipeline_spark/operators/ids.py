@@ -29,23 +29,73 @@ shuffle+sort and regenerates identical ids.  The order key must be unique
 (add a tiebreak column) or ties straddling a range boundary could
 interleave.
 
-Cache discipline: every spine pins one persisted frame.  Callers that
-materialize inside the operator release it themselves; callers that RETURN
-a lazy plan (the query bodies) carry the handle on the returned DataFrame
-(``carry_spines``) so a long-lived session can ``release_spines(df)`` after
-materializing — or wrap the whole build in ``spine_scope()`` and let the
-scope unpersist every spine it saw.
+Pin discipline: an operator that persists or localCheckpoints a frame its
+lazy result still reads registers it with :func:`pin`; the
+:func:`pinning` boundary around the operator (and around every registered
+query body) attaches the pins made while the result was built to the
+returned DataFrame as ``_pins``, and :func:`release_spines` frees them once
+the caller has materialized the result.  Callers that materialize inside
+the operator release their own intermediates and pin nothing.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _LOCAL_BITS = 33  # monotonically_increasing_id: id = (pid << 33) | local_index
-_SCOPE_STACK: list[list[DataFrame]] = []
+# Pin lists of the open boundaries, innermost last.  Module-level, not
+# thread-local: a streaming foreachBatch step runs on the py4j callback
+# thread while its caller waits inside a boundary on the main thread.
+_OPEN_PINS: list[list[DataFrame]] = []
+
+
+def pin(frame: DataFrame) -> DataFrame:
+    """Record ``frame`` (persisted or localCheckpoint'ed) as storage the
+    result under construction still reads; returns ``frame``.  Raises
+    outside a :func:`pinning` boundary, where nothing would ever release
+    it."""
+    if not _OPEN_PINS:
+        raise RuntimeError(
+            "pin() outside a @pinning boundary: decorate the function that pins"
+        )
+    _OPEN_PINS[-1].append(frame)
+    return frame
+
+
+def _result_frames(out) -> list[DataFrame]:
+    if isinstance(out, dict):
+        out = tuple(out.values())
+    elif not isinstance(out, tuple):
+        out = (out,)
+    return [f for f in out if isinstance(f, DataFrame)]
+
+
+def pinning(fn):
+    """Boundary decorator: run ``fn`` with a fresh pin list open, attach
+    the list as ``_pins`` to the DataFrame result (or to every DataFrame
+    of a dict / tuple result — one shared list), and add its pins to the
+    enclosing boundary's list.  A result therefore carries every pin made
+    while it was built, through any final projection, union or join, and
+    none of its arguments' pins.  If ``fn`` raises, nothing is attached."""
+
+    @functools.wraps(fn)
+    def wrapper(*args, **kwargs):
+        pins: list[DataFrame] = []
+        _OPEN_PINS.append(pins)
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            _OPEN_PINS.pop()
+        for f in _result_frames(out):
+            f._pins = pins
+        if _OPEN_PINS:
+            _OPEN_PINS[-1].extend(pins)
+        return out
+
+    return wrapper
 
 
 def _check_partition_widths(counts: dict[int, int], op: str) -> None:
@@ -63,6 +113,7 @@ def _check_partition_widths(counts: dict[int, int], op: str) -> None:
         )
 
 
+@pinning
 def assign_ordinals(
     df: DataFrame,
     order_cols: list[Column | str],
@@ -73,9 +124,8 @@ def assign_ordinals(
     single-partition sort.  ``order_cols`` must define a total order.
 
     The repartitioned+sorted intermediate is persisted (it feeds both the
-    count pass and the output); the handle is exposed on the result as
-    ``._ordinal_cache`` so long-lived callers can ``unpersist()`` after
-    materializing (see also :func:`release_spines` / :func:`spine_scope`)."""
+    count pass and the output) and pinned: :func:`release_spines` frees it
+    after materializing."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parts = (
         df.repartitionByRange(n, *order_cols)
@@ -86,9 +136,7 @@ def assign_ordinals(
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__mid", F.monotonically_increasing_id())
     )
-    parts = parts.persist()
-    if _SCOPE_STACK:
-        _SCOPE_STACK[-1].append(parts)
+    parts = pin(parts.persist())
     counts = {r["__pid"]: r["n"] for r in parts.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()}
     _check_partition_widths(counts, "assign_ordinals")
     offsets, acc = {}, 0
@@ -102,44 +150,8 @@ def assign_ordinals(
     out = parts.withColumn(
         ordinal_col, (offset_expr + local).cast("bigint")
     ).drop("__pid", "__mid")
-    out._ordinal_cache = parts  # release path for long-lived sessions
-    out._ordinal_caches = [parts]
     out._ordinal_total = acc  # total row count (already collected — free)
     return out
-
-
-def carry_caches(src_df: DataFrame, out: DataFrame, new_cache) -> DataFrame:
-    """Propagate persisted-spine handles through chained rank operators.
-
-    PUBLIC inter-module contract (used by operators/ and plans/queries.py
-    — any operator that persists an intermediate and returns a derived
-    frame must thread its handle through here so ``release_spines`` can
-    free it).
-
-    ``_ordinal_cache`` stays "the most recent spine" (assign_ordinals'
-    original contract); ``_ordinal_caches`` accumulates EVERY spine pinned
-    along the chain — without it, a chained call (q117's three quartile
-    orderings) would overwrite the only handle to the previous call's
-    persisted data, leaving it pinned but unreleasable in long-lived
-    sessions."""
-    caches = list(getattr(src_df, "_ordinal_caches", []))
-    prev = getattr(src_df, "_ordinal_cache", None)
-    if prev is not None and not any(prev is c for c in caches):
-        caches.append(prev)
-    if new_cache is not None and not any(new_cache is c for c in caches):
-        caches.append(new_cache)
-    out._ordinal_cache = new_cache if new_cache is not None else prev
-    out._ordinal_caches = caches
-    return out
-
-
-def carry_spines(src_df: DataFrame, out: DataFrame) -> DataFrame:
-    """Copy spine-cache handles from ``src_df`` onto ``out`` — for bodies
-    that finish with ``.select(...)``/``.withColumn(...)``, which return a
-    NEW DataFrame without the ``_ordinal_cache(s)`` attributes.  Without
-    this, the final projection silently strips the only release handle and
-    the persisted spine stays pinned for the session's lifetime."""
-    return carry_caches(src_df, out, getattr(src_df, "_ordinal_cache", None))
 
 
 def release_local_checkpoint(df: DataFrame | None, blocking: bool = False) -> bool:
@@ -170,83 +182,22 @@ def release_local_checkpoint(df: DataFrame | None, blocking: bool = False) -> bo
 
 
 def release_spines(df: DataFrame, blocking: bool = False) -> int:
-    """Unpersist every spine cache handle attached to ``df`` (both the
-    ``_ordinal_caches`` accumulation and the legacy single
-    ``_ordinal_cache``); call AFTER materializing.  Returns the number of
-    frames released.  Safe to call twice (unpersist is idempotent) and on
-    frames that carry no handles (returns 0).  Handles that are
-    localCheckpoint scans (not CacheManager entries) release through
-    ``release_local_checkpoint`` — but note the recompute caveat there:
-    only attach a checkpoint handle when the carrying frame is meant to be
-    materialized exactly once."""
-    handles: list[DataFrame] = list(getattr(df, "_ordinal_caches", []))
-    single = getattr(df, "_ordinal_cache", None)
-    if single is not None and not any(single is h for h in handles):
-        handles.append(single)
-    for h in handles:
-        h.unpersist(blocking)
-        release_local_checkpoint(h, blocking)
-    return len(handles)
+    """Free every pin riding ``df`` (see :func:`pinning`); call AFTER
+    materializing.  Persisted pins unpersist, checkpoint pins release
+    through :func:`release_local_checkpoint` — so do not materialize
+    ``df`` again afterwards: a released checkpoint cannot be recomputed.
+    Returns the number of pins.
+    Safe to call twice and on frames without pins (returns 0).  Does NOT
+    release ``df``'s own checkpoint blocks: a caller discarding ``df``
+    adds ``release_local_checkpoint(df)``."""
+    pins = getattr(df, "_pins", ())
+    for p in pins:
+        p.unpersist(blocking)
+        release_local_checkpoint(p, blocking)
+    return len(pins)
 
 
-# Every non-spine cache-handle attribute an operator may attach to its
-# result frame (skyline's range-partitioned frontier, incremental-LSH's new
-# bucket table, fingerprint and anchor caches).  ONE list, shared by
-# Engine.release and tools/leak_audit.release_all, so a new carried-handle
-# attribute cannot silently diverge between the engine and its auditor (r16).
-HANDLE_ATTRS: tuple[str, ...] = (
-    "_frontier_cache",
-    "new_buckets",
-    "_fp_cache",
-    "_anchor_cache",
-)
-
-
-def release_handles(df: DataFrame, blocking: bool = False) -> int:
-    """The full operator-pinned release path for a result frame: spine
-    handles (``release_spines``) plus every ``HANDLE_ATTRS`` attribute and
-    the ``_anchor_caches`` list.  Does NOT release the frame's own
-    localCheckpoint blocks — callers that discard the frame itself add
-    ``release_local_checkpoint(df)`` (see tools/leak_audit.py).  Returns
-    the number of frames released."""
-    n = release_spines(df, blocking)
-    for attr in HANDLE_ATTRS:
-        h = getattr(df, attr, None)
-        if h is not None:
-            h.unpersist(blocking)
-            n += 1
-    for h in getattr(df, "_anchor_caches", []) or []:
-        h.unpersist(blocking)
-        n += 1
-    return n
-
-
-@contextmanager
-def spine_scope(blocking: bool = False):
-    """Context manager that releases EVERY spine persisted by
-    ``assign_ordinals`` inside the ``with`` block — the belt-and-braces
-    release path for long-lived sessions that materialize inside the
-    scope::
-
-        with spine_scope():
-            df = exact_ntile(frame, [...], 4)
-            df.write.parquet(...)        # materialize INSIDE the scope
-        # ← all spines unpersisted here
-
-    Do NOT return a still-lazy plan out of the scope and materialize later:
-    the spines would already be unpersisted and the plan would recompute
-    them (correct — the sorted order is deterministic — but the persist's
-    cost savings are lost).  Scopes nest; each releases only its own."""
-    handles: list[DataFrame] = []
-    _SCOPE_STACK.append(handles)
-    try:
-        yield handles
-    finally:
-        _SCOPE_STACK.pop()
-        for h in handles:
-            h.unpersist(blocking)
-
-
+@pinning
 def assign_prefix_sums(
     df: DataFrame,
     order_cols: list[Column | str],
@@ -283,9 +234,9 @@ def assign_prefix_sums(
     SAME pass (monotonically_increasing_id arithmetic — free), for
     rank+cumulative consumers like ``vocab_coverage``.
 
-    Exposes ``._ordinal_cache`` (the persisted sorted frame — release
-    after materializing) and ``._prefix_total`` (the grand total,
-    already collected — free).
+    Pins the persisted sorted frame (release after materializing) and
+    exposes ``._prefix_total`` (the grand total, already collected —
+    free).
     """
     import pandas as pd  # noqa: F401  (mapInPandas contract)
     from pyspark.sql.types import LongType, StructField, StructType
@@ -297,9 +248,7 @@ def assign_prefix_sums(
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__mid", F.monotonically_increasing_id())
     )
-    parts = parts.persist()
-    if _SCOPE_STACK:
-        _SCOPE_STACK[-1].append(parts)
+    parts = pin(parts.persist())
     tots = parts.groupBy("__pid").agg(
         F.sum(F.col(value_col)).alias("s"), F.count(F.lit(1)).alias("n")
     ).collect()
@@ -338,13 +287,12 @@ def assign_prefix_sums(
             yield pdf[out_names]
 
     out = parts.mapInPandas(scan, StructType(out_fields))
-    out._ordinal_cache = parts
-    out._ordinal_caches = [parts]
     out._prefix_total = acc
     out._ordinal_total = oacc
     return out
 
 
+@pinning
 def grouped_prefix_sums(
     df: DataFrame,
     group_cols: list[str],
@@ -383,9 +331,10 @@ def grouped_prefix_sums(
         .withColumn(out_col, (F.col("__gps_cum") - F.col("__gps_base")).cast("bigint"))
         .drop("__gps_cum", "__gps_base", "__gps_ord")
     )
-    return carry_caches(df, out, ps._ordinal_cache)
+    return out
 
 
+@pinning
 def exact_quantiles(
     df: DataFrame,
     order_cols: list[Column | str],
@@ -425,9 +374,10 @@ def exact_quantiles(
         .join(o, "__q_ord")
         .select("q_num", "q_den", F.col(value_col).alias(out_value_col))
     )
-    return carry_caches(df, out, o._ordinal_cache)
+    return out
 
 
+@pinning
 def grouped_exact_quantiles(
     df: DataFrame,
     group_cols: list[str],
@@ -488,9 +438,10 @@ def grouped_exact_quantiles(
         .join(o.select(F.col("__gq_g"), F.col(value_col)), "__gq_g")
         .select(*group_cols, "q_num", "q_den", F.col(value_col).alias(out_value_col))
     )
-    return carry_caches(df, out, o._ordinal_cache)
+    return out
 
 
+@pinning
 def weighted_quantiles(
     df: DataFrame,
     order_cols: list[Column | str],
@@ -556,9 +507,10 @@ def weighted_quantiles(
             F.col("__wq_cum").alias("cum_weight"),
         )
     )
-    return carry_caches(df, out, ps._ordinal_cache)
+    return out
 
 
+@pinning
 def rank_features(
     df: DataFrame,
     order_cols: list[Column | str],
@@ -604,7 +556,7 @@ def rank_features(
             else F.round(ord_c / F.lit(float(n - 1)), digits)
         )
         out = out.withColumn(percent_rank_col, pr)
-    return carry_caches(df, out.drop("__ord_rf"), o._ordinal_cache)
+    return out.drop("__ord_rf")
 
 
 def exact_ntile(

@@ -29,8 +29,8 @@ from pyspark.sql.window import Window
 from re_data_pipeline_spark.functions.text import tokens, ws_tokens
 from re_data_pipeline_spark.operators.ids import (
     assign_prefix_sums,
-    carry_caches,
-    carry_spines,
+    pin,
+    pinning,
 )
 
 
@@ -136,6 +136,7 @@ def merge_inverted_indexes(
     )
 
 
+@pinning
 def pmi_collocations(
     df: DataFrame,
     text_col: str = "text",
@@ -181,13 +182,13 @@ def pmi_collocations(
     # as its own evaluation — without the pin the corpus bigram explode +
     # agg ran FOUR times (measured: 4 Generate nodes, zero ReusedExchange,
     # r14).  The pinned frame is pair-vocabulary-sized (Heaps-bounded),
-    # never the corpus; the handle rides the result for release_spines.
+    # never the corpus.
     # Measured CROSSOVER (keep this pin): at sf0.1 the pin reads 27%
     # slower (1.42 → 1.81 s — cache-store cost), but at the 10× sf1
     # anchor corpus it is 32% FASTER (5.35 → 3.65 s) because the four
     # saved corpus explodes grow linearly while the vocab store grows
     # sublinearly — the scale-correct side of the trade.
-    cb = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_12")).persist()
+    cb = pin(pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_12")).persist())
     left = cb.groupBy("w1").agg(F.sum("n_12").alias("__c1"))
     right = cb.groupBy("w2").agg(F.sum("n_12").alias("__c2"))
     n = cb.agg(F.sum("n_12").alias("__n"))
@@ -213,7 +214,7 @@ def pmi_collocations(
         )
     )
     w = Window.partitionBy("w1").orderBy(F.desc("pmi_micro"), F.asc("w2"))
-    out = (
+    return (
         scored.withColumn("rnk", F.row_number().over(w).cast("int"))
         .where(F.col("rnk") <= top_k)
         .select(
@@ -222,9 +223,9 @@ def pmi_collocations(
             "rnk",
         )
     )
-    return carry_caches(out, out, cb)
 
 
+@pinning
 def vocab_coverage(
     df: DataFrame,
     text_col: str = "text",
@@ -287,12 +288,11 @@ def vocab_coverage(
         ],
         "threshold_pct int, vocab_size bigint, __cum bigint",
     )
-    out = spec.select(
+    return spec.select(
         "threshold_pct",
         "vocab_size",
         F.round(F.col("__cum") / F.lit(float(total or 1)), 6).alias("coverage"),
     )
-    return carry_spines(ps, out)
 
 
 def boilerplate_ngrams(

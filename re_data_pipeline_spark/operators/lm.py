@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.operators.ids import assign_ordinals, carry_caches
+from re_data_pipeline_spark.operators.ids import assign_ordinals, pin, pinning
 from re_data_pipeline_spark.operators.layout import narrow_small_frame
 
 __all__ = ["ngram_lm_nll", "ngram_lm_train", "perplexity_buckets"]
@@ -67,7 +67,7 @@ def _grams(t: Column, n: int, out: Column) -> Column:
 
 def _train_tables(
     base: DataFrame, min_count2: int, min_count3: int
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, list[DataFrame]]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Build the three model tables and the 1-row corpus stats frame from
     the tokenized training corpus ``base`` (one ``__t`` token-array
     column).  Shared verbatim by :func:`ngram_lm_nll`'s train-in-place
@@ -75,10 +75,10 @@ def _train_tables(
     default scoring plan cannot drift from the frozen-model tables
     (r18; the q220/`_q220_snapshot_cuts` extraction precedent).
 
-    Returns ``(tri_model, bi_model, uni_model, stats, caches)`` with the
+    Returns ``(tri_model, bi_model, uni_model, stats)`` with the
     scoring-join column names (``__g3/__f3``, ``__b2/__f2``,
-    ``__w3/__f1``, ``__n_tok/__v``); ``caches`` are the persisted count
-    tables (see the pin rationale below) for the spine-cache protocol.
+    ``__w3/__f1``, ``__n_tok/__v``); the persisted count tables (see the
+    pin rationale below) are pinned.
     """
     # PERSIST the unigram and bigram count tables: uni feeds the corpus
     # stats, the bigram backoff denominators, AND the unigram floor; bi
@@ -89,8 +89,7 @@ def _train_tables(
     # scoring + totality.  Both tables are the MODEL tables the design
     # already bounds (|observed grams|, corpus-head-sized under pruning —
     # never the corpus); with the pins the plan is back to five corpus
-    # passes (uni/bi/tri builds + positions + totality).  Handles ride the
-    # spine-cache protocol like the cache_tokens frames.
+    # passes (uni/bi/tri builds + positions + totality).
     # Known trade (measured r14): an unmaterialized InMemoryRelation
     # reports its child's (wildly high) size estimate, so the pin demotes
     # the scoring joins from AQE-broadcast to sort-merge at small scale
@@ -101,15 +100,15 @@ def _train_tables(
     # same-mode); deployments that KNOW the model is reference-corpus-
     # bounded (CCNet-faithful) opt back into map-only scoring with
     # ``broadcast_model=True`` instead of relying on AQE to guess.
-    caches: list[DataFrame] = []
     # when ``base`` is an unmaterialized cache its inflated size estimate
     # makes narrow_small_frame a no-op, preserving the r14 plan-hash notes
-    uni = narrow_small_frame(
-        base.select(F.explode("__t").alias("__w")).groupBy("__w").agg(
-            F.count(F.lit(1)).alias("__c1")
-        )
-    ).persist()
-    caches.append(uni)
+    uni = pin(
+        narrow_small_frame(
+            base.select(F.explode("__t").alias("__w")).groupBy("__w").agg(
+                F.count(F.lit(1)).alias("__c1")
+            )
+        ).persist()
+    )
     # 1-row corpus stats: N tokens, V distinct tokens
     stats = uni.agg(
         F.sum("__c1").cast("bigint").alias("__n_tok"),
@@ -117,21 +116,22 @@ def _train_tables(
     )
     # adjacent pairs, keyed by the joined gram AND its first word (the
     # backoff denominator c1(first) joins on the word, not the gram)
-    bi = narrow_small_frame(
-        base.select(
-            F.explode(
-                _grams(
-                    F.col("__t"),
-                    2,
-                    lambda i: F.array_join(F.slice(F.col("__t"), i, 2), " "),
-                )
-            ).alias("__g2")
-        )
-        .groupBy("__g2")
-        .agg(F.count(F.lit(1)).alias("__c2"))
-        .withColumn("__w1", F.split(F.col("__g2"), " ")[0])
-    ).persist()
-    caches.append(bi)
+    bi = pin(
+        narrow_small_frame(
+            base.select(
+                F.explode(
+                    _grams(
+                        F.col("__t"),
+                        2,
+                        lambda i: F.array_join(F.slice(F.col("__t"), i, 2), " "),
+                    )
+                ).alias("__g2")
+            )
+            .groupBy("__g2")
+            .agg(F.count(F.lit(1)).alias("__c2"))
+            .withColumn("__w1", F.split(F.col("__g2"), " ")[0])
+        ).persist()
+    )
     # tri is NOT narrowed: narrow_small_frame targets persisted tables that
     # are re-scanned, and tri is neither persisted nor read by anything but
     # tri_model, so its groupBy output is consumed once by the join below
@@ -193,9 +193,10 @@ def _train_tables(
         .cast("long")
         .alias("__f1"),
     )
-    return tri_model, bi_model, uni_model, stats, caches
+    return tri_model, bi_model, uni_model, stats
 
 
+@pinning
 def ngram_lm_train(
     train_df: DataFrame,
     text_col: str = "text",
@@ -217,10 +218,9 @@ def ngram_lm_train(
     ``tests/test_lm.py``).  Write each to parquet, reload, and pass the
     dict as :func:`ngram_lm_nll`'s ``model=``.
 
-    The frames carry the training-time count-table pins via the
-    spine-cache protocol — release with ``ids.release_handles`` on any
-    ONE of them after the last has been materialized (double-unpersist
-    is a no-op, so releasing each is also fine).
+    The frames share the training-time count-table pins — release with
+    ``ids.release_spines`` on any ONE of them after the last has been
+    materialized (releasing each is also fine).
 
     Scale shape: identical to train-in-place (three explode→map-combined
     aggs, |observed grams| rows); the whole point is that this cost is
@@ -229,10 +229,10 @@ def ngram_lm_train(
     """
     t = _toks(text_col)
     base = train_df.select(t.alias("__t")).where(F.size("__t") > 0)
-    tri_model, bi_model, uni_model, stats, caches = _train_tables(
+    tri_model, bi_model, uni_model, stats = _train_tables(
         base, min_count2, min_count3
     )
-    out = {
+    return {
         "tri": tri_model.select(
             F.col("__g3").alias("gram"), F.col("__f3").alias("nll_micro")
         ),
@@ -246,13 +246,9 @@ def ngram_lm_train(
             F.col("__n_tok").alias("n_tokens"), F.col("__v").alias("vocab")
         ),
     }
-    for k, df in out.items():
-        for c in caches:
-            df = carry_caches(df, df, c)
-        out[k] = df
-    return out
 
 
+@pinning
 def ngram_lm_nll(
     train_df: DataFrame | None,
     score_df: DataFrame | None = None,
@@ -338,13 +334,9 @@ def ngram_lm_nll(
     # pressure, not a win.  Turn it on when the INPUT lineage is expensive
     # (joins, filters over other operators) — or better, persist that
     # small upstream frame yourself (q206 persists its survivor set).
-    # Handles ride the spine-cache protocol (carry_caches) so callers'
-    # release_spines/carry_spines free them after materialization.
-    caches: list[DataFrame] = []
     sc = score_df.select(F.col(id_col), t.alias("__t"))
     if cache_tokens:
-        sc = sc.persist()
-        caches.append(sc)
+        sc = pin(sc.persist())
     if model is not None:
         # frozen model loaded from storage: rename the public columns back
         # to the scoring-join names — no training pass, no count-table pins
@@ -366,12 +358,10 @@ def ngram_lm_nll(
         else:
             base = train_df.select(t.alias("__t")).where(F.size("__t") > 0)
             if cache_tokens:
-                base = base.persist()
-                caches.append(base)
-        tri_model, bi_model, uni_model, stats, train_caches = _train_tables(
+                base = pin(base.persist())
+        tri_model, bi_model, uni_model, stats = _train_tables(
             base, min_count2, min_count3
         )
-        caches.extend(train_caches)
 
     pos = sc.where(F.size("__t") >= 3).select(
         F.col(id_col),
@@ -423,7 +413,7 @@ def ngram_lm_nll(
         F.round(F.sum("__f") / (F.count(F.lit(1)) * 1e6), 6).alias("nll"),
     )
     # totality: <3-token docs come back with 0 positions and NULL nll
-    out = (
+    return (
         sc.select(id_col)
         .join(agg, id_col, "left")
         .select(
@@ -435,13 +425,9 @@ def ngram_lm_nll(
             "nll",
         )
     )
-    # hand the persisted-token handles to the caller via the spine-cache
-    # protocol (release_spines / carry_spines free them after the action)
-    for c in caches:
-        out = carry_caches(out, out, c)
-    return out
 
 
+@pinning
 def perplexity_buckets(
     scored_df: DataFrame,
     group_col: str,
@@ -483,7 +469,7 @@ def perplexity_buckets(
     ).withColumnRenamed(group_col, "__grp")
     idx = F.expr(f"CAST(({b} * (__g - __g0)) DIV __n AS INT)")
     label_arr = F.array(*[F.lit(x) for x in labels])
-    out = (
+    return (
         o.join(
             F.broadcast(firsts),
             F.col(group_col).eqNullSafe(F.col("__grp")),
@@ -492,8 +478,3 @@ def perplexity_buckets(
         .withColumn(bucket_col, F.element_at(label_arr, idx + 1))
         .drop("__g", "__g0", "__n", "__grp")
     )
-    # carry the INPUT's cache handles too (ngram_lm_nll's persisted token
-    # frames ride scored_df._ordinal_caches) — carrying only the spine
-    # would strip the caller's release handle for them (r13 fix, the
-    # standard ids.carry_caches protocol)
-    return carry_caches(scored_df, out, getattr(o, "_ordinal_cache", None))

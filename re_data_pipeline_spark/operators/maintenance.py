@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.operators.ids import carry_caches
+from re_data_pipeline_spark.operators.ids import pin, pinning
 
 
 def plan_compaction(
@@ -439,6 +439,7 @@ def retract_from_lsh_index(
     return index_buckets.join(ids, id_col, "left_anti")
 
 
+@pinning
 def incremental_corpus_update(
     corpus_a: DataFrame,
     batch_b: DataFrame,
@@ -486,9 +487,9 @@ def incremental_corpus_update(
     boundary (the span tier's guard/anchor actions would otherwise
     re-analyze the batch lineage per job — the stage-boundary
     discipline) — ``kept`` itself is a lazy span-join over that
-    checkpoint — and it carries that checkpoint handle plus the span
-    tier's anchor pins for ``ids.release_handles`` / ``Engine.release``;
-    the batch bucket table is released here (it is dead once the
+    checkpoint — and the result pins that checkpoint plus the span
+    tier's anchor tables for ``ids.release_spines``; the batch bucket
+    table is released here (it is dead once the
     boundary checkpoint materializes).  The returned ``manifest``
     recomputes through ``kept`` and ``corpus_a``; ``dropped`` recomputes
     through ``batch_b``'s ORIGINAL lineage (it is the dedup tier's
@@ -523,7 +524,7 @@ def incremental_corpus_update(
     # STAGE BOUNDARY (dedup → span tier): the A×B span pass runs guard and
     # anchor actions over the deduped batch several times — checkpoint,
     # then release the dedup tier's own pin (dead once materialized)
-    b_ded = r["kept"].localCheckpoint()
+    b_ded = pin(r["kept"].localCheckpoint())
     r["new_buckets"].unpersist()
 
     es = exact_substring_decontaminate(
@@ -542,11 +543,6 @@ def incremental_corpus_update(
     )
     m_b = shard_manifest(kept, id_col, content_cols, num_shards=num_shards)
     manifest = merge_shard_manifests(m_a, m_b)
-    # live handles ride the kept frame: its own checkpoint + the span
-    # tier's anchor pins (manifest recomputes through kept)
-    kept = carry_caches(kept, kept, b_ded)
-    for c in getattr(es, "_anchor_caches", []) or []:
-        kept = carry_caches(kept, kept, c)
     return {
         "kept": kept,
         "dropped": r["dropped"],

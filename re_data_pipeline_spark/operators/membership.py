@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.operators.ids import carry_caches
+from re_data_pipeline_spark.operators.ids import pin, pinning
 
 
 def _bit_position(key: F.Column, salt: int, m_bits: int) -> F.Column:
@@ -62,6 +62,7 @@ def bloom_bitmap(
     return bits.groupBy("word_idx").agg(F.bit_or("__mask").alias("word"))
 
 
+@pinning
 def bloom_prefilter_anti_join(
     batch: DataFrame,
     corpus: DataFrame,
@@ -83,10 +84,10 @@ def bloom_prefilter_anti_join(
     measured 24 bit_or aggregates / 9 broadcasts with ZERO reuse at k=4
     pre-fix, i.e. ~8 full corpus scans for what must be one (r14).  The
     pinned frame is at most m/64 rows (16k rows for a 1 Mbit filter) —
-    KB-scale at any corpus size; its release handle rides the result
-    (``ids.release_spines`` / ``engine.release``).
+    KB-scale at any corpus size; it is pinned for the caller to release
+    (``ids.release_spines``).
     """
-    bitmap = bloom_bitmap(corpus, key_col, m_bits, k).persist()
+    bitmap = pin(bloom_bitmap(corpus, key_col, m_bits, k).persist())
     key = F.col(key_col)
     probed = batch
     for i in range(k):
@@ -121,8 +122,7 @@ def bloom_prefilter_anti_join(
     verified_new = candidates.join(
         corpus.select(key_col), on=key_col, how="left_anti"
     )
-    out = definitely_new.unionByName(verified_new)
-    return carry_caches(out, out, bitmap)
+    return definitely_new.unionByName(verified_new)
 
 
 def domain_blocklist_filter(

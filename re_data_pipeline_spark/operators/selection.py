@@ -34,8 +34,8 @@ from re_data_pipeline_spark.functions.text import tokens
 from re_data_pipeline_spark.operators.ids import (
     assign_ordinals,
     assign_prefix_sums,
-    carry_caches,
-    carry_spines,
+    pin,
+    pinning,
     release_local_checkpoint,
 )
 from re_data_pipeline_spark.operators.layout import (
@@ -61,6 +61,7 @@ def hash_bucket(col: Column, n_buckets: int) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % n_buckets
 
 
+@pinning
 def dsir_log_weights(
     df: DataFrame,
     id_col: str,
@@ -97,11 +98,13 @@ def dsir_log_weights(
     # projection both read it, and Catalyst plans each as its own
     # evaluation — without the pin the corpus token explode+agg ran twice
     # (the r14 multiply-referenced-frame rule; B ≤ 4096 rows, trivially
-    # pinnable).  Handle rides the result for release_spines.
-    bucket_counts = tok.groupBy("__b").agg(
-        F.count(F.lit(1)).alias("raw_c"),
-        F.sum(F.when(F.col("__tgt"), 1).otherwise(0)).alias("tgt_c"),
-    ).persist()
+    # pinnable).
+    bucket_counts = pin(
+        tok.groupBy("__b").agg(
+            F.count(F.lit(1)).alias("raw_c"),
+            F.sum(F.when(F.col("__tgt"), 1).otherwise(0)).alias("tgt_c"),
+        ).persist()
+    )
     totals = bucket_counts.agg(
         F.sum("raw_c").alias("raw_t"), F.sum("tgt_c").alias("tgt_t")
     )
@@ -121,7 +124,7 @@ def dsir_log_weights(
             .alias("lw_fixed"),
         )
     )
-    out = (
+    return (
         tok.join(F.broadcast(model), "__b")
         .groupBy(id_col)
         .agg(
@@ -129,7 +132,6 @@ def dsir_log_weights(
             F.round(F.sum("lw_fixed") / float(_FIXED), 6).alias("dsir_logweight"),
         )
     )
-    return carry_caches(out, out, bucket_counts)
 
 
 def classifier_weight(bucket: Column, n_buckets: int) -> Column:
@@ -168,6 +170,7 @@ def classifier_score(
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-F.lit(scale) * mean))
 
 
+@pinning
 def mixture_allocation(
     df: DataFrame,
     domain_col: str,
@@ -198,7 +201,7 @@ def mixture_allocation(
     # PERSIST the |domains|-row quota base: the grand-total agg and the
     # quota projection both read it — without the pin the corpus size agg
     # ran twice (r14 multiply-referenced-frame rule; domains are few).
-    counts = (
+    counts = pin(
         df.groupBy(domain_col).agg(F.sum(s).cast("decimal(38,0)").alias("n")).persist()
     )
     total = counts.agg(F.sum("n").cast("decimal(38,0)").alias("__t"))
@@ -219,7 +222,7 @@ def mixture_allocation(
     # bounded-global-window: x is the |domains|-row quota table (one row
     # per domain after the groupBy), never the corpus
     w = Window.orderBy(F.desc("rem"), F.asc(domain_col))
-    out = (
+    return (
         x.crossJoin(F.broadcast(leftover))
         .withColumn("__rk", F.row_number().over(w))
         .select(
@@ -233,7 +236,6 @@ def mixture_allocation(
             .alias("quota"),
         )
     )
-    return carry_caches(out, out, counts)
 
 
 def grouped_split(
@@ -326,6 +328,7 @@ def stratified_sample_exact(
     )
 
 
+@pinning
 def quota_sample(
     df: DataFrame,
     domain_col: str,
@@ -358,18 +361,15 @@ def quota_sample(
     quotas = q_full.select(domain_col, "quota")
     pri = F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string")))
     w = Window.partitionBy(domain_col).orderBy(pri.asc(), F.col(id_col).asc())
-    out = (
+    return (
         df.join(F.broadcast(quotas), domain_col)
         .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= F.col("quota"))
         .drop("__rn", "quota")
     )
-    # thread mixture_allocation's carried count pin through the local
-    # .select + join (each returns a fresh frame without the handle — the
-    # r15 leak audit caught q164 pinning one table per call)
-    return carry_spines(q_full, out)
 
 
+@pinning
 def temperature_quotas(
     df: DataFrame,
     domain_col: str,
@@ -413,18 +413,16 @@ def temperature_quotas(
         F.col("domain_size").alias("weight"),
         "quota",
     )
-    out = (
+    return (
         weighted.select(
             domain_col, F.col("__n").cast("bigint").alias("domain_size")
         )
         .join(quotas, domain_col)
         .select(domain_col, "domain_size", "weight", "quota")
     )
-    # thread mixture_allocation's carried count pin through to the result
-    # (the r15 leak audit caught q166 pinning one table per call)
-    return carry_spines(q_full, out)
 
 
+@pinning
 def snake_shards(
     df: DataFrame,
     size_col: Column | str,
@@ -460,12 +458,10 @@ def snake_shards(
     o = assign_ordinals(df, order, "__ord")
     r = F.pmod(F.col("__ord"), F.lit(2 * num_shards))
     shard = F.when(r < num_shards, r).otherwise(F.lit(2 * num_shards - 1) - r)
-    out = o.withColumn(shard_col, shard.cast("int")).drop("__ord")
-    # carry (not just copy) the spine handle: chained calls must accumulate
-    # handles or the previous spine becomes pinned-but-unreleasable
-    return carry_spines(o, out)
+    return o.withColumn(shard_col, shard.cast("int")).drop("__ord")
 
 
+@pinning
 def char_bigram_nll(
     train_df: DataFrame,
     score_df: DataFrame | None = None,
@@ -514,8 +510,8 @@ def char_bigram_nll(
     # its own evaluation — without the pin the training corpus was
     # exploded ~5× per scoring call (the ngram_lm_nll pattern, r14).  The
     # table is |observed bigrams| rows — alphabet-bounded for alphabetic
-    # scripts — and its release handle rides the result.
-    big = grams.groupBy("__g").agg(F.count(F.lit(1)).alias("__c2")).persist()
+    # scripts — and pinned for the caller to release.
+    big = pin(grams.groupBy("__g").agg(F.count(F.lit(1)).alias("__c2")).persist())
     ctx = big.groupBy(F.substring("__g", 1, 1).alias("__c1")).agg(
         F.sum("__c2").alias("__cc")
     )
@@ -564,13 +560,13 @@ def char_bigram_nll(
             ),
         )
     )
-    out = scored.groupBy(id_col).agg(
+    return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
         F.round(F.sum("__t") / (F.count(F.lit(1)) * 1e6), 6).alias("nll"),
     )
-    return carry_caches(out, out, big)
 
 
+@pinning
 def curriculum_interleave(
     df: DataFrame,
     tier_col: str,
@@ -606,7 +602,7 @@ def curriculum_interleave(
         "__g",
     )
     firsts = o.groupBy("__t").agg(F.min("__g").alias("__t0"))
-    out = (
+    return (
         o.join(F.broadcast(firsts), "__t")
         .withColumn(rank_col, (F.col("__g") - F.col("__t0")).cast("bigint"))
         .withColumn(
@@ -615,9 +611,9 @@ def curriculum_interleave(
         )
         .drop("__t", "__g", "__t0")
     )
-    return carry_spines(o, out)
 
 
+@pinning
 def length_bucketed_batches(
     df: DataFrame,
     size_col: str,
@@ -656,7 +652,7 @@ def length_bucketed_batches(
     ]
     o = assign_ordinals(d, order, "__lb_g")
     firsts = o.groupBy(bucket_col).agg(F.min("__lb_g").alias("__lb_b0"))
-    out = (
+    return (
         o.join(F.broadcast(firsts), bucket_col)
         .withColumn(
             batch_col,
@@ -666,7 +662,6 @@ def length_bucketed_batches(
         )
         .drop("__lb_g", "__lb_b0")
     )
-    return carry_spines(o, out)
 
 
 def train_quality_classifier(
@@ -837,6 +832,7 @@ def classifier_score_trained(
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-F.lit(scale) * mean))
 
 
+@pinning
 def contiguous_pack(
     df: DataFrame,
     order_cols: list,
@@ -875,16 +871,13 @@ def contiguous_pack(
         raise ValueError(f"ctx_len must be ≥ 1; got {ctx_len}")
     spine = assign_prefix_sums(df, order_cols, size_col, out_col="__cum")
     sz = F.col(size_col).cast("long")
-    # NOTE: derive from `spine` but keep the variable — where/withColumn
-    # return new frames WITHOUT the _ordinal_cache handle, and carrying
-    # from the stripped frame would pin the persisted spine unreleasably
     p = spine.where(sz > 0).withColumn("__st", F.col("__cum") - sz)
     c = F.lit(int(ctx_len)).cast("long")
     ks = F.sequence(
         F.expr(f"__st DIV {int(ctx_len)}"),
         F.expr(f"(__cum - 1) DIV {int(ctx_len)}"),
     )
-    out = (
+    return (
         p.withColumn("__k", F.explode(ks))
         .withColumn("__ov_s", F.greatest(F.col("__st"), F.col("__k") * c))
         .withColumn("__ov_e", F.least(F.col("__cum"), (F.col("__k") + 1) * c))
@@ -896,7 +889,6 @@ def contiguous_pack(
         .withColumn(count_col, (F.col("__ov_e") - F.col("__ov_s")).cast("bigint"))
         .drop("__cum", "__st", "__k", "__ov_s", "__ov_e")
     )
-    return carry_spines(spine, out)
 
 
 # Above this k, kcenter_select(mode="auto") switches from the

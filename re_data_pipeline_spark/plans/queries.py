@@ -49,6 +49,7 @@ from re_data_pipeline_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
+from re_data_pipeline_spark.operators.ids import pin, pinning
 from re_data_pipeline_spark.operators.similarity import ann_lsh_topk, cosine_topk
 from re_data_pipeline_spark.operators.spatial import radius_join
 from re_data_pipeline_spark.operators.upsert import delisted_rows, upsert_append
@@ -70,7 +71,9 @@ def query(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate @query registration: {name}")
-        QUERIES[name] = fn
+        # the boundary hands every pin the body made to its result, after
+        # whatever final projection, union or join the body ends with
+        fn = QUERIES[name] = pinning(fn)
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -1044,11 +1047,8 @@ def q34_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier) on a bounded subset — shingle equi-join, no cross join."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     pairs = ngram_jaccard_pairs(d, "doc_id", "text", shingle_words=3, threshold=0.01)
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
-    return carry_spines(
-        pairs, pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 @query(
@@ -1946,9 +1946,8 @@ def q71_near_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     survivors = near_dedup_pipeline(d, threshold=0.5)
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
-    return carry_spines(survivors, survivors.select("doc_id", "lang", "n_chars"))
+    return survivors.select("doc_id", "lang", "n_chars")
 
 
 _Q72_SQL = f"""
@@ -2024,13 +2023,9 @@ def q72_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = near_dedup_pipeline(
         kept.select("doc_id", "text", "n_tokens", "quality"), threshold=0.5
     )
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
-    return carry_spines(
-        survivors,
-        survivors.select(
-            "doc_id", "n_tokens", F.round("quality", 6).alias("quality")
-        ),
+    return survivors.select(
+        "doc_id", "n_tokens", F.round("quality", 6).alias("quality")
     )
 
 
@@ -2488,9 +2483,8 @@ def q123_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(4)
     ]
     kept = semantic_dedup_pipeline(corpus, planes, "vec_id", "embedding", 0.95)
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
-    return carry_spines(kept, kept.select("vec_id", "label"))
+    return kept.select("vec_id", "label")
 
 
 @query(
@@ -2623,10 +2617,9 @@ def q85_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
     kept = cluster_dedup_pipeline(d, threshold=0.5)
-    return carry_spines(kept, kept.select("doc_id", "lang"))
+    return kept.select("doc_id", "lang")
 
 
 @query(
@@ -2675,7 +2668,7 @@ def q87_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps a constant fraction of orders, so the frame scales with the
     corpus and an unpartitioned window would plan the
     ``Exchange SinglePartition`` this engine bans for corpus-scale data."""
-    from re_data_pipeline_spark.operators.ids import carry_spines, rank_features
+    from re_data_pipeline_spark.operators.ids import rank_features
 
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") % 41 == 0)
     # one shared spine: ntile and percent_rank use the same ordering, so
@@ -2687,11 +2680,7 @@ def q87_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ntile_col="quartile",
         percent_rank_col="pr",
     )
-    # the final projection returns a NEW DataFrame — carry the persisted
-    # spine handle onto it so sessions can release_spines() after collect
-    return carry_spines(
-        t, t.select("o_orderkey", F.col("quartile").cast("long").alias("quartile"), "pr")
-    )
+    return t.select("o_orderkey", F.col("quartile").cast("long").alias("quartile"), "pr")
 
 
 @query(
@@ -4296,16 +4285,9 @@ def q107_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty_index = spark.createDataFrame([], "doc_id bigint, band int, band_key string")
     r1 = incremental_lsh_dedup(batch1, empty_index)
     r2 = incremental_lsh_dedup(batch2, r1["updated_index"])
-    out = (
+    return (
         r1["kept"].select("doc_id", "n_chars").unionByName(r2["kept"].select("doc_id", "n_chars"))
     )
-    # both kept frames recompute through their batch's persisted bucket
-    # table — carry the pins so release_spines frees them after the one
-    # materialization (r15 leak audit: 2 tables pinned per call before)
-    from re_data_pipeline_spark.operators.ids import carry_caches
-
-    out = carry_caches(out, out, r1["new_buckets"])
-    return carry_caches(out, out, r2["new_buckets"])
 
 
 @query(
@@ -4776,7 +4758,7 @@ def q117_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition ``Window.orderBy`` sorts.  Monetary sums are decimal;
     recency is whole days from the corpus max timestamp (scalar subquery).
     """
-    from re_data_pipeline_spark.operators.ids import carry_spines, exact_ntile
+    from re_data_pipeline_spark.operators.ids import exact_ntile
 
     e = load_table(spark, sf_dir, "events")
     anchor = e.agg(F.max("ts").alias("mx"))
@@ -4794,19 +4776,14 @@ def q117_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = exact_ntile(rfm, [F.col("recency_days").asc(), F.col("user_id").asc()], 4, "r_quartile")
     t = exact_ntile(t, [F.col("frequency").desc(), F.col("user_id").asc()], 4, "f_quartile")
     t = exact_ntile(t, [F.col("monetary").desc(), F.col("user_id").asc()], 4, "m_quartile")
-    # t accumulated THREE spine handles (_ordinal_caches) — carry them
-    # through the final projection so release_spines() can free all three
-    return carry_spines(
-        t,
-        t.select(
-            "user_id",
-            "recency_days",
-            "frequency",
-            "monetary",
-            F.col("r_quartile").cast("int").alias("r_quartile"),
-            F.col("f_quartile").cast("int").alias("f_quartile"),
-            F.col("m_quartile").cast("int").alias("m_quartile"),
-        ),
+    return t.select(
+        "user_id",
+        "recency_days",
+        "frequency",
+        "monetary",
+        F.col("r_quartile").cast("int").alias("r_quartile"),
+        F.col("f_quartile").cast("int").alias("f_quartile"),
+        F.col("m_quartile").cast("int").alias("m_quartile"),
     )
 
 
@@ -4827,11 +4804,11 @@ def q118_global_ordinals(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle IS the naive global window — proving the distributed construction
     produces identical ordinals while every stage stays partition-parallel.
     """
-    from re_data_pipeline_spark.operators.ids import assign_ordinals, carry_spines
+    from re_data_pipeline_spark.operators.ids import assign_ordinals
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     out = assign_ordinals(o, [F.desc("o_totalprice"), F.asc("o_orderkey")])
-    return carry_spines(out, out.select("o_orderkey", "ordinal"))
+    return out.select("o_orderkey", "ordinal")
 
 
 # ---------------------------------------------------------------------------
@@ -5295,10 +5272,9 @@ def q128_keep_best_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     d = d.withColumn("quality", F.length("text").cast("bigint"))
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
     kept = cluster_dedup_keep_best(d, "quality", threshold=0.5)
-    return carry_spines(kept, kept.select("doc_id", "quality"))
+    return kept.select("doc_id", "quality")
 
 
 _MIX_BUDGET = 10_000
@@ -5715,9 +5691,7 @@ def q136_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("doc_id") * 13 + 1) % 100).alias("dst"),
         )
     )
-    # pagerank_fixed already returns exactly (node, rank_fixed) with the
-    # final-round checkpoint handle attached — a trailing .select would
-    # strip the handle and leak the block (r15 advice fix)
+    # pagerank_fixed already returns exactly (node, rank_fixed)
     return pagerank_fixed(edges, iterations=5)
 
 
@@ -5892,21 +5866,14 @@ def q153_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (scoping union ×2, intersection join, final left join) and each
     # reference would otherwise replay the ENTIRE prefix-filter plan —
     # the un-checkpointed form planned 88 parquet scans / 493 operators
-    # for this one query.  The checkpoint handle rides the result for
-    # release-after-materialization.
-    cands = cands.localCheckpoint()
+    # for this one query.  The checkpoint backs the result: pinned.
+    cands = pin(cands.localCheckpoint())
     verified = jaccard_on_pairs(cands, d, "doc_id", "text", shingle_words=1)
     # both engines filter on the same double quotient: with set sizes
     # ≤ ~60, neighbouring ratios are ≥ 5e-5 apart — far beyond one ulp, so
     # the float comparison cannot disagree with the exact rational test
-    from re_data_pipeline_spark.operators.ids import carry_caches
-
-    return carry_caches(
-        verified,
-        verified.where(F.col("jaccard") >= 0.8).select(
-            "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-        ),
-        cands,
+    return verified.where(F.col("jaccard") >= 0.8).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -6031,13 +5998,7 @@ def q152_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("delay"),
     )
     fr = pareto_frontier_2d(pts, "cost", "delay", "o_orderkey")
-    out = fr.select("o_orderkey", "cost", "delay")
-    # the .select strips the Python-side `_frontier_cache` attr — register
-    # the range-partitioned pin on the spine protocol so release_spines
-    # frees it after materialization (r15 leak audit)
-    from re_data_pipeline_spark.operators.ids import carry_caches
-
-    return carry_caches(fr, out, getattr(fr, "_frontier_cache", None))
+    return fr.select("o_orderkey", "cost", "delay")
 
 
 _Q148_SQL = """
@@ -6104,12 +6065,8 @@ def q148_spatial_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         near.select(F.col("pid").alias("id_a"), F.col("qid").alias("id_b")),
         max_iterations=60,
     )
-    from re_data_pipeline_spark.operators.ids import carry_spines
-
-    return carry_spines(
-        comps,
-        pts.join(comps, pts.pid == comps.node, "left")
-        .select("pid", F.coalesce("component", "pid").alias("cluster")),
+    return pts.join(comps, pts.pid == comps.node, "left").select(
+        "pid", F.coalesce("component", "pid").alias("cluster")
     )
 
 
@@ -6933,19 +6890,15 @@ def q160_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from re_data_pipeline_spark.operators.ids import assign_ordinals
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    parts, spines = [], []
+    parts = []
     for epoch in (0, 1):
         pri = F.md5(
             F.concat_ws(":", F.lit("epoch"), F.lit(epoch), F.col("doc_id").cast("string"))
         )
         e = d.withColumn("epoch", F.lit(epoch)).withColumn("__pri", pri)
         out = assign_ordinals(e, [F.asc("__pri"), F.asc("doc_id")], ordinal_col="position")
-        spines.append(out._ordinal_cache)
         parts.append(out.select("doc_id", "epoch", F.col("position").cast("bigint").alias("position")))
-    u = parts[0].unionByName(parts[1])
-    # both epoch spines ride the union so release_spines() frees them
-    u._ordinal_cache, u._ordinal_caches = spines[-1], spines
-    return u
+    return parts[0].unionByName(parts[1])
 
 
 def _bpe_round_sql(i: int) -> str:
@@ -7173,11 +7126,9 @@ def q164_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer Hamilton + the identical ROW_NUMBER in DuckDB."""
     from re_data_pipeline_spark.operators.selection import quota_sample
 
-    from re_data_pipeline_spark.operators.ids import carry_spines
-
     d = load_table(spark, sf_dir, "documents")
     kept = quota_sample(d, "lang", _Q164_BUDGET, "doc_id")
-    return carry_spines(kept, kept.select("doc_id", "lang"))
+    return kept.select("doc_id", "lang")
 
 
 _Q165_SQL = """
@@ -7230,13 +7181,9 @@ def q165_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources = n.where(F.col("n") % 97 == 0).select(F.col("n").alias("node"))
     out = bfs_distances(edges, sources, max_iterations=80)
     # bfs returns its final visited CHECKPOINT frame directly; the cast
-    # projection hides it from release_local_checkpoint(result), so carry
-    # the checkpoint frame itself as the release handle (r15 leak audit)
-    from re_data_pipeline_spark.operators.ids import carry_caches
-
-    return carry_caches(
-        out, out.select("node", F.col("dist").cast("int").alias("dist")), out
-    )
+    # projection hides it from release_local_checkpoint(result), so pin it
+    pin(out)
+    return out.select("node", F.col("dist").cast("int").alias("dist"))
 
 
 _Q166_BUDGET = 10_000
@@ -7382,10 +7329,9 @@ def q168_snake_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint").alias("n_tokens"),
     )
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
     s = snake_shards(d, "n_tokens", _Q168_SHARDS, order_tiebreak=["doc_id"])
-    return carry_spines(s, s.select("doc_id", "n_tokens", "shard"))
+    return s.select("doc_id", "n_tokens", "shard")
 
 
 @query(
@@ -7807,14 +7753,14 @@ def q175_global_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces identical running totals while every stage stays
     partition-parallel.  The W1-sorted-report analogue of the reference's
     cumulative rollups, re-expressed for corpus scale."""
-    from re_data_pipeline_spark.operators.ids import assign_prefix_sums, carry_spines
+    from re_data_pipeline_spark.operators.ids import assign_prefix_sums
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
     ps = assign_prefix_sums(o, [F.asc("o_orderkey")], "cents", out_col="running_cents")
-    return carry_spines(ps, ps.select("o_orderkey", "cents", "running_cents"))
+    return ps.select("o_orderkey", "cents", "running_cents")
 
 
 @query(
@@ -7879,7 +7825,7 @@ def q177_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing budgets, contract SLAs), at one range exchange instead of a
     single-reducer sort.  Values are fixed-point cents, so engines agree
     bit-for-bit."""
-    from re_data_pipeline_spark.operators.ids import carry_spines, exact_quantiles
+    from re_data_pipeline_spark.operators.ids import exact_quantiles
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -7891,7 +7837,7 @@ def q177_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         quantiles=((1, 4), (1, 2), (3, 4), (9, 10), (99, 100)),
     )
-    return carry_spines(out, out.select("q_num", "q_den", "value"))
+    return out.select("q_num", "q_den", "value")
 
 
 _Q178_SQL = f"""
@@ -8031,11 +7977,8 @@ def q180_curriculum_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = curriculum_interleave(
         d, "tier", [F.asc("__pri"), F.asc("doc_id")], num_tiers=3
     )
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
-    return carry_spines(
-        out, out.select("doc_id", "tier", "tier_rank", "interleave_key")
-    )
+    return out.select("doc_id", "tier", "tier_rank", "interleave_key")
 
 
 _Q181_TNUM, _Q181_TDEN = 1, 2
@@ -8210,7 +8153,7 @@ def q184_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     token mass.  One prefix-sum spine over (n_chars, doc_id) summing
     token counts, one aggregate row unpivoted to a 3-row broadcast spec,
     integer reach tests throughout."""
-    from re_data_pipeline_spark.operators.ids import carry_spines, weighted_quantiles
+    from re_data_pipeline_spark.operators.ids import weighted_quantiles
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -8224,7 +8167,7 @@ def q184_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         quantiles=((1, 2), (3, 4), (9, 10)),
     )
-    return carry_spines(out, out.select("q_num", "q_den", "value", "cum_weight"))
+    return out.select("q_num", "q_den", "value", "cum_weight")
 
 
 _Q185_SQL = f"""
@@ -8303,10 +8246,9 @@ def q186_keep_top_k_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     d = d.withColumn("quality", F.length("text").cast("bigint"))
-    from re_data_pipeline_spark.operators.ids import carry_spines
 
     kept = cluster_dedup_keep_best(d, "quality", threshold=0.5, keep_k=2)
-    return carry_spines(kept, kept.select("doc_id", "quality"))
+    return kept.select("doc_id", "quality")
 
 
 def _stage_id_range_inbox(
@@ -8373,12 +8315,8 @@ def q187_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFr
         inbox = _stage_id_range_inbox(d, stage, 4, ordered_mtimes=True)
         kept = streaming_incremental_dedup(spark, inbox, d.schema)
         # kept unions localCheckpoint'ed frames — already materialized, so
-        # deleting the staged files afterwards is safe; carry the per-batch
-        # checkpoint handles through the projection (r15 advice fix — the
-        # bare .select stripped them and leaked one block per micro-batch)
-        from re_data_pipeline_spark.operators.ids import carry_spines
-
-        return carry_spines(kept, kept.select("doc_id", "n_chars"))
+        # deleting the staged files afterwards is safe
+        return kept.select("doc_id", "n_chars")
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -8487,7 +8425,6 @@ def q190_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     waste near zero for embedding/inference passes.  ONE ordinal spine
     over (bucket, size desc, id); never a partitionBy(bucket) window
     (4 buckets would mean 4 reducers for the whole corpus)."""
-    from re_data_pipeline_spark.operators.ids import carry_spines
     from re_data_pipeline_spark.operators.selection import length_bucketed_batches
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -8497,7 +8434,7 @@ def q190_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = length_bucketed_batches(
         d, "n_tokens", list(_Q190_EDGES), _Q190_BATCH, order_tiebreak=["doc_id"]
     )
-    return carry_spines(out, out.select("doc_id", "n_tokens", "bucket", "batch"))
+    return out.select("doc_id", "n_tokens", "bucket", "batch")
 
 
 def _q191_oracle_sql(n: int = 30, radius: int = 2) -> str:
@@ -8580,7 +8517,7 @@ def q192_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew on top); per-group ranks come from a |groups|-row (first, count)
     agg, target ordinals from integer ceil arithmetic, and the selection
     is one broadcast spec join."""
-    from re_data_pipeline_spark.operators.ids import carry_spines, grouped_exact_quantiles
+    from re_data_pipeline_spark.operators.ids import grouped_exact_quantiles
 
     d = load_table(spark, sf_dir, "documents").select("lang", "n_chars", "doc_id")
     out = grouped_exact_quantiles(
@@ -8590,7 +8527,7 @@ def q192_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         quantiles=((1, 4), (1, 2), (3, 4), (9, 10)),
     )
-    return carry_spines(out, out.select("lang", "q_num", "q_den", "value"))
+    return out.select("lang", "q_num", "q_den", "value")
 
 
 _Q193_K = 10
@@ -8811,7 +8748,7 @@ def q196_grouped_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, n_chars, doc_id), per-group bases from a min_by agg broadcast
     back; never a ``Window.partitionBy(lang)``, which funnels the corpus
     into |languages| reducers.  Oracle: the naive per-group window."""
-    from re_data_pipeline_spark.operators.ids import carry_spines, grouped_prefix_sums
+    from re_data_pipeline_spark.operators.ids import grouped_prefix_sums
 
     d = load_table(spark, sf_dir, "documents").select(
         "lang",
@@ -8823,7 +8760,7 @@ def q196_grouped_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, ["lang"], [F.asc("n_chars"), F.asc("doc_id")], "n_tokens",
         out_col="running_tokens",
     )
-    return carry_spines(out, out.select("lang", "doc_id", "n_tokens", "running_tokens"))
+    return out.select("lang", "doc_id", "n_tokens", "running_tokens")
 
 
 # 20 variants of each planted boilerplate sentence (variant token at
@@ -9403,22 +9340,14 @@ def q203_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     `Window.partitionBy(lang)` (languages are few and skewed: the corpus
     would funnel into |langs| reducers); per-language first-ordinals and
     sizes from a |langs|-row broadcast agg."""
-    from re_data_pipeline_spark.operators.ids import carry_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_nll, perplexity_buckets
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    # thread the LM's persisted uni/bi model-table handles through the
-    # .where/.join projections (each returns a fresh frame without
-    # _ordinal_caches); perplexity_buckets then carries them onto its
-    # output alongside the ordinal spine (r15 advice fix)
     lm_out = ngram_lm_nll(d)
-    scored = carry_spines(lm_out, lm_out.where(F.col("nll").isNotNull()))
-    scored = carry_spines(scored, scored.join(d.select("doc_id", "lang"), "doc_id"))
+    scored = lm_out.where(F.col("nll").isNotNull())
+    scored = scored.join(d.select("doc_id", "lang"), "doc_id")
     out = perplexity_buckets(scored, "lang")
-    return carry_spines(
-        out,
-        out.select("doc_id", "lang", "nll_micro", "nll", "group_rank", "bucket"),
-    )
+    return out.select("doc_id", "lang", "nll_micro", "nll", "group_rank", "bucket")
 
 
 # Shared DuckDB CTE block for the synthesized-host blocklist fixture
@@ -9636,15 +9565,11 @@ def q206_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token arrays: ~6 downstream consumers re-run this join otherwise
     # (measured 48 s → 12 s at sf0.01 parity), and caching the narrow
     # frame is the choice that still holds at 100 TB
-    survivors = d.join(kept_hosts, "doc_id").persist()
-
-    # thread the LM's model-table persist handles through .where/.join so
-    # they reach the final frame's _ordinal_caches (r15 advice fix)
-    from re_data_pipeline_spark.operators.ids import carry_spines as _cs
+    survivors = pin(d.join(kept_hosts, "doc_id").persist())
 
     lm_out = ngram_lm_nll(survivors)
-    scored = _cs(lm_out, lm_out.where(F.col("nll").isNotNull()))
-    scored = _cs(scored, scored.join(survivors.select("doc_id", "lang"), "doc_id"))
+    scored = lm_out.where(F.col("nll").isNotNull())
+    scored = scored.join(survivors.select("doc_id", "lang"), "doc_id")
     buck = perplexity_buckets(scored, "lang")
     kept_lm = buck.where(F.col("bucket") != "tail").select("doc_id")
 
@@ -9659,12 +9584,7 @@ def q206_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = fp.join(
         winners.select("doc_id"), "doc_id", "left_semi"
     ).select("doc_id", "text", "lang")
-    out = shard_manifest(deduped, "doc_id", ["text", "lang"], num_shards=16)
-    # carry BOTH release handles (the buckets' ordinal spine and the
-    # survivors persist) so release_spines after materialization frees them
-    from re_data_pipeline_spark.operators.ids import carry_caches, carry_spines
-
-    return carry_caches(buck, carry_spines(buck, out), survivors)
+    return shard_manifest(deduped, "doc_id", ["text", "lang"], num_shards=16)
 
 
 _Q207_SQL = r"""
@@ -9766,16 +9686,12 @@ def q208_contiguous_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan) then row-local window math; fan-out per doc = its own window
     count.  Oracle: the single-partition window cumsum + LATERAL range."""
     from re_data_pipeline_spark.functions.text import ws_tokens
-    from re_data_pipeline_spark.operators.ids import carry_spines
     from re_data_pipeline_spark.operators.selection import contiguous_pack
 
     d = load_table(spark, sf_dir, "documents")
     sized = d.select("doc_id", F.size(ws_tokens("text")).cast("bigint").alias("__n"))
     out = contiguous_pack(sized, [F.asc("doc_id")], "__n", ctx_len=256)
-    return carry_spines(
-        out,
-        out.select("doc_id", "chunk", "tok_start", "tok_end", "n_chunk_tokens"),
-    )
+    return out.select("doc_id", "chunk", "tok_start", "tok_end", "n_chunk_tokens")
 
 
 @query("q209_streaming_manifest", _Q205_SQL)
@@ -10274,7 +10190,7 @@ def q215_d4_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor frame is persisted across the k-center rounds so the dedup
     stage runs once, not once per round."""
     from re_data_pipeline_spark.operators.dedup import semantic_dedup_pipeline
-    from re_data_pipeline_spark.operators.ids import assign_ordinals, carry_spines
+    from re_data_pipeline_spark.operators.ids import assign_ordinals
     from re_data_pipeline_spark.operators.selection import kcenter_select
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -10290,7 +10206,7 @@ def q215_d4_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         [1.0 if ((i * 7 + j * 13) % 5) < 2 else -1.0 for j in range(dim)]
         for i in range(4)
     ]
-    kept = semantic_dedup_pipeline(corpus, planes, "vec_id", "embedding", 0.95).persist()
+    kept = pin(semantic_dedup_pipeline(corpus, planes, "vec_id", "embedding", 0.95).persist())
     centers = kcenter_select(kept, _Q215_K)  # k=8 -> greedy route
     ranks = {r["vec_id"]: r["center_rank"] for r in centers.collect()}
     cvecs = sorted(
@@ -10329,22 +10245,12 @@ def q215_d4_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bases = ordd.groupBy("cluster_id").agg(
         F.min("__ord").alias("__base"), F.count(F.lit(1)).alias("__n")
     )
-    out = (
+    return (
         ordd.join(F.broadcast(bases), "cluster_id")
         .withColumn("cluster_rank", (F.col("__ord") - F.col("__base") + 1))
         .where(F.col("cluster_rank") * 4 <= 3 * F.col("__n") + 3)
         .select("vec_id", "cluster_id", "d_center_micro", "cluster_rank")
     )
-    out = carry_spines(ordd, out)
-    # register the survivor-frame cache AND the handles it carries (the
-    # semantic-dedup star-forest checkpoint, r15) on the standard release
-    # path so release_spines()/spine_scope() cover them like any spine
-    out._ordinal_caches = [
-        *getattr(out, "_ordinal_caches", []),
-        *getattr(kept, "_ordinal_caches", []),
-        kept,
-    ]
-    return out
 
 
 _Q216_SQL = f"""
@@ -10411,26 +10317,18 @@ def q216_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bss materializes the pair list into its own edge checkpoint on every
     # path — the pair-list checkpoint is dead afterwards, including when
     # the loop raises on non-convergence (r16: release in finally, as q82/q121)
-    from re_data_pipeline_spark.operators.ids import (
-        carry_spines,
-        release_local_checkpoint,
-    )
+    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
 
     try:
         comp = connected_components_bss(pairs)
     finally:
         release_local_checkpoint(pairs)
-    lab = carry_spines(
-        comp,
+    lab = (
         d.select("doc_id")
         .join(comp, F.col("doc_id") == F.col("node"), "left")
-        .select(
-            "doc_id", F.coalesce("component", "doc_id").alias("cluster_id")
-        ),
+        .select("doc_id", F.coalesce("component", "doc_id").alias("cluster_id"))
     )
-    return carry_spines(
-        lab, grouped_split(lab, "cluster_id").select("doc_id", "cluster_id", "split")
-    )
+    return grouped_split(lab, "cluster_id").select("doc_id", "cluster_id", "split")
 
 
 _Q217_SQL = """
@@ -10572,7 +10470,6 @@ def q218_tokenizer_rot(spark: SparkSession, sf_dir: str) -> DataFrame:
     table under the A-trained vocabulary + the shared `_JS_SQL_TMPL`
     term math."""
     from re_data_pipeline_spark.operators.drift import token_js_divergence
-    from re_data_pipeline_spark.operators.ids import carry_spines
     from re_data_pipeline_spark.operators.unigram import (
         unigram_lm_train,
         unigram_word_fertility,
@@ -10611,7 +10508,7 @@ def q218_tokenizer_rot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("oov_words_b"),
     )
     js_full = token_js_divergence(a, b, "lang")
-    js = carry_spines(js_full, js_full.select("lang", "js_micro"))
+    js = js_full.select("lang", "js_micro")
     out = fert.join(js, "lang").select(
         "lang",
         "fertility_a_micro",
@@ -10622,9 +10519,7 @@ def q218_tokenizer_rot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oov_words_b",
         "js_micro",
     )
-    # the drift operator pins its |union vocabulary|-sized count table —
-    # thread the handle through the join/select onto the returned frame
-    return carry_spines(js, out)
+    return out
 
 
 def _curation_s1(spark: SparkSession, d: DataFrame) -> DataFrame:
@@ -10803,7 +10698,7 @@ def q219_fineweb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier; one map-combined manifest agg); stages chain through
     (doc_id)-keyed joins, never widening beyond the corpus."""
     from re_data_pipeline_spark.operators.dedup import exact_substring_dedup
-    from re_data_pipeline_spark.operators.ids import carry_caches, carry_spines
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_nll, perplexity_buckets
     from re_data_pipeline_spark.operators.maintenance import shard_manifest
 
@@ -10811,8 +10706,8 @@ def q219_fineweb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = _curation_s1(spark, d)
 
     lm_out = ngram_lm_nll(s1)
-    scored = carry_spines(lm_out, lm_out.where(F.col("nll").isNotNull()))
-    scored = carry_spines(scored, scored.join(s1.select("doc_id", "lang"), "doc_id"))
+    scored = lm_out.where(F.col("nll").isNotNull())
+    scored = scored.join(s1.select("doc_id", "lang"), "doc_id")
     buck = perplexity_buckets(scored, "lang")
     kept_lm = buck.where(F.col("bucket") != "tail").select("doc_id")
     # s2 is the STAGE BOUNDARY between curation and the span tier — an
@@ -10823,12 +10718,12 @@ def q219_fineweb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 15.5 s vs 3.7 s for the identical span work on a shallow
     # plan (sf0.1, r15).  The checkpoint truncates the plan to a
     # LogicalRDD scan; a production FineWeb run has exactly this
-    # boundary as an inter-stage parquet write.
-    s2 = s1.join(kept_lm, "doc_id").localCheckpoint()
+    # boundary as an inter-stage parquet write.  Pinned: the returned
+    # frame recomputes through it.
+    s2 = pin(s1.join(kept_lm, "doc_id").localCheckpoint())
     # the checkpoint materialized the whole curation tier, so every
     # upstream pin is dead — release NOW, not at result release time
-    from re_data_pipeline_spark.operators.ids import release_spines
-
+    release_spines(lm_out)
     release_spines(buck)
     s1.unpersist()
 
@@ -10836,11 +10731,7 @@ def q219_fineweb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = es.select("doc_id", F.col("clean_text").alias("text")).join(
         s2.select("doc_id", "lang"), "doc_id"
     )
-    out = shard_manifest(final, "doc_id", ["text", "lang"], num_shards=16)
-    # carry the live handles: the s2 checkpoint (the returned frame
-    # recomputes through it) and the span tier's anchor cache
-    out = carry_caches(out, out, s2)
-    return carry_caches(out, out, getattr(es, "_anchor_cache", None))
+    return shard_manifest(final, "doc_id", ["text", "lang"], num_shards=16)
 
 
 def _q220_snapshot_cuts(spark: SparkSession, d: DataFrame):
@@ -10850,7 +10741,7 @@ def _q220_snapshot_cuts(spark: SparkSession, d: DataFrame):
     `operators/maintenance.incremental_corpus_update`.  Upstream pins (LM
     model tables, rank spine, survivor frame) are released HERE, once the
     checkpoints materialize; the caller owns the two checkpoint handles."""
-    from re_data_pipeline_spark.operators.ids import carry_spines, release_spines
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_nll, perplexity_buckets
 
     s1 = _curation_s1(spark, d)
@@ -10860,11 +10751,9 @@ def _q220_snapshot_cuts(spark: SparkSession, d: DataFrame):
     # scoring BOTH sides in one pass (A's scores derive the frozen
     # thresholds; B's scores are gated by them)
     lm_out = ngram_lm_nll(a1, s1)
-    scored = carry_spines(lm_out, lm_out.where(F.col("nll").isNotNull()))
-    scored = carry_spines(scored, scored.join(s1.select("doc_id", "lang"), "doc_id"))
-    buck = perplexity_buckets(
-        carry_spines(scored, scored.where(F.col("doc_id") % 2 == 0)), "lang"
-    )
+    scored = lm_out.where(F.col("nll").isNotNull())
+    scored = scored.join(s1.select("doc_id", "lang"), "doc_id")
+    buck = perplexity_buckets(scored.where(F.col("doc_id") % 2 == 0), "lang")
     a_kept = buck.where(F.col("bucket") != "tail")
     # frozen per-language threshold: MAX kept-A nll — |langs| rows
     thr = a_kept.groupBy("lang").agg(F.max("nll").alias("thr_nll"))
@@ -10883,6 +10772,7 @@ def _q220_snapshot_cuts(spark: SparkSession, d: DataFrame):
     b_cur = s1.join(b_keep_ids, "doc_id").localCheckpoint()
     # the checkpoints materialized the curation tier — every upstream pin
     # (LM model tables, the rank spine, the survivor frame) is dead NOW
+    release_spines(lm_out)
     release_spines(buck)
     s1.unpersist()
     return a_fin, b_cur
@@ -11055,11 +10945,7 @@ def q220_incremental_crawl_update(spark: SparkSession, sf_dir: str) -> DataFrame
     incremental-scan discipline of
     `code/airflow_gcp/dags/tasks/property_listings/get_AV_listings.py:117-124`
     generalized to corpus curation."""
-    from re_data_pipeline_spark.operators.ids import (
-        carry_caches,
-        carry_spines,
-        release_local_checkpoint,
-    )
+    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
     from re_data_pipeline_spark.operators.maintenance import incremental_corpus_update
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
@@ -11078,11 +10964,9 @@ def q220_incremental_crawl_update(spark: SparkSession, sf_dir: str) -> DataFrame
     # callers that consume it must materialize it first (operator
     # docstring)
     release_local_checkpoint(b_cur)
-    # live handles on the returned frame: the kept batch's checkpoint +
-    # anchor pins (carried on upd["kept"]) and the a_fin checkpoint (the
-    # manifest recomputes through both)
-    out = carry_spines(upd["kept"], upd["manifest"])
-    return carry_caches(out, out, a_fin)
+    # the manifest recomputes through the operator's pins and a_fin
+    pin(a_fin)
+    return upd["manifest"]
 
 
 _Q221_SQL = f"""

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from re_data_pipeline_spark.operators.ids import pin, pinning
+
 
 def read_json_glob(
     spark: SparkSession,
@@ -51,6 +53,7 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str = "*.pdf") -> Data
     )
 
 
+@pinning
 def read_json_quarantine(
     spark: SparkSession, path_glob: str, schema: StructType
 ) -> tuple[DataFrame, DataFrame]:
@@ -69,7 +72,7 @@ def read_json_quarantine(
     with_corrupt = StructType(
         list(schema.fields) + [StructField("_corrupt_record", StringType())]
     )
-    df = (
+    df = pin(
         spark.read.schema(with_corrupt)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
@@ -80,10 +83,6 @@ def read_json_quarantine(
     bad = df.where(F.col("_corrupt_record").isNotNull()).select(
         F.col("_corrupt_record").alias("raw")
     )
-    # release path: the standard spine-cache convention (ids.release_spines
-    # walks _ordinal_caches), NOT a bespoke attribute nobody is told about —
-    # call release_spines(good) (or bad; double-unpersist is a no-op) once
-    # both frames are materialized, exactly like any ordinal-spine result
-    good._ordinal_caches = [df]
-    bad._ordinal_caches = [df]
+    # good and bad share the pin: release_spines(good) (or bad) once both
+    # frames are materialized
     return good, bad

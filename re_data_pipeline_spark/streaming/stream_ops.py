@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
+from re_data_pipeline_spark.operators.ids import pin, pinning, release_local_checkpoint
+
 
 def _coerce_event_time_schema(schema: StructType | str) -> StructType | str:
     """Rewrite TIMESTAMP_NTZ fields to TIMESTAMP.
@@ -179,6 +181,7 @@ def run_available_now_memory(stream_df: DataFrame, name: str, output_mode: str =
     return q
 
 
+@pinning
 def streaming_incremental_dedup(
     spark: SparkSession,
     path: str,
@@ -223,19 +226,18 @@ def streaming_incremental_dedup(
             [], f"{id_col} bigint, band int, band_key string"
         ),
         "kept": None,
-        "kept_ckpts": [],
     }
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        from re_data_pipeline_spark.operators.ids import release_local_checkpoint
-
         r = incremental_lsh_dedup(
             batch_df, state["index"], id_col, text_col,
             num_hashes, shingle_words, bands,
         )
-        kept = r["kept"].localCheckpoint(eager=True)
+        # the returned union reads every batch's kept checkpoint (this runs
+        # on the callback thread while the caller waits in the boundary)
+        kept = pin(r["kept"].localCheckpoint(eager=True))
         index = r["updated_index"].localCheckpoint(eager=True)
         r["new_buckets"].unpersist()
         # the new index is materialized (eager), so the PREVIOUS batch's
@@ -247,7 +249,6 @@ def streaming_incremental_dedup(
         state["kept"] = (
             kept if state["kept"] is None else state["kept"].unionByName(kept)
         )
-        state["kept_ckpts"].append(kept)
 
     import shutil
 
@@ -265,22 +266,12 @@ def streaming_incremental_dedup(
         # query terminated, and kept/index are localCheckpoint blocks
         # (block-manager resident), so the directory can go
         shutil.rmtree(ckpt, ignore_errors=True)
-    from re_data_pipeline_spark.operators.ids import (
-        carry_caches,
-        release_local_checkpoint,
-    )
-
     # the returned union derives only from the per-batch KEPT checkpoints;
     # the final index is dead once the drain finished (r14)
     release_local_checkpoint(state["index"])
     if state["kept"] is None:
         return spark.createDataFrame([], _coerce_event_time_schema(schema))
-    # the kept checkpoints back the result — carry their handles so
-    # release_spines frees them once the caller has materialized
-    out = state["kept"]
-    for k in state["kept_ckpts"]:
-        out = carry_caches(out, out, k)
-    return out
+    return state["kept"]
 
 
 def streaming_manifest(

@@ -196,8 +196,8 @@ def test_nonconvergence_raise_releases_everything(spark):
 
 
 def test_connected_components_carries_releasable_final_handle(spark):
-    """r15: both CC variants attach the final checkpoint's handle to the
-    returned frame, so release_spines after materialization drops storage
+    """r15: both CC variants pin the final checkpoint on the returned
+    frame, so release_spines after materialization drops storage
     back to baseline — before, the final block survived clearCache for the
     session (the q136/cluster_dedup leak class the r14 advice named)."""
     from re_data_pipeline_spark.operators.dedup import (
@@ -214,7 +214,7 @@ def test_connected_components_carries_releasable_final_handle(spark):
         before = persistent_ids(spark)
         comps = fn(pairs, max_iterations=64)
         assert comps.count() == 11
-        assert getattr(comps, "_ordinal_caches", []), f"{fn.__name__} carries no handle"
+        assert len(comps._pins) == 1, f"{fn.__name__} pins no final checkpoint"
         release_spines(comps)
         leaked = persistent_ids(spark) - before
         assert not leaked, f"{fn.__name__} final checkpoint not releasable: {leaked}"
@@ -223,7 +223,7 @@ def test_connected_components_carries_releasable_final_handle(spark):
 def test_pagerank_iterations0_releases_edges_and_carries_seed(spark):
     """r15: at iterations=0 the edge checkpoint is provably dead (released
     in-call) and the seed checkpoint — which the returned uniform ranks
-    recompute through — rides the carry protocol instead of leaking."""
+    recompute through — is pinned on the result instead of leaking."""
     from re_data_pipeline_spark.operators.graph import pagerank_fixed
     from re_data_pipeline_spark.operators.ids import release_spines
 
@@ -242,7 +242,7 @@ def test_pagerank_iterations0_releases_edges_and_carries_seed(spark):
 
 def test_cluster_dedup_pipelines_release_to_baseline(spark):
     """r15: cluster_dedup_pipeline / keep_best release the dead pair-list
-    checkpoint in-call and carry the CC label checkpoint, so one
+    checkpoint in-call and pin the CC label checkpoint, so one
     materialize + release_spines returns storage to baseline."""
     from re_data_pipeline_spark.operators.dedup import (
         cluster_dedup_keep_best,

@@ -89,8 +89,8 @@ def test_lsh_candidate_pairs_releases_bucket_cache(spark):
 
     before = _leaked_persist_ids(spark)
     lsh_candidate_pairs(docs_df(spark), "doc_id", "text").count()
-    # near_dedup stays LAZY, so its shingle pin rides the result by
-    # contract (r14) — materialize, then release like any spine consumer
+    # near_dedup stays LAZY, so its pair-list checkpoint is pinned on the
+    # result — materialize, then release like any spine consumer
     nd = near_dedup_pipeline(docs_df(spark), threshold=0.5)
     nd.count()
     release_spines(nd)
@@ -625,8 +625,9 @@ def test_lsh_recall_report_consistent_counts(spark):
 def test_minhash_estimate_pairs_values_and_release(spark):
     """Estimate = agreeing lanes / 16 over LSH candidates: identical docs
     score 1.0 (all 16 lanes), near-dups land strictly between the exact-dup
-    and nothing, the signature cache handle is exposed for release."""
+    and nothing, the signature cache is pinned on the result for release."""
     from re_data_pipeline_spark.operators.dedup import minhash_estimate_pairs
+    from re_data_pipeline_spark.operators.ids import release_spines
 
     out = minhash_estimate_pairs(docs_df(spark), "doc_id", "text")
     got = {(r.id_a, r.id_b): r for r in out.collect()}
@@ -635,8 +636,8 @@ def test_minhash_estimate_pairs_values_and_release(spark):
     assert all(
         abs(r.est_jaccard - r.matching_lanes / 16) < 1e-9 for r in got.values()
     )
-    assert hasattr(out, "_fp_cache")
-    out._fp_cache.unpersist()
+    assert len(out._pins) == 1
+    release_spines(out)
 
 
 def test_containment_best_degradation_guard(spark):
@@ -740,6 +741,7 @@ def test_simhash_radius_pairs_degradation_guard(spark):
     import pytest
 
     from re_data_pipeline_spark.operators.dedup import simhash_radius_pairs
+    from re_data_pipeline_spark.operators.ids import release_spines
 
     rows = [(i, "the same text every time") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -753,8 +755,8 @@ def test_simhash_radius_pairs_degradation_guard(spark):
         assert any(
             "near-duplicate fingerprint skew" in str(x.message) for x in rec
         )
-        assert hasattr(out, "_fp_cache")
-        out._fp_cache.unpersist()
+        assert len(out._pins) == 1
+        release_spines(out)
 
     with w.catch_warnings(record=True) as rec:
         w.simplefilter("always")
@@ -762,7 +764,7 @@ def test_simhash_radius_pairs_degradation_guard(spark):
         out = simhash_radius_pairs(df, bits=8, radius=2, cap_pairs_per_doc=1)
         out.count()
         assert any("widen fingerprints" in str(x.message) for x in rec)
-        out._fp_cache.unpersist()
+        release_spines(out)
 
     with pytest.raises(RuntimeError, match="degradation"):
         simhash_radius_pairs(df, radius=2, cap_pairs_per_doc=1,
@@ -774,7 +776,7 @@ def test_simhash_radius_pairs_degradation_guard(spark):
                                    on_degradation="off")
         assert out.count() == 40 * 39 // 2
         assert not any("degradation" in str(x.message) for x in rec)
-        assert not hasattr(out, "_fp_cache")
+        assert out._pins == []
 
     with pytest.raises(ValueError, match="on_degradation"):
         simhash_radius_pairs(df, on_degradation="explode")
@@ -1133,15 +1135,13 @@ def test_exact_substring_decontaminate_same_id_column_names(spark):
 
 
 def test_incremental_lsh_kept_rides_new_buckets_handle(spark):
-    """r16 review finding: `new_buckets` was listed in the shared
-    HANDLE_ATTRS release contract but never attached by any operator —
-    the kept frame now carries the persisted batch bucket table, so
-    `Engine.release(result["kept"])` / `ids.release_handles` free it
+    """The kept frame carries the persisted batch bucket table as its pin,
+    so `Engine.release(result["kept"])` / `ids.release_spines` free it
     without the manual dict access."""
     from tests.conftest import persistent_ids
 
     from re_data_pipeline_spark.operators.dedup import incremental_lsh_dedup
-    from re_data_pipeline_spark.operators.ids import release_handles
+    from re_data_pipeline_spark.operators.ids import release_spines
 
     spark.catalog.clearCache()
     before = persistent_ids(spark)
@@ -1153,8 +1153,8 @@ def test_incremental_lsh_kept_rides_new_buckets_handle(spark):
     )
     empty_index = spark.createDataFrame([], "doc_id bigint, band int, band_key string")
     r = incremental_lsh_dedup(docs, empty_index)
-    assert r["kept"].new_buckets is r["new_buckets"]
+    assert len(r["kept"]._pins) == 1 and r["kept"]._pins[0] is r["new_buckets"]
     r["kept"].count()
     assert persistent_ids(spark) - before, "bucket table should be pinned after materialization"
-    assert release_handles(r["kept"]) >= 1
+    assert release_spines(r["kept"]) >= 1
     assert not (persistent_ids(spark) - before)

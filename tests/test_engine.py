@@ -40,73 +40,48 @@ def test_profile_and_dedup(engine, spark):
     assert sorted(r.doc_id for r in survivors.collect()) == [1]
 
 
-def test_release_frees_anchor_caches(engine, spark):
-    """r15: exact_substring_* attach the persisted anchor table as
-    `_anchor_cache` (or a list under `_anchor_caches`) — Engine.release
-    must free those alongside the spine handles, or long-lived sessions
-    pin one anchor frame per span-dedup call."""
+def test_release_frees_anchor_pins(engine, spark):
+    """r15: exact_substring_* pin their persisted anchor tables (one, or
+    one per corpus side) — Engine.release must free every pin on the
+    result, or long-lived sessions pin one anchor frame per span-dedup
+    call."""
     from tests.conftest import persistent_ids
+
+    from re_data_pipeline_spark.operators.ids import pin, pinning
+
+    @pinning
+    def span_pass():
+        single = pin(spark.range(10).persist())
+        listed = pin(spark.range(20).persist())
+        single.count(); listed.count()
+        return spark.range(3)
 
     spark.catalog.clearCache()
     before = persistent_ids(spark)
-    out = spark.range(3)
-    single = spark.range(10).persist()
-    listed = spark.range(20).persist()
-    single.count(); listed.count()
-    out._anchor_cache = single
-    out._anchor_caches = [listed]
+    out = span_pass()
     assert len(persistent_ids(spark) - before) == 2
     assert engine.release(out) == 2
-    assert not (persistent_ids(spark) - before)
-
-
-def test_release_handles_covers_every_handle_attr(spark):
-    """r16: the handle-attribute set is ONE shared constant
-    (`ids.HANDLE_ATTRS` + `release_handles`) — every listed attribute,
-    the `_anchor_caches` list, and the spine handle must all release."""
-    from tests.conftest import persistent_ids
-
-    from re_data_pipeline_spark.operators.ids import HANDLE_ATTRS, release_handles
-
-    spark.catalog.clearCache()
-    before = persistent_ids(spark)
-    out = spark.range(3)
-    n_expected = 0
-    for i, attr in enumerate(HANDLE_ATTRS):
-        h = spark.range(5 + i).persist()
-        h.count()
-        setattr(out, attr, h)
-        n_expected += 1
-    listed = spark.range(20).persist()
-    listed.count()
-    out._anchor_caches = [listed]
-    spine = spark.range(30).persist()
-    spine.count()
-    out._ordinal_cache = spine
-    n_expected += 2
-    assert len(persistent_ids(spark) - before) == n_expected
-    assert release_handles(out) == n_expected
     assert not (persistent_ids(spark) - before)
 
 
 def test_engine_release_and_leak_audit_share_one_path(engine, spark, monkeypatch):
     """r16 ADVICE: tools/leak_audit.release_all used to hand-copy
     Engine.release's attribute list, so the auditor could silently
-    diverge from the release contract it asserts.  Both must now route
-    through the SAME `ids.release_handles` function."""
+    diverge from the release contract it asserts.  Both must route
+    through the SAME `ids.release_spines` function."""
     import importlib.util
     import os
 
     import re_data_pipeline_spark.operators.ids as ids
 
     calls = []
-    real = ids.release_handles
+    real = ids.release_spines
 
     def spy(df, blocking=False):
         calls.append(1)
         return real(df, blocking)
 
-    monkeypatch.setattr(ids, "release_handles", spy)
+    monkeypatch.setattr(ids, "release_spines", spy)
     engine.release(spark.range(1))
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
@@ -115,4 +90,4 @@ def test_engine_release_and_leak_audit_share_one_path(engine, spark, monkeypatch
     la = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(la)
     la.release_all(spark.range(1), spark)
-    assert len(calls) == 2, "Engine.release and leak_audit.release_all must both delegate to ids.release_handles"
+    assert len(calls) == 2, "Engine.release and leak_audit.release_all must both delegate to ids.release_spines"

@@ -353,7 +353,7 @@ def test_incremental_corpus_update_semantics_and_release(spark):
     frame's carried handles release executor storage to baseline."""
     from tests.conftest import persistent_ids
 
-    from re_data_pipeline_spark.operators.ids import release_handles
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.maintenance import (
         incremental_corpus_update,
         shard_manifest,
@@ -397,7 +397,7 @@ def test_incremental_corpus_update_semantics_and_release(spark):
         assert got[s] == expect[s]
     # the kept frame carries every live handle — releasing it returns
     # executor storage to baseline
-    release_handles(upd["kept"])
+    release_spines(upd["kept"])
     assert not (persistent_ids(spark) - before)
 
 
@@ -514,7 +514,7 @@ def test_incremental_corpus_update_injected_frozen_state(spark, tmp_path):
     from tests.conftest import persistent_ids
 
     from re_data_pipeline_spark.operators.dedup import lsh_bands, minhash_signature
-    from re_data_pipeline_spark.operators.ids import release_handles
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.maintenance import (
         incremental_corpus_update,
         shard_manifest,
@@ -548,7 +548,7 @@ def test_incremental_corpus_update_injected_frozen_state(spark, tmp_path):
         kept = {(r["doc_id"], r["text"], r["lang"]) for r in upd["kept"].collect()}
         dropped = sorted(r.doc_id for r in upd["dropped"].collect())
         man = {tuple(r) for r in upd["manifest"].collect()}
-        release_handles(upd["kept"])
+        release_spines(upd["kept"])
         assert not (persistent_ids(spark) - before)
         return kept, dropped, man
 
@@ -667,7 +667,7 @@ def test_ngram_lm_injected_model_scores_identical(spark, tmp_path):
     executor storage to baseline after staging."""
     from tests.conftest import persistent_ids
 
-    from re_data_pipeline_spark.operators.ids import release_handles
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_train
 
     train = spark.createDataFrame(
@@ -693,7 +693,7 @@ def test_ngram_lm_injected_model_scores_identical(spark, tmp_path):
         df.write.parquet(str(tmp_path / name))
     # staging materialized every table: the count-table pins are dead
     for df in m.values():
-        release_handles(df)
+        release_spines(df)
     assert not (persistent_ids(spark) - before)
 
     loaded = {
@@ -723,7 +723,7 @@ def test_ngram_lm_injected_model_respects_trainer_pruning(spark, tmp_path):
     """Count pruning travels WITH the frozen model: a model trained with
     min_count3=2 and reloaded scores exactly like train-in-place pruning
     — the pruned trigram backs off to the bigram tier in both paths."""
-    from re_data_pipeline_spark.operators.ids import release_handles
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_train
 
     train = spark.createDataFrame(
@@ -739,7 +739,7 @@ def test_ngram_lm_injected_model_respects_trainer_pruning(spark, tmp_path):
     m = ngram_lm_train(train, min_count3=2)
     for name, df in m.items():
         df.write.parquet(str(tmp_path / name))
-        release_handles(df)
+        release_spines(df)
     loaded = {
         name: spark.read.parquet(str(tmp_path / name))
         for name in ("tri", "bi", "uni", "stats")
@@ -907,7 +907,7 @@ def test_ngram_lm_injected_model_broadcast_mode(spark, tmp_path):
     loaded from parquet AND broadcast-hinted scoring (map-only position
     joins).  Scores must equal equi-join mode and the plan must carry
     broadcast joins."""
-    from re_data_pipeline_spark.operators.ids import release_handles
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_train
 
     train = spark.createDataFrame(
@@ -922,7 +922,7 @@ def test_ngram_lm_injected_model_broadcast_mode(spark, tmp_path):
     m = ngram_lm_train(train)
     for name, df in m.items():
         df.write.parquet(str(tmp_path / name))
-        release_handles(df)
+        release_spines(df)
     loaded = {
         n: spark.read.parquet(str(tmp_path / n))
         for n in ("tri", "bi", "uni", "stats")
@@ -940,7 +940,7 @@ def test_ngram_lm_injected_model_degenerate_empty_corpus(spark, tmp_path):
     trained on an empty-token corpus scores every document NULL (no
     evidence is not a perfect score) in the injected path exactly as
     in-place."""
-    from re_data_pipeline_spark.operators.ids import release_handles
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_train
 
     train = spark.createDataFrame([(1, "   "), (2, None)], "doc_id bigint, text string")
@@ -951,7 +951,7 @@ def test_ngram_lm_injected_model_degenerate_empty_corpus(spark, tmp_path):
     m = ngram_lm_train(train)
     for name, df in m.items():
         df.write.parquet(str(tmp_path / name))
-        release_handles(df)
+        release_spines(df)
     loaded = {
         n: spark.read.parquet(str(tmp_path / n))
         for n in ("tri", "bi", "uni", "stats")

@@ -192,11 +192,10 @@ def test_json_quarantine_is_total_and_lossless(spark, tmp_path):
     raws = [r["raw"] for r in bad.collect()]
     assert len(raws) == 2 and any("broken" in r for r in raws)
     assert good.count() + bad.count() == 4
-    # the shared scan cache releases via the STANDARD spine convention
-    # (r13: it was a bespoke attribute no caller was told about, so every
-    # quarantine read leaked its cache for the session's lifetime)
+    # good and bad share ONE pin list holding the shared scan cache
     from re_data_pipeline_spark.operators.ids import release_spines
 
+    assert good._pins is bad._pins
     assert release_spines(good) == 1
     assert release_spines(bad) == 1  # no-op unpersist of the same cache
 
@@ -305,48 +304,132 @@ def test_assign_ordinals_plan_map_only_after_range_exchange(spark):
 
 
 def test_spine_caches_released_no_persisted_rdd_growth(spark):
-    """r7 verdict task 7 + ADVICE: chained spine calls accumulate release
-    handles through the FINAL projection (carry_spines), and
-    release_spines() leaves zero persisted-RDD growth in the session."""
-    from re_data_pipeline_spark.operators.ids import exact_ntile, release_spines
+    """r7 verdict task 7 + ADVICE: chained spine calls inside one boundary
+    accumulate every spine on the result through the FINAL projection,
+    and release_spines() leaves zero persisted-RDD growth in the
+    session."""
+    from re_data_pipeline_spark.operators.ids import exact_ntile, pinning, release_spines
+
+    @pinning
+    def three_quartiles(df):
+        t = exact_ntile(df, [F.col("v").asc(), F.col("id").asc()], 4, "q1")
+        t = exact_ntile(t, [F.col("v").desc(), F.col("id").asc()], 4, "q2")
+        t = exact_ntile(t, [F.col("id").asc()], 4, "q3")
+        return t.select("id", "q1", "q2", "q3")
 
     before = _persisted_nonckpt_ids(spark)
     df = spark.range(0, 300).select((F.col("id") * 7 % 50).alias("v"), "id")
-    t = exact_ntile(df, [F.col("v").asc(), F.col("id").asc()], 4, "q1")
-    t = exact_ntile(t, [F.col("v").desc(), F.col("id").asc()], 4, "q2")
-    t = exact_ntile(t, [F.col("id").asc()], 4, "q3")
-    final = t.select("id", "q1", "q2", "q3")
-    from re_data_pipeline_spark.operators.ids import carry_spines
-
-    final = carry_spines(t, final)
+    final = three_quartiles(df)
     final.count()  # materialize (pins the three spines)
-    assert len(final._ordinal_caches) == 3  # one handle per chained spine
+    assert len(final._pins) == 3  # one pin per chained spine
     assert release_spines(final) == 3
     assert _persisted_nonckpt_ids(spark) <= before
 
 
-def test_query_bodies_carry_spine_handles(spark, sf_dir):
-    """The spine-backed query bodies (q87/q117/q118/q160/q168) end in a
-    projection/union — each must still expose its release handles, and an
-    Engine.release() must drop them all."""
-    from re_data_pipeline_spark.engine import Engine
-    from re_data_pipeline_spark.plans.queries import QUERIES
+def test_pin_boundary_keeps_pins_through_final_projection_union_join(spark):
+    """The carry-strip class: a body that pins, then ends in a .select,
+    unionByName or join, still hands every pin to its caller."""
+    from re_data_pipeline_spark.operators.ids import pin, pinning
 
-    eng = Engine(spark, sf_dir)
+    @pinning
+    def body(kind):
+        a = pin(spark.range(10).persist())
+        b = pin(spark.range(5).persist())
+        if kind == "select":
+            return a.select("id")
+        if kind == "union":
+            return a.unionByName(b)
+        return a.join(b, "id")
+
+    for kind in ("select", "union", "join"):
+        out = body(kind)
+        assert len(out._pins) == 2, kind
+        assert all(p.is_cached for p in out._pins)
+        _release_and_check(out)
+
+
+def _release_and_check(out):
+    from re_data_pipeline_spark.operators.ids import release_spines
+
+    assert release_spines(out) == len(out._pins)
+    assert not any(p.is_cached for p in out._pins)
+    assert release_spines(out) == len(out._pins)  # a second release is a no-op
+
+
+def test_pin_boundaries_nest_and_share(spark):
+    """Inner boundaries hand their pins to the enclosing one; dict and
+    tuple results share ONE list; a result does not inherit the pins of
+    its DataFrame arguments; pin() with no open boundary raises."""
+    from re_data_pipeline_spark.operators.ids import pin, pinning
+
+    @pinning
+    def inner(df):
+        return pin(df.select("id").persist()).withColumn("x", F.lit(1))
+
+    @pinning
+    def outer(df):
+        a = inner(df)
+        b = inner(df.where("id > 2"))
+        return {"a": a.select("id"), "b": b, "n": 2}
+
+    res = outer(spark.range(8))
+    assert res["a"]._pins is res["b"]._pins
+    assert len(res["a"]._pins) == 2
+
+    @pinning
+    def pair(df):
+        return inner(df), df.select("id")
+
+    x, y = pair(spark.range(4))
+    assert x._pins is y._pins and len(x._pins) == 1
+
+    # a result built OUTSIDE the argument's boundary carries only its own pins
+    derived = inner(x)
+    assert len(derived._pins) == 1 and derived._pins[0] is not x._pins[0]
+
+    with pytest.raises(RuntimeError, match="outside a @pinning boundary"):
+        pin(spark.range(3))
+
+    for r in (res["a"], x, derived):
+        _release_and_check(r)
+
+
+def test_query_bodies_carry_spine_handles(spark, sf_dir):
+    """One query per pin kind — ordinal spines (q87/q117/q118/q160/q168),
+    final checkpoints (q82 CC, q136 PageRank), the skyline frontier
+    (q152), incremental LSH buckets (q107), a fingerprint cache (q169)
+    and the ExactSubstr anchor table (q197).  Each body ends in a
+    projection/union/join, yet its result must carry every pin on
+    ``_pins``, and release_spines + release_local_checkpoint must return
+    the persistent RDDs to baseline with no clearCache."""
+    from re_data_pipeline_spark.operators.ids import (
+        release_local_checkpoint,
+        release_spines,
+    )
+    from re_data_pipeline_spark.plans.queries import QUERIES
+    from tests.conftest import persistent_ids
+
     expected = {
         "q87_rank_distribution": 1,
         "q117_rfm_segments": 3,
         "q118_global_ordinals": 1,
         "q160_epoch_shuffle": 2,
         "q168_snake_shards": 1,
+        "q82_connected_components": 1,
+        "q136_pagerank": 1,
+        "q152_skyline": 1,
+        "q107_incremental_dedup": 2,
+        "q169_containment_best": 1,
+        "q197_exact_substring_dedup": 1,
     }
-    before = _persisted_nonckpt_ids(spark)
-    for name, n_spines in expected.items():
+    for name, n_pins in expected.items():
+        before = persistent_ids(spark)
         df = QUERIES[name](spark, sf_dir)
-        assert len(df._ordinal_caches) == n_spines, name
-        df.count()
-        assert eng.release(df) == n_spines, name
-    assert _persisted_nonckpt_ids(spark) <= before
+        assert len(df._pins) == n_pins, name
+        df.write.format("noop").mode("overwrite").save()
+        assert release_spines(df) == n_pins, name
+        release_local_checkpoint(df)
+        assert not (persistent_ids(spark) - before), name
 
 
 def test_assign_prefix_sums_matches_sequential_scan(spark):
@@ -605,20 +688,6 @@ def test_curriculum_interleave_rotates_tiers(spark):
     release_spines(out2)
 
 
-def test_spine_scope_releases_on_exit(spark):
-    """spine_scope() unpersists every spine created inside the block."""
-    from re_data_pipeline_spark.operators.ids import assign_ordinals, spine_scope
-
-    before = _persisted_nonckpt_ids(spark)
-    df = spark.range(0, 100).select((F.col("id") % 13).alias("k"), "id")
-    with spine_scope() as handles:
-        out = assign_ordinals(df, [F.asc("k"), F.asc("id")], num_partitions=3)
-        got = sorted(r["ordinal"] for r in out.collect())
-        assert got == list(range(100))
-        assert len(handles) == 1
-    assert _persisted_nonckpt_ids(spark) <= before
-
-
 def test_quality_check_on_empty_table(spark):
     """An empty table is vacuously clean: rate 0.0, no ANSI divide-by-zero,
     and the enforce gate passes."""
@@ -728,7 +797,7 @@ def test_pagerank_releases_checkpoints(spark):
     discipline — nodes/edges seeds and every round's checkpoint stayed
     pinned (clearCache cannot see checkpoint storage).  Now superseded
     rounds are released in-loop, the seeds after the loop, and the final
-    round's handle rides the result for release_spines."""
+    round is pinned on the result for release_spines."""
     import time as _t
 
     from re_data_pipeline_spark.operators.graph import pagerank_fixed
@@ -745,7 +814,7 @@ def test_pagerank_releases_checkpoints(spark):
     out = pagerank_fixed(edges, iterations=4)
     assert out.count() > 0
     grew = pinned() - before
-    assert len(grew) <= 1, f"pagerank left {len(grew)} pinned RDDs (want <=1: the carried final round)"
+    assert len(grew) <= 1, f"pagerank left {len(grew)} pinned RDDs (want <=1: the pinned final round)"
     release_spines(out)
     _t.sleep(0.5)
     assert pinned() - before == set(), "release_spines must free the final checkpoint"

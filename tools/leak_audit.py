@@ -2,14 +2,14 @@
 registered queries.
 
 The repo's cache discipline says: materialize a query's result, call the
-release path (``ids.release_spines`` + the ``Engine.release`` attribute
-set + ``release_local_checkpoint`` on the discarded result), and executor
-storage returns to baseline — nothing pinned survives.  parity.py RELIES
-on this but papers over violations with ``clearCache`` between queries
-(which also cannot see checkpoint blocks).  This tool asserts the
-contract per query, with NO clearCache: any query whose release leaves
-new persistent RDDs behind is a carry-strip bug of the class the r14/r15
-advice items named (q136/q187/q203/q206/q218...).
+release path (``ids.release_spines`` on the result, which frees every pin
+the query body made, + ``release_local_checkpoint`` on the discarded
+result), and executor storage returns to baseline — nothing pinned
+survives.  parity.py RELIES on this but papers over violations with
+``clearCache`` between queries (which also cannot see checkpoint blocks).
+This tool asserts the contract per query, with NO clearCache: any query
+whose release leaves new persistent RDDs behind persisted or checkpointed
+a frame without ``ids.pin`` registering it.
 
 Usage: python tools/leak_audit.py [sf_dir] [query ...]   (~10-15 min full)
 Prints one line per query; exits 1 if any query leaks.
@@ -21,7 +21,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from re_data_pipeline_spark.session import get_spark
 
@@ -34,17 +35,16 @@ def persistent_ids(spark) -> set[int]:
 
 
 def release_all(df, spark) -> int:
-    """The full client-side release path: ``ids.release_handles`` (spine
-    handles + the shared ``HANDLE_ATTRS`` set — the SAME function
-    ``Engine.release`` delegates to, so this audit asserts exactly the
-    engine's release contract) plus the discarded result's own checkpoint
-    blocks."""
+    """The full client-side release path: ``ids.release_spines`` (the SAME
+    function ``Engine.release`` delegates to, so this audit asserts exactly
+    the engine's release contract) plus the discarded result's own
+    checkpoint blocks."""
     from re_data_pipeline_spark.operators.ids import (
-        release_handles,
         release_local_checkpoint,
+        release_spines,
     )
 
-    n = release_handles(df)
+    n = release_spines(df)
     release_local_checkpoint(df)
     return n
 
@@ -55,6 +55,12 @@ def main() -> int:
 
     from re_data_pipeline_spark.plans.queries import QUERIES
 
+    # Python workers (pandas UDFs) import the package too: they see
+    # PYTHONPATH, not this process's sys.path, so the tool runs from any
+    # directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
 

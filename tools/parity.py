@@ -15,7 +15,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import numpy as np
@@ -98,6 +99,12 @@ def main() -> int:
         print(f"unknown query name(s): {sorted(unknown)}", file=sys.stderr)
         return 2
 
+    # Python workers (pandas UDFs) import the package too: they see
+    # PYTHONPATH, not this process's sys.path, so the tool runs from any
+    # directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark()
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -128,12 +135,9 @@ def main() -> int:
             failures.append(name)
             continue
         finally:
-            # guard-carrying operators pin fingerprint caches whose release
-            # handles ride the (now-discarded) result — keep the 200+-query
-            # session flat on the FAILURE path too (a leaked cache skews
-            # every later query's comparison).  release_spines first:
-            # checkpoint-backed handles (pagerank's final round) are NOT
-            # CacheManager entries, so clearCache alone leaks them (r14)
+            # free the (now-discarded) result's pins on the FAILURE path
+            # too, so a leaked cache cannot skew later comparisons;
+            # clearCache alone misses checkpoint pins
             try:
                 from re_data_pipeline_spark.operators.ids import (
                     release_local_checkpoint,
