@@ -266,18 +266,14 @@ def main() -> None:
         # raced the query's own spine-cache release (async unpersist) —
         # a still-registered InMemoryRelation flipped q203's hash once in
         # r12, firing a spurious plan-change warning
-        from re_data_pipeline_spark.operators.ids import (
-            release_local_checkpoint,
-            release_spines,
-        )
+        from re_data_pipeline_spark.operators.ids import release_spines
 
         try:
             probe = fn(spark, sf_dir)
             plans[name] = plan_hash(probe)
-            # free the discarded probe's pins, and the probe itself if it
-            # is a checkpoint scan (q59)
+            # free the discarded probe's pins (the probe itself when it is
+            # a checkpoint scan, q59)
             release_spines(probe)
-            release_local_checkpoint(probe)
         except Exception:
             plans[name] = "n/a"  # multi-job pipelines have no single plan
         best = float("inf")
@@ -294,10 +290,8 @@ def main() -> None:
             best = min(best, time.time() - t0)
             # untimed: checkpoint pins survive clearCache, so a
             # checkpointing query would otherwise grow executor storage by
-            # one RDD per run; the discarded result may be a checkpoint
-            # scan too
+            # one RDD per run
             release_spines(df)
-            release_local_checkpoint(df)
         timings[name] = round(best, 3)
         spark.catalog.clearCache()
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.operators.ids import release_local_checkpoint
+from re_data_pipeline_spark.operators.ids import hold, pinning, release
 from re_data_pipeline_spark.operators.layout import narrow_small_frame
 
 # '|' never occurs inside tokens: build_word_table keeps [a-z0-9]+ words.
@@ -97,6 +97,7 @@ def _apply_merge(toks: Column, left: str, right: str) -> Column:
     return F.split(folded, r"\|")
 
 
+@pinning
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
@@ -113,35 +114,29 @@ def bpe_train(
     r+1's plan doesn't replay rounds 1..r.
     """
     spark = df.sparkSession
-    words = narrow_small_frame(
+    # the learned rules are driver rows: every word table is held
+    words = hold(narrow_small_frame(
         build_word_table(df, text_col, max_word_len)
-    ).localCheckpoint()
+    ).localCheckpoint())
     rules = []
-    try:
-        for rank in range(num_merges):
-            best = (
-                _pair_counts(words)
-                .orderBy(F.desc("pair_count"), F.asc("left"), F.asc("right"))
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            b = best[0]
-            rules.append((rank, b["left"], b["right"], b["pair_count"]))
-            prev = words
-            words = words.withColumn(
-                "toks", _apply_merge(F.col("toks"), b["left"], b["right"])
-            ).localCheckpoint()
-            # eager checkpoint: round r's word table is materialized, so round
-            # r-1's blocks are dead (unpersist/clearCache can't see them)
-            release_local_checkpoint(prev)
-    finally:
-        # the learned rules are driver rows — the live word table is dead on
-        # EVERY exit, including a mid-loop failure (only `words` can be live
-        # at any point: prev is released as soon as its successor is full,
-        # and a failed checkpoint leaves `words` unreassigned)
-        release_local_checkpoint(words)
+    for rank in range(num_merges):
+        best = (
+            _pair_counts(words)
+            .orderBy(F.desc("pair_count"), F.asc("left"), F.asc("right"))
+            .limit(1)
+            .collect()
+        )
+        if not best:
+            break
+        b = best[0]
+        rules.append((rank, b["left"], b["right"], b["pair_count"]))
+        prev = words
+        words = hold(words.withColumn(
+            "toks", _apply_merge(F.col("toks"), b["left"], b["right"])
+        ).localCheckpoint())
+        # eager checkpoint: round r's word table is materialized, so round
+        # r-1's blocks are dead (unpersist/clearCache can't see them)
+        release(prev)
     return spark.createDataFrame(
         rules, "merge_rank int, left string, right string, pair_count bigint"
     )

@@ -57,11 +57,7 @@ from re_data_pipeline_spark.functions.text import (
     word_shingles,
     word_shingles_of,
 )
-from re_data_pipeline_spark.operators.ids import (
-    pin,
-    pinning,
-    release_local_checkpoint,
-)
+from re_data_pipeline_spark.operators.ids import hold, pin, pinning, release
 from re_data_pipeline_spark.operators.layout import (
     narrow_small_frame,
     widen_for_pairs,
@@ -194,6 +190,7 @@ def lsh_bands(
     )
 
 
+@pinning
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -212,7 +209,9 @@ def lsh_candidate_pairs(
     ``materialize=False`` skips the persist + localCheckpoint and returns
     the raw lineage — for plan inspection (tools/explain_audit.py) and
     single-consumer callers; the default materialized form is what the
-    multi-reference verification pipelines need.
+    multi-reference verification pipelines need.  That form returns the
+    pair-list checkpoint itself, pinned, so ``ids.release_spines`` frees
+    it.
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signature(df, text_col, num_hashes, shingle_words)
@@ -241,17 +240,12 @@ def lsh_candidate_pairs(
     # recomputes the full tokenize→shingle→digest pipeline for each side
     # (ReuseExchange doesn't fire: AQE broadcasts one side, so the two
     # sides use different exchange types).
-    # The bucket cache is released HERE on every path (round-4 verdict: the
-    # old `out._bucket_cache` protocol leaked it for any caller that wasn't
-    # cluster_dedup_pipeline): the pair list is localCheckpoint'ed — small
-    # (candidate pairs, not corpus rows), and downstream consumers reference
-    # it repeatedly anyway — which materializes it eagerly so the buckets
-    # can be unpersisted before returning.
-    buckets = buckets.persist()
-    try:
-        return pair_join(buckets).localCheckpoint()
-    finally:
-        buckets.unpersist()
+    # The pair list is localCheckpoint'ed — small (candidate pairs, not
+    # corpus rows), and downstream consumers reference it repeatedly
+    # anyway — which materializes it eagerly, so the bucket cache is dead
+    # when the operator returns.
+    buckets = hold(buckets.persist())
+    return pin(pair_join(buckets).localCheckpoint())
 
 
 def ngram_jaccard_pairs(
@@ -369,10 +363,11 @@ def near_dedup_pipeline(
     quadratic in corpus size.
     """
     # the pair list arrives already localCheckpoint'ed (materialized once,
-    # bucket cache released inside the operator): verification references it
-    # four times (scoping union ×2, intersection join, final left join) and
-    # each reference would otherwise replay the bucket self-join+distinct.
-    # Measured on sf0.1 documents: 7.6 s → 1.1 s for the whole pipeline.
+    # bucket cache released inside the operator) and pinned — it backs the
+    # returned lineage: verification references it four times (scoping
+    # union ×2, intersection join, final left join) and each reference
+    # would otherwise replay the bucket self-join+distinct.  Measured on
+    # sf0.1 documents: 7.6 s → 1.1 s for the whole pipeline.
     cands = lsh_candidate_pairs(df, id_col, text_col, num_hashes, shingle_words, bands)
     verified = jaccard_on_pairs(cands, df, id_col, text_col, shingle_words)
     losers = (
@@ -380,8 +375,6 @@ def near_dedup_pipeline(
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    # the pair-list checkpoint backs the returned lineage
-    pin(cands)
     return df.join(losers, id_col, "left_anti")
 
 
@@ -407,73 +400,59 @@ def connected_components(
     dedup (drop id_b of each pair) into true cluster dedup: A~B, B~C drops
     both B and C even when (A,C) was never a candidate pair.
     """
-    edges = narrow_small_frame(
+    edges = hold(narrow_small_frame(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
         # materialize: the edge list is referenced 2× per iteration, and its
         # lineage may be an expensive candidate-generation pipeline
-    ).localCheckpoint()
+    ).localCheckpoint())
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
     )
     prev_ckpt = None  # round r-1's label checkpoint — dead once round r's is full
-    new_labels = None
-    try:
-        for _ in range(max_iterations):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.node)
-                .groupBy("src")
-                .agg(F.min("comp").alias("nmin"))
+    for _ in range(max_iterations):
+        neighbor_min = (
+            edges.join(labels, edges.dst == labels.node)
+            .groupBy("src")
+            .agg(F.min("comp").alias("nmin"))
+        )
+        # the change flag is computed in the SAME select (old and new label
+        # are both in the row) — no extra join-with-previous-labels probe.
+        # One job per round: the checkpoint is LAZY and the convergence count
+        # is the materializing action, so the count job computes every
+        # partition (a full count, never limit(1) — a short-circuiting action
+        # would truncate lineage with partitions missing from the cache),
+        # caches the blocks, and returns the probe in the same pass.  The
+        # final round's checkpoint backs the returned frame: pinned.
+        new_labels = pin(
+            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
+            .select(
+                "node",
+                F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias("comp"),
+                (F.coalesce(F.col("nmin"), F.col("comp")) < F.col("comp")).alias("__changed"),
             )
-            # the change flag is computed in the SAME select (old and new label
-            # are both in the row) — no extra join-with-previous-labels probe.
-            # One job per round: the checkpoint is LAZY and the convergence count
-            # is the materializing action, so the count job computes every
-            # partition (a full count, never limit(1) — a short-circuiting action
-            # would truncate lineage with partitions missing from the cache),
-            # caches the blocks, and returns the probe in the same pass.
-            new_labels = (
-                labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-                .select(
-                    "node",
-                    F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias("comp"),
-                    (F.coalesce(F.col("nmin"), F.col("comp")) < F.col("comp")).alias("__changed"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.where(F.col("__changed")).count()
-            # the count fully materialized new_labels, so the previous round's
-            # checkpoint is no longer anyone's lineage root — release its blocks
-            # (unpersist/clearCache can't see checkpoint storage)
-            release_local_checkpoint(prev_ckpt)
-            prev_ckpt = new_labels
-            labels = new_labels.drop("__changed")
-            if changed == 0:
-                break
-        else:
-            # loop exhausted without converging: labels are WRONG for any chain
-            # longer than max_iterations — wrong dedup silently keeps duplicates,
-            # so fail loudly instead
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iterations} "
-                "iterations (graph diameter too large) — raise max_iterations"
-            )
-    except BaseException:
-        # no frame reaches the caller — release the label checkpoints AND
-        # the edge checkpoint (usually the big relation) before
-        # propagating; release is idempotent on aliased handles
-        release_local_checkpoint(new_labels)
-        release_local_checkpoint(prev_ckpt)
-        release_local_checkpoint(edges)
-        raise
-    # the returned frame derives only from the FINAL label checkpoint (kept);
-    # the edge list — usually the big relation — is dead at this point
-    release_local_checkpoint(edges)
-    # the final label checkpoint backs the returned frame
-    pin(prev_ckpt)
+            .localCheckpoint(eager=False)
+        )
+        changed = new_labels.where(F.col("__changed")).count()
+        # the count fully materialized new_labels, so the previous round's
+        # checkpoint is no longer anyone's lineage root — release its blocks
+        # (unpersist/clearCache can't see checkpoint storage)
+        release(prev_ckpt)
+        prev_ckpt = new_labels
+        labels = new_labels.drop("__changed")
+        if changed == 0:
+            break
+    else:
+        # loop exhausted without converging: labels are WRONG for any chain
+        # longer than max_iterations — wrong dedup silently keeps duplicates,
+        # so fail loudly instead
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} "
+            "iterations (graph diameter too large) — raise max_iterations"
+        )
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 
@@ -544,49 +523,40 @@ def connected_components_bss(
         rewired = d.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
         return _dedup_edges(rewired.union(mins.select(F.col("u"), F.col("m").alias("v"))))
 
-    edges = narrow_small_frame(
+    edges = hold(narrow_small_frame(
         _dedup_edges(pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
-    ).localCheckpoint()
-    new_edges = None
-    try:
-        for _ in range(max_iterations):
-            new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-            # exact fixpoint probe AND checkpoint materializer in one job:
-            # both sides are distinct (u, v) sets, so a group with exactly
-            # one tagged member ⟺ the symmetric difference is non-empty.
-            # The full count computes every new_edges partition through the
-            # lazy checkpoint (no short-circuit), caching all its blocks.
-            changed = (
-                new_edges.select("u", "v")
-                .unionByName(edges.select("u", "v"))
-                .groupBy("u", "v")
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .where(F.col("__c") == 1)
-                .count()
-            )
-            # new_edges is now fully materialized and the probe was the
-            # last reader of the old round — release its checkpoint blocks
-            release_local_checkpoint(edges)
-            edges = new_edges
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components_bss did not converge in {max_iterations} "
-                "rounds — pathological input (each round is O(log) contraction; "
-                "30 rounds covers any graph smaller than 2^30 nodes)"
-            )
-    except BaseException:
-        # no frame reaches the caller — release the live round checkpoints
-        # before propagating (idempotent on aliased handles)
-        release_local_checkpoint(new_edges)
-        release_local_checkpoint(edges)
-        raise
+    ).localCheckpoint())
+    for _ in range(max_iterations):
+        # the final round's checkpoint backs the returned frame: pinned
+        new_edges = pin(_small_star(_large_star(edges)).localCheckpoint(eager=False))
+        # exact fixpoint probe AND checkpoint materializer in one job:
+        # both sides are distinct (u, v) sets, so a group with exactly
+        # one tagged member ⟺ the symmetric difference is non-empty.
+        # The full count computes every new_edges partition through the
+        # lazy checkpoint (no short-circuit), caching all its blocks.
+        changed = (
+            new_edges.select("u", "v")
+            .unionByName(edges.select("u", "v"))
+            .groupBy("u", "v")
+            .agg(F.count(F.lit(1)).alias("__c"))
+            .where(F.col("__c") == 1)
+            .count()
+        )
+        # new_edges is now fully materialized and the probe was the
+        # last reader of the old round — release its checkpoint blocks
+        release(edges)
+        edges = new_edges
+        if changed == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components_bss did not converge in {max_iterations} "
+            "rounds — pathological input (each round is O(log) contraction; "
+            "30 rounds covers any graph smaller than 2^30 nodes)"
+        )
     # fixpoint edge set is a star forest oriented (leaf → root)
     roots = edges.select(F.col("v").alias("node")).distinct().withColumn("component", F.col("node"))
     leaves = edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    # the returned frame recomputes through the final star-forest checkpoint
-    pin(edges)
     return leaves.unionByName(roots).distinct()
 
 
@@ -616,15 +586,10 @@ def cluster_dedup_pipeline(
     confirmed = verified.where(F.col("jaccard") >= F.lit(threshold))
     # connected_components MATERIALIZES the confirmed pairs (its edge
     # checkpoint + per-round counts), so the pair-list checkpoint is not in
-    # the returned lineage — release it on EVERY path (a CC convergence
-    # raise hands the caller no frame, so cands is equally dead there; the
-    # old success-only release pinned a corpus-scale block per failed call).
-    # The FINAL label checkpoint IS in the returned lineage (comps
-    # recomputes through it); connected_components pins it.
-    try:
-        comps = connected_components(confirmed.select("id_a", "id_b"))
-    finally:
-        release_local_checkpoint(cands)
+    # the returned lineage; the FINAL label checkpoint is (comps
+    # recomputes through it), and connected_components pins it.
+    comps = connected_components(confirmed.select("id_a", "id_b"))
+    release(cands)
     losers = comps.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -679,12 +644,10 @@ def cluster_dedup_keep_best(
         F.col("jaccard") >= F.lit(threshold)
     )
     # CC materializes the confirmed pairs, so the pair-list checkpoint is
-    # dead on every exit path (on a convergence raise the caller gets no
-    # frame); CC's final label checkpoint backs comps and CC pins it
-    try:
-        comps = connected_components(confirmed.select("id_a", "id_b"))
-    finally:
-        release_local_checkpoint(cands)
+    # dead once it returns; CC's final label checkpoint backs comps and CC
+    # pins it
+    comps = connected_components(confirmed.select("id_a", "id_b"))
+    release(cands)
     clustered = df.join(
         comps.withColumnRenamed("node", id_col), id_col
     ).select(F.col(id_col), F.col("component"), q.alias("__q"))

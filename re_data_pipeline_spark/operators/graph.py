@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.operators.ids import pin, pinning, release_local_checkpoint
+from re_data_pipeline_spark.operators.ids import hold, pin, pinning, release
 from re_data_pipeline_spark.operators.layout import narrow_small_frame
 
 
@@ -48,61 +48,44 @@ def pagerank_fixed(
     BFS/SSSP protocol; the pre-r14 lazy chain left nodes + edges + every
     round's checkpoint pinned with NO release handle — 7 RDDs per
     invocation surviving ``clearCache`` for the session's lifetime).  The
-    final round's checkpoint backs the returned frame and is pinned, so
-    ``ids.release_spines`` frees it after materialization — it is a
-    checkpoint scan, so release only after the result is consumed."""
-    nodes = narrow_small_frame(
+    checkpoint the returned ranks read is pinned, so
+    ``ids.release_spines`` frees it after materialization: the final
+    round's, or at ``iterations=0`` the node seed's."""
+    # the uniform seed ranks read the node checkpoint: pinned until round
+    # 1 materializes, then only the loop reads it
+    nodes = pin(narrow_small_frame(
         edges.select(F.col(src).alias("n"))
         .union(edges.select(F.col(dst).alias("n")))
         .distinct()
-    ).localCheckpoint()
-    e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).localCheckpoint()
+    ).localCheckpoint())
+    e = hold(edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).localCheckpoint())
     deg = e.groupBy("e_src").agg(F.count(F.lit(1)).alias("out_deg"))
     ranks = nodes.withColumn("rank_f", F.lit(scale).cast("long"))
     prev = None  # round r-1's checkpoint — dead once round r materializes
     teleport = (15 * scale) // 100
-    try:
-        for _ in range(iterations):
-            contrib = (
-                ranks.join(deg, ranks.n == deg.e_src)
-                .select(F.col("n"), F.expr("rank_f DIV out_deg").alias("c"))
-                .join(e, F.col("n") == F.col("e_src"))
-                .select(F.col("e_dst").alias("n2"), "c")
+    for _ in range(iterations):
+        contrib = (
+            ranks.join(deg, ranks.n == deg.e_src)
+            .select(F.col("n"), F.expr("rank_f DIV out_deg").alias("c"))
+            .join(e, F.col("n") == F.col("e_src"))
+            .select(F.col("e_dst").alias("n2"), "c")
+        )
+        incoming = contrib.groupBy("n2").agg(F.sum("c").alias("inc"))
+        new_ranks = pin(
+            nodes.join(incoming, nodes.n == incoming.n2, "left")
+            .select(
+                "n",
+                (
+                    F.lit(teleport).cast("long")
+                    + F.expr("85 * coalesce(inc, 0L) DIV 100")
+                ).alias("rank_f"),
             )
-            incoming = contrib.groupBy("n2").agg(F.sum("c").alias("inc"))
-            new_ranks = (
-                nodes.join(incoming, nodes.n == incoming.n2, "left")
-                .select(
-                    "n",
-                    (
-                        F.lit(teleport).cast("long")
-                        + F.expr("85 * coalesce(inc, 0L) DIV 100")
-                    ).alias("rank_f"),
-                )
-                .localCheckpoint()  # eager: materializes, so prev is dead
-            )
-            release_local_checkpoint(prev)
-            prev = ranks = new_ranks
-    except BaseException:
-        # the caller gets no frame back — release everything before
-        # propagating (release is idempotent on aliased handles)
-        for f in (prev, nodes, e):
-            release_local_checkpoint(f)
-        raise
-    out = ranks.select(F.col("n").alias("node"), F.col("rank_f").alias("rank_fixed"))
-    if iterations >= 1:
-        # every round is materialized and the result derives only from the
-        # final round's checkpoint — the seed/edge checkpoints are dead.
-        release_local_checkpoint(nodes)
-        release_local_checkpoint(e)
-        pin(ranks)
-        return out
-    # iterations=0 returns the uniform seed, which still recomputes THROUGH
-    # the nodes checkpoint — pin it; the edge checkpoint is provably dead
-    # (nothing in the returned lineage reads it), release it now.
-    release_local_checkpoint(e)
-    pin(nodes)
-    return out
+            .localCheckpoint()  # eager: materializes, so prev is dead
+        )
+        release(prev)
+        hold(nodes)  # the ranks read new_ranks now, not the seed
+        prev = ranks = new_ranks
+    return ranks.select(F.col("n").alias("node"), F.col("rank_f").alias("rank_fixed"))
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -139,6 +122,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     )
 
 
+@pinning
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -160,53 +144,40 @@ def bfs_distances(
     rounds = eccentricity of the source set.  At 100 TB scale the frontier
     is the only growing term — visited stays an id set, and hub fan-out
     is one AQE-splittable join per round.
+
+    Returns the final visited checkpoint itself, pinned, so
+    ``ids.release_spines`` frees it.
     """
-    visited = sources.select(F.col(node), F.lit(0).alias("dist")).distinct().localCheckpoint()
+    visited = pin(sources.select(F.col(node), F.lit(0).alias("dist")).distinct().localCheckpoint())
     frontier = visited
-    nxt = None
-    try:
-        for level in range(1, max_iterations + 1):
-            nxt = (
-                frontier.join(edges, frontier[node] == edges[src])
-                .select(F.col(dst).alias(node))
-                .distinct()
-                .join(visited, node, "left_anti")
-                .withColumn("dist", F.lit(level))
-            )
-            nxt = nxt.localCheckpoint()
-            if nxt.isEmpty():
-                release_local_checkpoint(nxt)  # empty frontier: nothing reads it
-                break
-            prev_visited, prev_frontier = visited, frontier
-            visited = visited.unionByName(nxt).localCheckpoint()
-            frontier = nxt
-            # the new visited checkpoint is materialized and round r's nxt was
-            # the last reader of the old frontier — release both superseded
-            # checkpoints (level-1 frontier IS level-1 visited on entry, so
-            # guard against double-releasing the same handle)
-            release_local_checkpoint(prev_visited)
-            if prev_frontier is not prev_visited:
-                release_local_checkpoint(prev_frontier)
-        else:
-            raise RuntimeError(
-                f"bfs_distances did not exhaust the frontier in {max_iterations} "
-                "rounds — raise max_iterations (graph eccentricity too large)"
-            )
-    except BaseException:
-        # the caller gets no frame back — release EVERY live checkpoint
-        # before propagating (the non-convergence raise and any mid-loop
-        # failure otherwise leak pinned storage; release is idempotent,
-        # so aliased handles are fine)
-        for f in (nxt, frontier, visited):
-            release_local_checkpoint(f)
-        raise
-    # the last non-empty frontier is dead once the empty probe broke the
-    # loop; only the final visited checkpoint backs the returned frame
-    if frontier is not visited:
-        release_local_checkpoint(frontier)
+    for level in range(1, max_iterations + 1):
+        nxt = (
+            frontier.join(edges, frontier[node] == edges[src])
+            .select(F.col(dst).alias(node))
+            .distinct()
+            .join(visited, node, "left_anti")
+            .withColumn("dist", F.lit(level))
+        )
+        nxt = hold(nxt.localCheckpoint())
+        if nxt.isEmpty():
+            break
+        prev_visited, prev_frontier = visited, frontier
+        visited = pin(visited.unionByName(nxt).localCheckpoint())
+        frontier = nxt
+        # the new visited checkpoint is materialized and round r's nxt was
+        # the last reader of the old frontier — release both superseded
+        # checkpoints
+        release(prev_visited)
+        release(prev_frontier)
+    else:
+        raise RuntimeError(
+            f"bfs_distances did not exhaust the frontier in {max_iterations} "
+            "rounds — raise max_iterations (graph eccentricity too large)"
+        )
     return visited
 
 
+@pinning
 def sssp_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -234,78 +205,63 @@ def sssp_distances(
     called with ``(round, improved_frame)`` on the round's PRE-checkpoint
     relaxation frame, so the join + min-combine + improvement-filter plan
     shape is assertable from outside before localCheckpoint truncates it.
+
+    Returns the final dist checkpoint itself, pinned, so
+    ``ids.release_spines`` frees it.
     """
-    dist = (
+    dist = pin(
         sources.select(F.col(node), F.lit(0).cast("long").alias("dist"))
         .distinct()
         .localCheckpoint()
     )
     frontier = dist
-    improved = new_dist = None
-    try:
-        for _r in range(max_iterations):
-            cand = (
-                frontier.join(edges, frontier[node] == edges[src])
-                .select(
-                    edges[dst].alias("__n"),
-                    (frontier["dist"] + edges[weight]).alias("__cand"),
-                )
-                .groupBy("__n")
-                .agg(F.min("__cand").alias("__cand"))
+    for _r in range(max_iterations):
+        cand = (
+            frontier.join(edges, frontier[node] == edges[src])
+            .select(
+                edges[dst].alias("__n"),
+                (frontier["dist"] + edges[weight]).alias("__cand"),
             )
-            # alias both sides: on round 1 the frontier IS the dist frame,
-            # so cand derives from dist and an attribute-reference join
-            # (dist["dist"]) trips Spark's ambiguous-self-join check
-            improved = (
-                cand.alias("__c")
-                .join(dist.alias("__d"), F.col("__n") == F.col(f"__d.{node}"), "left")
-                .where(
-                    F.col("__d.dist").isNull() | (F.col("__cand") < F.col("__d.dist"))
-                )
-                .select(F.col("__n").alias(node), F.col("__cand").alias("dist"))
+            .groupBy("__n")
+            .agg(F.min("__cand").alias("__cand"))
+        )
+        # alias both sides: on round 1 the frontier IS the dist frame,
+        # so cand derives from dist and an attribute-reference join
+        # (dist["dist"]) trips Spark's ambiguous-self-join check
+        improved = (
+            cand.alias("__c")
+            .join(dist.alias("__d"), F.col("__n") == F.col(f"__d.{node}"), "left")
+            .where(
+                F.col("__d.dist").isNull() | (F.col("__cand") < F.col("__d.dist"))
             )
-            if _plan_probe is not None:
-                _plan_probe(_r + 1, improved)
-            improved = improved.localCheckpoint()
-            if improved.isEmpty():
-                release_local_checkpoint(improved)  # empty: nothing reads it
-                break
-            new_dist = (
-                dist.withColumnRenamed("dist", "__old")
-                .join(improved.withColumnRenamed("dist", "__new"), node, "full")
-                .select(
-                    node,
-                    F.least(
-                        F.coalesce(F.col("__old"), F.col("__new")),
-                        F.coalesce(F.col("__new"), F.col("__old")),
-                    ).alias("dist"),
-                )
-                .localCheckpoint()
+            .select(F.col("__n").alias(node), F.col("__cand").alias("dist"))
+        )
+        if _plan_probe is not None:
+            _plan_probe(_r + 1, improved)
+        improved = hold(improved.localCheckpoint())
+        if improved.isEmpty():
+            break
+        new_dist = pin(
+            dist.withColumnRenamed("dist", "__old")
+            .join(improved.withColumnRenamed("dist", "__new"), node, "full")
+            .select(
+                node,
+                F.least(
+                    F.coalesce(F.col("__old"), F.col("__new")),
+                    F.coalesce(F.col("__new"), F.col("__old")),
+                ).alias("dist"),
             )
-            # new_dist is materialized; the old dist and the old frontier
-            # (improved_{r-1}, last read by this round's cand) are
-            # superseded — on round 1 both are the seed checkpoint, guard
-            # the double free
-            release_local_checkpoint(dist)
-            if frontier is not dist:
-                release_local_checkpoint(frontier)
-            dist = new_dist
-            frontier = improved
-        else:
-            raise RuntimeError(
-                f"sssp_distances did not settle in {max_iterations} rounds — "
-                "raise max_iterations (longest min-weight path has more hops)"
-            )
-    except BaseException:
-        # the caller gets no frame back — release EVERY live checkpoint
-        # before propagating (the non-convergence raise and any mid-loop
-        # failure otherwise leak pinned storage; release is idempotent,
-        # so aliased handles are fine)
-        for f in (improved, new_dist, frontier, dist):
-            release_local_checkpoint(f)
-        raise
-    # the final frontier is dead once the loop broke; only the final dist
-    # checkpoint backs the returned frame
-    if frontier is not dist:
-        release_local_checkpoint(frontier)
+            .localCheckpoint()
+        )
+        # new_dist is materialized; the old dist and the old frontier
+        # (improved_{r-1}, last read by this round's cand) are superseded
+        release(dist)
+        release(frontier)
+        dist = new_dist
+        frontier = improved
+    else:
+        raise RuntimeError(
+            f"sssp_distances did not settle in {max_iterations} rounds — "
+            "raise max_iterations (longest min-weight path has more hops)"
+        )
     return dist

@@ -29,40 +29,81 @@ shuffle+sort and regenerates identical ids.  The order key must be unique
 (add a tiebreak column) or ties straddling a range boundary could
 interleave.
 
-Pin discipline: an operator that persists or localCheckpoints a frame its
-lazy result still reads registers it with :func:`pin`; the
-:func:`pinning` boundary around the operator (and around every registered
-query body) attaches the pins made while the result was built to the
-returned DataFrame as ``_pins``, and :func:`release_spines` frees them once
-the caller has materialized the result.  Callers that materialize inside
-the operator release their own intermediates and pin nothing.
+Pin discipline: every frame an operator persists or localCheckpoints is
+registered with the :func:`pinning` boundary around it (every registered
+query body has one too).  :func:`pin` registers a frame the lazy result
+still reads: on success the boundary attaches the pins made while the
+result was built to the returned DataFrame as ``_pins`` and hands them to
+the enclosing boundary, and :func:`release_spines` frees them once the
+caller has materialized the result.  :func:`hold` registers a frame only
+the operator reads: the boundary frees it when the function returns.  If
+the function raises, the boundary frees every frame registered inside it,
+pinned or held, and re-raises.  :func:`release` frees a frame early (a
+superseded loop round, a dead input) and drops it from the open
+boundaries, so no exit frees it again.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _LOCAL_BITS = 33  # monotonically_increasing_id: id = (pid << 33) | local_index
-# Pin lists of the open boundaries, innermost last.  Module-level, not
-# thread-local: a streaming foreachBatch step runs on the py4j callback
-# thread while its caller waits inside a boundary on the main thread.
-_OPEN_PINS: list[list[DataFrame]] = []
+# Registries of the open boundaries, innermost last: id(frame) -> (frame,
+# pinned).  Module-level, not thread-local: a streaming foreachBatch step
+# registers from the py4j callback thread while its caller waits inside a
+# boundary on the main thread.
+_OPEN: list[dict[int, tuple[DataFrame, bool]]] = []
+
+
+def _register(frame: DataFrame, pinned: bool) -> DataFrame:
+    if not _OPEN:
+        name = "pin" if pinned else "hold"
+        raise RuntimeError(
+            f"{name}() outside a @pinning boundary: decorate the function "
+            "that registers storage"
+        )
+    _OPEN[-1][id(frame)] = (frame, pinned)
+    return frame
 
 
 def pin(frame: DataFrame) -> DataFrame:
-    """Record ``frame`` (persisted or localCheckpoint'ed) as storage the
-    result under construction still reads; returns ``frame``.  Raises
-    outside a :func:`pinning` boundary, where nothing would ever release
-    it."""
-    if not _OPEN_PINS:
-        raise RuntimeError(
-            "pin() outside a @pinning boundary: decorate the function that pins"
-        )
-    _OPEN_PINS[-1].append(frame)
-    return frame
+    """Register ``frame`` (persisted or localCheckpoint'ed) as storage the
+    result under construction still reads; returns ``frame``.  A frame
+    already held becomes pinned.  Raises outside a :func:`pinning`
+    boundary, where nothing would ever release it."""
+    return _register(frame, True)
+
+
+def hold(frame: DataFrame) -> DataFrame:
+    """Register ``frame`` (persisted or localCheckpoint'ed) as storage only
+    the running operator reads; the boundary frees it when the operator
+    returns or raises.  A frame already pinned becomes held.  Returns
+    ``frame``; raises outside a :func:`pinning` boundary."""
+    return _register(frame, False)
+
+
+def _free(frame: DataFrame, blocking: bool = False) -> None:
+    # a persisted frame unpersists; a checkpoint scan releases its blocks
+    if frame.is_cached:
+        frame.unpersist(blocking)
+    else:
+        release_local_checkpoint(frame, blocking)
+
+
+def release(frame: DataFrame | None, blocking: bool = False) -> None:
+    """Free ``frame``'s storage now and drop it from the open boundaries,
+    so no boundary exit frees it again; a no-op on None.  The
+    :func:`release_local_checkpoint` caveat applies: free a checkpoint
+    only once nothing live recomputes through it."""
+    if frame is None:
+        return
+    for registry in _OPEN:
+        registry.pop(id(frame), None)
+    _free(frame, blocking)
 
 
 def _result_frames(out) -> list[DataFrame]:
@@ -74,25 +115,40 @@ def _result_frames(out) -> list[DataFrame]:
 
 
 def pinning(fn):
-    """Boundary decorator: run ``fn`` with a fresh pin list open, attach
-    the list as ``_pins`` to the DataFrame result (or to every DataFrame
-    of a dict / tuple result — one shared list), and add its pins to the
-    enclosing boundary's list.  A result therefore carries every pin made
-    while it was built, through any final projection, union or join, and
-    none of its arguments' pins.  If ``fn`` raises, nothing is attached."""
+    """Boundary decorator: run ``fn`` with a fresh registry open.  On
+    return, free the held frames, attach the pinned ones as ``_pins`` to
+    the DataFrame result (or to every DataFrame of a dict / tuple result
+    — one shared list) and add them to the enclosing boundary's registry.
+    A result therefore carries every pin made while it was built, through
+    any final projection, union or join, and none of its arguments' pins.
+    If ``fn`` raises, free every registered frame and re-raise."""
 
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
-        pins: list[DataFrame] = []
-        _OPEN_PINS.append(pins)
+        registry: dict[int, tuple[DataFrame, bool]] = {}
+        _OPEN.append(registry)
+        returned = False
         try:
             out = fn(*args, **kwargs)
+            returned = True
         finally:
-            _OPEN_PINS.pop()
+            _OPEN.pop()
+            if not returned:
+                # nothing reaches the caller; a failing free must not mask
+                # the error that is propagating
+                for frame, _ in registry.values():
+                    with contextlib.suppress(Exception):
+                        _free(frame)
+        pins = []
+        for frame, pinned in registry.values():
+            if pinned:
+                pins.append(frame)
+            else:
+                _free(frame)
         for f in _result_frames(out):
             f._pins = pins
-        if _OPEN_PINS:
-            _OPEN_PINS[-1].extend(pins)
+        if _OPEN:
+            _OPEN[-1].update((id(p), (p, True)) for p in pins)
         return out
 
     return wrapper
@@ -182,18 +238,14 @@ def release_local_checkpoint(df: DataFrame | None, blocking: bool = False) -> bo
 
 
 def release_spines(df: DataFrame, blocking: bool = False) -> int:
-    """Free every pin riding ``df`` (see :func:`pinning`); call AFTER
-    materializing.  Persisted pins unpersist, checkpoint pins release
-    through :func:`release_local_checkpoint` — so do not materialize
-    ``df`` again afterwards: a released checkpoint cannot be recomputed.
-    Returns the number of pins.
-    Safe to call twice and on frames without pins (returns 0).  Does NOT
-    release ``df``'s own checkpoint blocks: a caller discarding ``df``
-    adds ``release_local_checkpoint(df)``."""
+    """Free every pin riding ``df`` (see :func:`pinning`), ``df`` itself
+    included when an operator returned its own checkpoint; call AFTER
+    materializing, and do not materialize ``df`` again afterwards: a
+    released checkpoint cannot be recomputed.  Returns the number of
+    pins.  Safe to call twice and on frames without pins (returns 0)."""
     pins = getattr(df, "_pins", ())
     for p in pins:
-        p.unpersist(blocking)
-        release_local_checkpoint(p, blocking)
+        release(p, blocking)
     return len(pins)
 
 

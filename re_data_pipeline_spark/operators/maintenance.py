@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.operators.ids import pin, pinning
+from re_data_pipeline_spark.operators.ids import pin, pinning, release
 
 
 def plan_compaction(
@@ -525,7 +525,7 @@ def incremental_corpus_update(
     # anchor actions over the deduped batch several times — checkpoint,
     # then release the dedup tier's own pin (dead once materialized)
     b_ded = pin(r["kept"].localCheckpoint())
-    r["new_buckets"].unpersist()
+    release(r["new_buckets"])
 
     es = exact_substring_decontaminate(
         b_ded.select(id_col, text_col),

@@ -34,9 +34,10 @@ from re_data_pipeline_spark.functions.text import tokens
 from re_data_pipeline_spark.operators.ids import (
     assign_ordinals,
     assign_prefix_sums,
+    hold,
     pin,
     pinning,
-    release_local_checkpoint,
+    release,
 )
 from re_data_pipeline_spark.operators.layout import (
     KCENTER_PARTITION_BYTES,
@@ -664,6 +665,7 @@ def length_bucketed_batches(
     )
 
 
+@pinning
 def train_quality_classifier(
     df: DataFrame,
     label_col: Column | str = "label",
@@ -741,7 +743,9 @@ def train_quality_classifier(
     # outweigh the saved tokenize pass inside the one checkpoint job).
     cb = tb.groupBy(id_col, "__y", "__b").agg(F.count(F.lit(1)).alias("__c"))
     nd = cb.groupBy(id_col).agg(F.sum("__c").alias("__n"))
-    feat = (
+    # the weights are driver rows: nothing downstream derives from the
+    # feature checkpoint
+    feat = hold(
         cb.join(nd, id_col)
         .select(
             F.col(id_col),
@@ -755,47 +759,41 @@ def train_quality_classifier(
     den = lr_den * max(n_docs, 1) * 10**9
 
     w = [0] * n_buckets  # 1e-6 fixed-point weights, exact Python ints
-    try:
-        for _ in range(iters):
-            # one SQL parse per round, not 2·n_buckets py4j calls (r19)
-            wlit = F.expr("array(" + ", ".join(f"{int(v)}L" for v in w) + ")")
-            z = (
-                feat.withColumn(
-                    "__wf", F.element_at(wlit, F.col("__b").cast("int") + 1)
-                )
-                .groupBy(id_col, "__y")
-                .agg(
-                    F.sum((F.col("__wf") * F.col("__f")).cast("decimal(38,0)")).alias(
-                        "__zr"
-                    )
+    for _ in range(iters):
+        # one SQL parse per round, not 2·n_buckets py4j calls (r19)
+        wlit = F.expr("array(" + ", ".join(f"{int(v)}L" for v in w) + ")")
+        z = (
+            feat.withColumn(
+                "__wf", F.element_at(wlit, F.col("__b").cast("int") + 1)
+            )
+            .groupBy(id_col, "__y")
+            .agg(
+                F.sum((F.col("__wf") * F.col("__f")).cast("decimal(38,0)")).alias(
+                    "__zr"
                 )
             )
-            p = F.lit(1.0) / (
-                F.lit(1.0)
-                + F.exp(-F.lit(float(scale)) * (F.col("__zr").cast("double") / F.lit(1e15)))
-            )
-            r = z.select(
-                F.col(id_col),
-                F.round((p - F.col("__y")) * 1_000_000, 0).cast("long").alias("__rf"),
-            )
-            g = (
-                feat.join(r, id_col)
-                .groupBy("__b")
-                .agg(
-                    F.sum((F.col("__rf") * F.col("__f")).cast("decimal(38,0)")).alias(
-                        "__g"
-                    )
+        )
+        p = F.lit(1.0) / (
+            F.lit(1.0)
+            + F.exp(-F.lit(float(scale)) * (F.col("__zr").cast("double") / F.lit(1e15)))
+        )
+        r = z.select(
+            F.col(id_col),
+            F.round((p - F.col("__y")) * 1_000_000, 0).cast("long").alias("__rf"),
+        )
+        g = (
+            feat.join(r, id_col)
+            .groupBy("__b")
+            .agg(
+                F.sum((F.col("__rf") * F.col("__f")).cast("decimal(38,0)")).alias(
+                    "__g"
                 )
             )
-            for row in g.collect():  # ≤ n_buckets rows — bounded driver exchange
-                G = int(row["__g"])
-                mag = (lr_num * scale * abs(G)) // den
-                w[int(row["__b"])] -= mag if G > 0 else -mag
-    finally:
-        # the weights are driver rows — nothing downstream derives from the
-        # feature checkpoint, so its storage blocks release on EVERY exit
-        # (a mid-iteration failure otherwise leaks them)
-        release_local_checkpoint(feat)
+        )
+        for row in g.collect():  # ≤ n_buckets rows — bounded driver exchange
+            G = int(row["__g"])
+            mag = (lr_num * scale * abs(G)) // den
+            w[int(row["__b"])] -= mag if G > 0 else -mag
     out = spark.createDataFrame(
         [(b, w[b]) for b in range(n_buckets)], "bucket bigint, weight_fixed bigint"
     )
@@ -898,6 +896,7 @@ def contiguous_pack(
 # route stops being viable long before the k≈10³ of coreset practice.
 _KCENTER_GREEDY_MAX_K = 64
 
+@pinning
 def kcenter_select(
     df: DataFrame,
     k: int,
@@ -1033,59 +1032,42 @@ def kcenter_select(
 
     # Incremental route: __md carries min-dist-to-chosen-set; each round
     # folds in ONLY the newest center.  least(a, b) over per-center
-    # HALF_UP integers ≡ greedy's least over all centers at once.
-    # checkpoint blocks are invisible to unpersist()/clearCache(); release
-    # via the shared helper, gated on the NEXT checkpoint being
-    # materialized (see release_local_checkpoint's recompute caveat)
-    frame = (
+    # HALF_UP integers ≡ greedy's least over all centers at once.  Every
+    # round frame is held (the result is driver rows); a persisted round
+    # is released once its child is materialized, a checkpoint only once
+    # the NEXT checkpoint is (see release_local_checkpoint's recompute
+    # caveat).
+    frame = hold(
         e.where(F.col(id_col) != F.lit(seed[0][id_col]))
         .withColumn("__md", d_micro(list(seed[0][vec_col])))
         .persist()
     )
-    prev = None
+    prev = None  # the persisted parent of the frame the next argmax materializes
     last_ckpt = None  # the checkpointed frame still serving as lineage root
-    try:
-        for r in range(1, k):
-            if _plan_probe is not None:
-                _plan_probe(r, frame)
-            far = frame.orderBy(F.desc("__md"), F.asc(id_col)).limit(1).collect()
-            if prev is not None:
-                # no-op when prev IS a checkpoint (CacheManager doesn't
-                # hold it) — checkpoints release via release_local_checkpoint below
-                prev.unpersist()  # materialized child no longer needs it
-            prev = frame
-            if not far:
-                break
-            chosen.append((r, far[0][id_col], far[0]["__md"]))
-            if r == k - 1:
-                # the frame update below would never be read — building it
-                # anyway cost one full eager-checkpoint pass whenever the
-                # last round landed ON a checkpoint boundary (q214's exact
-                # configuration: k=65, checkpoint_every=8, r=64)
-                break
-            frame = frame.where(F.col(id_col) != F.lit(far[0][id_col])).withColumn(
-                "__md", F.least(F.col("__md"), d_micro(list(far[0][vec_col])))
-            )
-            if r % checkpoint_every == 0:
-                frame = frame.localCheckpoint(eager=True)  # truncate lineage
-                # the previous checkpoint stops being any live frame's
-                # lineage root the moment the new one is materialized
-                # (even when it is still `prev`: prev's only remaining
-                # use is a no-op unpersist next round)
-                release_local_checkpoint(last_ckpt)
-                last_ckpt = frame
-            else:
-                frame = frame.persist()
-    finally:
-        for f in (prev, frame):
-            if f is not None:
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
-        # prev may still BE last_ckpt on early exhaustion — the loop is
-        # over either way, so nothing can recompute through it anymore
-        release_local_checkpoint(last_ckpt)
-        if frame is not last_ckpt:
-            release_local_checkpoint(frame)
+    for r in range(1, k):
+        if _plan_probe is not None:
+            _plan_probe(r, frame)
+        far = frame.orderBy(F.desc("__md"), F.asc(id_col)).limit(1).collect()
+        release(prev)  # materialized child no longer needs it
+        prev = frame if frame.is_cached else None  # checkpoints retire via last_ckpt
+        if not far:
+            break
+        chosen.append((r, far[0][id_col], far[0]["__md"]))
+        if r == k - 1:
+            # the frame update below would never be read — building it
+            # anyway cost one full eager-checkpoint pass whenever the
+            # last round landed ON a checkpoint boundary (q214's exact
+            # configuration: k=65, checkpoint_every=8, r=64)
+            break
+        frame = frame.where(F.col(id_col) != F.lit(far[0][id_col])).withColumn(
+            "__md", F.least(F.col("__md"), d_micro(list(far[0][vec_col])))
+        )
+        if r % checkpoint_every == 0:
+            frame = hold(frame.localCheckpoint(eager=True))  # truncate lineage
+            # the previous checkpoint stops being any live frame's
+            # lineage root the moment the new one is materialized
+            release(last_ckpt)
+            last_ckpt = frame
+        else:
+            frame = hold(frame.persist())
     return df.sparkSession.createDataFrame(chosen, out_schema)

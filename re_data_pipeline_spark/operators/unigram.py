@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from re_data_pipeline_spark.operators.ids import hold, pinning
 from re_data_pipeline_spark.operators.layout import narrow_small_frame
 
 __all__ = ["unigram_lm_train", "unigram_word_fertility"]
@@ -219,6 +220,7 @@ def _segment_words(
     )
 
 
+@pinning
 def unigram_lm_train(
     df: DataFrame,
     text_col: str = "text",
@@ -248,61 +250,58 @@ def unigram_lm_train(
     bounded: ≤ seed_multi + |alphabet| rows) to cut the iterative lineage,
     exactly as ``bpe_train`` round-trips its 1-row argmax."""
     spark: SparkSession = df.sparkSession
-    words = _word_table(df, text_col, max_word_len).persist()
-    try:
-        cand = (
-            words.select(
-                F.explode(_span_pieces(max_piece_len)).alias("piece"), "freq"
+    words = hold(_word_table(df, text_col, max_word_len).persist())
+    cand = (
+        words.select(
+            F.explode(_span_pieces(max_piece_len)).alias("piece"), "freq"
+        )
+        .groupBy("piece")
+        .agg(F.sum("freq").cast("bigint").alias("count"))
+    )
+    chars0 = cand.where(F.length("piece") == 1)
+    multi0 = (
+        cand.where(F.length("piece") >= 2)
+        .orderBy(F.desc("count"), F.asc("piece"))
+        .limit(seed_multi)  # bounded-global-window: a limit(K)-sized frame
+    )
+    vocab_rows = _costed(chars0.unionByName(multi0)).collect()
+    # the char set is fixed across iterations (chars always survive
+    # the M-step), so the prune budget for multi pieces is a constant
+    n_chars = sum(1 for r in vocab_rows if len(r["piece"]) == 1)
+
+    for _ in range(num_iters):
+        vocab = spark.createDataFrame(vocab_rows, _VOCAB_SCHEMA)
+        seg = _segment_words(words, vocab, max_piece_len)
+        cnt = (
+            seg.select(
+                "freq", F.explode(F.split(F.col("__b")["s"], " ")).alias("piece")
             )
             .groupBy("piece")
-            .agg(F.sum("freq").cast("bigint").alias("count"))
+            .agg(F.sum("freq").cast("bigint").alias("__cnt"))
         )
-        chars0 = cand.where(F.length("piece") == 1)
-        multi0 = (
-            cand.where(F.length("piece") >= 2)
-            .orderBy(F.desc("count"), F.asc("piece"))
-            .limit(seed_multi)  # bounded-global-window: a limit(K)-sized frame
+        # M-step: previous-vocab chars survive with Laplace +1;
+        # multi-char pieces keep raw Viterbi counts, zeros drop out
+        chars = (
+            vocab.where(F.length("piece") == 1)
+            .select("piece")
+            .join(cnt, "piece", "left")
+            .select(
+                "piece",
+                (F.coalesce(F.col("__cnt"), F.lit(0)) + 1)
+                .cast("bigint")
+                .alias("count"),
+            )
         )
-        vocab_rows = _costed(chars0.unionByName(multi0)).collect()
-        # the char set is fixed across iterations (chars always survive
-        # the M-step), so the prune budget for multi pieces is a constant
-        n_chars = sum(1 for r in vocab_rows if len(r["piece"]) == 1)
+        multi = cnt.where(F.length("piece") >= 2).select(
+            "piece", F.col("__cnt").cast("bigint").alias("count")
+        )
+        if target_vocab is not None:
+            multi = multi.orderBy(F.desc("count"), F.asc("piece")).limit(
+                max(target_vocab - n_chars, 0)
+            )  # bounded-global-window: a limit(K)-sized frame
+        vocab_rows = _costed(chars.unionByName(multi)).collect()
 
-        for _ in range(num_iters):
-            vocab = spark.createDataFrame(vocab_rows, _VOCAB_SCHEMA)
-            seg = _segment_words(words, vocab, max_piece_len)
-            cnt = (
-                seg.select(
-                    "freq", F.explode(F.split(F.col("__b")["s"], " ")).alias("piece")
-                )
-                .groupBy("piece")
-                .agg(F.sum("freq").cast("bigint").alias("__cnt"))
-            )
-            # M-step: previous-vocab chars survive with Laplace +1;
-            # multi-char pieces keep raw Viterbi counts, zeros drop out
-            chars = (
-                vocab.where(F.length("piece") == 1)
-                .select("piece")
-                .join(cnt, "piece", "left")
-                .select(
-                    "piece",
-                    (F.coalesce(F.col("__cnt"), F.lit(0)) + 1)
-                    .cast("bigint")
-                    .alias("count"),
-                )
-            )
-            multi = cnt.where(F.length("piece") >= 2).select(
-                "piece", F.col("__cnt").cast("bigint").alias("count")
-            )
-            if target_vocab is not None:
-                multi = multi.orderBy(F.desc("count"), F.asc("piece")).limit(
-                    max(target_vocab - n_chars, 0)
-                )  # bounded-global-window: a limit(K)-sized frame
-            vocab_rows = _costed(chars.unionByName(multi)).collect()
-
-        return spark.createDataFrame(vocab_rows, _VOCAB_SCHEMA)
-    finally:
-        words.unpersist()
+    return spark.createDataFrame(vocab_rows, _VOCAB_SCHEMA)
 
 
 def unigram_word_fertility(

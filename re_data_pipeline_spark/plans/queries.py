@@ -49,7 +49,7 @@ from re_data_pipeline_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
-from re_data_pipeline_spark.operators.ids import pin, pinning
+from re_data_pipeline_spark.operators.ids import hold, pin, pinning, release
 from re_data_pipeline_spark.operators.similarity import ann_lsh_topk, cosine_topk
 from re_data_pipeline_spark.operators.spatial import radius_join
 from re_data_pipeline_spark.operators.upsert import delisted_rows, upsert_append
@@ -1428,7 +1428,8 @@ def q59_json_glob_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     The returned frame is ``localCheckpoint``-ed (executor block storage,
     partition-distributed) rather than frozen via ``collect()`` — the
     staging dir is removed in ``finally``, so lineage must be cut, but a
-    driver-sized materialization would not survive sf scale-up."""
+    driver-sized materialization would not survive sf scale-up.  It is
+    pinned, so releasing the result frees it."""
     import shutil
     import tempfile
 
@@ -1440,7 +1441,7 @@ def q59_json_glob_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.repartition(5).write.mode("overwrite").json(stage)
         back = read_json_glob(spark, f"{stage}/*.json", schema=d.schema)
         out = back.select("doc_id", "lang", "n_chars", F.md5("text").alias("text_md5"))
-        return out.localCheckpoint(eager=True)
+        return pin(out.localCheckpoint(eager=True))
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -2305,14 +2306,11 @@ def q82_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     pairs = lsh_candidate_pairs(d, "doc_id", "text", 16, 3, 4)
-    # CC materializes the pair list into its own edge checkpoint on every
-    # path, so the pair-list checkpoint is dead afterwards (r15 leak audit)
-    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
-
-    try:
-        return connected_components(pairs)
-    finally:
-        release_local_checkpoint(pairs)
+    comps = connected_components(pairs)
+    # CC materialized the pair list into its own edge checkpoint, so the
+    # pair-list checkpoint is dead
+    release(pairs)
+    return comps
 
 
 @query("q121_cc_bigstar", _Q82_SQL)
@@ -2332,14 +2330,11 @@ def q121_cc_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     pairs = lsh_candidate_pairs(d, "doc_id", "text", 16, 3, 4)
-    # bss materializes the pair list into its edge checkpoint on every
-    # path — the pair-list checkpoint is dead afterwards (r15 leak audit)
-    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
-
-    try:
-        return connected_components_bss(pairs)
-    finally:
-        release_local_checkpoint(pairs)
+    comps = connected_components_bss(pairs)
+    # bss materialized the pair list into its edge checkpoint, so the
+    # pair-list checkpoint is dead
+    release(pairs)
+    return comps
 
 
 _Q122_SQL = f"""
@@ -4084,18 +4079,15 @@ def q103_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     assigned, _ = kmeans_lists(e, k=8, iters=2)
-    assigned = assigned.persist()
-    try:
-        qvec = [float(v) for v in assigned.where(F.col("vec_id") == 0).first()["embedding"]]
-        ann = ivf_topk(assigned, qvec, 10, n_lists=8, n_probe=2, list_col="list_id")
-        ann_ids = {r["vec_id"] for r in ann.select("vec_id").collect()}
-        exact_ids = {r["vec_id"] for r in cosine_topk(e, qvec, 10).select("vec_id").collect()}
-        recall = len(ann_ids & exact_ids) / 10.0
-        return spark.createDataFrame(
-            [(len(ann_ids), recall >= 0.7)], "n_results bigint, recall_ok boolean"
-        )
-    finally:
-        assigned.unpersist()
+    assigned = hold(assigned.persist())
+    qvec = [float(v) for v in assigned.where(F.col("vec_id") == 0).first()["embedding"]]
+    ann = ivf_topk(assigned, qvec, 10, n_lists=8, n_probe=2, list_col="list_id")
+    ann_ids = {r["vec_id"] for r in ann.select("vec_id").collect()}
+    exact_ids = {r["vec_id"] for r in cosine_topk(e, qvec, 10).select("vec_id").collect()}
+    recall = len(ann_ids & exact_ids) / 10.0
+    return spark.createDataFrame(
+        [(len(ann_ids), recall >= 0.7)], "n_results bigint, recall_ok boolean"
+    )
 
 
 @query(
@@ -7180,9 +7172,6 @@ def q165_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
     sources = n.where(F.col("n") % 97 == 0).select(F.col("n").alias("node"))
     out = bfs_distances(edges, sources, max_iterations=80)
-    # bfs returns its final visited CHECKPOINT frame directly; the cast
-    # projection hides it from release_local_checkpoint(result), so pin it
-    pin(out)
     return out.select("node", F.col("dist").cast("int").alias("dist"))
 
 
@@ -10314,15 +10303,10 @@ def q216_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     dp = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     pairs = lsh_candidate_pairs(dp, "doc_id", "text", 16, 3, 4)
-    # bss materializes the pair list into its own edge checkpoint on every
-    # path — the pair-list checkpoint is dead afterwards, including when
-    # the loop raises on non-convergence (r16: release in finally, as q82/q121)
-    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
-
-    try:
-        comp = connected_components_bss(pairs)
-    finally:
-        release_local_checkpoint(pairs)
+    comp = connected_components_bss(pairs)
+    # bss materialized the pair list into its own edge checkpoint, so the
+    # pair-list checkpoint is dead
+    release(pairs)
     lab = (
         d.select("doc_id")
         .join(comp, F.col("doc_id") == F.col("node"), "left")
@@ -10530,7 +10514,7 @@ def _curation_s1(spark: SparkSession, d: DataFrame) -> DataFrame:
     Returns the PERSISTED survivor frame: the LM tier reads it several
     times (train + score + lang rejoins + both snapshot cuts) — q206's
     measured pin, and the choice that still holds at 100 TB.  The CALLER
-    owns the unpersist, after its stage-boundary localCheckpoints
+    releases it (``ids.release``) once its stage-boundary localCheckpoints
     materialize.  ONE copy so a threshold tweak cannot diverge the two
     recipes (r16 review finding)."""
     from re_data_pipeline_spark.operators.membership import domain_blocklist_filter
@@ -10725,7 +10709,7 @@ def q219_fineweb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upstream pin is dead — release NOW, not at result release time
     release_spines(lm_out)
     release_spines(buck)
-    s1.unpersist()
+    release(s1)
 
     es = exact_substring_dedup(s2.select("doc_id", "text"), min_len=10, k=5)
     final = es.select("doc_id", F.col("clean_text").alias("text")).join(
@@ -10740,7 +10724,7 @@ def _q220_snapshot_cuts(spark: SparkSession, d: DataFrame):
     — the frozen curated corpus A and the gated new batch B that feed
     `operators/maintenance.incremental_corpus_update`.  Upstream pins (LM
     model tables, rank spine, survivor frame) are released HERE, once the
-    checkpoints materialize; the caller owns the two checkpoint handles."""
+    checkpoints materialize; ``a_fin`` is pinned and ``b_cur`` held."""
     from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.operators.lm import ngram_lm_nll, perplexity_buckets
 
@@ -10768,13 +10752,13 @@ def _q220_snapshot_cuts(spark: SparkSession, d: DataFrame):
     # anchor pass, and the manifest; b_cur by the dedup tier's multiple
     # internal consumers — each action would otherwise re-analyze the
     # blocklist→Gopher→LM tree (r15 stage-boundary discipline)
-    a_fin = s1.join(a_kept.select("doc_id"), "doc_id").localCheckpoint()
-    b_cur = s1.join(b_keep_ids, "doc_id").localCheckpoint()
+    a_fin = pin(s1.join(a_kept.select("doc_id"), "doc_id").localCheckpoint())
+    b_cur = hold(s1.join(b_keep_ids, "doc_id").localCheckpoint())
     # the checkpoints materialized the curation tier — every upstream pin
     # (LM model tables, the rank spine, the survivor frame) is dead NOW
     release_spines(lm_out)
     release_spines(buck)
-    s1.unpersist()
+    release(s1)
     return a_fin, b_cur
 
 
@@ -10945,7 +10929,6 @@ def q220_incremental_crawl_update(spark: SparkSession, sf_dir: str) -> DataFrame
     incremental-scan discipline of
     `code/airflow_gcp/dags/tasks/property_listings/get_AV_listings.py:117-124`
     generalized to corpus curation."""
-    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
     from re_data_pipeline_spark.operators.maintenance import incremental_corpus_update
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
@@ -10962,10 +10945,9 @@ def q220_incremental_crawl_update(spark: SparkSession, sf_dir: str) -> DataFrame
     # checkpoint materialized — safe ONLY because upd["dropped"] (which
     # recomputes through b_cur's original lineage) is unused here;
     # callers that consume it must materialize it first (operator
-    # docstring)
-    release_local_checkpoint(b_cur)
-    # the manifest recomputes through the operator's pins and a_fin
-    pin(a_fin)
+    # docstring); the manifest recomputes through the operator's pins and
+    # a_fin
+    release(b_cur)
     return upd["manifest"]
 
 

@@ -28,6 +28,11 @@ Key choices
   when full.  It is a static conf, so it only takes effect on a session
   this function builds; ``getOrCreate`` on an already running session (or
   ``spark.conf.set``, which rejects it) cannot re-pin it.
+- **Package root on ``PYTHONPATH``**: pandas-UDF workers import this
+  package, and they see ``PYTHONPATH``, not the driver's ``sys.path``.
+  The JVM copies the variable when it starts, so ``get_spark`` exports the
+  package root before the first session; any entry point then runs from
+  any directory.
 """
 
 from __future__ import annotations
@@ -41,6 +46,7 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 2000
 DEFAULT_CPUS = 32
 MAX_PARTITION_BYTES = 32 * 1024 * 1024
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _env_cpus() -> int:
@@ -57,6 +63,13 @@ def _env_cpus() -> int:
         f"SPARK_GRAFT_CPUS={raw!r} is not a positive integer; using {DEFAULT_CPUS}"
     )
     return DEFAULT_CPUS
+
+
+def _export_package_root() -> None:
+    """Put :data:`PACKAGE_ROOT` on ``$PYTHONPATH`` (module docstring)."""
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])
 
 
 def codegen_compiles(spark: SparkSession) -> int:
@@ -78,6 +91,7 @@ def get_spark(
     malformed value warns and uses the default) for local runs; on a
     cluster leave it unset and let spark-submit provide it.
     """
+    _export_package_root()
     cpus = _env_cpus()
     if master is None:
         master = f"local[{cpus}]"

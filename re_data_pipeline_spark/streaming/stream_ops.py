@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
-from re_data_pipeline_spark.operators.ids import pin, pinning, release_local_checkpoint
+from re_data_pipeline_spark.operators.ids import hold, pin, pinning, release
 
 
 def _coerce_event_time_schema(schema: StructType | str) -> StructType | str:
@@ -235,16 +235,16 @@ def streaming_incremental_dedup(
             batch_df, state["index"], id_col, text_col,
             num_hashes, shingle_words, bands,
         )
-        # the returned union reads every batch's kept checkpoint (this runs
-        # on the callback thread while the caller waits in the boundary)
+        # the returned union reads every batch's kept checkpoint; only the
+        # fold reads the index (this runs on the callback thread while the
+        # caller waits in the boundary)
         kept = pin(r["kept"].localCheckpoint(eager=True))
-        index = r["updated_index"].localCheckpoint(eager=True)
-        r["new_buckets"].unpersist()
+        index = hold(r["updated_index"].localCheckpoint(eager=True))
+        release(r["new_buckets"])
         # the new index is materialized (eager), so the PREVIOUS batch's
         # index checkpoint is no longer anyone's lineage root — release it
-        # (one leaked block-manager RDD per micro-batch otherwise; batch
-        # 1's seed is a LocalRelation, where release is a no-op) (r14)
-        release_local_checkpoint(state["index"])
+        # (batch 1's seed is a LocalRelation, where release is a no-op)
+        release(state["index"])
         state["index"] = index
         state["kept"] = (
             kept if state["kept"] is None else state["kept"].unionByName(kept)
@@ -266,9 +266,6 @@ def streaming_incremental_dedup(
         # query terminated, and kept/index are localCheckpoint blocks
         # (block-manager resident), so the directory can go
         shutil.rmtree(ckpt, ignore_errors=True)
-    # the returned union derives only from the per-batch KEPT checkpoints;
-    # the final index is dead once the drain finished (r14)
-    release_local_checkpoint(state["index"])
     if state["kept"] is None:
         return spark.createDataFrame([], _coerce_event_time_schema(schema))
     return state["kept"]

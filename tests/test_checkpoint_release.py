@@ -1,12 +1,15 @@
-"""localCheckpoint storage-release contracts.
+"""Storage-release contracts of the ``ids.pinning`` boundary.
 
 ``DataFrame.unpersist()`` and ``spark.catalog.clearCache()`` only walk the
 CacheManager, which does NOT hold localCheckpoint blocks — so every
 checkpointed round of an iterative operator would stay pinned in executor
-storage until nondeterministic driver GC.  Each operator must release
-superseded round checkpoints itself (``ids.release_local_checkpoint``);
-these tests pin the persistent-RDD count back to baseline (+ the final
-checkpoint where the returned frame derives from it).
+storage until nondeterministic driver GC.  Operators register what they
+persist or checkpoint with ``pin`` (the result reads it) or ``hold`` (only
+the operator does) and retire superseded rounds with ``ids.release``; the
+boundary frees held frames on return and every registered frame on a
+raise.  These tests pin the persistent-RDD count back to baseline (+ the
+final checkpoint where the returned frame derives from it, until
+``release_spines``).
 """
 
 from __future__ import annotations
@@ -67,7 +70,7 @@ def test_connected_components_bss_releases_rounds(spark):
 
 def test_bfs_releases_rounds_and_final_is_releasable(spark):
     from re_data_pipeline_spark.operators.graph import bfs_distances
-    from re_data_pipeline_spark.operators.ids import release_local_checkpoint
+    from re_data_pipeline_spark.operators.ids import release_spines
 
     spark.catalog.clearCache()
     before = persistent_ids(spark)
@@ -78,8 +81,8 @@ def test_bfs_releases_rounds_and_final_is_releasable(spark):
     out = bfs_distances(edges, sources)
     assert out.count() == 9
     assert len(persistent_ids(spark) - before) <= 1  # final visited only
-    # the returned frame IS the final checkpoint — the caller can release it
-    release_local_checkpoint(out)
+    # the returned frame IS the final checkpoint, pinned on itself
+    assert release_spines(out) == 1
     assert not (persistent_ids(spark) - before)
 
 
@@ -160,16 +163,20 @@ def test_classifier_train_releases_features(spark):
 
 
 def test_nonconvergence_raise_releases_everything(spark):
-    """The non-convergence RuntimeError hands the caller NO frame, so the
-    error path must release every live checkpoint — including the edge
-    checkpoint (usually the big relation).  Before round 13's fix only the
-    happy path released; a catch-and-retry caller accumulated pinned
-    copies per attempt."""
+    """A raise hands the caller NO frame, so the error path must release
+    every live checkpoint and cache — including the edge checkpoint
+    (usually the big relation) and frames pinned for the result before a
+    degradation guard fires.  Before round 13's fix only the happy path
+    released; a catch-and-retry caller accumulated pinned copies per
+    attempt."""
     import pytest
 
     from re_data_pipeline_spark.operators.dedup import (
         connected_components,
         connected_components_bss,
+        containment_best,
+        exact_substring_dedup,
+        simhash_radius_pairs,
     )
     from re_data_pipeline_spark.operators.graph import bfs_distances, sssp_distances
 
@@ -181,15 +188,26 @@ def test_nonconvergence_raise_releases_everything(spark):
         [(i, i + 1, 2) for i in range(10)], "src bigint, dst bigint, w bigint"
     )
     sources = spark.createDataFrame([(0,)], "node bigint")
+    # every doc repeats one text: each guard's candidate volume is ~n²/2,
+    # far over cap_pairs_per_doc=1 per doc
+    docs = spark.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog near the river bank")
+         for i in range(12)],
+        "doc_id bigint, text string",
+    )
+    guarded = dict(df=docs, on_degradation="error", cap_pairs_per_doc=1)
 
     for fn, kwargs in (
         (connected_components, dict(pairs=chain, max_iterations=2)),
         (connected_components_bss, dict(pairs=chain, max_iterations=1)),
         (bfs_distances, dict(edges=edges, sources=sources, max_iterations=2)),
         (sssp_distances, dict(edges=edges, sources=sources, max_iterations=2)),
+        (simhash_radius_pairs, guarded),
+        (containment_best, guarded),
+        (exact_substring_dedup, dict(guarded, min_len=5, k=3)),
     ):
         before = persistent_ids(spark)
-        with pytest.raises(RuntimeError, match="did not"):
+        with pytest.raises(RuntimeError, match="did not|degradation"):
             fn(**kwargs)
         leaked = persistent_ids(spark) - before
         assert not leaked, f"{fn.__name__} leaked checkpoints: {leaked}"

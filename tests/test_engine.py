@@ -65,10 +65,10 @@ def test_release_frees_anchor_pins(engine, spark):
 
 
 def test_engine_release_and_leak_audit_share_one_path(engine, spark, monkeypatch):
-    """r16 ADVICE: tools/leak_audit.release_all used to hand-copy
-    Engine.release's attribute list, so the auditor could silently
-    diverge from the release contract it asserts.  Both must route
-    through the SAME `ids.release_spines` function."""
+    """r16 ADVICE: tools/leak_audit used to hand-copy Engine.release's
+    attribute list, so the auditor could silently diverge from the
+    release contract it asserts.  Both must route through the SAME
+    `ids.release_spines` function: auditing one query calls it once."""
     import importlib.util
     import os
 
@@ -89,5 +89,5 @@ def test_engine_release_and_leak_audit_share_one_path(engine, spark, monkeypatch
     )
     la = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(la)
-    la.release_all(spark.range(1), spark)
-    assert len(calls) == 2, "Engine.release and leak_audit.release_all must both delegate to ids.release_spines"
+    assert not la.leaked_rdds(spark, lambda s, _: s.range(1), "unused")
+    assert len(calls) == 2, "Engine.release and leak_audit must both delegate to ids.release_spines"

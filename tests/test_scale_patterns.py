@@ -360,7 +360,7 @@ def test_pin_boundaries_nest_and_share(spark):
     """Inner boundaries hand their pins to the enclosing one; dict and
     tuple results share ONE list; a result does not inherit the pins of
     its DataFrame arguments; pin() with no open boundary raises."""
-    from re_data_pipeline_spark.operators.ids import pin, pinning
+    from re_data_pipeline_spark.operators.ids import hold, pin, pinning
 
     @pinning
     def inner(df):
@@ -389,23 +389,55 @@ def test_pin_boundaries_nest_and_share(spark):
 
     with pytest.raises(RuntimeError, match="outside a @pinning boundary"):
         pin(spark.range(3))
+    with pytest.raises(RuntimeError, match="outside a @pinning boundary"):
+        hold(spark.range(3))
 
     for r in (res["a"], x, derived):
         _release_and_check(r)
 
 
+def test_pin_boundary_frees_holds_on_return_and_everything_on_raise(spark):
+    """A held frame is freed when the boundary returns; a frame released
+    early leaves the registry, so the exit neither frees it again nor
+    hands it to the caller; on a raise every registered frame is freed,
+    pinned or held, and the error propagates."""
+    from re_data_pipeline_spark.operators.ids import hold, pin, pinning, release
+
+    made = []
+
+    @pinning
+    def body(fail):
+        kept = pin(spark.range(6).persist())
+        made.extend((kept, hold(spark.range(7).persist())))
+        early = pin(spark.range(8).persist())
+        release(early)
+        made.append(early)
+        if fail:
+            raise ValueError("boom")
+        return kept.select("id")
+
+    out = body(False)
+    assert [p is made[0] for p in out._pins] == [True]
+    assert [f.is_cached for f in made] == [True, False, False]
+    _release_and_check(out)
+
+    made.clear()
+    with pytest.raises(ValueError, match="boom"):
+        body(True)
+    assert not any(f.is_cached for f in made)
+
+
 def test_query_bodies_carry_spine_handles(spark, sf_dir):
     """One query per pin kind — ordinal spines (q87/q117/q118/q160/q168),
-    final checkpoints (q82 CC, q136 PageRank), the skyline frontier
-    (q152), incremental LSH buckets (q107), a fingerprint cache (q169)
-    and the ExactSubstr anchor table (q197).  Each body ends in a
-    projection/union/join, yet its result must carry every pin on
-    ``_pins``, and release_spines + release_local_checkpoint must return
-    the persistent RDDs to baseline with no clearCache."""
-    from re_data_pipeline_spark.operators.ids import (
-        release_local_checkpoint,
-        release_spines,
-    )
+    final checkpoints (q82 CC, q136 PageRank, q165 BFS visited), the
+    skyline frontier (q152), incremental LSH buckets (q107), a fingerprint
+    cache (q169), the ExactSubstr anchor table (q197), and results that
+    ARE a checkpoint (q59's staged scan, q217's SSSP dist).  Each body
+    ends in a projection/union/join or returns the checkpoint itself, yet
+    its result must carry every pin on ``_pins``, and release_spines
+    alone must return the persistent RDDs to baseline with no
+    clearCache."""
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.plans.queries import QUERIES
     from tests.conftest import persistent_ids
 
@@ -417,10 +449,13 @@ def test_query_bodies_carry_spine_handles(spark, sf_dir):
         "q168_snake_shards": 1,
         "q82_connected_components": 1,
         "q136_pagerank": 1,
+        "q165_bfs_distances": 1,
         "q152_skyline": 1,
         "q107_incremental_dedup": 2,
         "q169_containment_best": 1,
         "q197_exact_substring_dedup": 1,
+        "q59_json_glob_scan": 1,
+        "q217_sssp_weighted": 1,
     }
     for name, n_pins in expected.items():
         before = persistent_ids(spark)
@@ -428,7 +463,6 @@ def test_query_bodies_carry_spine_handles(spark, sf_dir):
         assert len(df._pins) == n_pins, name
         df.write.format("noop").mode("overwrite").save()
         assert release_spines(df) == n_pins, name
-        release_local_checkpoint(df)
         assert not (persistent_ids(spark) - before), name
 
 

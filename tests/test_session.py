@@ -18,10 +18,7 @@ CURATION_MIX = ("q167_simhash_radius", "q136_pagerank", "q161_bpe_train")
 def _run_mix(spark, sf_dir) -> int:
     """Run the mix into the noop sink as perfbench's steady pass does;
     return the number of classes compiled."""
-    from re_data_pipeline_spark.operators.ids import (
-        release_local_checkpoint,
-        release_spines,
-    )
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.plans.queries import QUERIES
 
     before = codegen_compiles(spark)
@@ -30,7 +27,6 @@ def _run_mix(spark, sf_dir) -> int:
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         release_spines(df)
-        release_local_checkpoint(df)
     spark.catalog.clearCache()
     return codegen_compiles(spark) - before
 

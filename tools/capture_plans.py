@@ -41,10 +41,7 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    from re_data_pipeline_spark.operators.ids import (
-        release_local_checkpoint,
-        release_spines,
-    )
+    from re_data_pipeline_spark.operators.ids import release_spines
 
     for name in names:
         spark.sparkContext.setJobDescription(f"capture: {name}")
@@ -56,7 +53,6 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(buf.getvalue())
         release_spines(df)
-        release_local_checkpoint(df)
         spark.catalog.clearCache()
         print(f"wrote {path}")
 

@@ -2,14 +2,15 @@
 registered queries.
 
 The repo's cache discipline says: materialize a query's result, call the
-release path (``ids.release_spines`` on the result, which frees every pin
-the query body made, + ``release_local_checkpoint`` on the discarded
-result), and executor storage returns to baseline — nothing pinned
-survives.  parity.py RELIES on this but papers over violations with
-``clearCache`` between queries (which also cannot see checkpoint blocks).
-This tool asserts the contract per query, with NO clearCache: any query
-whose release leaves new persistent RDDs behind persisted or checkpointed
-a frame without ``ids.pin`` registering it.
+release path (``ids.release_spines`` on the result — the function
+``Engine.release`` delegates to — which frees every pin the query body
+made, the result itself included when it is a checkpoint), and executor
+storage returns to baseline — nothing pinned survives.  parity.py RELIES
+on this but papers over violations with ``clearCache`` between queries
+(which also cannot see checkpoint blocks).  This tool asserts the
+contract per query, with NO clearCache: any query whose release leaves
+new persistent RDDs behind persisted or checkpointed a frame without
+registering it (``ids.pin`` / ``ids.hold``).
 
 Usage: python tools/leak_audit.py [sf_dir] [query ...]   (~10-15 min full)
 Prints one line per query; exits 1 if any query leaks.
@@ -34,19 +35,25 @@ def persistent_ids(spark) -> set[int]:
     }
 
 
-def release_all(df, spark) -> int:
-    """The full client-side release path: ``ids.release_spines`` (the SAME
-    function ``Engine.release`` delegates to, so this audit asserts exactly
-    the engine's release contract) plus the discarded result's own
-    checkpoint blocks."""
-    from re_data_pipeline_spark.operators.ids import (
-        release_local_checkpoint,
-        release_spines,
-    )
+def leaked_rdds(spark, fn, sf_dir: str) -> set[int]:
+    """Materialize one query body into the noop sink, release the result
+    with ``ids.release_spines`` alone, and return the persistent RDD ids
+    it leaves behind."""
+    from re_data_pipeline_spark.operators.ids import release_spines
 
-    n = release_spines(df)
-    release_local_checkpoint(df)
-    return n
+    # settle any async unpersists from the previous query before the
+    # baseline snapshot (unpersist(blocking=False) races the probe)
+    time.sleep(0.05)
+    before = persistent_ids(spark)
+    df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    release_spines(df)
+    # async unpersist: give the ContextCleaner a beat, then re-probe
+    leaked = persistent_ids(spark) - before
+    if leaked:
+        time.sleep(1.0)
+        leaked = persistent_ids(spark) - before
+    return leaked
 
 
 def main() -> int:
@@ -55,12 +62,6 @@ def main() -> int:
 
     from re_data_pipeline_spark.plans.queries import QUERIES
 
-    # Python workers (pandas UDFs) import the package too: they see
-    # PYTHONPATH, not this process's sys.path, so the tool runs from any
-    # directory
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-    )
     spark = get_spark(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -68,25 +69,14 @@ def main() -> int:
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
-        # settle any async unpersists from the previous query before the
-        # baseline snapshot (unpersist(blocking=False) races the probe)
-        time.sleep(0.05)
-        before = persistent_ids(spark)
         t0 = time.time()
         try:
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            release_all(df, spark)
+            leaked = leaked_rdds(spark, fn, sf_dir)
         except Exception as e:  # noqa: BLE001 — report and continue
             print(f"ERR  {name}: {type(e).__name__}: {e}")
             leakers.append(name)
             spark.catalog.clearCache()
             continue
-        # async unpersist: give the ContextCleaner a beat, then re-probe
-        leaked = persistent_ids(spark) - before
-        if leaked:
-            time.sleep(1.0)
-            leaked = persistent_ids(spark) - before
         status = "LEAK" if leaked else "ok  "
         print(f"{status} {name}: {len(leaked)} pinned ({time.time()-t0:.1f}s)"
               + (f" rdds={sorted(leaked)}" if leaked else ""))

@@ -99,12 +99,6 @@ def main() -> int:
         print(f"unknown query name(s): {sorted(unknown)}", file=sys.stderr)
         return 2
 
-    # Python workers (pandas UDFs) import the package too: they see
-    # PYTHONPATH, not this process's sys.path, so the tool runs from any
-    # directory
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-    )
     spark = get_spark()
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -139,18 +133,10 @@ def main() -> int:
             # too, so a leaked cache cannot skew later comparisons;
             # clearCache alone misses checkpoint pins
             try:
-                from re_data_pipeline_spark.operators.ids import (
-                    release_local_checkpoint,
-                    release_spines,
-                )
+                from re_data_pipeline_spark.operators.ids import release_spines
 
                 if sdf is not None:
                     release_spines(sdf)
-                    # the RESULT itself may be a localCheckpoint scan
-                    # (q59, lsh pair lists) — it is discarded right here,
-                    # never re-materialized, so releasing its blocks is
-                    # safe and keeps the 200+-query session flat
-                    release_local_checkpoint(sdf)
             except Exception:
                 pass
             spark.catalog.clearCache()

@@ -45,10 +45,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     os.environ["SPARK_GRAFT_UI"] = "true"
-    from re_data_pipeline_spark.operators.ids import (
-        release_local_checkpoint,
-        release_spines,
-    )
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.plans.queries import QUERIES
     from re_data_pipeline_spark.session import codegen_compiles, get_spark
     from tools.rest_metrics import stage_totals
@@ -82,7 +79,6 @@ def main() -> None:
             wall = time.time() - t0
             compiles = codegen_compiles(spark) - c0
             release_spines(df)
-            release_local_checkpoint(df)
             post = [
                 j for j in jobs_snapshot(ui, app_id) if j["jobId"] not in pre_jobs
             ]
