@@ -195,9 +195,12 @@ def plan_hash(df) -> str:
     return hashlib.md5(normalize_plan_text(txt).encode("utf-8")).hexdigest()[:16]
 
 
-def prior_plan_hashes(bdir: str = BENCH_DIR) -> tuple[str, dict[str, str]]:
+def prior_plan_hashes(
+    sf: float | None, bdir: str = BENCH_DIR
+) -> tuple[str, dict[str, str]]:
     """plan_hashes from the newest parseable round record bench_rNN.json in
-    ``bdir``; ("", {}) when no such record holds plan hashes."""
+    ``bdir`` taken at scale factor ``sf`` (plans differ across scales);
+    ("", {}) when no such record holds plan hashes."""
     rounds = sorted(
         (int(m.group(1)), f)
         for f in glob.glob(os.path.join(bdir, "bench_r*.json"))
@@ -206,18 +209,29 @@ def prior_plan_hashes(bdir: str = BENCH_DIR) -> tuple[str, dict[str, str]]:
     for _, path in reversed(rounds):
         try:
             with open(path) as f:
-                hashes = json.load(f).get("plan_hashes")
+                rec = json.load(f)
+            hashes = rec.get("plan_hashes")
         except (OSError, ValueError, AttributeError):
             continue
-        if hashes:
+        if hashes and rec.get("sf") == sf:
             return os.path.basename(path), hashes
     return "", {}
 
 
-def warn_plan_changes(plans: dict[str, str], bdir: str = BENCH_DIR) -> None:
+def warn_plan_changes(
+    plans: dict[str, str], sf: float | None, bdir: str = BENCH_DIR
+) -> None:
     """One `plan-change` line on stderr per hash that differs from the
-    reference record's; multi-job queries ("n/a") are never compared."""
-    ref_file, prior = prior_plan_hashes(bdir)
+    reference record's (the newest at the same ``sf``), or one line saying
+    that nothing was compared; multi-job queries ("n/a") are never
+    compared."""
+    ref_file, prior = prior_plan_hashes(sf, bdir)
+    if not prior:
+        print(
+            f"plan-change: no bench_rNN.json record at sf={sf}; "
+            "no plan hashes compared",
+            file=sys.stderr,
+        )
     for name, h in plans.items():
         old = prior.get(name)
         if old and h != "n/a" and old != "n/a" and h != old:
@@ -295,7 +309,7 @@ def main() -> None:
         timings[name] = round(best, 3)
         spark.catalog.clearCache()
 
-    warn_plan_changes(plans)
+    warn_plan_changes(plans, sf)
 
     total = round(sum(timings.values()), 3)
     payload = {

@@ -46,6 +46,7 @@ md5 hex) and the fastest correct variant in this engine.
 
 from __future__ import annotations
 
+import math
 import warnings
 
 from pyspark.sql import Column, DataFrame
@@ -968,6 +969,66 @@ def span_dup_stats(
     )
 
 
+def _degradation_guard(op_name: str, on_degradation: str, cap_pairs_per_doc: int):
+    """The candidate-volume guard of every pair-generating operator.
+
+    A bucketed equi-join (prefix tokens, fingerprint bands, winnowing
+    anchors) lists Σ bucket-size² candidates, which a low-diversity or
+    heavily duplicated corpus drives toward all-pairs.  Before the join
+    fires, the operator builds a one-row ``(est_pairs, max_bucket)``
+    aggregate of its EXACT pre-distinct candidate volume and hands it to
+    the guard, which runs it (one ``.first()``) plus one document count
+    and, when ``est_pairs`` exceeds ``cap_pairs_per_doc × n_docs``, warns
+    (``on_degradation="warn"``, the default: the result is unchanged) or
+    raises ``RuntimeError`` (``"error"``).  ``"off"`` skips the estimate
+    and its jobs.  Any other mode raises ``ValueError`` here, before any
+    job runs.
+
+    Returns ``None`` for ``"off"``, else ``check(stats, n_docs_fn,
+    advice) -> est_pairs``; ``advice`` ends the message, and is a
+    function of ``n_docs`` where the advice depends on it.
+    """
+    if on_degradation not in ("warn", "error", "off"):
+        raise ValueError(
+            f"on_degradation must be 'warn', 'error', or 'off'; got {on_degradation!r}"
+        )
+    if on_degradation == "off":
+        return None
+
+    def check(stats: DataFrame, n_docs_fn, advice) -> int:
+        row = stats.first()
+        n_docs = n_docs_fn()
+        est = int(row["est_pairs"] or 0)
+        if est > cap_pairs_per_doc * max(n_docs, 1):
+            msg = (
+                f"{op_name} degradation: ~{est} candidate pairs for {n_docs} "
+                f"docs (cap {cap_pairs_per_doc}/doc; largest bucket "
+                f"{row['max_bucket']}). "
+                + (advice(n_docs) if callable(advice) else advice)
+            )
+            if on_degradation == "error":
+                raise RuntimeError(msg)
+            warnings.warn(msg)
+        return est
+
+    return check
+
+
+def _self_join_volume(rows: DataFrame, *key: str) -> DataFrame:
+    """The guard's ``(est_pairs, max_bucket)`` row for an id-ordered
+    equi-self-join of ``rows`` on ``key``: Σ c·(c−1)/2 over bucket sizes c,
+    the EXACT pre-distinct candidate count, and the largest c.  One
+    map-combined aggregate."""
+    return (
+        rows.groupBy(*key)
+        .agg(F.count(F.lit(1)).alias("c"))
+        .agg(
+            F.sum(F.col("c") * (F.col("c") - F.lit(1)) / F.lit(2)).alias("est_pairs"),
+            F.max("c").alias("max_bucket"),
+        )
+    )
+
+
 def prefix_filter_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1013,20 +1074,13 @@ def prefix_filter_pairs(
     (vocabulary grows with the corpus) and stays near-linear; a
     low-diversity corpus (fixed small vocabulary: logs, templated text)
     degrades toward all-pairs — measured 20M candidates at 20k docs under
-    a fixed 20k-token vocabulary.  ``on_degradation`` guards against
-    walking into that case silently: before emitting pairs, one cheap
-    aggregate over the (small) prefix table estimates the exact candidate
-    count Σ c·(c−1)/2 over prefix-token frequencies; if it exceeds
-    ``cap_pairs_per_doc × n_docs`` the operator warns (``"warn"``, default
-    — result unchanged), or routes to ``lsh_candidate_pairs``
-    (``"route"`` — band-bounded candidates, probabilistic recall), or
-    skips the check entirely (``"off"`` — no extra job).
+    a fixed 20k-token vocabulary.  ``on_degradation`` and
+    ``cap_pairs_per_doc`` guard against walking into that case silently
+    (:func:`_degradation_guard`); the estimate is Σ c·(c−1)/2 over
+    prefix-token frequencies, and the advice on overflow is to use
+    ``lsh_candidate_pairs`` for the corpus.
     """
-    if on_degradation not in ("warn", "route", "off"):
-        raise ValueError(
-            f"on_degradation must be 'warn', 'route', or 'off'; got {on_degradation!r}"
-        )
-    from pyspark.sql.window import Window
+    guard = _degradation_guard("prefix_filter_pairs", on_degradation, cap_pairs_per_doc)
 
     toks = df.select(F.col(id_col), F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -1051,39 +1105,21 @@ def prefix_filter_pairs(
         F.col(id_col),
         F.explode(F.slice("keys", 1, prefix_len)).alias("k"),
     ).select(id_col, F.col("k.tok").alias("tok"))
-    if on_degradation != "off":
-        # One map-combined aggregate over the prefix table: the estimate is
-        # EXACT for the pre-distinct candidate volume (Σ c·(c−1)/2 emitted
-        # rows), so an over-cap reading means the equi-join genuinely fans
-        # out toward all-pairs — not a heuristic false alarm.  The guard
-        # costs ONE pass over the prefix lineage (r7 ran two: this agg plus
-        # a distinct-count of the same relation); n_docs now comes from a
-        # count of the input frame — metadata-only on a raw parquet scan,
-        # and an upper bound on prefix docs (empty-token docs inflate it),
-        # which only makes the cap marginally laxer.
-        stats = (
-            pre.groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(
-                F.sum(F.col("c") * (F.col("c") - F.lit(1)) / F.lit(2)).alias("est_pairs"),
-                F.max("c").alias("max_prefix_df"),
-            )
-            .first()
+    if guard is not None:
+        # The estimate is EXACT for the pre-distinct candidate volume, so
+        # an over-cap reading means the equi-join genuinely fans out toward
+        # all-pairs — not a heuristic false alarm.  It costs ONE pass over
+        # the prefix lineage; n_docs comes from a count of the input frame —
+        # metadata-only on a raw parquet scan, and an upper bound on prefix
+        # docs (empty-token docs inflate it), which only makes the cap
+        # marginally laxer.
+        guard(
+            _self_join_volume(pre, "tok"),
+            df.count,
+            "Low-diversity vocabulary: prefix filtering is degrading toward "
+            "all-pairs.  Use lsh_candidate_pairs (band-bounded candidates, "
+            "probabilistic recall) for this corpus.",
         )
-        n_docs = df.count()
-        est = int(stats["est_pairs"] or 0)
-        if est > cap_pairs_per_doc * max(n_docs, 1):
-            msg = (
-                f"prefix_filter_pairs degradation: ~{est} candidate pairs for "
-                f"{n_docs} docs (cap {cap_pairs_per_doc}/doc; max prefix-token "
-                f"df {stats['max_prefix_df']}) — low-diversity vocabulary; "
-                "prefix filtering is degrading toward all-pairs. Use "
-                "lsh_candidate_pairs (on_degradation='route') for this corpus."
-            )
-            if on_degradation == "route":
-                warnings.warn(msg + " Routing to lsh_candidate_pairs.")
-                return lsh_candidate_pairs(df, id_col=id_col, text_col=text_col)
-            warnings.warn(msg)
     a = pre.alias("a")
     b = pre.alias("b")
     out = (
@@ -1135,13 +1171,10 @@ def simhash_radius_pairs(
     (SCALING.md §Measured scaling): at fixed radius and adequate width,
     candidate rows grow ~linearly with docs; at the capped width they grow ~n².
 
-    ``on_degradation`` guards the band join the way
-    ``prefix_filter_pairs`` guards its prefix join: one map-combined
-    aggregate over the band table computes the EXACT pre-distinct
-    candidate volume Σ c·(c−1)/2 over bucket sizes; if it exceeds
-    ``cap_pairs_per_doc × n_docs`` the operator warns (``"warn"``,
-    default — result unchanged; the message says how wide ``bits`` must
-    be), raises (``"error"``), or skips the check (``"off"``).  While the
+    ``on_degradation`` and ``cap_pairs_per_doc`` guard the band join
+    (:func:`_degradation_guard`); the estimate is Σ c·(c−1)/2 over
+    (band, band value) bucket sizes, and the message says whether
+    ``bits`` must widen or the mass is near-duplicate skew.  While the
     guard is on, the fingerprint frame is persisted so its Σ-tokens
     aggregation runs once, not twice, and pinned.
 
@@ -1200,7 +1233,8 @@ def hamming_radius_pairs_on_words(
     ``n_docs_fn`` (optional) supplies the guard's row count cheaply (a
     metadata count of the raw input); default counts ``fp`` (already
     persisted while the guard is on).  See :func:`simhash_radius_pairs`
-    for semantics, width rules, and the guard contract.
+    for semantics and width rules, :func:`_degradation_guard` for the
+    guard contract.
     """
     n_bands = num_bands if num_bands is not None else radius + 1
     if n_bands < radius + 1:
@@ -1210,15 +1244,12 @@ def hamming_radius_pairs_on_words(
         )
     if n_bands > bits:
         raise ValueError(f"num_bands={n_bands} exceeds bits={bits}")
-    if on_degradation not in ("warn", "error", "off"):
-        raise ValueError(
-            f"on_degradation must be 'warn', 'error', or 'off'; got {on_degradation!r}"
-        )
+    guard = _degradation_guard(op_name, on_degradation, cap_pairs_per_doc)
     wb = _SIMHASH_WORD_BITS
     fp = fp.select(F.col(id_col), F.col(words_col).alias("__w")).where(
         F.col("__w").isNotNull()
     )
-    if on_degradation != "off":
+    if guard is not None:
         # persist the fingerprint frame: the guard's bucket aggregate and
         # the band self-join both consume it, and its lineage (e.g. the
         # Σ-tokens explode + bits-wide agg of SimHash, or a mapInPandas
@@ -1269,52 +1300,35 @@ def hamming_radius_pairs_on_words(
         F.col("__e.band").alias("__band"),
         F.col("__e.bv").alias("__bv"),
     )
-    if on_degradation != "off":
-        # EXACT pre-distinct candidate volume from bucket sizes — one
-        # map-combined agg over the (persisted-fingerprint) band table
-        stats = (
-            band_rows.groupBy("__band", "__bv")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(
-                F.sum(F.col("c") * (F.col("c") - F.lit(1)) / F.lit(2)).alias("est_pairs"),
-                F.max("c").alias("max_bucket"),
-            )
-            .first()
-        )
-        n_docs = n_docs_fn() if n_docs_fn is not None else fp.count()
-        est = int(stats["est_pairs"] or 0)
-        if est > cap_pairs_per_doc * max(n_docs, 1):
-            import math
+    if guard is not None:
 
+        def advice(n_docs: int) -> str:
             need = (radius + 1) * max(1, math.ceil(math.log2(max(n_docs, 2))))
-            head = (
-                f"{op_name} degradation: ~{est} candidate pairs for "
-                f"{n_docs} docs (cap {cap_pairs_per_doc}/doc; max bucket "
-                f"{stats['max_bucket']}). "
-            )
             if bits < need:
                 # uniform floor: bands narrower than log₂(n) collide by
                 # the pigeonhole of the hash itself — only width fixes it
-                advice = (
+                return (
                     f"Bands too narrow for this corpus — widen fingerprints: "
                     f"bits ≥ (radius+1)·log₂(n) ≈ {need} "
                     f"(current bits={bits}, radius={radius})."
                 )
-            else:
-                # width already adequate: the mass is near-duplicate
-                # fingerprint skew — real duplicate structure the verify
-                # stage will confirm; AQE skew-join handles hot buckets
-                advice = (
-                    f"Width is adequate (bits={bits} ≥ {need} needed), so the "
-                    "candidate mass is near-duplicate fingerprint skew — real "
-                    "duplicate clusters, not band narrowness; AQE skew-join "
-                    "handles the hot buckets.  Raise cap_pairs_per_doc if this "
-                    "duplication level is expected for the corpus."
-                )
-            msg = head + advice
-            if on_degradation == "error":
-                raise RuntimeError(msg)
-            warnings.warn(msg)
+            # width already adequate: the mass is near-duplicate
+            # fingerprint skew — real duplicate structure the verify
+            # stage will confirm; AQE skew-join handles hot buckets
+            return (
+                f"Width is adequate (bits={bits} ≥ {need} needed), so the "
+                "candidate mass is near-duplicate fingerprint skew — real "
+                "duplicate clusters, not band narrowness; AQE skew-join "
+                "handles the hot buckets.  Raise cap_pairs_per_doc if this "
+                "duplication level is expected for the corpus."
+            )
+
+        # one map-combined agg over the (persisted-fingerprint) band table
+        guard(
+            _self_join_volume(band_rows, "__band", "__bv"),
+            n_docs_fn if n_docs_fn is not None else fp.count,
+            advice,
+        )
     a, b = band_rows.alias("a"), band_rows.alias("b")
     cands = (
         a.join(
@@ -1384,19 +1398,14 @@ def containment_best(
     (candidate join — the (1−t) rarest fraction against per-token
     postings), and the candidate-pair intersection count.  Low-diversity
     corpora degrade the same way ``prefix_filter_pairs`` documents —
-    bounded vocabularies make every prefix token common.  ``on_degradation``
-    is the same guard as its sibling's: before the candidate join, one
-    aggregate over (prefix counts ⋈ token df) computes the EXACT
-    pre-distinct candidate volume Σ_tok pre(tok)·df(tok); over
-    ``cap_pairs_per_doc × n_docs`` it warns (``"warn"``, default — result
-    unchanged), raises (``"error"``), or skips (``"off"``).
+    bounded vocabularies make every prefix token common.
+    ``on_degradation`` and ``cap_pairs_per_doc`` guard the candidate join
+    (:func:`_degradation_guard`); the estimate is Σ_tok pre(tok)·df(tok)
+    over (prefix counts ⋈ token df).
     """
     from pyspark.sql.window import Window
 
-    if on_degradation not in ("warn", "error", "off"):
-        raise ValueError(
-            f"on_degradation must be 'warn', 'error', or 'off'; got {on_degradation!r}"
-        )
+    guard = _degradation_guard("containment_best", on_degradation, cap_pairs_per_doc)
     # The distinct-token explode feeds FIVE consumers (df agg, rank-back,
     # posting side, both intersection sides) — persist it (measured at
     # sf0.1: 4.2 s → 3.0 s for q169; the guard's eager stats pass warms
@@ -1427,35 +1436,24 @@ def containment_best(
         F.explode(F.slice("keys", 1, prefix_len)).alias("k"),
     ).select("id_a", "__na", F.col("k.tok").alias("tok"))
     full_b = toks.select(F.col(id_col).alias("id_b"), "tok")
-    if on_degradation != "off":
+    if guard is not None:
         # EXACT pre-filter candidate volume of the prefix-vs-full equi-join:
         # Σ_tok pre(tok)·df(tok) — every (prefix row, posting row) token
         # match becomes one candidate row before the id_a≠id_b filter and
         # distinct.  Cost: one pass over the prefix lineage + the
         # (vocab-sized) token-df agg; n_docs is a cheap input count.
-        stats = (
+        guard(
             pre.groupBy("tok")
             .agg(F.count(F.lit(1)).alias("pc"))
             .join(dfreq, "tok")
             .agg(
                 F.sum(F.col("pc") * F.col("df")).alias("est_pairs"),
-                F.max("df").alias("max_df"),
-            )
-            .first()
+                F.max("df").alias("max_bucket"),
+            ),
+            df.count,
+            "Low-diversity vocabulary: every prefix token is common, so the "
+            "prefix-vs-postings join is degrading toward all-pairs.",
         )
-        n_docs = df.count()
-        est = int(stats["est_pairs"] or 0)
-        if est > cap_pairs_per_doc * max(n_docs, 1):
-            msg = (
-                f"containment_best degradation: ~{est} candidate rows for "
-                f"{n_docs} docs (cap {cap_pairs_per_doc}/doc; max token df "
-                f"{stats['max_df']}) — low-diversity vocabulary; every prefix "
-                "token is common, so the prefix-vs-postings join is degrading "
-                "toward all-pairs."
-            )
-            if on_degradation == "error":
-                raise RuntimeError(msg)
-            warnings.warn(msg)
     cands = (
         pre.join(full_b, "tok")
         .where(F.col("id_a") != F.col("id_b"))
@@ -1915,7 +1913,7 @@ def line_dedup_rewrite(
     )
 
 
-def _es_validate(min_len: int, k: int | None, on_degradation: str) -> tuple[int, int]:
+def _es_validate(min_len: int, k: int | None) -> tuple[int, int]:
     """Validate ExactSubstr parameters; returns ``(k, w)`` with the
     winnowing window w = min_len − k + 1."""
     if min_len < 2:
@@ -1924,11 +1922,16 @@ def _es_validate(min_len: int, k: int | None, on_degradation: str) -> tuple[int,
         k = max(1, (min_len + 1) // 2)
     if not (1 <= k <= min_len):
         raise ValueError(f"k must be in [1, min_len={min_len}], got {k}")
-    if on_degradation not in ("warn", "error", "off"):
-        raise ValueError(
-            f"on_degradation must be 'warn', 'error', or 'off'; got {on_degradation!r}"
-        )
     return k, min_len - k + 1
+
+
+# the ExactSubstr guard's advice, both the self-join and the A×B shape
+_ES_ADVICE = (
+    "Corpus-wide boilerplate spans make TRUE duplicate pairs quadratic in "
+    "occurrence count — run line_dedup_rewrite/boilerplate_ngrams first to "
+    "strip that mass linearly, raise min_len, or raise cap_pairs_per_doc if "
+    "this duplication level is expected."
+)
 
 
 def _es_token_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -2124,29 +2127,6 @@ def _es_merge(sp: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _es_guard(
-    est: int,
-    n_docs: int,
-    max_bucket: int,
-    cap_pairs_per_doc: int,
-    on_degradation: str,
-    what: str,
-) -> None:
-    if est > cap_pairs_per_doc * max(n_docs, 1):
-        msg = (
-            f"exact_substring degradation: ~{est} candidate pairs for "
-            f"{n_docs} docs (cap {cap_pairs_per_doc}/doc; max anchor "
-            f"bucket {max_bucket}; {what}).  Corpus-wide boilerplate "
-            f"spans make TRUE duplicate pairs quadratic in occurrence "
-            f"count — run line_dedup_rewrite/boilerplate_ngrams first "
-            f"to strip that mass linearly, raise min_len, or raise "
-            f"cap_pairs_per_doc if this duplication level is expected."
-        )
-        if on_degradation == "error":
-            raise RuntimeError(msg)
-        warnings.warn(msg)
-
-
 def _es_rewrite(
     t: DataFrame, merged: DataFrame, id_col: str, out_col: str
 ) -> DataFrame:
@@ -2191,8 +2171,7 @@ def _exact_substring_merged_spans(
     text_col: str,
     min_len: int,
     k: int | None,
-    on_degradation: str,
-    cap_pairs_per_doc: int,
+    guard,
 ) -> DataFrame:
     """Within-corpus core of the ExactSubstr tier: one row per document
     that LOSES tokens — ``(id_col, __msp array<struct<s:int,e:int>>)``,
@@ -2225,37 +2204,27 @@ def _exact_substring_merged_spans(
     Degradation contract: corpus-wide boilerplate k-grams make anchor
     buckets — and TRUE duplicate pairs — quadratic in bucket size; that is
     inherent to pair-listing exact semantics (witness-capping would
-    under-extend spans and break exactness).  The guard estimates
-    candidate volume from bucket sizes before the join fires; route
+    under-extend spans and break exactness).  ``guard`` (a
+    :func:`_degradation_guard` check, None when off) guards the join; the
+    estimate is Σ c·(c−1)/2 over anchor-hash buckets.  Route
     heavily-boilerplated corpora through `line_dedup_rewrite` /
     `boilerplate_ngrams` first (they remove exactly that mass linearly),
     then run this tier on the residue.
     """
-    k, w = _es_validate(min_len, k, on_degradation)
+    k, w = _es_validate(min_len, k)
     t = _es_token_table(df, id_col, text_col)
     anch = _es_anchor_table(t, id_col, min_len, k, w)
-    if on_degradation != "off":
+    if guard is not None:
         # persist: the guard's bucket aggregate and BOTH sides of the
         # candidate self-join consume the anchor table, and its lineage
         # (tokenize + O(n·k) gram hashing + O(n·w) winnowing) is the
         # expensive map stage
         anch = pin(anch.persist())
-        stats = (
-            anch.groupBy("__h")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(
-                F.sum(F.col("c") * (F.col("c") - F.lit(1)) / F.lit(2)).alias("est_pairs"),
-                F.max("c").alias("max_bucket"),
-            )
-            .first()
-        )
-        _es_guard(
-            int(stats["est_pairs"] or 0),
-            df.count(),
-            int(stats["max_bucket"] or 0),
-            cap_pairs_per_doc,
-            on_degradation,
-            "self-join",
+        est = guard(
+            _self_join_volume(anch, "__h"),
+            df.count,
+            _ES_ADVICE + "  Or use impl='grams', which lists no pairs and "
+            "stays linear in the corpus.",
         )
         # Candidate-volume-gated probe widening (layout.widen_for_pairs):
         # the candidate join's probe side — where the per-candidate
@@ -2270,7 +2239,7 @@ def _exact_substring_merged_spans(
         # measured local-mode win that is size-bounded by construction —
         # the anchor cache of a corpus whose est_pairs clears the gate at
         # 32 cores is ~MBs here; re-measure before raising the gate).
-        anch = widen_for_pairs(anch, int(stats["est_pairs"] or 0))
+        anch = widen_for_pairs(anch, est)
 
     a, b = anch.alias("a"), anch.alias("b")
     cand = a.join(
@@ -2421,12 +2390,11 @@ def exact_substring_dedup(
     ``impl="grams"`` selects the guaranteed-linear all-grams route
     (:func:`_exact_substring_merged_spans_grams`).
     """
+    guard = _degradation_guard("exact_substring_dedup", on_degradation, cap_pairs_per_doc)
     if impl == "grams":
         merged = _exact_substring_merged_spans_grams(df, id_col, text_col, min_len)
     elif impl == "anchors":
-        merged = _exact_substring_merged_spans(
-            df, id_col, text_col, min_len, k, on_degradation, cap_pairs_per_doc
-        )
+        merged = _exact_substring_merged_spans(df, id_col, text_col, min_len, k, guard)
     else:
         raise ValueError(f"impl must be 'anchors' or 'grams', got {impl!r}")
     t = _es_token_table(df, id_col, text_col)
@@ -2467,44 +2435,40 @@ def exact_substring_decontaminate(
     are winnowed independently per side with the SAME (k, w), so a shared
     span of ≥ min_len tokens selects the same anchor in both corpora;
     the candidate join is anchors_A ⋈ anchors_B on the hash (never a
-    within-corpus pair, never all-pairs); the Σ cA·cB guard estimates the
-    cross-product volume per bucket before the join fires.  At 100 TB ×
+    within-corpus pair, never all-pairs), guarded by ``on_degradation``
+    and ``cap_pairs_per_doc`` (:func:`_degradation_guard`; the estimate is
+    Σ cA·cB over anchor-hash buckets).  At 100 TB ×
     benchmark-sized B, the B anchor table is small — AQE broadcasts it —
     and A is touched by one map pass + the candidates-sized verify leg.
 
     Returns every ``df`` row as ``(id_col, out_col, n_tokens,
     n_removed)``; benchmark rows are never returned.
     """
-    k, w = _es_validate(min_len, k, on_degradation)
+    guard = _degradation_guard(
+        "exact_substring_decontaminate", on_degradation, cap_pairs_per_doc
+    )
+    k, w = _es_validate(min_len, k)
     t = _es_token_table(df, id_col, text_col)
     tb_t = _es_token_table(bench, bench_id_col, bench_text_col)
     anch_a = _es_anchor_table(t, id_col, min_len, k, w)
     anch_b = _es_anchor_table(tb_t, bench_id_col, min_len, k, w)
-    if on_degradation != "off":
+    if guard is not None:
         anch_a = pin(anch_a.persist())
         anch_b = pin(anch_b.persist())
         ca = anch_a.groupBy("__h").agg(F.count(F.lit(1)).alias("ca"))
         cb = anch_b.groupBy("__h").agg(F.count(F.lit(1)).alias("cb"))
-        stats = (
-            ca.join(cb, "__h")
-            .agg(
+        est = guard(
+            ca.join(cb, "__h").agg(
                 F.sum(F.col("ca") * F.col("cb")).alias("est_pairs"),
                 F.max(F.col("ca") * F.col("cb")).alias("max_bucket"),
-            )
-            .first()
-        )
-        _es_guard(
-            int(stats["est_pairs"] or 0),
-            df.count(),
-            int(stats["max_bucket"] or 0),
-            cap_pairs_per_doc,
-            on_degradation,
-            "A×B join",
+            ),
+            df.count,
+            _ES_ADVICE,
         )
         # candidate-volume-gated probe widening of the TRAINING-side
         # anchors (see _exact_substring_merged_spans — same trade, same
         # gate); the bench side stays as-is (broadcast-sized)
-        anch_a = widen_for_pairs(anch_a, int(stats["est_pairs"] or 0))
+        anch_a = widen_for_pairs(anch_a, est)
 
     a, b = anch_a.alias("a"), anch_b.alias("b")
     cand = a.join(b, F.col("a.__h") == F.col("b.__h")).select(

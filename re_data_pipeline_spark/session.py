@@ -137,7 +137,8 @@ def get_spark(
         .config(
             "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
         )
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # Tools that read the REST API turn it on through ``extra_conf``.
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if extra_conf:

@@ -16,8 +16,8 @@ import bench  # noqa: E402
 from re_data_pipeline_spark.plans.queries import DRIVER_WINDOW_ROUND  # noqa: E402
 
 
-def _record(bdir, name, hashes):
-    (bdir / name).write_text(json.dumps({"plan_hashes": hashes}))
+def _record(bdir, name, hashes, sf=0.1):
+    (bdir / name).write_text(json.dumps({"plan_hashes": hashes, "sf": sf}))
 
 
 def test_bench_runs_must_be_an_integer(monkeypatch):
@@ -78,32 +78,43 @@ def test_normalize_plan_text_masks_query_stage_ids():
     assert "Arguments: 19" in normalize_plan_text(lim)
 
 
-def test_prior_plan_hashes_resolves_newest_parseable_record(tmp_path):
-    """The highest-numbered parseable bench_rNN.json wins; an unparseable
-    newest record is skipped; session/latest records never count."""
+def test_prior_plan_hashes_resolves_newest_parseable_record(tmp_path, capsys):
+    """The highest-numbered parseable bench_rNN.json at the run's scale
+    factor wins; an unparseable newest record and a newer record at another
+    scale are skipped; session/latest records never count; with no record
+    at the run's scale, one line says nothing was compared."""
     _record(tmp_path, "bench_r09.json", {"q01": "aaaa"})
     _record(tmp_path, "bench_r10.json", {"q01": "bbbb", "q02": "cccc"})
     _record(tmp_path, "bench_r11_end_session.json", {"q01": "ffff"})
     _record(tmp_path, "bench_latest.json", {"q01": "ffff"})
-    assert bench.prior_plan_hashes(str(tmp_path)) == (
+    assert bench.prior_plan_hashes(0.1, str(tmp_path)) == (
         "bench_r10.json",
         {"q01": "bbbb", "q02": "cccc"},
     )
     (tmp_path / "bench_r11.json").write_text('{"plan_hashes": {"q01": "dd')
-    assert bench.prior_plan_hashes(str(tmp_path))[0] == "bench_r10.json"
-    assert bench.prior_plan_hashes(str(tmp_path / "nowhere")) == ("", {})
+    assert bench.prior_plan_hashes(0.1, str(tmp_path))[0] == "bench_r10.json"
+    assert bench.prior_plan_hashes(0.1, str(tmp_path / "nowhere")) == ("", {})
+
+    _record(tmp_path, "bench_r12.json", {"q01": "eeee"}, sf=0.01)
+    assert bench.prior_plan_hashes(0.1, str(tmp_path))[0] == "bench_r10.json"
+    assert bench.prior_plan_hashes(0.01, str(tmp_path))[0] == "bench_r12.json"
+    assert bench.prior_plan_hashes(1.0, str(tmp_path)) == ("", {})
+    bench.warn_plan_changes({"q01": "zzzz"}, 1.0, str(tmp_path))
+    assert capsys.readouterr().err.splitlines() == [
+        "plan-change: no bench_rNN.json record at sf=1.0; no plan hashes compared"
+    ]
 
 
 def test_plan_change_warned_only_on_differing_hash(tmp_path, capsys):
     _record(tmp_path, "bench_r05.json", {"q01": "aaaa", "q02": "n/a"})
     plans = {"q01": "bbbb", "q02": "cccc", "q03": "dddd"}
-    bench.warn_plan_changes(plans, str(tmp_path))
+    bench.warn_plan_changes(plans, 0.1, str(tmp_path))
     err = capsys.readouterr().err.splitlines()
     assert err == [
         "plan-change: q01 aaaa -> bbbb (vs bench_r05.json) — "
         "verify intentional (new shuffle / lost broadcast / pushdown?)"
     ]
-    bench.warn_plan_changes({"q01": "aaaa"}, str(tmp_path))
+    bench.warn_plan_changes({"q01": "aaaa"}, 0.1, str(tmp_path))
     assert capsys.readouterr().err == ""
 
 
@@ -120,7 +131,7 @@ def test_repo_bench_records_fresh_gate():
     record) to restore."""
     import re
 
-    name, hashes = bench.prior_plan_hashes()
+    name, hashes = bench.prior_plan_hashes(0.1)  # the HEADLINE scale
     assert hashes and "q01_pricing_summary" in hashes
     m = re.search(r"r(\d+)\.json$", name.lower())
     assert m, name

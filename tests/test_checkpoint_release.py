@@ -171,14 +171,21 @@ def test_nonconvergence_raise_releases_everything(spark):
     attempt."""
     import pytest
 
+    from pyspark.sql import functions as F
+
     from re_data_pipeline_spark.operators.dedup import (
         connected_components,
         connected_components_bss,
         containment_best,
+        exact_substring_decontaminate,
         exact_substring_dedup,
         simhash_radius_pairs,
     )
     from re_data_pipeline_spark.operators.graph import bfs_distances, sssp_distances
+    from re_data_pipeline_spark.operators.multimodal import (
+        media_phash_pairs,
+        synthetic_media,
+    )
 
     spark.catalog.clearCache()
     chain = spark.createDataFrame(
@@ -196,6 +203,13 @@ def test_nonconvergence_raise_releases_everything(spark):
         "doc_id bigint, text string",
     )
     guarded = dict(df=docs, on_degradation="error", cap_pairs_per_doc=1)
+    # every image plus a byte copy: each pair shares all radius+1 bands
+    media = synthetic_media(spark, 12)
+    media = media.unionByName(
+        media.where(F.col("kind") == "image").withColumn(
+            "media_id", F.col("media_id") + F.lit(100)
+        )
+    )
 
     for fn, kwargs in (
         (connected_components, dict(pairs=chain, max_iterations=2)),
@@ -205,12 +219,22 @@ def test_nonconvergence_raise_releases_everything(spark):
         (simhash_radius_pairs, guarded),
         (containment_best, guarded),
         (exact_substring_dedup, dict(guarded, min_len=5, k=3)),
+        (
+            exact_substring_decontaminate,
+            dict(guarded, bench=docs, bench_id_col="doc_id", min_len=5, k=3),
+        ),
+        (media_phash_pairs, dict(guarded, df=media)),
     ):
         before = persistent_ids(spark)
         with pytest.raises(RuntimeError, match="did not|degradation"):
             fn(**kwargs)
         leaked = persistent_ids(spark) - before
         assert not leaked, f"{fn.__name__} leaked checkpoints: {leaked}"
+        if "on_degradation" in kwargs:
+            # an unknown mode is rejected before the guard persists anything
+            with pytest.raises(ValueError, match="on_degradation"):
+                fn(**dict(kwargs, on_degradation="explode"))
+            assert not (persistent_ids(spark) - before), fn.__name__
 
 
 def test_connected_components_carries_releasable_final_handle(spark):

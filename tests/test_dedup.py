@@ -392,8 +392,8 @@ def test_prefix_filter_integer_ceiling(spark):
 def test_prefix_filter_degradation_guard(spark):
     """A fixed tiny vocabulary (every doc shares the same tokens) drives
     candidate volume toward all-pairs; the guard must warn on 'warn' (result
-    unchanged), route to LSH on 'route', stay silent on 'off' and on a
-    healthy diverse corpus, and reject unknown modes."""
+    unchanged) and point to LSH, raise on 'error', stay silent on 'off' and
+    on a healthy diverse corpus, and reject unknown modes."""
     import warnings as w
 
     import pytest
@@ -407,15 +407,16 @@ def test_prefix_filter_degradation_guard(spark):
     with w.catch_warnings(record=True) as rec:
         w.simplefilter("always")
         pairs = prefix_filter_pairs(bad, cap_pairs_per_doc=4).collect()
-    assert any("degradation" in str(x.message) for x in rec)
+    assert any(
+        "degradation" in str(x.message) and "lsh_candidate_pairs" in str(x.message)
+        for x in rec
+    )
     assert len(pairs) == 40 * 39 // 2  # warn mode: result unchanged
 
-    with w.catch_warnings(record=True) as rec:
-        w.simplefilter("always")
-        routed = prefix_filter_pairs(bad, cap_pairs_per_doc=4, on_degradation="route")
-    assert any("Routing to lsh_candidate_pairs" in str(x.message) for x in rec)
-    # identical docs share every minhash band -> LSH still pairs them all
-    assert routed.count() == 40 * 39 // 2
+    with pytest.raises(RuntimeError, match="prefix_filter_pairs degradation"):
+        prefix_filter_pairs(bad, cap_pairs_per_doc=4, on_degradation="error")
+    with pytest.raises(ValueError, match="on_degradation"):
+        prefix_filter_pairs(bad, on_degradation="route")
 
     with w.catch_warnings(record=True) as rec:
         w.simplefilter("always")
@@ -963,15 +964,16 @@ def test_exact_substring_dedup_overlapping_spans_merge(spark):
 
 def test_exact_substring_degradation_guard(spark):
     """Hot anchor buckets (many docs sharing one boilerplate span) trip the
-    Σ bucket² guard: error mode raises, off mode stays silent and still
-    returns the exact result."""
+    Σ bucket² guard: error mode raises and names the all-grams route, off
+    mode stays silent and still returns the exact result, and an unknown
+    mode is rejected on both impls."""
     import pytest as _pytest
 
     from re_data_pipeline_spark.operators.dedup import exact_substring_dedup
 
     docs = [(i, _BP10 + f" t{i}") for i in range(12)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    with _pytest.raises(RuntimeError, match="degradation"):
+    with _pytest.raises(RuntimeError, match="degradation.*impl='grams'"):
         exact_substring_dedup(
             df, min_len=10, k=5, on_degradation="error", cap_pairs_per_doc=1
         ).collect()
@@ -979,6 +981,9 @@ def test_exact_substring_degradation_guard(spark):
         df, min_len=10, k=5, on_degradation="off", cap_pairs_per_doc=1
     ).collect()
     assert all(r["n_removed"] == 10 for r in out)
+    for impl in ("anchors", "grams"):
+        with _pytest.raises(ValueError, match="on_degradation"):
+            exact_substring_dedup(df, min_len=10, on_degradation="explode", impl=impl)
 
 
 def _brute_decontam(docs: dict, bench: dict, min_len: int) -> dict:

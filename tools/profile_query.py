@@ -9,7 +9,7 @@ projection spends most of its wall OFF the executors, which no amount of
 data parallelism recovers.
 
 Usage: python tools/profile_query.py <query> [more queries...]
-       [--runs N] (default 1 timed run after the plan-hash probe)
+       [--runs N | --runs=N] (timed runs per query, best kept; default 1)
 
 Per query prints: wall, sum(job durations), gap = wall - sum(jobs),
 job count, compiles (generated classes compiled during the timed run; a
@@ -20,6 +20,7 @@ shuffle/input deltas across the run.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -37,14 +38,12 @@ def jobs_snapshot(ui: str, app_id: str) -> list[dict]:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    runs = 1
-    for a in sys.argv[1:]:
-        if a.startswith("--runs"):
-            runs = int(a.split("=", 1)[1])
+    ap = argparse.ArgumentParser(description="Per-query job/driver-gap profiler")
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--runs", type=int, default=1)
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    os.environ["SPARK_GRAFT_UI"] = "true"
     from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.plans.queries import QUERIES
     from re_data_pipeline_spark.session import codegen_compiles, get_spark
@@ -53,21 +52,23 @@ def main() -> None:
     spark = get_spark(
         app_name="profile_query",
         extra_conf={
+            "spark.ui.enabled": "true",
             "spark.ui.retainedJobs": "100000",
             "spark.ui.retainedStages": "100000",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui = "http://localhost:4040"
+    # the port this session bound: 4040 is taken while another app runs
+    ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
 
     # JVM/codegen warmup (mirrors bench.py)
     QUERIES["q01_pricing_summary"](spark, sf_dir).limit(1).collect()
 
-    for name in args:
+    for name in args.queries:
         fn = QUERIES[name]
         best = None
-        for _ in range(runs):
+        for _ in range(args.runs):
             spark.catalog.clearCache()
             pre_jobs = {j["jobId"] for j in jobs_snapshot(ui, app_id)}
             pre_stage = stage_totals(ui, app_id)
