@@ -20,13 +20,19 @@ Each query also records a PLAN HASH (md5 of the formatted physical plan
 with exec-ids/locations/codegen-stage numbers normalized out): if a later
 round's timing moves but the plan hash is unchanged, the delta is host
 noise, not a plan regression.  Every hash that differs from the reference
-record (the highest-numbered .benchmarks/bench_rNN.json) prints a
+record (the newest .benchmarks/bench_rNN.json at the same sf) prints a
 `plan-change` warning on stderr, so a lost broadcast, a new shuffle or a
 pushdown that stopped firing is flagged in the run where it appears
 instead of as unexplained timing drift a round later.  Intentional
 changes arrive with a commit that explains them.
 
 Usage: python bench.py [query ...]   (default: every HEADLINE query)
+
+The measuring tools share this module's harness rather than copying it:
+``warm_up``, ``run_cold`` (one cold-cache noop-sink run, pins released),
+``probe_plan_hash``, and the status REST reader (``rest_session``,
+``stage_totals``, ``succeeded_jobs``).  Importing it starts no Spark
+session.
 
 The payload is also written to .benchmarks/bench_rNN.json when
 SPARK_GRAFT_ROUND=NN is set (the round's committed record), otherwise to
@@ -242,6 +248,109 @@ def warn_plan_changes(
             )
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """JVM/codegen warm-up on the smallest table, so the first measured
+    query is not billed for it."""
+    from re_data_pipeline_spark.plans.queries import QUERIES
+
+    QUERIES["q01_pricing_summary"](spark, sf_dir).limit(1).collect()
+
+
+def run_cold(spark, fn, sf_dir: str) -> float:
+    """One cold-cache run of query body ``fn`` into the noop sink; returns
+    its wall seconds (build plus write).
+
+    The cache is cleared first: the CacheManager serves a plan-identical
+    rebuild from any frame a previous run persisted, so a repeat run would
+    otherwise time the cached path.  The result's pins are released after
+    the timed region, and also when the write raises: checkpoint pins
+    survive ``clearCache``, so a checkpointing query would otherwise grow
+    executor storage by one RDD per run."""
+    from re_data_pipeline_spark.operators.ids import release_spines
+
+    spark.catalog.clearCache()
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+    finally:
+        release_spines(df)
+
+
+def probe_plan_hash(spark, fn, sf_dir: str) -> str:
+    """``plan_hash`` of a fresh build of ``fn``, whose pins (the probe
+    itself when it is a checkpoint scan, q59) are freed whether or not
+    hashing succeeds; "n/a" when building or hashing raises (multi-job
+    pipelines have no single plan)."""
+    from re_data_pipeline_spark.operators.ids import release_spines
+
+    try:
+        probe = fn(spark, sf_dir)
+    except Exception:
+        return "n/a"
+    try:
+        return plan_hash(probe)
+    except Exception:
+        return "n/a"
+    finally:
+        release_spines(probe)
+
+
+def rest_session(app_name: str):
+    """A ``get_spark`` session with the UI on, for tools that read the
+    status REST API (``stage_totals``, ``succeeded_jobs``).
+
+    The REST job and stage stores evict past ``retainedJobs`` /
+    ``retainedStages`` (default 1000), which makes cumulative diffs
+    NEGATIVE once a long session rolls over (seen on the r12 q211 anchor),
+    so both keep every entry."""
+    from re_data_pipeline_spark.session import get_spark
+
+    spark = get_spark(
+        app_name=app_name,
+        extra_conf={
+            "spark.ui.enabled": "true",
+            "spark.ui.retainedJobs": "100000",
+            "spark.ui.retainedStages": "100000",
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _rest(spark, path: str):
+    """GET one status REST endpoint of ``spark``'s application, at the UI
+    port this session bound (another running app may hold 4040)."""
+    import urllib.request
+
+    sc = spark.sparkContext
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/{path}"
+    with urllib.request.urlopen(url) as r:
+        return json.load(r)
+
+
+_STAGE_FIELDS = {
+    "shuffle_write_bytes": "shuffleWriteBytes",
+    "shuffle_write_records": "shuffleWriteRecords",
+    "input_bytes": "inputBytes",
+    "input_records": "inputRecords",
+}
+
+
+def stage_totals(spark) -> dict[str, int]:
+    """Cumulative shuffle-write / input volume across COMPLETED stages of a
+    ``rest_session``; take the ``before`` snapshot after in-flight work
+    has finished."""
+    stages = _rest(spark, "stages?status=complete")
+    return {k: sum(s.get(f, 0) for s in stages) for k, f in _STAGE_FIELDS.items()}
+
+
+def succeeded_jobs(spark) -> list[dict]:
+    """Every succeeded job of a ``rest_session``, as the REST API lists it."""
+    return _rest(spark, "jobs?status=succeeded")
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -268,9 +377,7 @@ def main() -> None:
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # JVM/codegen warmup on the smallest table so q01 isn't billed for it
-    QUERIES["q01_pricing_summary"](spark, sf_dir).limit(1).collect()
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     plans: dict[str, str] = {}
@@ -280,32 +387,8 @@ def main() -> None:
         # raced the query's own spine-cache release (async unpersist) —
         # a still-registered InMemoryRelation flipped q203's hash once in
         # r12, firing a spurious plan-change warning
-        from re_data_pipeline_spark.operators.ids import release_spines
-
-        try:
-            probe = fn(spark, sf_dir)
-            plans[name] = plan_hash(probe)
-            # free the discarded probe's pins (the probe itself when it is
-            # a checkpoint scan, q59)
-            release_spines(probe)
-        except Exception:
-            plans[name] = "n/a"  # multi-job pipelines have no single plan
-        best = float("inf")
-        for _ in range(n_runs):
-            # COLD-cache runs (r13 fix): the CacheManager serves a
-            # plan-identical rebuild from any frame a previous run
-            # persisted, so min-of-n would record the cached path.
-            # Clearing before EVERY run keeps runs cold and the session
-            # flat between queries.
-            spark.catalog.clearCache()
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-            # untimed: checkpoint pins survive clearCache, so a
-            # checkpointing query would otherwise grow executor storage by
-            # one RDD per run
-            release_spines(df)
+        plans[name] = probe_plan_hash(spark, fn, sf_dir)
+        best = min(run_cold(spark, fn, sf_dir) for _ in range(n_runs))
         timings[name] = round(best, 3)
         spark.catalog.clearCache()
 

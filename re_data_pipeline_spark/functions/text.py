@@ -219,6 +219,15 @@ def doc_fingerprint(col: Column | str) -> Column:
     return F.md5(normalize_text(col))
 
 
+def md5_60(col: Column | str, lane: int = 0) -> Column:
+    """60-bit md5 hash as BIGINT: hex digits ``[15·lane, 15·lane + 15)`` of
+    ``md5(col)`` read as an integer, so ``lane`` 0 and 1 are two
+    independent hashes from one 32-digit digest.  The repo-wide portable
+    hash primitive; DuckDB spells lane 0
+    ``('0x' || substr(md5(x), 1, 15))::BIGINT``."""
+    return F.conv(F.substring(F.md5(_c(col)), 1 + 15 * lane, 15), 16, 10).cast("long")
+
+
 ROLLING_HASH_MOD = 2305843009213693951  # 2^61 - 1 (Mersenne prime)
 
 

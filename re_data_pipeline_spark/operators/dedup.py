@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from re_data_pipeline_spark.functions.text import (
     doc_fingerprint,
+    md5_60,
     tokens,
     word_shingles,
     word_shingles_of,
@@ -774,11 +775,7 @@ def simhash_multi(
             if digest == 0
             else F.concat(F.col("__tok"), F.lit(f"§{digest}"))
         )
-        hcols.append(
-            F.conv(F.substring(F.md5(src), 1 + 15 * half, 15), 16, 10)
-            .cast("long")
-            .alias(f"__h{w}")
-        )
+        hcols.append(md5_60(src, half).alias(f"__h{w}"))
     toks = texts.select(
         "__text", F.explode(F.split(F.trim(F.col("__text")), r"\s+")).alias("__tok")
     ).select("__text", *hcols)
@@ -944,9 +941,7 @@ def span_dup_stats(
         F.posexplode(word_shingles_of(F.col("__toks"), span_words, distinct=False)).alias(
             "__pos", "__span"
         ),
-    ).withColumn(
-        "__h", F.conv(F.substring(F.md5(F.col("__span")), 1, 15), 16, 10).cast("long")
-    ).drop("__span")
+    ).withColumn("__h", md5_60("__span")).drop("__span")
     counts = spans.groupBy("__h").agg(
         F.count_distinct(F.col(id_col)).alias("__nd")
     )
@@ -1878,9 +1873,7 @@ def line_dedup_rewrite(
         F.posexplode(
             F.split(F.coalesce(F.col(text_col), F.lit("")), r"\n")
         ).alias("__pos", "__line"),
-    ).withColumn(
-        "__h", F.conv(F.substring(F.md5(F.col("__line")), 1, 15), 16, 10).cast("long")
-    )
+    ).withColumn("__h", md5_60("__line"))
     counts = lines.groupBy("__h").agg(
         F.count_distinct(F.col(id_col)).alias("__nd")
     )

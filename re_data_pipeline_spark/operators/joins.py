@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from re_data_pipeline_spark.functions.text import md5_60
+
 # Join types whose output is a function of (left row → matching right rows):
 # replicating the right side cannot change their result.  right/full outer
 # (and the symmetric "right_semi"-style spellings) would emit unmatched
@@ -69,14 +71,7 @@ def salted_join(
     # NULL-safe: a NULL salt_source would make md5 return NULL → NULL salt →
     # the row silently loses every match (NULL never equi-joins).  Hash the
     # empty string instead so NULL-source rows land on one fixed salt.
-    salt = (
-        F.conv(
-            F.substring(F.md5(F.coalesce(src.cast("string"), F.lit(""))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % num_salts
-    )
+    salt = md5_60(F.coalesce(src.cast("string"), F.lit(""))) % num_salts
     l = left.withColumn("__salt", salt)
     r = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i).cast("long") for i in range(num_salts)]))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from re_data_pipeline_spark.functions.text import md5_60
 from re_data_pipeline_spark.operators.ids import pin, pinning, release
 
 
@@ -190,15 +191,6 @@ def _nullsafe_str(col: Column) -> Column:
     return F.coalesce(col.cast("string"), F.lit(""))
 
 
-def _md5_60(col: Column) -> Column:
-    """60-bit md5-prefix hash as BIGINT — the receipt family's row-hash
-    and shard-key primitive.  ONE definition shared by
-    :func:`shard_manifest` and :func:`lsh_index_summary`: q221 joins the
-    two receipts on the shard column, so their ``pmod(md5_60(id),
-    num_shards)`` keys MUST stay bit-identical (r17 review)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _row_digest(id_col: str, content_cols: list[str]) -> tuple[Column, Column]:
     """The receipt family's (shard-key hash, injective row hash) pair —
     ONE construction shared by :func:`shard_manifest` and
@@ -213,7 +205,7 @@ def _row_digest(id_col: str, content_cols: list[str]) -> tuple[Column, Column]:
         F.md5(sid),
         *[F.md5(_nullsafe_str(F.col(c))) for c in content_cols],
     )
-    return _md5_60(sid), _md5_60(content)
+    return md5_60(sid), md5_60(content)
 
 
 def shard_manifest(
@@ -393,8 +385,8 @@ def lsh_index_summary(
     )
     return (
         index_buckets.select(
-            F.pmod(_md5_60(sid), F.lit(num_shards)).cast("int").alias(shard_col),
-            _md5_60(content).alias("__rh"),
+            F.pmod(md5_60(sid), F.lit(num_shards)).cast("int").alias(shard_col),
+            md5_60(content).alias("__rh"),
         )
         .groupBy(shard_col)
         .agg(

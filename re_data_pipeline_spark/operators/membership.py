@@ -31,15 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from re_data_pipeline_spark.functions.text import md5_60
 from re_data_pipeline_spark.operators.ids import pin, pinning
 
 
 def _bit_position(key: F.Column, salt: int, m_bits: int) -> F.Column:
-    """i-th Bloom hash: md5-prefix (60 bits) of ``key#salt`` mod m."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(key, F.lit(f"#{salt}"))), 1, 15), 16, 10
-    ).cast("long")
-    return h % m_bits
+    """i-th Bloom hash: :func:`md5_60` of ``key#salt`` mod m."""
+    return md5_60(F.concat(key, F.lit(f"#{salt}"))) % m_bits
 
 
 def bloom_bitmap(

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from re_data_pipeline_spark.functions.text import tokens
+from re_data_pipeline_spark.functions.text import md5_60, tokens
 from re_data_pipeline_spark.operators.ids import (
     assign_ordinals,
     assign_prefix_sums,
@@ -54,12 +54,12 @@ _FIXED = 1_000_000
 
 
 def hash_bucket(col: Column, n_buckets: int) -> Column:
-    """Deterministic token→bucket: md5 hex prefix (60 bits) mod B.
+    """Deterministic token→bucket: :func:`md5_60` mod B.
 
     Engine-portable: DuckDB spells it
     ``('0x' || substr(md5(x), 1, 15))::BIGINT % B``.
     """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % n_buckets
+    return md5_60(col) % n_buckets
 
 
 @pinning
@@ -257,14 +257,7 @@ def grouped_split(
     Appends a ``split`` column ('test' iff bucket < test_permille of 1000).
     """
     g = F.col(group_col) if isinstance(group_col, str) else group_col
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{salt}:"), g.cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    bucket = md5_60(F.concat(F.lit(f"{salt}:"), g.cast("string"))) % 1000
     return df.withColumn(
         "split", F.when(bucket < test_permille, F.lit("test")).otherwise(F.lit("train"))
     )
@@ -282,14 +275,7 @@ def grouped_kfold(
     its training complement.  Map-only md5 bucketing; appends ``fold`` ∈
     [0, k)."""
     g = F.col(group_col) if isinstance(group_col, str) else group_col
-    fold = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{salt}:"), g.cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % k
-    )
+    fold = md5_60(F.concat(F.lit(f"{salt}:"), g.cast("string"))) % k
     return df.withColumn("fold", fold.cast("int"))
 
 

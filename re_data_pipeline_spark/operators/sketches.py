@@ -26,13 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from re_data_pipeline_spark.functions.text import md5_60
+
 
 def _h(col: F.Column, salt: str) -> F.Column:
-    """md5-prefix 60-bit hash of ``col`` salted — the repo-wide portable
-    hash primitive (DuckDB: ``('0x' || substr(md5(x || salt), 1, 15))``)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(salt))), 1, 15), 16, 10
-    ).cast("long")
+    """:func:`md5_60` of ``col`` salted (DuckDB:
+    ``('0x' || substr(md5(x || salt), 1, 15))``)."""
+    return md5_60(F.concat(col, F.lit(salt)))
 
 
 def countmin_build(

@@ -4868,23 +4868,12 @@ DRIVER_WINDOW: list[str] = [
 ]
 
 
-# Window entries intentionally checked rows-only (non-SQL-expressible).
-# EMPTY since mid-round-5: the last four holdouts — the §3 pipeline traces —
-# replay fully in DuckDB now (fixtures are seedless md5 arithmetic; mock
-# LLM/embedding clients are pure hash functions), so every registered query
-# carries a full-value oracle.  Anything in the window without an oracle is
-# a registration bug — fail at import.
-ROWS_ONLY_WINDOW: frozenset[str] = frozenset()
-
-
 def ordered_queries() -> dict[str, QueryFn]:
     """QUERIES re-ordered so DRIVER_WINDOW registers first (window names
-    must exist and carry oracles unless explicitly rows-only — fail loudly
-    at import if not)."""
+    must exist and carry full-value oracles — fail loudly at import if
+    not)."""
     missing = [n for n in DRIVER_WINDOW if n not in QUERIES]
-    no_oracle = [
-        n for n in DRIVER_WINDOW if n not in ORACLES and n not in ROWS_ONLY_WINDOW
-    ]
+    no_oracle = [n for n in DRIVER_WINDOW if n not in ORACLES]
     if missing or no_oracle:
         raise RuntimeError(
             f"DRIVER_WINDOW broken: missing={missing} no_oracle={no_oracle}"
@@ -11050,8 +11039,8 @@ def q221_corpus_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shard key shared with the receipt family (maintenance._md5_60 /
-# _nullsafe_str): q222's incident fixture is CONSTRUCTED per-shard — a
+# Shard key shared with the receipt family (functions.text.md5_60 /
+# maintenance._nullsafe_str): q222's incident fixture is CONSTRUCTED per-shard — a
 # wiped shard, a bad rewrite inside one shard, a stray append landing in
 # one shard — so the receipt diff genuinely localizes before pruning.
 _SHARD16_SQL = (
@@ -11133,14 +11122,14 @@ def q222_corpus_receipt_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — wall scales with |differing shards|, not |corpus|.  Nothing
     is corpus×corpus, nothing quadratic, no driver-side row data beyond
     the ≤16-row shard list."""
+    from re_data_pipeline_spark.functions.text import md5_60
     from re_data_pipeline_spark.operators.maintenance import (
-        _md5_60,
         _nullsafe_str,
         corpus_receipt_diff,
     )
 
     def shard16(col: Column) -> Column:
-        return F.pmod(_md5_60(_nullsafe_str(col)), F.lit(16)).cast("int")
+        return F.pmod(md5_60(_nullsafe_str(col)), F.lit(16)).cast("int")
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     s = shard16(F.col("doc_id"))

@@ -366,3 +366,44 @@ def test_q216_releases_pair_list_on_cc_raise(spark, sf_dir, monkeypatch):
         QUERIES["q216_cluster_safe_split"](spark, sf_dir)
     leaked = persistent_ids(spark) - before
     assert not leaked, f"pair-list checkpoint leaked on CC raise: {leaked}"
+
+
+def test_bench_run_cold_releases_checkpointing_queries(spark, sf_dir):
+    """``bench.run_cold`` releases the result's pins after the noop write:
+    a clearCache-only loop (the old shuffle_audit / sf1_anchor body) left
+    the final checkpoint of q82 and of q136 pinned, one RDD per run."""
+    import bench
+    from re_data_pipeline_spark.plans.queries import QUERIES
+
+    for name in ("q82_connected_components", "q136_pagerank"):
+        spark.catalog.clearCache()
+        before = persistent_ids(spark)
+        assert bench.run_cold(spark, QUERIES[name], sf_dir) > 0
+        leaked = persistent_ids(spark) - before
+        assert not leaked, f"{name} left persistent RDDs after run_cold: {leaked}"
+
+
+def test_bench_probe_plan_hash_releases_pins_when_hashing_raises(
+    spark, sf_dir, monkeypatch
+):
+    """``bench.probe_plan_hash`` reports "n/a" when hashing raises and
+    still frees the probe's pins."""
+    import bench
+    from re_data_pipeline_spark.plans.queries import QUERIES
+
+    built = []
+
+    def q82(spark, sf_dir):
+        built.append(QUERIES["q82_connected_components"](spark, sf_dir))
+        return built[-1]
+
+    def boom(df):
+        raise RuntimeError("hashing failed (forced)")
+
+    monkeypatch.setattr(bench, "plan_hash", boom)
+    spark.catalog.clearCache()
+    before = persistent_ids(spark)
+    assert bench.probe_plan_hash(spark, q82, sf_dir) == "n/a"
+    assert built and built[0]._pins, "the probe pinned nothing: vacuous check"
+    leaked = persistent_ids(spark) - before
+    assert not leaked, f"probe pins leaked when hashing raised: {leaked}"

@@ -839,13 +839,13 @@ def test_corpus_receipt_diff_stored_shard_col_prunes(spark, tmp_path):
     divergent-shard IN predicate becomes real partition pruning.  The
     stored-column path must return exactly the computed-path deltas, and
     the pruned scan must carry a PartitionFilter."""
+    from re_data_pipeline_spark.functions.text import md5_60
     from re_data_pipeline_spark.operators.maintenance import (
-        _md5_60,
         _nullsafe_str,
         corpus_receipt_diff,
     )
 
-    shard = F.pmod(_md5_60(_nullsafe_str(F.col("doc_id"))), F.lit(8)).cast("int")
+    shard = F.pmod(md5_60(_nullsafe_str(F.col("doc_id"))), F.lit(8)).cast("int")
     rows = [(i, f"stored shard corpus doc {i}", "en") for i in range(1, 31)]
     a = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
     b = a.where(F.col("doc_id") != 7).select(

@@ -819,6 +819,7 @@ CHECKS = [
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    from re_data_pipeline_spark.operators.ids import release_spines
     from re_data_pipeline_spark.plans.queries import QUERIES
 
     spark = get_spark(master="local[8]")
@@ -955,6 +956,9 @@ def main() -> int:
                 df.write.format("noop").mode("overwrite").save()
             plan = plan_of(df)
             fmt = formatted(df)
+            # clearCache above frees persisted frames, not checkpoints:
+            # free the check's pins now that its plan text is captured
+            release_spines(df)
         except Exception as exc:  # a broken build fails THIS check, not the run
             lines.append(f"## {name} — {title}\n")
             lines.append(f"- ❌ check could not run: `{type(exc).__name__}: {exc}`")

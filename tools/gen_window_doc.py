@@ -23,16 +23,10 @@ END = "<!-- DRIVER_WINDOW:END -->"
 def render() -> str:
     sys.path.insert(0, HERE)
     import re_data_pipeline_spark.plans.queries as q
-    from re_data_pipeline_spark.plans.queries import (
-        DRIVER_WINDOW,
-        ORACLES,
-        QUERIES,
-        ROWS_ONLY_WINDOW,
-    )
+    from re_data_pipeline_spark.plans.queries import DRIVER_WINDOW, ORACLES, QUERIES
 
     total = len(QUERIES)
     win = list(DRIVER_WINDOW)
-    rows_only = [n for n in win if n in ROWS_ONLY_WINDOW]
     oracled = [n for n in win if n in ORACLES]
     names = ", ".join(f"`{n}`" for n in win)
     # the round the list was last actually re-composed, stamped in source
@@ -44,7 +38,6 @@ def render() -> str:
         BEGIN,
         f"  Current window ({len(win)} of {total} registered queries; "
         f"{len(oracled)} full-value oracles"
-        + (f", {len(rows_only)} rows-only" if rows_only else ", 0 rows-only")
         + stamp
         + "):",
         "  " + names + ".",

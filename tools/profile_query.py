@@ -1,6 +1,7 @@
 """Per-query job/driver-gap profiler (guide §1: measure first).
 
-Runs ONE bench query against the noop sink and decomposes its wall time
+Runs each query as ``bench.run_cold`` (cold cache, noop sink, pins
+released) in a ``bench.rest_session`` and decomposes its wall time
 into (a) Spark job execution and (b) driver-side gaps between jobs
 (planning, analysis, Janino codegen, collect post-processing).  For the
 iterative operators (k-center, BPE, EM, pagerank, CC) the gap share is
@@ -21,20 +22,16 @@ shuffle/input deltas across the run.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
-import urllib.request
+from datetime import datetime
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def jobs_snapshot(ui: str, app_id: str) -> list[dict]:
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app_id}/jobs?status=succeeded"
-    ) as r:
-        return json.load(r)
+def ts(s: str) -> float:
+    """A REST job timestamp (ISO, GMT) as epoch seconds."""
+    return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
 
 
 def main() -> None:
@@ -44,55 +41,28 @@ def main() -> None:
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from re_data_pipeline_spark.operators.ids import release_spines
+    from bench import rest_session, run_cold, stage_totals, succeeded_jobs, warm_up
     from re_data_pipeline_spark.plans.queries import QUERIES
-    from re_data_pipeline_spark.session import codegen_compiles, get_spark
-    from tools.rest_metrics import stage_totals
+    from re_data_pipeline_spark.session import codegen_compiles
 
-    spark = get_spark(
-        app_name="profile_query",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedJobs": "100000",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # the port this session bound: 4040 is taken while another app runs
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
-    # JVM/codegen warmup (mirrors bench.py)
-    QUERIES["q01_pricing_summary"](spark, sf_dir).limit(1).collect()
+    spark = rest_session("profile_query")
+    warm_up(spark, sf_dir)
 
     for name in args.queries:
         fn = QUERIES[name]
         best = None
         for _ in range(args.runs):
-            spark.catalog.clearCache()
-            pre_jobs = {j["jobId"] for j in jobs_snapshot(ui, app_id)}
-            pre_stage = stage_totals(ui, app_id)
+            pre_jobs = {j["jobId"] for j in succeeded_jobs(spark)}
+            pre_stage = stage_totals(spark)
             spark.sparkContext.setJobDescription(f"profile: {name}")
             c0 = codegen_compiles(spark)
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
+            wall = run_cold(spark, fn, sf_dir)
             compiles = codegen_compiles(spark) - c0
-            release_spines(df)
-            post = [
-                j for j in jobs_snapshot(ui, app_id) if j["jobId"] not in pre_jobs
-            ]
-            post_stage = stage_totals(ui, app_id)
+            post = [j for j in succeeded_jobs(spark) if j["jobId"] not in pre_jobs]
+            post_stage = stage_totals(spark)
             if best is None or wall < best[0]:
                 best = (wall, post, pre_stage, post_stage, compiles)
         wall, post, pre_stage, post_stage, compiles = best
-        # job wall from submission->completion timestamps (ISO GMT)
-        from datetime import datetime
-
-        def ts(s: str) -> float:
-            return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
-
         tot_job = sum(
             ts(j["completionTime"]) - ts(j["submissionTime"]) for j in post
         )
@@ -111,7 +81,6 @@ def main() -> None:
         for k in ("shuffle_write_bytes", "shuffle_write_records",
                   "input_bytes", "input_records"):
             print(f"  {k}: {post_stage[k] - pre_stage[k]:,}")
-        spark.catalog.clearCache()
 
 
 if __name__ == "__main__":

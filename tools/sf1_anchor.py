@@ -35,14 +35,12 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from bench import plan_hash
-from re_data_pipeline_spark.session import get_spark
+from bench import probe_plan_hash, rest_session, run_cold, stage_totals
 
 SF01_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPLICAS = 10
@@ -172,32 +170,11 @@ def build_sf1_embeddings(spark, out_dir: str) -> int:
     return n_base * REPLICAS
 
 
-def _shuffle_records(ui: str, app_id: str) -> int:
-    """Cumulative shuffle-write records across completed stages — the
-    r8/r9 verdicts' missing column: wall-ratio alone can't distinguish
-    fixed-cost amortization loss from super-linear candidate growth.
-    Thin adapter over the shared REST helper (tools/rest_metrics)."""
-    from tools.rest_metrics import stage_totals
-
-    return stage_totals(ui, app_id)["shuffle_write_records"]
-
-
 def main() -> int:
     from re_data_pipeline_spark.plans.queries import QUERIES
 
-    # the session factory disables the UI for benchmarks; the shuffle-row
-    # columns need the status REST API, so re-enable it here only
-    spark = get_spark(app_name="sf1_anchor", extra_conf={
-        "spark.ui.enabled": "true",
-        # the REST stage store evicts past retainedStages (default
-        # 1000), which makes cumulative shuffle diffs NEGATIVE once a
-        # long session rolls over (observed on the r12 q211 anchor) —
-        # the probes sum over completed stages, so keep them all
-        "spark.ui.retainedStages": "100000",
-    })
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    # the shuffle-row columns read the status REST API
+    spark = rest_session("sf1_anchor")
 
     stage = tempfile.mkdtemp(prefix="sf1_anchor_")
     try:
@@ -206,21 +183,17 @@ def main() -> int:
         print(f"sf1 documents: {n_docs:,} docs, embeddings: {n_vecs:,} at {stage}")
 
         def best_of(fn, sf_path, runs=2):
-            """(best wall of `runs`, shuffle rows of the LAST run — the
-            volume is plan-deterministic, so any single run's delta is
-            the number; the last one excludes codegen-warmup stages)."""
+            """(best wall of `runs` cold runs, shuffle-write rows of the
+            LAST run — the volume is plan-deterministic, so any single
+            run's delta is the number; the last one excludes
+            codegen-warmup stages).  Shuffle rows are the r8/r9 verdicts'
+            missing column: wall ratio alone cannot tell fixed-cost
+            amortization loss from super-linear candidate growth."""
             best, shuf = float("inf"), 0
             for _ in range(runs):
-                # cold cache per run (r13 fix): a plan-identical rebuild is
-                # otherwise served run 1's pinned cache, so run 2's wall
-                # and shuffle delta measured the warm path — exactly the
-                # failure bench.py's cold-cache protocol defends
-                spark.catalog.clearCache()
-                before = _shuffle_records(ui, app_id)
-                t0 = time.time()
-                fn(spark, sf_path).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
-                shuf = _shuffle_records(ui, app_id) - before
+                before = stage_totals(spark)["shuffle_write_records"]
+                best = min(best, run_cold(spark, fn, sf_path))
+                shuf = stage_totals(spark)["shuffle_write_records"] - before
             return best, shuf
 
         rows = []
@@ -230,11 +203,7 @@ def main() -> int:
             # records (hashing after the runs raced the query's own
             # spine-cache release and could fold an InMemoryRelation into
             # the hash; bench re-baselined q82/q152/q178 in r12)
-            try:
-                ph = plan_hash(fn(spark, stage))
-            except Exception:
-                ph = "n/a"
-            spark.catalog.clearCache()
+            ph = probe_plan_hash(spark, fn, stage)
             # same-session sf0.1 baseline FIRST (also warms codegen so the
             # sf1 number isn't billed for Janino compilation)
             base_s, base_r = best_of(fn, SF01_DIR)

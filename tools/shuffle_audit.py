@@ -3,26 +3,21 @@ records actually cross a shuffle boundary, plus input volume — the numbers
 the 100 TB design argument stands on (PLANS.md asserts plan *shapes*; this
 measures the *traffic*).
 
-Method: run each query against the noop sink and diff the cumulative
-per-stage shuffle-write / input metrics from Spark's status REST API
-(localhost UI, always on in local mode).  Writes SHUFFLES.md.
+Method: run each query once as ``bench.run_cold`` (cold cache, noop sink,
+pins released) and diff the cumulative per-stage shuffle-write / input
+metrics that ``bench.stage_totals`` reads from Spark's status REST API.
+The UI is off in every ``get_spark`` session, so the audit runs in a
+``bench.rest_session``, which turns it on.  Writes SHUFFLES.md.
 
 Usage: python tools/shuffle_audit.py [sf_dir]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from re_data_pipeline_spark.session import get_spark
-
-
-from tools.rest_metrics import stage_totals as totals  # the ONE REST copy
 
 
 def fmt_bytes(n: int) -> str:
@@ -36,24 +31,11 @@ def fmt_bytes(n: int) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from bench import HEADLINE
+    from bench import HEADLINE, rest_session, run_cold, stage_totals, warm_up
     from re_data_pipeline_spark.plans.queries import QUERIES
 
-    # the session factory disables the UI for benchmarks; the audit needs
-    # the status REST API, so turn it back on for this process only
-    spark = get_spark(app_name="shuffle_audit", extra_conf={
-        "spark.ui.enabled": "true",
-        # the REST stage store evicts past retainedStages (default
-        # 1000), which makes cumulative shuffle diffs NEGATIVE once a
-        # long session rolls over (observed on the r12 q211 anchor) —
-        # the probes sum over completed stages, so keep them all
-        "spark.ui.retainedStages": "100000",
-    })
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
-    QUERIES["q01_pricing_summary"](spark, sf_dir).limit(1).collect()  # warmup
+    spark = rest_session("shuffle_audit")
+    warm_up(spark, sf_dir)
 
     lines = [
         "# SHUFFLES — measured shuffle/input volume per headline query\n",
@@ -72,14 +54,13 @@ def main() -> None:
         "|---|---|---|---|---|",
     ]
     for name in HEADLINE:
-        # cold cache per query (r13 fix): guard-carrying operators pin
-        # plan-identical persisted subtrees; without this a later query
-        # sharing one (q33's signature frame inside q71) is served the
-        # earlier query's cache and its shuffle volume undercounts
-        spark.catalog.clearCache()
-        before = totals(ui, app_id)
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        after = totals(ui, app_id)
+        # cold cache per query (r13 fix, inside run_cold): guard-carrying
+        # operators pin plan-identical persisted subtrees; without it a
+        # later query sharing one (q33's signature frame inside q71) is
+        # served the earlier query's cache and its shuffle volume undercounts
+        before = stage_totals(spark)
+        run_cold(spark, QUERIES[name], sf_dir)
+        after = stage_totals(spark)
         d = {k: after[k] - before[k] for k in before}
         ratio = (
             f"{d['shuffle_write_records'] / d['input_records']:.1%}"
