@@ -178,16 +178,14 @@ def load_tables(
     spark: SparkSession,
     sf_dir: str = DEFAULT_SF_DIR,
     names: tuple[str, ...] = TESTDATA_TABLES,
-    register: bool = True,
 ) -> dict[str, DataFrame]:
-    """Load every test table; optionally register temp views for spark.sql."""
+    """Load every test table and register each as a temp view for spark.sql."""
     out: dict[str, DataFrame] = {}
     for name in names:
         path = table_path(sf_dir, name)
         if not os.path.exists(path):
             continue
         df = load_table(spark, sf_dir, name)
-        if register:
-            df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         out[name] = df
     return out

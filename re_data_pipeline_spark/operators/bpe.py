@@ -130,6 +130,10 @@ def bpe_train(
             break
         b = best[0]
         rules.append((rank, b["left"], b["right"], b["pair_count"]))
+        if rank == num_merges - 1:
+            # the merged word table would never be read: skip its
+            # eager checkpoint
+            break
         prev = words
         words = hold(words.withColumn(
             "toks", _apply_merge(F.col("toks"), b["left"], b["right"])

@@ -36,10 +36,11 @@ task launches per job.
   loop-invariant tables: the CC/BSS edge lists, the PageRank node set, the
   LM unigram/bigram tables, and the BPE and unigram word tables (q211
   4.2 → 3.5 s, q218 5.9 → 4.9 s, q212 4.4 → 3.8 s).
-- The k-center selection frame (``selection.kcenter_select``) is coalesced
-  to ``partition_count(estimate, KCENTER_PARTITION_BYTES)`` when the whole
-  frame is under 1024 such partitions: it is re-scanned once per round, so
-  task-launch overhead multiplies by k.  The 128 MB target matches the
+- ``narrow_rescanned_frame``: the k-center selection frame
+  (``selection.kcenter_select``) is coalesced to ``partition_count(estimate,
+  KCENTER_PARTITION_BYTES)`` when the whole frame is under 1024 such
+  partitions: it is re-scanned once per round, so task-launch overhead
+  multiplies by k.  The 128 MB target matches the
   ``spark.sql.files.maxPartitionBytes`` default.
 - ``coalesce`` adds no exchange.  When a shuffle sits below it, only the
   post-shuffle reduce side narrows and the expensive scan/explode upstream
@@ -119,3 +120,14 @@ def narrow_small_frame(df: DataFrame) -> DataFrame:
     if n >= int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")):
         return df
     return df.coalesce(n)
+
+
+def narrow_rescanned_frame(df: DataFrame) -> DataFrame:
+    """Coalesce a frame a loop re-scans every round to
+    ``partition_count(estimate, KCENTER_PARTITION_BYTES)`` partitions when
+    the estimate is under 1024 such partitions; no-op on unknown stats.
+    ``coalesce``, not ``repartition``: no shuffle and no row-order change."""
+    nb = plan_stats_bytes(df)
+    if nb is not None and 0 < nb < KCENTER_PARTITION_BYTES * 1024:
+        return df.coalesce(partition_count(nb, KCENTER_PARTITION_BYTES))
+    return df

@@ -254,7 +254,6 @@ def ngram_lm_nll(
     score_df: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_tokens: bool = False,
     min_count2: int = 1,
     min_count3: int = 1,
     broadcast_model: bool = False,
@@ -326,17 +325,7 @@ def ngram_lm_nll(
         score_df = train_df
 
     t = _toks(text_col)
-    # cache_tokens=True persists the tokenized frame so the ~6 consumers
-    # (three gram aggs + scoring + totality) don't re-run the upstream
-    # lineage.  Default OFF: over a bare parquet scan, recompute from the
-    # columnar read beats materializing token arrays (measured 0.7 s vs
-    # 1.3 s at sf0.1), and at 100 TB a cached token corpus is memory/spill
-    # pressure, not a win.  Turn it on when the INPUT lineage is expensive
-    # (joins, filters over other operators) — or better, persist that
-    # small upstream frame yourself (q206 persists its survivor set).
     sc = score_df.select(F.col(id_col), t.alias("__t"))
-    if cache_tokens:
-        sc = pin(sc.persist())
     if model is not None:
         # frozen model loaded from storage: rename the public columns back
         # to the scoring-join names — no training pass, no count-table pins
@@ -357,8 +346,6 @@ def ngram_lm_nll(
             base = sc.where(F.size("__t") > 0)
         else:
             base = train_df.select(t.alias("__t")).where(F.size("__t") > 0)
-            if cache_tokens:
-                base = pin(base.persist())
         tri_model, bi_model, uni_model, stats = _train_tables(
             base, min_count2, min_count3
         )

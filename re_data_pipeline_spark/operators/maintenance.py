@@ -400,8 +400,6 @@ def retract_from_lsh_index(
     index_buckets: DataFrame,
     retract_ids: DataFrame,
     id_col: str = "doc_id",
-    broadcast_ids: bool = True,
-    ids_distinct: bool = False,
 ) -> DataFrame:
     """Prune a retracted doc set's rows out of a persisted LSH bucket
     index: a left-anti join on the id.  Retraction REVERSES the
@@ -410,25 +408,15 @@ def retract_from_lsh_index(
     stop blocking — its content is being erased, and future recrawls of
     it must be judged on their own).
 
-    ``broadcast_ids=True`` (default) broadcast-hints the id set —
-    retraction requests are batch-sized, so the prune is a map-only
-    filter over the index with ZERO index-side shuffle, which is the
-    whole point at 100 TB (the index is corpus×bands rows).  Pass False
-    for a pathologically large retraction and let AQE pick the join.
-
-    ``ids_distinct=True`` declares ``retract_ids`` already deduplicated —
-    the anti-join is existence-semantics (duplicates cannot change the
-    result), so a caller that distinct-ed the request once
-    (:func:`corpus_retraction` must, for its manifest fetch) skips the
-    second dedup pass here instead of nesting distinct-of-distinct
-    (r17 advice).
+    The id set is broadcast-hinted — retraction requests are
+    batch-sized, so the prune is a map-only filter over the index with
+    ZERO index-side shuffle, which is the whole point at 100 TB (the
+    index is corpus×bands rows).  No ``distinct``: the anti-join only
+    checks existence, so duplicate ids cannot change the result.
     """
-    ids = retract_ids.select(id_col)
-    if not ids_distinct:
-        ids = ids.distinct()
-    if broadcast_ids:
-        ids = F.broadcast(ids)
-    return index_buckets.join(ids, id_col, "left_anti")
+    return index_buckets.join(
+        F.broadcast(retract_ids.select(id_col)), id_col, "left_anti"
+    )
 
 
 @pinning
@@ -616,10 +604,7 @@ def corpus_retraction(
             minhash_signature(corpus_a, text_col, num_hashes, shingle_words),
             id_col, "minhash", bands, num_hashes // bands,
         )
-    # the already-distinct id frame through (ids_distinct=True): the
-    # request is deduplicated exactly once per retraction (r17 advice —
-    # previously the prune re-ran its own distinct over the raw frame)
-    index = retract_from_lsh_index(index_a, ids, id_col, ids_distinct=True)
+    index = retract_from_lsh_index(index_a, ids, id_col)
     kept = corpus_a.join(F.broadcast(ids), id_col, "left_anti")
     return {
         "kept": kept,

@@ -9,11 +9,10 @@ Design for 100 TB of media:
   operator actually needs bytes (check ReadSchema in .explain);
 - decode and fingerprint run as ``mapInPandas`` stages — Arrow moves the
   bytes column batch-wise, one decoder instance per task;
-- actual codec work is pluggable.  The default decoder is a clearly-marked
-  deterministic fake (shape/feature math from the byte stream itself); a
-  real codec is passed in as a callable ``(bytes, kind) -> ndarray`` and
-  runs inside the executor task.  The Spark-side plumbing — schemas,
-  batching, partitioning — is real and tested either way.
+- the decoder is a clearly-marked deterministic fake (shape/feature math
+  from the byte stream itself) that runs inside the executor task.  The
+  Spark-side plumbing — schemas, batching, partitioning — is real and
+  tested.
 """
 
 from __future__ import annotations
@@ -58,8 +57,8 @@ MEDIA_SCHEMA = StructType(
 
 def _fake_decode(content: bytes, kind: str) -> np.ndarray:
     """Deterministic stand-in for a real decoder: derives a pixel/sample
-    array from the byte stream via a seeded hash.  Marked FAKE — a real
-    codec is passed to the operators as a callable."""
+    array from the byte stream via a seeded hash.  Marked FAKE: no real
+    codec is bundled."""
     seed = int(hashlib.md5(content or b"").hexdigest()[:8], 16)
     rng = np.random.RandomState(seed)
     if kind == "image":
@@ -71,17 +70,7 @@ def _fake_decode(content: bytes, kind: str) -> np.ndarray:
     raise ValueError(f"unknown media kind: {kind}")
 
 
-def _decode_fn(decoder):
-    """Resolve the ``decoder`` knob: ``"fake"`` (deterministic, testable
-    offline) or a callable ``(bytes, kind) -> ndarray`` for real codecs."""
-    if decoder == "fake":
-        return _fake_decode
-    if callable(decoder):
-        return decoder
-    raise ValueError(f"decoder must be 'fake' or a callable, got {decoder!r}")
-
-
-def decode_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
+def decode_features(df: DataFrame) -> DataFrame:
     """Decode each media row and emit a fixed-length feature vector +
     decoded-shape metadata.
 
@@ -98,11 +87,10 @@ def decode_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
     keep = [f.name for f in df.schema.fields if f.name != "content"]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _decode_fn(decoder)
         for pdf in batches:
             feats, shapes = [], []
             for content, kind in zip(pdf["content"], pdf["kind"]):
-                arr = decode(bytes(content) if content is not None else b"", kind)
+                arr = _fake_decode(bytes(content) if content is not None else b"", kind)
                 flat = arr.astype(np.float64).ravel()
                 # 16 coarse moments: chunked means — deterministic, shape-free
                 chunks = np.array_split(flat, 16)
@@ -149,17 +137,14 @@ def _ahash64(arr: np.ndarray) -> int:
 _AHASH_WORD_BITS = 60  # match operators/dedup's multi-word convention
 
 
-def media_ahash_words(
-    df: DataFrame, decoder: str = "fake", out_col: str = "phash_words"
-) -> DataFrame:
-    """Perceptual fingerprints for IMAGE rows: decode (fake or a codec
-    callable) → 64-bit aHash → ``array<bigint>`` in the
-    same ≤60-bits-per-word encoding ``operators/dedup`` bands over, so
-    image near-dup search reuses the exact text machinery
+def media_ahash_words(df: DataFrame, out_col: str = "phash_words") -> DataFrame:
+    """Perceptual fingerprints for IMAGE rows: decode → 64-bit aHash →
+    ``array<bigint>`` in the same ≤60-bits-per-word encoding
+    ``operators/dedup`` bands over, so image near-dup search reuses the
+    exact text machinery
     (``hamming_radius_pairs_on_words``).  Arrow-batched mapInPandas; only
     the id and fingerprint leave the Python boundary.
     """
-    decode = _decode_fn(decoder)
     id_fields = [f for f in df.schema.fields if f.name in ("media_id",)]
     schema = StructType(id_fields + [StructField(out_col, ArrayType(LongType()))])
     mask = (1 << _AHASH_WORD_BITS) - 1
@@ -170,7 +155,7 @@ def media_ahash_words(
             for content, kind in zip(pdf["content"], pdf["kind"]):
                 # None guard like every sibling kernel: MEDIA_SCHEMA.content
                 # is nullable and bytes(None) would kill the whole task
-                v = _ahash64(decode(bytes(content) if content is not None else b"", kind))
+                v = _ahash64(_fake_decode(bytes(content) if content is not None else b"", kind))
                 words.append([v & mask, v >> _AHASH_WORD_BITS])
             yield pd.DataFrame(
                 {"media_id": pdf["media_id"], out_col: words}
@@ -182,7 +167,6 @@ def media_ahash_words(
 def media_phash_pairs(
     df: DataFrame,
     radius: int = 2,
-    decoder: str = "fake",
     on_degradation: str = "warn",
     cap_pairs_per_doc: int = 64,
 ) -> DataFrame:
@@ -200,7 +184,7 @@ def media_phash_pairs(
     from re_data_pipeline_spark.operators.dedup import hamming_radius_pairs_on_words
 
     imgs = df.where(F.col("kind") == "image")
-    fp = media_ahash_words(imgs, decoder)
+    fp = media_ahash_words(imgs)
     return hamming_radius_pairs_on_words(
         fp,
         "media_id",

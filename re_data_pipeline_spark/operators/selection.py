@@ -39,11 +39,7 @@ from re_data_pipeline_spark.operators.ids import (
     pinning,
     release,
 )
-from re_data_pipeline_spark.operators.layout import (
-    KCENTER_PARTITION_BYTES,
-    partition_count,
-    plan_stats_bytes,
-)
+from re_data_pipeline_spark.operators.layout import narrow_rescanned_frame
 
 # Fixed-point scale for order-independent floating sums (see module doc).
 # 1e6 — NOT finer: the pre-round boundary test |frac(x·scale) − 0.5| must
@@ -875,12 +871,14 @@ def contiguous_pack(
     )
 
 
-# Above this k, kcenter_select(mode="auto") switches from the
-# literal-inlining greedy route to the persisted-min-dist incremental
-# route: the greedy plan at round r carries r·dim vector literals in ONE
-# projection, so codegen/analysis cost grows O(k·dim) per round and the
-# route stops being viable long before the k≈10³ of coreset practice.
+# Above this k, kcenter_select switches from the literal-inlining greedy
+# route to the persisted-min-dist incremental route: the greedy plan at
+# round r carries r·dim vector literals in ONE projection, so
+# codegen/analysis cost grows O(k·dim) per round and the route stops being
+# viable long before the k≈10³ of coreset practice.
 _KCENTER_GREEDY_MAX_K = 64
+# The incremental route localCheckpoints its frame every this many rounds.
+_KCENTER_CHECKPOINT_EVERY = 8
 
 @pinning
 def kcenter_select(
@@ -888,8 +886,6 @@ def kcenter_select(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "auto",
-    checkpoint_every: int = 8,
     _plan_probe=None,
 ) -> DataFrame:
     """Greedy k-center (farthest-point / max-min) selection over an
@@ -915,25 +911,25 @@ def kcenter_select(
     ``dist_micro`` the max-min radius AT SELECTION TIME (NULL for the
     seed): the coverage-radius curve a data-selection run reports.
 
-    Two physical routes, identical results (``mode``):
+    Two physical routes, identical results, chosen by ``k``:
 
-    - ``"greedy"`` (auto for k ≤ 64): k rounds, each ONE map-only pass
+    - greedy (k ≤ 64): k rounds, each ONE map-only pass
       computing the min distance to ALL ≤k chosen centers (center vectors
       are k×dim DRIVER LITERALS — the k-means/q103 pattern; never a join,
       never a broadcast relation) followed by a 1-row TakeOrdered argmax.
       Zero persisted state, but round r's projection embeds r·dim
       literals — O(k²·n·dim) total work AND O(k·dim) plan growth per
-      round, so it is capped at k ≤ 64 unless forced.
-    - ``"incremental"`` (auto for k > 64): maintains a persisted
+      round, so it is capped at k ≤ 64.
+    - incremental (k > 64): maintains a persisted
       ``__md = min distance to the chosen set`` column, updated each
       round against ONLY the newest center — O(dim) literals per round,
       O(k·n·dim) total work.  Each round's frame is materialized (the
       argmax collect) with the previous round's cache released;
-      ``localCheckpoint`` every ``checkpoint_every`` rounds truncates the
-      lineage so the analyzed plan stays O(checkpoint_every·dim)
-      regardless of k.  Same per-center rounding, same least() fold order
-      → bit-identical to greedy (least of per-center HALF_UP integers is
-      associative), which the conformance tests assert.  The default
+      ``localCheckpoint`` every 8 rounds truncates the lineage so the
+      analyzed plan stays O(8·dim) regardless of k.  Same per-center
+      rounding, same least() fold order → bit-identical to greedy (least
+      of per-center HALF_UP integers is associative), which the
+      conformance tests assert.  The interval
       dropped 32 → 8 in r18: execution always hits the previous round's
       cache, but ANALYSIS re-walks the whole logical chain since the last
       checkpoint every round — measured per-round driver cost grows with
@@ -946,7 +942,7 @@ def kcenter_select(
     Scale shape (100 TB): both routes shuffle NOTHING — per-round traffic
     is one 1-row TakeOrdered argmax; the incremental route adds one
     n-row cache per round (previous round's released) and a checkpoint
-    every ``checkpoint_every`` rounds.
+    every 8 rounds.
 
     ``_plan_probe`` (tests only): called with ``(round, frame)`` before
     each incremental argmax so the O(dim)-per-round plan-growth contract
@@ -954,15 +950,6 @@ def kcenter_select(
     """
     if k < 1:
         raise ValueError(f"k must be ≥ 1; got {k}")
-    if mode not in ("auto", "greedy", "incremental"):
-        raise ValueError(f"mode must be auto|greedy|incremental; got {mode!r}")
-    if checkpoint_every < 1:
-        # 0 would ZeroDivisionError mid-loop; a negative value would
-        # silently never checkpoint — re-enabling the unbounded plan
-        # growth this route exists to prevent
-        raise ValueError(f"checkpoint_every must be ≥ 1; got {checkpoint_every}")
-    incremental = (k > _KCENTER_GREEDY_MAX_K) if mode == "auto" \
-        else (mode == "incremental")
 
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
@@ -976,14 +963,8 @@ def kcenter_select(
     e = df.select(F.col(id_col), F.col(vec_col)).where(
         F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
     )
-    # the frame is re-scanned once per round: coalesce it toward
-    # KCENTER_PARTITION_BYTES per partition (see operators/layout.py);
-    # unknown stats (huge sentinel) or big inputs keep the scan parallelism.
-    # coalesce, not repartition: no shuffle, no row-order change the
-    # argmax could see (the argmax is a total order anyway).
-    nb = plan_stats_bytes(e)
-    if nb is not None and 0 < nb < KCENTER_PARTITION_BYTES * 1024:
-        e = e.coalesce(partition_count(nb, KCENTER_PARTITION_BYTES))
+    # the frame is re-scanned once per round (see operators/layout.py)
+    e = narrow_rescanned_frame(e)
     seed = e.orderBy(F.asc(id_col)).limit(1).collect()
     if not seed:
         return df.sparkSession.createDataFrame([], out_schema)
@@ -998,7 +979,7 @@ def kcenter_select(
 
     chosen = [(0, seed[0][id_col], None)]
 
-    if not incremental:
+    if k <= _KCENTER_GREEDY_MAX_K:
         center_vecs = [list(seed[0][vec_col])]
         for r in range(1, k):
             md = F.least(*[d_micro(c) for c in center_vecs]) \
@@ -1043,12 +1024,12 @@ def kcenter_select(
             # the frame update below would never be read — building it
             # anyway cost one full eager-checkpoint pass whenever the
             # last round landed ON a checkpoint boundary (q214's exact
-            # configuration: k=65, checkpoint_every=8, r=64)
+            # configuration: k=65, r=64)
             break
         frame = frame.where(F.col(id_col) != F.lit(far[0][id_col])).withColumn(
             "__md", F.least(F.col("__md"), d_micro(list(far[0][vec_col])))
         )
-        if r % checkpoint_every == 0:
+        if r % _KCENTER_CHECKPOINT_EVERY == 0:
             frame = hold(frame.localCheckpoint(eager=True))  # truncate lineage
             # the previous checkpoint stops being any live frame's
             # lineage root the moment the new one is materialized

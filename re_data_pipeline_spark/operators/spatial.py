@@ -21,6 +21,11 @@ from re_data_pipeline_spark.functions.geo import (
     euclidean_distance,
 )
 
+# point_in_polygon_join tests containment with the Column expression up to
+# this many vertices in the polygon side's largest geometry, and with the
+# pandas-UDF kernel above it.
+EXPR_MAX_VERTICES = 4096
+
 
 def grid_aggregate(
     df: DataFrame,
@@ -162,8 +167,6 @@ def point_in_polygon_join(
     point_xy: tuple[str, str] = ("x", "y"),
     ring_col: str = "ring",
     how: str = "left",
-    exact: str = "auto",
-    expr_max_vertices: int = 4096,
 ) -> DataFrame:
     """Point-within-polygon join (J2, ``get_zoning_data.py:60`` sjoin within).
 
@@ -175,19 +178,17 @@ def point_in_polygon_join(
 
     Physical plan: broadcast the polygon table with precomputed bboxes, join
     on bbox containment (range predicates Catalyst can evaluate without
-    Python), then run the exact even-odd test only on bbox survivors.
-    ``exact`` picks the exact-test engine:
+    Python), then run the exact even-odd test only on bbox survivors.  The
+    exact-test engine is picked by the polygon table's largest geometry
+    (one tiny aggregate over the already-broadcast-small polygon side):
 
-    - ``"expr"`` — pure Column expression (``point_in_rings_expr``): the
-      whole join stays inside whole-stage codegen, no Python worker, no
-      Arrow hop.  The right choice for dimension-table polygons (zoning
-      districts: tens of vertices).
-    - ``"udf"`` — the numpy-vectorized pandas UDF: one edge pass per Arrow
+    - up to ``EXPR_MAX_VERTICES`` vertices, a pure Column expression
+      (``point_in_rings_expr``): the whole join stays inside whole-stage
+      codegen, no Python worker, no Arrow hop.  The right choice for
+      dimension-table polygons (zoning districts: tens of vertices).
+    - above it, the numpy-vectorized pandas UDF: one edge pass per Arrow
       batch, better once individual geometries carry thousands of vertices
       (the expression form re-walks edges per candidate row).
-    - ``"auto"`` (default) — ``expr`` unless the polygon table's largest
-      geometry exceeds ``expr_max_vertices`` (one tiny aggregate over the
-      already-broadcast-small polygon side).
 
     Polygon sides in this workload are small dimension tables, so the
     broadcast is the right plan at any scale; for huge polygon sets swap
@@ -201,8 +202,6 @@ def point_in_polygon_join(
         rings_to_edges,
     )
 
-    if exact not in ("auto", "expr", "udf"):
-        raise ValueError(f"exact must be auto|expr|udf, got {exact!r}")
     px, py = point_xy
     shared = set(points.columns) & set(polygons.columns)
     if shared:
@@ -215,17 +214,12 @@ def point_in_polygon_join(
     multi = isinstance(ring_type, ArrayType) and isinstance(
         ring_type.elementType, ArrayType
     )
-    if exact == "auto":
-        flat_for_count = (
-            F.flatten(F.col(ring_col)) if multi else F.col(ring_col)
-        )
-        max_vertices = polygons.agg(
-            F.max(F.size(flat_for_count))
-        ).first()[0]
-        exact = "expr" if (max_vertices or 0) <= expr_max_vertices else "udf"
-    # bbox over every vertex of every ring (flatten for multi) — holes lie
-    # inside the outer bbox so the prefilter is unaffected by them
+    # every vertex of every ring (flatten for multi)
     flat = F.flatten(F.col(ring_col)) if multi else F.col(ring_col)
+    max_vertices = polygons.agg(F.max(F.size(flat))).first()[0]
+    use_expr = (max_vertices or 0) <= EXPR_MAX_VERTICES
+    # bbox over every vertex — holes lie inside the outer bbox so the
+    # prefilter is unaffected by them
     polys = polygons.withColumn(
         "__xmin", F.array_min(F.transform(flat, lambda p: p["x"]))
     ).withColumn(
@@ -242,7 +236,7 @@ def point_in_polygon_join(
         & (F.col(py) <= F.col("__ymax"))
     )
     drop_cols = ["__xmin", "__xmax", "__ymin", "__ymax"]
-    if exact == "expr":
+    if use_expr:
         # edge array precomputed per polygon row BEFORE the broadcast: the
         # per-candidate test is then one flat arithmetic fold inside
         # whole-stage codegen — no Python worker in the join path
@@ -268,7 +262,7 @@ def point_in_polygon_join(
     ).drop(*drop_cols)
     if how == "inner":
         return candidates
-    if exact == "expr":
+    if use_expr:
         # left join in ONE pass, containment in the join condition.  The
         # old two-pass form (anti-join the matched keys, union the rest)
         # was null-UNSAFE — a matched point carrying a NULL in any

@@ -8457,9 +8457,7 @@ def q191_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``dedup.hamming_radius_pairs_on_words``) at radius 2.  The fixture
     duplicates every image's bytes under a new id (media_id + 100), so
     each image must pair with its copy at Hamming 0 — a lost pair means
-    the decode plumbing, the word encoding, or the banding broke.  A real
-    codec passed as the ``decoder`` callable keeps the identical plan
-    shape."""
+    the decode plumbing, the word encoding, or the banding broke."""
     from re_data_pipeline_spark.operators.multimodal import (
         media_phash_pairs,
         synthetic_media,
@@ -10073,12 +10071,12 @@ _Q214_SQL = _kcenter_chain_sql(_Q214_K)
 
 @query("q214_kcenter_incremental", _Q214_SQL)
 def q214_kcenter_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy k-center at a REALISTIC coreset size (k=65) — forced onto
-    `operators/selection.kcenter_select`'s incremental persisted-min-dist
-    route by mode="auto" (k > 64): the min distance to the chosen set is
+    """Greedy k-center at a REALISTIC coreset size (k=65) — which puts
+    `operators/selection.kcenter_select` on its incremental
+    persisted-min-dist route (k > 64): the min distance to the chosen set is
     a persisted `__md` column updated each round against ONLY the newest
     center (O(dim) literals per round, O(k·n·dim) total work,
-    localCheckpoint every 32 rounds truncating lineage), where q213's
+    localCheckpoint every 8 rounds truncating lineage), where q213's
     literal-inlining greedy route would carry r·dim literals in round r's
     single projection — O(k²·n·dim) work and a codegen wall well before
     k≈10³ (r12 verdict, What's wrong §1).

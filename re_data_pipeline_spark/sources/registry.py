@@ -26,17 +26,16 @@ def read_json_glob(
     spark: SparkSession,
     path_glob: str,
     schema: StructType | None = None,
-    multi_line: bool = False,
 ) -> DataFrame:
     """Multi-blob JSON union scan (S8): ``prefix/*.json`` → one DataFrame.
 
-    ``multi_line`` selects the file shape EXPLICITLY (pretty-printed blobs
-    vs JSON-lines) so it does not silently flip when a schema is added.
+    The files are JSON-lines; ``multiLine`` is set to false EXPLICITLY so
+    the shape does not silently flip when a schema is added.
     With an explicit schema the scan skips inference (one pass, not two);
     for malformed-row capture use ``read_json_quarantine`` (the
     ``_corrupt_record`` column only exists when declared in the schema).
     """
-    reader = spark.read.option("multiLine", str(multi_line).lower())
+    reader = spark.read.option("multiLine", "false")
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path_glob)

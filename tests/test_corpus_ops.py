@@ -307,6 +307,29 @@ def test_bpe_train_learns_classic_merges(spark):
     assert rules[3] == ("n", "ew", 5)
 
 
+def test_bpe_train_checkpoints_once_per_read_word_table(spark, monkeypatch):
+    """One eager localCheckpoint for the initial word table and one per
+    merge whose result a later round reads: the last rule's merged table
+    would be freed unread, so it is never built."""
+    from re_data_pipeline_spark.operators.bpe import bpe_train
+
+    df = spark.createDataFrame(
+        [("low low low lower lowest newer newest",), ("wider wide new new new",)],
+        "text string",
+    )
+    calls = []
+    real = type(df).localCheckpoint  # the session's concrete DataFrame class
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", counting)
+    rules = bpe_train(df, num_merges=3).orderBy("merge_rank").collect()
+    assert [(r.left, r.right) for r in rules] == [("e", "w"), ("l", "o"), ("lo", "w")]
+    assert len(calls) == 3
+
+
 def test_bpe_merge_fold_is_greedy_nonoverlapping(spark):
     """'aaaa' under merge (a,a) must become [aa, aa] — the fold must not
     re-merge the freshly merged tail ('aaa' stays [aa, a])."""

@@ -635,9 +635,9 @@ def test_manifest_fold_unfold_roundtrip(spark):
 
 
 def test_retract_from_lsh_index_no_broadcast_branch(spark):
-    """r17: broadcast_ids=False (the pathologically-large-retraction
-    escape) must return identical rows through a non-broadcast plan —
-    the hint is physical-only, never a semantics change."""
+    """The prune removes every band row of each retracted id and keeps
+    the rest; a duplicated id (4 appears twice, with no distinct before
+    the anti-join) neither duplicates nor drops a surviving row."""
     from re_data_pipeline_spark.operators.maintenance import retract_from_lsh_index
 
     idx = spark.createDataFrame(
@@ -645,16 +645,15 @@ def test_retract_from_lsh_index_no_broadcast_branch(spark):
         "doc_id bigint, band int, band_key string",
     )
     ids = spark.createDataFrame([(1,), (4,), (4,)], "doc_id bigint")
-    want = {
+    got = [
         tuple(r)
         for r in retract_from_lsh_index(idx, ids).select(
             "doc_id", "band", "band_key"
         ).collect()
-    }
-    got_df = retract_from_lsh_index(idx, ids, broadcast_ids=False)
-    got = {tuple(r) for r in got_df.select("doc_id", "band", "band_key").collect()}
-    assert got == want
-    assert all(t[0] not in (1, 4) for t in got) and len(got) == 8
+    ]
+    assert sorted(got) == [
+        (i, b, f"k{i}-{b}") for i in (0, 2, 3, 5) for b in range(2)
+    ]
 
 
 def test_ngram_lm_injected_model_scores_identical(spark, tmp_path):

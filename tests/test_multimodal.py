@@ -1,7 +1,5 @@
-"""Multimodal plumbing: schemas, batch shapes, decoder-knob validation,
-binary-column pruning, and perceptual-hash pairing."""
-
-import pytest
+"""Multimodal plumbing: schemas, batch shapes, binary-column pruning, and
+perceptual-hash pairing."""
 
 from re_data_pipeline_spark.operators.multimodal import (
     decode_features,
@@ -25,16 +23,6 @@ def test_decoded_shapes_by_kind(spark):
     assert shapes["image"] == (8, 8, 3)
     assert shapes["audio"] == (1600,)
     assert shapes["video"] == (4, 8, 8, 3)
-
-
-def test_decoder_knob_validates():
-    from re_data_pipeline_spark.operators.multimodal import _decode_fn
-
-    for bad in ("fast", "real"):
-        with pytest.raises(ValueError, match="decoder must be"):
-            _decode_fn(bad)
-    assert _decode_fn("fake")(b"x", "audio").shape == (1600,)
-    assert callable(_decode_fn(lambda c, k: None))
 
 
 def test_metadata_scan_prunes_binary(spark, tmp_path):

@@ -1,6 +1,7 @@
-"""Public package defs reached only from tests stay on an explicit allowlist.
+"""Public package defs, and the boolean options of public functions, that
+only tests reach stay on explicit allowlists.
 
-No Spark: a pure AST scan.  A top-level public function or class in
+No Spark: pure AST scans.  A top-level public function or class in
 ``re_data_pipeline_spark`` counts as referenced when its name occurs, outside
 its own body, in any ``.py`` file of the repo that is not under
 ``tests/``: as an identifier, an attribute, an imported name, or a word in a
@@ -10,13 +11,21 @@ docstrings cross-reference the API).  Comments do not count.
 A def that fails the scan is kept only when SURVEY.md maps it to a reference
 task or a test compares the engine against it as an oracle.  A new test-only
 def fails here until it gains a caller or joins the allowlist with a reason.
+
+A ``True``/``False`` default of a public top-level function counts as used
+when some call outside ``tests/`` (matched by the callee's name) passes that
+parameter, by keyword or by position, anything but its default; an
+expression counts, since its value is chosen at run time.  An option every
+caller leaves at its default is a constant with a second code path behind
+it: delete it, or allowlist it with the measured reason it stays.
 """
 
 from __future__ import annotations
 
 import ast
 import re
-from collections import Counter
+from collections import Counter, defaultdict
+from functools import cache
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -38,6 +47,11 @@ ALLOWLIST = {
     "streaming/stream_ops.py:run_available_now": "SURVEY I5 (staging/commit)",
 }
 
+FLAG_ALLOWLIST = {
+    "operators/lm.py:ngram_lm_nll(broadcast_model)":
+        "SCALING.md: 0.58× at sf1, CCNet-faithful scoring",
+}
+
 
 def _names(*nodes: ast.AST) -> Counter:
     """Every name ``nodes`` mention: identifiers, attributes, imported
@@ -55,28 +69,32 @@ def _names(*nodes: ast.AST) -> Counter:
     return out
 
 
-def _non_test_sources() -> list[Path]:
-    return [
-        p
+@cache
+def _non_test_trees() -> tuple[tuple[Path, ast.Module], ...]:
+    return tuple(
+        (p, ast.parse(p.read_text(), filename=str(p)))
         for p in ROOT.rglob("*.py")
         if not any(part.startswith(".") for part in p.relative_to(ROOT).parts)
         and p.relative_to(ROOT).parts[0] != "tests"
+    )
+
+
+def _public_defs(*kinds: type) -> list[tuple[str, ast.AST]]:
+    """``(module path, node)`` of each public top-level def in the package."""
+    return [
+        (path.relative_to(PACKAGE).as_posix(), n)
+        for path, tree in _non_test_trees()
+        if PACKAGE in path.parents
+        for n in tree.body
+        if isinstance(n, kinds) and not n.name.startswith("_")
     ]
 
 
 def test_only_public_defs():
     refs: Counter = Counter()
-    defs = []
-    for path in _non_test_sources():
-        tree = ast.parse(path.read_text(), filename=str(path))
+    for _, tree in _non_test_trees():
         refs.update(_names(tree))
-        if PACKAGE in path.parents:
-            defs += [
-                (path.relative_to(PACKAGE).as_posix(), n)
-                for n in tree.body
-                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not n.name.startswith("_")
-            ]
+    defs = _public_defs(ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
     test_only = {
         f"{module}:{node.name}"
         for module, node in defs
@@ -86,4 +104,50 @@ def test_only_public_defs():
     assert test_only == set(ALLOWLIST), (
         f"new test-only defs: {sorted(test_only - set(ALLOWLIST))}; "
         f"allowlisted but now referenced or gone: {sorted(set(ALLOWLIST) - test_only)}"
+    )
+
+
+def _bool_params(fn: ast.FunctionDef) -> list[tuple[int | None, str, bool]]:
+    """``(position or None, name, default)`` of each True/False default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    params = [(first + i, p, d) for i, (p, d) in enumerate(zip(pos[first:], a.defaults))]
+    params += [(None, p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+    return [
+        (i, p.arg, d.value)
+        for i, p, d in params
+        if isinstance(d, ast.Constant) and isinstance(d.value, bool)
+    ]
+
+
+def _flips(call: ast.Call, index: int | None, name: str, default: bool) -> bool:
+    """Whether ``call`` passes ``name`` anything but ``default``."""
+    given = [k.value for k in call.keywords if k.arg == name]
+    if index is not None and index < len(call.args) and not any(
+        isinstance(a, ast.Starred) for a in call.args[: index + 1]
+    ):
+        given.append(call.args[index])
+    return any(not (isinstance(v, ast.Constant) and v.value is default) for v in given)
+
+
+def test_bool_defaults_are_flipped_by_a_caller():
+    calls: defaultdict[str, list[ast.Call]] = defaultdict(list)
+    for _, tree in _non_test_trees():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls[name].append(n)
+    never_flipped = {
+        f"{module}:{fn.name}({name})"
+        for module, fn in _public_defs(ast.FunctionDef, ast.AsyncFunctionDef)
+        for index, name, default in _bool_params(fn)
+        if not any(_flips(c, index, name, default) for c in calls[fn.name])
+    }
+    assert never_flipped == set(FLAG_ALLOWLIST), (
+        f"options no caller outside tests/ flips: {sorted(never_flipped)}; "
+        f"not allowlisted: {sorted(never_flipped - set(FLAG_ALLOWLIST))}; "
+        f"allowlisted but now flipped or gone: "
+        f"{sorted(set(FLAG_ALLOWLIST) - never_flipped)}"
     )

@@ -602,12 +602,13 @@ def test_kcenter_select_property_matches_bruteforce(spark):
     check()
 
 
-def test_kcenter_incremental_matches_greedy(spark):
+def test_kcenter_incremental_matches_greedy(spark, monkeypatch):
     """The persisted-min-dist route must be bit-identical to the
     literal-inlining greedy route: least() over per-center HALF_UP
     integers is associative, so folding one center at a time cannot
     change any argmax.  Includes duplicate vectors (md=0 ties) so the
     id-ascending tie-break is exercised on both routes."""
+    from re_data_pipeline_spark.operators import selection
     from re_data_pipeline_spark.operators.selection import kcenter_select
 
     rows = [
@@ -615,31 +616,34 @@ def test_kcenter_incremental_matches_greedy(spark):
         for i in range(24)
     ] + [(100, [1.0, 6.0, 0.0]), (101, [1.0, 6.0, 0.0])]  # exact duplicates
     d = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    g = [tuple(r) for r in kcenter_select(d, 12, mode="greedy").collect()]
-    i = [tuple(r) for r in kcenter_select(d, 12, mode="incremental").collect()]
+    g = [tuple(r) for r in kcenter_select(d, 12).collect()]
+    monkeypatch.setattr(selection, "_KCENTER_GREEDY_MAX_K", 0)  # incremental
+    i = [tuple(r) for r in kcenter_select(d, 12).collect()]
     assert g == i
 
 
-def test_kcenter_null_rows_and_id_type(spark):
+def test_kcenter_null_rows_and_id_type(spark, monkeypatch):
     """r12 advice: NULL ids must not seed the selection (ascending
     orderBy puts NULLs first) and NULL vectors have no distance — both
     are excluded up front; and the returned id column keeps the input's
     type instead of hardcoded bigint."""
+    from re_data_pipeline_spark.operators import selection
     from re_data_pipeline_spark.operators.selection import kcenter_select
 
     d = spark.createDataFrame(
         [(None, [0.0, 0.0]), ("b", None), ("c", [0.0, 0.0]), ("a", [9.0, 9.0])],
         "vec_id string, embedding array<float>",
     )
-    for mode in ("greedy", "incremental"):
-        got = kcenter_select(d, 5, mode=mode)
+    for greedy_max_k in (64, 0):  # greedy route, then incremental
+        monkeypatch.setattr(selection, "_KCENTER_GREEDY_MAX_K", greedy_max_k)
+        got = kcenter_select(d, 5)
         assert got.schema["vec_id"].dataType.simpleString() == "string"
         assert [r["vec_id"] for r in got.collect()] == ["a", "c"]
 
 
 def test_kcenter_incremental_plan_growth_is_bounded(spark):
     """The O(dim)-literals-per-round contract (r12 verdict, What's wrong
-    §1): with checkpoint_every=8, the analyzed plan grows only within an
+    §1): checkpointing every 8 rounds, the analyzed plan grows only within an
     8-round window and resets at each localCheckpoint — its size is
     bounded by the WINDOW, independent of k.  The greedy route's plan at
     round r would instead carry r·dim literals forever."""
@@ -654,9 +658,7 @@ def test_kcenter_incremental_plan_growth_is_bounded(spark):
     def probe(r, frame):
         lens[r] = len(frame._jdf.queryExecution().analyzed().toString())
 
-    got = kcenter_select(
-        d, 70, mode="incremental", checkpoint_every=8, _plan_probe=probe
-    ).collect()
+    got = kcenter_select(d, 70, _plan_probe=probe).collect()
     assert len(got) == 30  # k > n: every row selected, then clean break
     # crossed at least three checkpoint boundaries (rounds 8, 16, 24)
     assert max(lens) >= 25
@@ -671,7 +673,7 @@ def test_kcenter_incremental_plan_growth_is_bounded(spark):
 
 
 def test_kcenter_auto_switches_to_incremental(spark):
-    """mode='auto' must take the incremental route above k=64 — probed
+    """kcenter_select must take the incremental route above k=64 — probed
     via _plan_probe, which only the incremental route calls."""
     from re_data_pipeline_spark.operators.selection import kcenter_select
 
@@ -724,11 +726,12 @@ def test_cluster_safe_split_colocates_near_dups(spark):
     # at this size; the invariant above is the contract, not the balance
 
 
-def test_kcenter_incremental_releases_checkpoint_storage(spark):
+def test_kcenter_incremental_releases_checkpoint_storage(spark, monkeypatch):
     """localCheckpoint pins RDD-level storage blocks that neither
     DataFrame.unpersist() nor catalog.clearCache() can see — the operator
     must release them itself (via the LogicalRDD rdd handle) or every
     checkpointed round's full frame stays pinned until driver GC."""
+    from re_data_pipeline_spark.operators import selection
     from re_data_pipeline_spark.operators.selection import kcenter_select
 
     sc = spark.sparkContext
@@ -741,21 +744,11 @@ def test_kcenter_incremental_releases_checkpoint_storage(spark):
         (i, [float((i * 5) % 17 - 8), float((i * 11) % 7 - 3)]) for i in range(40)
     ]
     d = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    # 3 checkpoint boundaries (rounds 4, 8, ..., 36) — incl. the k>n
+    # 9 checkpoint boundaries (rounds 4, 8, ..., 36) — incl. the k>n
     # early-exhaustion path, where the last checkpoint is also `prev`
-    got = kcenter_select(d, 70, mode="incremental", checkpoint_every=4).collect()
+    monkeypatch.setattr(selection, "_KCENTER_CHECKPOINT_EVERY", 4)
+    got = kcenter_select(d, 70).collect()
     assert len(got) == 40
     leaked = persistent_ids(spark) - before
     assert not leaked, f"checkpointed frames leaked RDD storage: {leaked}"
 
-
-def test_kcenter_checkpoint_every_validated(spark):
-    from re_data_pipeline_spark.operators.selection import kcenter_select
-
-    d = spark.createDataFrame(
-        [(i, [float(i)]) for i in range(3)], "vec_id bigint, embedding array<float>"
-    )
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        kcenter_select(d, 3, mode="incremental", checkpoint_every=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        kcenter_select(d, 3, mode="incremental", checkpoint_every=-1)

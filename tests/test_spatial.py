@@ -129,9 +129,9 @@ def test_point_in_multipolygon_donut_and_parts(spark):
     assert got == {1: "z", 2: None, 3: "z", 4: None}
 
 
-def test_pip_expr_matches_udf_and_routes(spark):
-    """The expression ray cast (default for small geometries) must agree
-    with the pandas-UDF kernel edge-for-edge, and `exact="auto"` must route
+def test_pip_expr_matches_udf_and_routes(spark, monkeypatch):
+    """The expression ray cast (used for small geometries) must agree
+    with the pandas-UDF kernel edge-for-edge, and the join must route
     expr below the vertex threshold / udf above it (round-4 verdict #6:
     removing the last Python worker from a hot join path)."""
     import random
@@ -142,6 +142,7 @@ def test_pip_expr_matches_udf_and_routes(spark):
         point_in_multipolygon_udf,
         point_in_rings_expr,
     )
+    from re_data_pipeline_spark.operators import spatial
     from re_data_pipeline_spark.operators.spatial import point_in_polygon_join
 
     random.seed(11)
@@ -178,20 +179,20 @@ def test_pip_expr_matches_udf_and_routes(spark):
     auto = point_in_polygon_join(p2, zones, ("x", "y"), "rings", how="inner")
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
-    # forcing a tiny threshold flips auto to the pandas-UDF kernel
-    forced = point_in_polygon_join(
-        p2, zones, ("x", "y"), "rings", how="inner", expr_max_vertices=2
-    )
+    # a tiny threshold flips the route to the pandas-UDF kernel
+    monkeypatch.setattr(spatial, "EXPR_MAX_VERTICES", 2)
+    forced = point_in_polygon_join(p2, zones, ("x", "y"), "rings", how="inner")
     plan_udf = forced._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" in plan_udf
     assert {r.pid for r in auto.collect()} == {r.pid for r in forced.collect()} == {1}
 
 
-def test_pip_ragged_rings_both_paths(spark):
+def test_pip_ragged_rings_both_paths(spark, monkeypatch):
     """An outer ring with a SMALLER hole (differing vertex counts) is the
     normal multi-ring shape, and it used to crash the pandas-UDF path:
     Arrow→pandas rejects ragged nested lists.  Both the expression path and
     the flat-encoded UDF fallback must handle it."""
+    from re_data_pipeline_spark.operators import spatial
     from re_data_pipeline_spark.operators.spatial import point_in_polygon_join
 
     outer = [
@@ -208,14 +209,15 @@ def test_pip_ragged_rings_both_paths(spark):
         "pid long, x double, y double",
     )
     want = {1: "z", 2: None, 3: "z", 4: None}  # 2 is in the hole
-    for forced in ({}, {"expr_max_vertices": 2}):  # expr path, then udf path
+    for max_vertices in (4096, 2):  # expr path, then udf path
+        monkeypatch.setattr(spatial, "EXPR_MAX_VERTICES", max_vertices)
         got = {
             r.pid: r.zone
             for r in point_in_polygon_join(
-                pts, zones, ("x", "y"), "rings", how="left", **forced
+                pts, zones, ("x", "y"), "rings", how="left"
             ).collect()
         }
-        assert got == want, (forced, got)
+        assert got == want, (max_vertices, got)
 
 
 def test_pip_expr_degenerate_rings(spark):
@@ -305,11 +307,12 @@ def test_knn_join_tiebreak_deterministic(spark):
     assert got == [21, 22]
 
 
-def test_pip_left_null_passthrough_no_duplicates(spark):
+def test_pip_left_null_passthrough_no_duplicates(spark, monkeypatch):
     """A MATCHED point carrying a NULL pass-through column must appear
     exactly once in left mode: the old anti-join on points.columns was
     null-unsafe, so such a row was emitted twice (matched AND unmatched
     with NULL zone) — on BOTH kernels (r13 fix)."""
+    from re_data_pipeline_spark.operators import spatial
     from re_data_pipeline_spark.operators.spatial import point_in_polygon_join
 
     def ring(*xy):
@@ -324,10 +327,11 @@ def test_pip_left_null_passthrough_no_duplicates(spark):
          (2, 50.0, 50.0)],   # unmatched
         "pid long, x double, y double",
     )
-    for forced in ({"exact": "expr"}, {"exact": "udf"}):
+    for max_vertices in (4096, 2):  # expr kernel, then udf kernel
+        monkeypatch.setattr(spatial, "EXPR_MAX_VERTICES", max_vertices)
         rows = point_in_polygon_join(
-            pts, zones, ("x", "y"), "ring", how="left", **forced
+            pts, zones, ("x", "y"), "ring", how="left"
         ).collect()
-        assert len(rows) == 2, (forced, rows)
+        assert len(rows) == 2, (max_vertices, rows)
         got = {(r.pid, r.zone) for r in rows}
-        assert got == {(None, "z"), (2, None)}, forced
+        assert got == {(None, "z"), (2, None)}, max_vertices

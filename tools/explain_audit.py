@@ -613,12 +613,12 @@ CHECKS = [
             (r"Scan ExistingRDD", "localCheckpoint truncated the lineage (round 34 scans the round-32 checkpoint)"),
         ],
         "The large-k route's contract: round r's frame is the PREVIOUS "
-        "checkpoint plus ≤checkpoint_every filter+least() layers — the "
+        "checkpoint plus ≤8 filter+least() layers — the "
         "plan here is round 34's, two rounds after the r=32 "
         "localCheckpoint, and contains no exchange, no join, and scans "
         "the checkpointed RDD instead of replaying 34 rounds of lineage.  "
         "Per-round cluster traffic is one 1-row TakeOrdered argmax; plan "
-        "size is O(checkpoint_every·dim) regardless of k (the greedy "
+        "size is O(8·dim) regardless of k (the greedy "
         "route's O(k·dim)-literals-per-round growth is the r12 verdict's "
         "What's-wrong §1, closed by this route).",
     ),
@@ -860,7 +860,7 @@ def main() -> int:
                 captured["f"] = frame
 
         e = load_table(spark, sf_dir, "embeddings")
-        kcenter_select(e, 35, mode="incremental", _plan_probe=probe)
+        kcenter_select(e, 65, _plan_probe=probe)  # q214's k: incremental route
         if "f" not in captured:
             # fewer than 35 usable rows: the loop exhausted before round
             # 34 — fail THIS check cleanly instead of KeyError-aborting
