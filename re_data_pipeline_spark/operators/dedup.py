@@ -192,6 +192,20 @@ def lsh_bands(
     )
 
 
+def _band_pairs(buckets: DataFrame, id_col: str) -> DataFrame:
+    """``(id_a, id_b)`` with id_a < id_b, one row per (band, band_key)
+    bucket the two documents share — the LSH band self-join over
+    ``lsh_bands`` rows.  A pair sharing several bands repeats: callers
+    dedupe."""
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    ).select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+
+
 @pinning
 def lsh_candidate_pairs(
     df: DataFrame,
@@ -218,26 +232,8 @@ def lsh_candidate_pairs(
     rows_per_band = num_hashes // bands
     sigs = minhash_signature(df, text_col, num_hashes, shingle_words)
     buckets = lsh_bands(sigs, id_col, "minhash", bands, rows_per_band)
-
-    def pair_join(bk):
-        a = bk.alias("a")
-        b = bk.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-
     if not materialize:
-        return pair_join(buckets)
+        return _band_pairs(buckets, id_col).distinct()
     # The self-join references `buckets` twice; without a persist Spark
     # recomputes the full tokenize→shingle→digest pipeline for each side
     # (ReuseExchange doesn't fire: AQE broadcasts one side, so the two
@@ -247,7 +243,50 @@ def lsh_candidate_pairs(
     # anyway — which materializes it eagerly, so the bucket cache is dead
     # when the operator returns.
     buckets = hold(buckets.persist())
-    return pin(pair_join(buckets).localCheckpoint())
+    return pin(_band_pairs(buckets, id_col).distinct().localCheckpoint())
+
+
+def _shingle_set(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_words: int,
+    out_id: str | None = None,
+) -> DataFrame:
+    """Distinct ``(id, s)`` rows: each document's word ``shingle_words``-
+    shingles, the id column renamed to ``out_id`` when given."""
+    doc = F.col(id_col) if out_id is None else F.col(id_col).alias(out_id)
+    return (
+        df.select(doc, tokens(F.col(text_col)).alias("__toks"))
+        .select(
+            out_id or id_col,
+            F.explode(word_shingles_of(F.col("__toks"), shingle_words)).alias("s"),
+        )
+        .distinct()
+    )
+
+
+def _shingle_overlap(sh: DataFrame, id_col: str) -> DataFrame:
+    """``(id_a, id_b, inter, sz_a, sz_b)`` for every pair id_a < id_b that
+    shares a shingle of the ``_shingle_set`` table ``sh``: the shared-
+    shingle count and both set sizes, from one self-equi-join on the
+    shingle (never a cross join)."""
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    inter = (
+        sh.alias("a")
+        .join(
+            sh.alias("b"),
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+        )
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return inter.join(
+        sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")), "id_a"
+    ).join(sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -270,21 +309,9 @@ def ngram_jaccard_pairs(
     # a corpus-shingle-sized cache store and blocks the exchange sharing
     # — a tried pin DOUBLED q34's cold wall (1.11 → 2.35 s at sf0.1), the
     # same measurement that rejected the prefix_filter_pairs persist.
-    sh = (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-        .select(F.col(id_col), F.explode(word_shingles_of(F.col("__toks"), shingle_words)).alias("s"))
-        .distinct()
-    )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
+    sh = _shingle_set(df, id_col, text_col, shingle_words)
     return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+        _shingle_overlap(sh, id_col)
         .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
         .where(F.col("jaccard") >= F.lit(threshold))
         .select("id_a", "id_b", "jaccard")
@@ -317,12 +344,7 @@ def jaccard_on_pairs(
     # across every consumer (q71 via near_dedup, q153, q100's sibling —
     # cache-store cost beats the pipelined re-evaluation; the same
     # measurement that rejected the prefix_filter_pairs persist).
-    sh = (
-        df.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-        .select(F.col(id_col), F.explode(word_shingles_of(F.col("__toks"), shingle_words)).alias("s"))
-        .distinct()
-    )
+    sh = _shingle_set(df.join(cand_ids, id_col, "left_semi"), id_col, text_col, shingle_words)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("s").alias("s_a"))
     sb = sh.select(F.col(id_col).alias("id_b2"), F.col("s").alias("s_b"))
@@ -345,6 +367,52 @@ def jaccard_on_pairs(
     )
 
 
+def _confirmed_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    shingle_words: int,
+    bands: int,
+    threshold: float,
+) -> tuple[DataFrame, DataFrame]:
+    """LSH candidates → exact-Jaccard confirmation: ``(cands, confirmed)``,
+    the pinned candidate checkpoint and its ``(id_a, id_b, jaccard)`` rows
+    with Jaccard ≥ ``threshold``.
+
+    The pair list arrives already localCheckpoint'ed (materialized once,
+    bucket cache released inside the operator) and pinned: verification
+    references it four times (scoping union ×2, intersection join, final
+    left join) and each reference would otherwise replay the bucket
+    self-join+distinct.  Measured on sf0.1 documents: 7.6 s → 1.1 s for
+    the whole ``near_dedup_pipeline``."""
+    cands = lsh_candidate_pairs(df, id_col, text_col, num_hashes, shingle_words, bands)
+    verified = jaccard_on_pairs(cands, df, id_col, text_col, shingle_words)
+    return cands, verified.where(F.col("jaccard") >= F.lit(threshold))
+
+
+def _confirmed_components(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    shingle_words: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """``connected_components`` over the ``_confirmed_pairs`` graph →
+    ``(node, component)``.  CC materializes the confirmed pairs (its edge
+    checkpoint + per-round counts), so the pair-list checkpoint is dead
+    once it returns and is released here; CC's FINAL label checkpoint
+    backs the result, and CC pins it."""
+    cands, confirmed = _confirmed_pairs(
+        df, id_col, text_col, num_hashes, shingle_words, bands, threshold
+    )
+    comps = connected_components(confirmed.select("id_a", "id_b"))
+    release(cands)
+    return comps
+
+
 @pinning
 def near_dedup_pipeline(
     df: DataFrame,
@@ -364,19 +432,11 @@ def near_dedup_pipeline(
     candidate-scoped Jaccard joins → small anti-join.  No stage is
     quadratic in corpus size.
     """
-    # the pair list arrives already localCheckpoint'ed (materialized once,
-    # bucket cache released inside the operator) and pinned — it backs the
-    # returned lineage: verification references it four times (scoping
-    # union ×2, intersection join, final left join) and each reference
-    # would otherwise replay the bucket self-join+distinct.  Measured on
-    # sf0.1 documents: 7.6 s → 1.1 s for the whole pipeline.
-    cands = lsh_candidate_pairs(df, id_col, text_col, num_hashes, shingle_words, bands)
-    verified = jaccard_on_pairs(cands, df, id_col, text_col, shingle_words)
-    losers = (
-        verified.where(F.col("jaccard") >= F.lit(threshold))
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
+    # the pinned pair-list checkpoint backs the returned lineage
+    _, confirmed = _confirmed_pairs(
+        df, id_col, text_col, num_hashes, shingle_words, bands, threshold
     )
+    losers = confirmed.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
 
 
@@ -581,17 +641,9 @@ def cluster_dedup_pipeline(
     shared a bucket and (B,C)'s loser was already dropped); components drop
     every non-root of the cluster exactly once.
     """
-    # pair list arrives materialized (see near_dedup_pipeline) so
-    # verification's four references don't each replay the bucket self-join
-    cands = lsh_candidate_pairs(df, id_col, text_col, num_hashes, shingle_words, bands)
-    verified = jaccard_on_pairs(cands, df, id_col, text_col, shingle_words)
-    confirmed = verified.where(F.col("jaccard") >= F.lit(threshold))
-    # connected_components MATERIALIZES the confirmed pairs (its edge
-    # checkpoint + per-round counts), so the pair-list checkpoint is not in
-    # the returned lineage; the FINAL label checkpoint is (comps
-    # recomputes through it), and connected_components pins it.
-    comps = connected_components(confirmed.select("id_a", "id_b"))
-    release(cands)
+    comps = _confirmed_components(
+        df, id_col, text_col, num_hashes, shingle_words, bands, threshold
+    )
     losers = comps.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -641,15 +693,9 @@ def cluster_dedup_keep_best(
     if keep_k < 1:
         raise ValueError(f"keep_k must be ≥ 1; got {keep_k}")
     q = F.col(quality_col) if isinstance(quality_col, str) else quality_col
-    cands = lsh_candidate_pairs(df, id_col, text_col, num_hashes, shingle_words, bands)
-    confirmed = jaccard_on_pairs(cands, df, id_col, text_col, shingle_words).where(
-        F.col("jaccard") >= F.lit(threshold)
+    comps = _confirmed_components(
+        df, id_col, text_col, num_hashes, shingle_words, bands, threshold
     )
-    # CC materializes the confirmed pairs, so the pair-list checkpoint is
-    # dead once it returns; CC's final label checkpoint backs comps and CC
-    # pins it
-    comps = connected_components(confirmed.select("id_a", "id_b"))
-    release(cands)
     clustered = df.join(
         comps.withColumnRenamed("node", id_col), id_col
     ).select(F.col(id_col), F.col("component"), q.alias("__q"))
@@ -886,17 +932,7 @@ def incremental_lsh_dedup(
         .select(id_col)
         .distinct()
     )
-    a, b = nb.alias("a"), nb.alias("b")
-    hit_batch = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"b.{id_col}").alias(id_col))
-        .distinct()
-    )
+    hit_batch = _band_pairs(nb, id_col).select(F.col("id_b").alias(id_col)).distinct()
     dropped = hit_index.unionByName(hit_batch).distinct()
     kept = new_docs.join(dropped, id_col, "left_anti")
     return {
@@ -1516,20 +1552,9 @@ def minhash_estimate_pairs(
         ).select(id_col, "minhash").persist()
     )
     rows_per_band = num_hashes // bands
-    nb = lsh_bands(sigs, id_col, "minhash", bands, rows_per_band)
-    a, b = nb.alias("a"), nb.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    pairs = _band_pairs(
+        lsh_bands(sigs, id_col, "minhash", bands, rows_per_band), id_col
+    ).distinct()
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("__sa"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("__sb"))
     matching = F.size(
@@ -1587,33 +1612,12 @@ def lsh_recall_report(
     # SLOWER (3.16 → 3.81 s cold at sf0.1) — the ngram_jaccard_pairs
     # measurement; the re-evaluations pipeline where the pin pays a
     # corpus-shingle-sized cache store.
-    sh = (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-        .select(
-            F.col(id_col),
-            F.explode(word_shingles_of(F.col("__toks"), shingle_words)).alias("s"),
-        )
-        .distinct()
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    sh = _shingle_set(df, id_col, text_col, shingle_words)
     truth = (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sza")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("szb")), "id_b")
+        _shingle_overlap(sh, id_col)
         .where(
             F.col("inter") * F.lit(threshold_den)
-            >= (F.col("sza") + F.col("szb") - F.col("inter")) * F.lit(threshold_num)
+            >= (F.col("sz_a") + F.col("sz_b") - F.col("inter")) * F.lit(threshold_num)
         )
         .select("id_a", "id_b")
     )
@@ -1739,26 +1743,19 @@ def cross_corpus_contamination(
     # the returned intersection base reads it, so it is pinned
     cands = pin(cands.localCheckpoint())
 
-    def shingle_set(df: DataFrame, out_id: str) -> DataFrame:
-        return (
-            df.select(F.col(id_col).alias(out_id), tokens(F.col(text_col)).alias("__t"))
-            .select(out_id, F.explode(word_shingles_of(F.col("__t"), shingle_words)).alias("s"))
-            .distinct()
-        )
-
     # NOT pinned (measured r14): the candidate-bounded shingle sets each
     # feed two consumers, but pinning them read 14% slower (q100
     # 0.77 → 0.88 s cold) — the jaccard-family measurement; re-evaluation
     # pipelines where the pin pays a cache store.
-    sa = shingle_set(
+    sa = _shingle_set(
         train.join(cands.select("train_id").distinct(),
                    train[id_col] == F.col("train_id"), "left_semi"),
-        "train_id",
+        id_col, text_col, shingle_words, "train_id",
     )
-    sb = shingle_set(
+    sb = _shingle_set(
         bench.join(cands.select("bench_id").distinct(),
                    bench[id_col] == F.col("bench_id"), "left_semi"),
-        "bench_id",
+        id_col, text_col, shingle_words, "bench_id",
     )
     za = sa.groupBy("train_id").agg(F.count(F.lit(1)).alias("__na"))
     zb = sb.groupBy("bench_id").agg(F.count(F.lit(1)).alias("__nb"))
@@ -1949,6 +1946,7 @@ def _es_bind(expr, fn):
 
 
 _ES_EMPTY_ANCH = "cast(array() as array<struct<p:int,v:bigint>>)"
+_ES_EMPTY_SPANS = "cast(array() as array<struct<s:int,e:int>>)"
 
 def _es_anchor_table(
     t: DataFrame, id_col: str, min_len: int, k: int, w: int
@@ -2081,11 +2079,34 @@ def _es_extend(c: DataFrame, k: int, min_len: int) -> DataFrame:
     )
 
 
+def _es_union(spans: Column) -> Column:
+    """Interval union of a SORTED ``array<struct<s:int,e:int>>`` of
+    1-based inclusive token spans: one fold in which overlapping or
+    adjacent intervals coalesce.  The result is sorted and disjoint."""
+    return F.aggregate(
+        spans,
+        F.expr(_ES_EMPTY_SPANS),
+        lambda acc, x: F.when(
+            (F.size(acc) == 0) | (x["s"] > F.element_at(acc, -1)["e"] + 1),
+            F.concat(acc, F.array(x)),
+        ).otherwise(
+            F.concat(
+                F.slice(acc, 1, F.size(acc) - 1),
+                F.array(
+                    F.struct(
+                        F.element_at(acc, -1)["s"].alias("s"),
+                        F.greatest(F.element_at(acc, -1)["e"], x["e"]).alias("e"),
+                    )
+                ),
+            )
+        ),
+    )
+
+
 def _es_merge(sp: DataFrame, id_col: str) -> DataFrame:
     """Per-doc interval union of ``(id_col, __s, __e)`` span rows:
-    sort + fold-merge (overlapping or adjacent intervals coalesce) —
-    frames bounded by spans per doc, never corpus-scale.  Returns
-    ``(id_col, __msp array<struct<s:int,e:int>>)``."""
+    sort + ``_es_union`` — frames bounded by spans per doc, never
+    corpus-scale.  Returns ``(id_col, __msp array<struct<s:int,e:int>>)``."""
     return (
         sp.groupBy(id_col)
         .agg(
@@ -2093,68 +2114,44 @@ def _es_merge(sp: DataFrame, id_col: str) -> DataFrame:
                 F.collect_list(F.struct(F.col("__s").alias("s"), F.col("__e").alias("e")))
             ).alias("__sps")
         )
-        .select(
-            F.col(id_col),
-            F.aggregate(
-                F.col("__sps"),
-                F.expr("cast(array() as array<struct<s:int,e:int>>)"),
-                lambda acc, x: F.when(
-                    (F.size(acc) == 0)
-                    | (x["s"] > F.element_at(acc, -1)["e"] + 1),
-                    F.concat(acc, F.array(x)),
-                ).otherwise(
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1),
-                        F.array(
-                            F.struct(
-                                F.element_at(acc, -1)["s"].alias("s"),
-                                F.greatest(
-                                    F.element_at(acc, -1)["e"], x["e"]
-                                ).alias("e"),
-                            )
-                        ),
-                    )
-                ),
-            ).alias("__msp"),
-        )
+        .select(F.col(id_col), _es_union(F.col("__sps")).alias("__msp"))
     )
 
 
-def _es_rewrite(
-    t: DataFrame, merged: DataFrame, id_col: str, out_col: str
-) -> DataFrame:
-    """Indexed-filter rewrite: drop every token covered by a merged span,
-    reassemble in order (single-space-joined).  ``t`` is the token table;
-    every input row comes back — fully-covered docs as empty strings."""
-    return (
-        t.join(merged, id_col, "left")
-        .withColumn(
-            "__sp",
-            F.coalesce(
-                F.col("__msp"), F.expr("cast(array() as array<struct<s:int,e:int>>)")
+def _es_drop_spans(toks: Column, spans: Column) -> tuple[Column, Column]:
+    """``(kept text, removed count)`` of token array ``toks`` after
+    dropping every token inside a 1-based inclusive interval of the
+    disjoint ``spans``: an indexed filter, survivors single-space-joined
+    in order."""
+    kept = F.array_join(
+        F.filter(
+            toks,
+            lambda x, i: ~F.exists(
+                spans, lambda p: (p["s"] <= i + 1) & (i + 1 <= p["e"])
             ),
-        )
-        .select(
-            F.col(id_col),
-            F.array_join(
-                F.filter(
-                    F.col("__toks"),
-                    lambda x, i: ~F.exists(
-                        F.col("__sp"),
-                        lambda p: (p["s"] <= i + 1) & (i + 1 <= p["e"]),
-                    ),
-                ),
-                " ",
-            ).alias(out_col),
-            F.col("__n").cast("bigint").alias("n_tokens"),
-            F.aggregate(
-                F.col("__sp"),
-                F.lit(0),
-                lambda acc, p: acc + (p["e"] - p["s"] + F.lit(1)),
-            )
-            .cast("bigint")
-            .alias("n_removed"),
-        )
+        ),
+        " ",
+    )
+    removed = F.aggregate(
+        spans, F.lit(0), lambda acc, p: acc + (p["e"] - p["s"] + F.lit(1))
+    ).cast("bigint")
+    return kept, removed
+
+
+def _es_rewrite(
+    df: DataFrame, id_col: str, text_col: str, merged: DataFrame, out_col: str
+) -> DataFrame:
+    """Rewrite every row of ``df`` without the tokens its ``merged`` spans
+    cover → ``(id_col, out_col, n_tokens, n_removed)``; fully-covered
+    docs come back as empty strings."""
+    t = _es_token_table(df, id_col, text_col).join(merged, id_col, "left")
+    t = t.withColumn("__sp", F.coalesce(F.col("__msp"), F.expr(_ES_EMPTY_SPANS)))
+    kept, removed = _es_drop_spans(F.col("__toks"), F.col("__sp"))
+    return t.select(
+        F.col(id_col),
+        kept.alias(out_col),
+        F.col("__n").cast("bigint").alias("n_tokens"),
+        removed.alias("n_removed"),
     )
 
 
@@ -2165,12 +2162,17 @@ def _exact_substring_merged_spans(
     min_len: int,
     k: int | None,
     guard,
+    bench: DataFrame | None = None,
+    bench_id_col: str = "bench_id",
+    bench_text_col: str = "text",
 ) -> DataFrame:
-    """Within-corpus core of the ExactSubstr tier: one row per document
-    that LOSES tokens — ``(id_col, __msp array<struct<s:int,e:int>>)``,
+    """Core of the ExactSubstr tier: one row per ``df`` document that
+    LOSES tokens — ``(id_col, __msp array<struct<s:int,e:int>>)``,
     1-based inclusive token-position intervals, sorted, disjoint,
     adjacent-coalesced.  The guarded path pins its persisted anchor
-    table.
+    tables.  Within-corpus by default; with ``bench`` the candidates are
+    ``df`` × ``bench`` anchor pairs only and just the ``df`` side's spans
+    come back (`exact_substring_decontaminate`).
 
     Semantics (Lee et al. 2022, "Deduplicating Training Data Makes
     Language Models Better", arXiv:2107.06499 — the ExactSubstr tier): a
@@ -2199,95 +2201,113 @@ def _exact_substring_merged_spans(
     inherent to pair-listing exact semantics (witness-capping would
     under-extend spans and break exactness).  ``guard`` (a
     :func:`_degradation_guard` check, None when off) guards the join; the
-    estimate is Σ c·(c−1)/2 over anchor-hash buckets.  Route
+    estimate is Σ c·(c−1)/2 over anchor-hash buckets (Σ cA·cB with
+    ``bench``).  Route
     heavily-boilerplated corpora through `line_dedup_rewrite` /
     `boilerplate_ngrams` first (they remove exactly that mass linearly),
     then run this tier on the residue.
     """
     k, w = _es_validate(min_len, k)
+    within = bench is None
     t = _es_token_table(df, id_col, text_col)
-    anch = _es_anchor_table(t, id_col, min_len, k, w)
+    anch_a = _es_anchor_table(t, id_col, min_len, k, w)
+    tb, b_id, anch_b = t, id_col, None
+    if not within:
+        tb, b_id = _es_token_table(bench, bench_id_col, bench_text_col), bench_id_col
+        anch_b = _es_anchor_table(tb, b_id, min_len, k, w)
     if guard is not None:
         # persist: the guard's bucket aggregate and BOTH sides of the
-        # candidate self-join consume the anchor table, and its lineage
+        # candidate join consume the anchor tables, and their lineage
         # (tokenize + O(n·k) gram hashing + O(n·w) winnowing) is the
         # expensive map stage
-        anch = pin(anch.persist())
-        est = guard(
-            _self_join_volume(anch, "__h"),
-            df.count,
-            _ES_ADVICE + "  Or use impl='grams', which lists no pairs and "
-            "stays linear in the corpus.",
-        )
-        # Candidate-volume-gated probe widening (layout.widen_for_pairs):
-        # the candidate join's probe side — where the per-candidate
-        # extension folds run — inherits the anchor CACHE's partitioning,
-        # and a 1-split local scan serialized the whole verify/extend
-        # stage onto one core (q197: a single 5.0 s task).  The guard's
-        # est_pairs is already on the driver.  CAVEAT (ADVICE r18): the widened
-        # partitioning only survives into the verify stage while one side
-        # of the self-join broadcasts; if the anchor table outgrows
-        # autoBroadcastJoinThreshold the fallback sort-merge join
-        # re-shuffles both sides and the extra exchange is wasted (a
-        # measured local-mode win that is size-bounded by construction —
-        # the anchor cache of a corpus whose est_pairs clears the gate at
-        # 32 cores is ~MBs here; re-measure before raising the gate).
-        anch = widen_for_pairs(anch, est)
+        anch_a = pin(anch_a.persist())
+        if within:
+            stats = _self_join_volume(anch_a, "__h")
+            advice = _ES_ADVICE + (
+                "  Or use impl='grams', which lists no pairs and stays "
+                "linear in the corpus."
+            )
+        else:
+            anch_b = pin(anch_b.persist())
+            ca = anch_a.groupBy("__h").agg(F.count(F.lit(1)).alias("ca"))
+            cb = anch_b.groupBy("__h").agg(F.count(F.lit(1)).alias("cb"))
+            stats = ca.join(cb, "__h").agg(
+                F.sum(F.col("ca") * F.col("cb")).alias("est_pairs"),
+                F.max(F.col("ca") * F.col("cb")).alias("max_bucket"),
+            )
+            advice = _ES_ADVICE
+        est = guard(stats, df.count, advice)
+        # Candidate-volume-gated probe widening (layout.widen_for_pairs)
+        # of the ``df``-side anchors; a bench side stays as-is
+        # (broadcast-sized): the candidate join's probe side — where the
+        # per-candidate extension folds run — inherits the anchor CACHE's
+        # partitioning, and a 1-split local scan serialized the whole
+        # verify/extend stage onto one core (q197: a single 5.0 s task).
+        # The guard's est_pairs is already on the driver.  CAVEAT (ADVICE
+        # r18): the widened partitioning only survives into the verify
+        # stage while one side of the join broadcasts; if the anchor
+        # table outgrows autoBroadcastJoinThreshold the fallback
+        # sort-merge join re-shuffles both sides and the extra exchange is
+        # wasted (a measured local-mode win that is size-bounded by
+        # construction — the anchor cache of a corpus whose est_pairs
+        # clears the gate at 32 cores is ~MBs here; re-measure before
+        # raising the gate).
+        anch_a = widen_for_pairs(anch_a, est)
+    if within:
+        anch_b = anch_a
 
-    a, b = anch.alias("a"), anch.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.__h") == F.col("b.__h"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
+    a, b = anch_a.alias("a"), anch_b.alias("b")
+    on = F.col("a.__h") == F.col("b.__h")
+    if within:
+        on = on & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    cand = a.join(b, on).select(
         F.col(f"a.{id_col}").alias("__ida"),
         F.col("a.__p").alias("__pa"),
-        F.col(f"b.{id_col}").alias("__idb"),
+        F.col(f"b.{b_id}").alias("__idb"),
         F.col("b.__p").alias("__pb"),
     )
-
     ta = t.select(
         F.col(id_col).alias("__ida"),
         F.col("__toks").alias("__ta"),
         F.col("__n").alias("__na"),
     )
-    tb = t.select(
-        F.col(id_col).alias("__idb"),
+    tb = tb.select(
+        F.col(b_id).alias("__idb"),
         F.col("__toks").alias("__tb"),
         F.col("__n").alias("__nb"),
     )
     ext = _es_extend(cand.join(ta, "__ida").join(tb, "__idb"), k, min_len)
 
-    # within-corpus: EVERY occurrence goes — emit the span on both sides
-    sp = (
-        ext.select(
+    def span(side: str) -> tuple[Column, Column, Column]:
+        # (doc id, start, end) of the extended span on one pair side
+        p = F.col(f"__p{side}")
+        return (
+            F.col(f"__id{side}"),
+            (p - F.col("__l")).cast("int"),
+            (p + F.lit(k - 1) + F.col("__r")).cast("int"),
+        )
+
+    if within:
+        # within-corpus: EVERY occurrence goes — emit the span on both sides
+        sp = ext.select(
             F.explode(
                 F.array(
-                    F.struct(
-                        F.col("__ida").alias("id"),
-                        (F.col("__pa") - F.col("__l")).cast("int").alias("s"),
-                        (F.col("__pa") + F.lit(k - 1) + F.col("__r"))
-                        .cast("int")
-                        .alias("e"),
-                    ),
-                    F.struct(
-                        F.col("__idb").alias("id"),
-                        (F.col("__pb") - F.col("__l")).cast("int").alias("s"),
-                        (F.col("__pb") + F.lit(k - 1) + F.col("__r"))
-                        .cast("int")
-                        .alias("e"),
-                    ),
+                    *[
+                        F.struct(i.alias("id"), st.alias("s"), e.alias("e"))
+                        for i, st, e in (span("a"), span("b"))
+                    ]
                 )
             ).alias("__x")
-        )
-        .select(
+        ).select(
             F.col("__x.id").alias(id_col),
             F.col("__x.s").alias("__s"),
             F.col("__x.e").alias("__e"),
         )
-        .distinct()
-    )
-    return _es_merge(sp, id_col)
+    else:
+        # cross-corpus: only the ``df`` side is rewritten
+        i, st, e = span("a")
+        sp = ext.select(i.alias(id_col), st.alias("__s"), e.alias("__e"))
+    return _es_merge(sp.distinct(), id_col)
 
 
 def _exact_substring_merged_spans_grams(
@@ -2390,8 +2410,7 @@ def exact_substring_dedup(
         merged = _exact_substring_merged_spans(df, id_col, text_col, min_len, k, guard)
     else:
         raise ValueError(f"impl must be 'anchors' or 'grams', got {impl!r}")
-    t = _es_token_table(df, id_col, text_col)
-    return _es_rewrite(t, merged, id_col, out_col)
+    return _es_rewrite(df, id_col, text_col, merged, out_col)
 
 
 @pinning
@@ -2440,55 +2459,10 @@ def exact_substring_decontaminate(
     guard = _degradation_guard(
         "exact_substring_decontaminate", on_degradation, cap_pairs_per_doc
     )
-    k, w = _es_validate(min_len, k)
-    t = _es_token_table(df, id_col, text_col)
-    tb_t = _es_token_table(bench, bench_id_col, bench_text_col)
-    anch_a = _es_anchor_table(t, id_col, min_len, k, w)
-    anch_b = _es_anchor_table(tb_t, bench_id_col, min_len, k, w)
-    if guard is not None:
-        anch_a = pin(anch_a.persist())
-        anch_b = pin(anch_b.persist())
-        ca = anch_a.groupBy("__h").agg(F.count(F.lit(1)).alias("ca"))
-        cb = anch_b.groupBy("__h").agg(F.count(F.lit(1)).alias("cb"))
-        est = guard(
-            ca.join(cb, "__h").agg(
-                F.sum(F.col("ca") * F.col("cb")).alias("est_pairs"),
-                F.max(F.col("ca") * F.col("cb")).alias("max_bucket"),
-            ),
-            df.count,
-            _ES_ADVICE,
-        )
-        # candidate-volume-gated probe widening of the TRAINING-side
-        # anchors (see _exact_substring_merged_spans — same trade, same
-        # gate); the bench side stays as-is (broadcast-sized)
-        anch_a = widen_for_pairs(anch_a, est)
-
-    a, b = anch_a.alias("a"), anch_b.alias("b")
-    cand = a.join(b, F.col("a.__h") == F.col("b.__h")).select(
-        F.col(f"a.{id_col}").alias("__ida"),
-        F.col("a.__p").alias("__pa"),
-        F.col(f"b.{bench_id_col}").alias("__idb"),
-        F.col("b.__p").alias("__pb"),
+    merged = _exact_substring_merged_spans(
+        df, id_col, text_col, min_len, k, guard, bench, bench_id_col, bench_text_col
     )
-    ta = t.select(
-        F.col(id_col).alias("__ida"),
-        F.col("__toks").alias("__ta"),
-        F.col("__n").alias("__na"),
-    )
-    tbn = tb_t.select(
-        F.col(bench_id_col).alias("__idb"),
-        F.col("__toks").alias("__tb"),
-        F.col("__n").alias("__nb"),
-    )
-    ext = _es_extend(cand.join(ta, "__ida").join(tbn, "__idb"), k, min_len)
-
-    # cross-corpus: only the TRAINING side is rewritten
-    sp = ext.select(
-        F.col("__ida").alias(id_col),
-        (F.col("__pa") - F.col("__l")).cast("int").alias("__s"),
-        (F.col("__pa") + F.lit(k - 1) + F.col("__r")).cast("int").alias("__e"),
-    ).distinct()
-    return _es_rewrite(t, _es_merge(sp, id_col), id_col, out_col)
+    return _es_rewrite(df, id_col, text_col, merged, out_col)
 
 
 def intra_substring_dedup(
@@ -2521,8 +2495,7 @@ def intra_substring_dedup(
     consumes it.  Every array is bound once per row (`_es_bind`) — no HOF
     re-derivation.
     """
-    if min_len < 2:
-        raise ValueError(f"min_len must be ≥ 2, got {min_len}")
+    _es_validate(min_len, None)
     L = min_len
     t = _es_token_table(df, id_col, text_col)
 
@@ -2542,7 +2515,7 @@ def intra_substring_dedup(
         # is the earliest occurrence — every later element is a repeat
         return _es_bind(
             F.array_sort(grams),
-            lambda sg: F.aggregate(
+            lambda sg: _es_union(
                 F.array_sort(
                     F.transform(
                         F.filter(
@@ -2558,53 +2531,19 @@ def intra_substring_dedup(
                             (x["p"] + F.lit(L - 1)).alias("e"),
                         ),
                     )
-                ),
-                F.expr("cast(array() as array<struct<s:int,e:int>>)"),
-                lambda acc, x: F.when(
-                    (F.size(acc) == 0)
-                    | (x["s"] > F.element_at(acc, -1)["e"] + 1),
-                    F.concat(acc, F.array(x)),
-                ).otherwise(
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1),
-                        F.array(
-                            F.struct(
-                                F.element_at(acc, -1)["s"].alias("s"),
-                                F.greatest(
-                                    F.element_at(acc, -1)["e"], x["e"]
-                                ).alias("e"),
-                            )
-                        ),
-                    )
-                ),
+                )
             ),
         )
+
+    def _rewrite(tv, spv):
+        kept, removed = _es_drop_spans(tv, spv)
+        return F.struct(kept.alias("clean"), removed.alias("removed"))
 
     result = _es_bind(
         F.col("__toks"),
         lambda tv: _es_bind(
-            F.when(F.size(tv) >= L, _spans_of(tv)).otherwise(
-                F.expr("cast(array() as array<struct<s:int,e:int>>)")
-            ),
-            lambda spv: F.struct(
-                F.array_join(
-                    F.filter(
-                        tv,
-                        lambda x, i: ~F.exists(
-                            spv,
-                            lambda p: (p["s"] <= i + 1) & (i + 1 <= p["e"]),
-                        ),
-                    ),
-                    " ",
-                ).alias("clean"),
-                F.aggregate(
-                    spv,
-                    F.lit(0),
-                    lambda acc, p: acc + (p["e"] - p["s"] + F.lit(1)),
-                )
-                .cast("bigint")
-                .alias("removed"),
-            ),
+            F.when(F.size(tv) >= L, _spans_of(tv)).otherwise(F.expr(_ES_EMPTY_SPANS)),
+            lambda spv: _rewrite(tv, spv),
         ),
     )
     return t.select(

@@ -17,31 +17,35 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+
+def _one_row_per_key(batch: DataFrame, keys: list[str]) -> DataFrame:
+    """``batch`` with one row per natural key: the min by the remaining
+    columns' struct, a DETERMINISTIC pick (dropDuplicates keeps a
+    partition-order-dependent winner, so two sources listing one key with
+    different values produced run-dependent output until r13)."""
+    val_cols = [c for c in batch.columns if c not in keys]
+    if not val_cols:
+        return batch.dropDuplicates(keys)  # key-only rows: nothing to pick
+    w = Window.partitionBy(*keys).orderBy(
+        F.struct(*[F.col(c) for c in val_cols]).asc()
+    )
+    return (
+        batch.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def anti_join_new_rows(batch: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
     """Rows of ``batch`` whose natural key is absent from ``existing``
     (= ON CONFLICT DO NOTHING insert set).  Batch-internal duplicates
-    collapse DETERMINISTICALLY first (min by the remaining columns'
-    struct — dropDuplicates keeps a partition-order-dependent winner, so
-    two sources listing one key with different values produced
-    run-dependent output until r13; merge_upsert already used this form),
-    mirroring the DB unique constraint."""
-    from pyspark.sql.window import Window
-
-    val_cols = [c for c in batch.columns if c not in keys]
-    if val_cols:
-        w = Window.partitionBy(*keys).orderBy(
-            F.struct(*[F.col(c) for c in val_cols]).asc()
-        )
-        dedup = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    else:
-        dedup = batch.dropDuplicates(keys)  # key-only rows: nothing to pick
-    return dedup.join(existing.select(keys), on=keys, how="left_anti")
+    collapse deterministically first (``_one_row_per_key``), mirroring the
+    DB unique constraint."""
+    return _one_row_per_key(batch, keys).join(
+        existing.select(keys), on=keys, how="left_anti"
+    )
 
 
 def upsert_append(existing: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
@@ -142,20 +146,9 @@ def merge_upsert(existing: DataFrame, batch: DataFrame, keys: list[str]) -> Data
     MATCHED THEN INSERT`` over plain DataFrames (the update-capable
     complement of ``upsert_append``'s insert-if-absent).
 
-    Batch-internal duplicates collapse deterministically first (min by the
-    remaining columns' struct — not dropDuplicates' partition-order
-    winner).  Plan: one anti join + one union.
+    Batch-internal duplicates collapse deterministically first
+    (``_one_row_per_key``).  Plan: one anti join + one union.
     """
-    val_cols = [c for c in batch.columns if c not in keys]
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*keys).orderBy(
-        F.struct(*[F.col(c) for c in val_cols]).asc()
-    )
-    dedup = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    dedup = _one_row_per_key(batch, keys)
     kept = existing.join(dedup.select(keys), on=keys, how="left_anti")
     return kept.unionByName(dedup)

@@ -10500,10 +10500,11 @@ def _curation_s1(spark: SparkSession, d: DataFrame) -> DataFrame:
     Gopher structural gate (q194) over ``(doc_id, text, lang)`` rows.
     Returns the PERSISTED survivor frame: the LM tier reads it several
     times (train + score + lang rejoins + both snapshot cuts) — q206's
-    measured pin, and the choice that still holds at 100 TB.  The CALLER
-    releases it (``ids.release``) once its stage-boundary localCheckpoints
-    materialize.  ONE copy so a threshold tweak cannot diverge the two
-    recipes (r16 review finding)."""
+    measured pin, and the choice that still holds at 100 TB.  It is held
+    (``ids.hold``), so the query boundary frees it if a later tier
+    raises; the CALLER releases it (``ids.release``) once its
+    stage-boundary localCheckpoints materialize.  ONE copy so a threshold
+    tweak cannot diverge the two recipes (r16 review finding)."""
     from re_data_pipeline_spark.operators.membership import domain_blocklist_filter
     from re_data_pipeline_spark.operators.quality import gopher_quality_flags
 
@@ -10537,7 +10538,7 @@ def _curation_s1(spark: SparkSession, d: DataFrame) -> DataFrame:
         & F.col("ok_ellipsis_lines")
         & F.col("ok_alpha_words")
     ).select("doc_id")
-    return s0.join(structural, "doc_id").persist()
+    return hold(s0.join(structural, "doc_id").persist())
 
 
 # Shared curation head of the FineWeb-style recipe (q219 from-scratch,

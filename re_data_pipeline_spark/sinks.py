@@ -22,7 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from re_data_pipeline_spark.operators.upsert import anti_join_new_rows
+from re_data_pipeline_spark.operators.upsert import anti_join_new_rows, retain_active
 
 
 class ParquetAntiJoinSink:
@@ -48,7 +48,7 @@ class ParquetAntiJoinSink:
     def delete_absent(self, current: DataFrame, keys: list[str]) -> None:
         """Delete rows whose key no longer appears in ``current`` (K4 —
         the archival delete)."""
-        survivors = self.read().join(current.select(keys), on=keys, how="left_semi")
+        survivors = retain_active(self.read(), current, keys)
         # materialize BEFORE touching the table (the lazy plan reads the
         # files being replaced) into a sibling dir, so both renames stay on
         # one filesystem.  The old table is renamed aside, not deleted,

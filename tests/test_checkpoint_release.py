@@ -316,8 +316,8 @@ def test_cluster_dedup_pipelines_release_to_baseline(spark):
 def test_cluster_dedup_releases_pair_list_on_cc_raise(spark, monkeypatch):
     """r15 review finding: the pair-list checkpoint release sat on the
     success path only — a connected-components convergence raise left the
-    corpus-scale block pinned with no handle.  Both pipelines now release
-    in a finally."""
+    corpus-scale block pinned with no handle.  The pipelines' ``@pinning``
+    boundary now frees it when CC raises."""
     import pytest
 
     import re_data_pipeline_spark.operators.dedup as dd
@@ -350,7 +350,7 @@ def test_q216_releases_pair_list_on_cc_raise(spark, sf_dir, monkeypatch):
     """r16 ADVICE: q216_cluster_safe_split released its pair-list
     checkpoint on the success path only — a connected_components_bss
     non-convergence raise leaked the corpus-scale block with no handle.
-    The CC call now sits in try/finally, matching q82/q121."""
+    The query boundary now frees it when CC raises, as for q82/q121."""
     import pytest
 
     import re_data_pipeline_spark.operators.dedup as dd
@@ -366,6 +366,33 @@ def test_q216_releases_pair_list_on_cc_raise(spark, sf_dir, monkeypatch):
         QUERIES["q216_cluster_safe_split"](spark, sf_dir)
     leaked = persistent_ids(spark) - before
     assert not leaked, f"pair-list checkpoint leaked on CC raise: {leaked}"
+
+
+def test_curation_releases_survivor_frame_on_lm_raise(spark, sf_dir, monkeypatch):
+    """q219 and q220 persist the shared curation survivor frame
+    (``_curation_s1``) before the LM tier; it was persisted outside the
+    pin protocol, so an LM raise left it cached with no handle.  It is
+    held now, and the query boundary frees it."""
+    import pytest
+
+    import re_data_pipeline_spark.operators.lm as lm
+    from re_data_pipeline_spark.plans.queries import QUERIES
+
+    seen = []
+
+    def boom(df, *a, **k):
+        seen.append(df.count())  # materialize the survivor cache first
+        raise RuntimeError("LM tier failed (forced)")
+
+    monkeypatch.setattr(lm, "ngram_lm_nll", boom)
+    for name in ("q219_fineweb_trace", "q220_incremental_crawl_update"):
+        spark.catalog.clearCache()
+        before = persistent_ids(spark)
+        with pytest.raises(RuntimeError, match="forced"):
+            QUERIES[name](spark, sf_dir)
+        leaked = persistent_ids(spark) - before
+        assert not leaked, f"{name} left the survivor frame cached: {leaked}"
+    assert len(seen) == 2 and all(seen), "the LM stub saw no rows: vacuous check"
 
 
 def test_bench_run_cold_releases_checkpointing_queries(spark, sf_dir):

@@ -18,6 +18,10 @@ parameter, by keyword or by position, anything but its default; an
 expression counts, since its value is chosen at run time.  An option every
 caller leaves at its default is a constant with a second code path behind
 it: delete it, or allowlist it with the measured reason it stays.
+
+Every ``.persist()``, ``.cache()`` and ``.localCheckpoint()`` call in the
+package sits inside a ``pin(...)`` or ``hold(...)`` call, so the
+``ids.pinning`` boundary owns the storage it makes on every exit.
 """
 
 from __future__ import annotations
@@ -35,7 +39,6 @@ ALLOWLIST = {
     "functions/cleaning.py:try_numeric": "SURVEY P17 (numeric coercion)",
     "functions/cleaning.py:day_of_iso": "SURVEY F7 (day from ISO string)",
     "functions/geo.py:point_in_multipolygon_udf": "test oracle (PIP kernels)",
-    "operators/upsert.py:retain_active": "SURVEY K4/J4 (archival delete)",
     "plans/fixtures.py:raw_av_listings": "test oracle (listings ingest)",
     "plans/fixtures.py:raw_omada_listings": "test oracle (listings ingest)",
     "plans/fixtures.py:raw_royal_park_listings": "test oracle (listings ingest)",
@@ -151,3 +154,26 @@ def test_bool_defaults_are_flipped_by_a_caller():
         f"allowlisted but now flipped or gone: "
         f"{sorted(set(FLAG_ALLOWLIST) - never_flipped)}"
     )
+
+
+def test_storage_calls_are_pinned_or_held():
+    unowned = []
+    for path, tree in _non_test_trees():
+        if PACKAGE not in path.parents:
+            continue
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for n in ast.walk(tree):
+            if not (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("persist", "cache", "localCheckpoint")
+            ):
+                continue
+            up = parent.get(n)
+            while up is not None and not (
+                isinstance(up, ast.Call) and getattr(up.func, "id", None) in ("pin", "hold")
+            ):
+                up = parent.get(up)
+            if up is None:
+                unowned.append(f"{path.relative_to(PACKAGE).as_posix()}:{n.lineno}")
+    assert not unowned, f"storage calls outside pin(...)/hold(...): {unowned}"
