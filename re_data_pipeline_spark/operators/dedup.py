@@ -51,6 +51,7 @@ import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from re_data_pipeline_spark.functions.text import (
     doc_fingerprint,
@@ -59,8 +60,10 @@ from re_data_pipeline_spark.functions.text import (
     word_shingles,
     word_shingles_of,
 )
+from re_data_pipeline_spark.operators.graph import arrow_id_array, arrow_id_columns, integral_ids
 from re_data_pipeline_spark.operators.ids import hold, pin, pinning, release
 from re_data_pipeline_spark.operators.layout import (
+    fits_one_task,
     narrow_small_frame,
     widen_for_pairs,
     widen_small_frame,
@@ -461,6 +464,15 @@ def connected_components(
     The transitive closure this computes is what upgrades greedy pair-wise
     dedup (drop id_b of each pair) into true cluster dedup: A~B, B~C drops
     both B and C even when (A,C) was never a candidate pair.
+
+    One task: when the edge checkpoint measures under
+    ``layout.fits_one_task`` and the ids are integral, the same
+    synchronous rounds, capped at ``max_iterations``, run in one task
+    (``coalesce(1)`` + ``mapInArrow``, numpy int64; executors need numpy
+    and pyarrow).  The solver emits the last round's ``__changed`` flag,
+    so the lazy checkpoint and its one count job below pin the result and
+    raise the same non-convergence error.  Above the gate, or when the
+    size is unknown, the distributed loop runs.
     """
     edges = hold(narrow_small_frame(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -469,6 +481,22 @@ def connected_components(
         # materialize: the edge list is referenced 2× per iteration, and its
         # lineage may be an expensive candidate-generation pipeline
     ).localCheckpoint())
+    if fits_one_task(edges) and integral_ids(edges):
+        ids = edges.schema.fields[0]
+        schema = StructType([
+            StructField("node", ids.dataType, ids.nullable),
+            StructField("comp", ids.dataType, ids.nullable),
+            StructField("__changed", BooleanType()),
+        ])
+        new_labels = pin(
+            edges.coalesce(1)
+            .mapInArrow(lambda it: _cc_solve(it, max_iterations), schema)
+            .localCheckpoint(eager=False)
+        )
+        # zero rounds never converge, as in the loop's for/else
+        if max_iterations < 1 or new_labels.where(F.col("__changed")).count():
+            raise _cc_exhausted(max_iterations)
+        return new_labels.select(F.col("node"), F.col("comp").alias("component"))
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -511,11 +539,54 @@ def connected_components(
         # loop exhausted without converging: labels are WRONG for any chain
         # longer than max_iterations — wrong dedup silently keeps duplicates,
         # so fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (graph diameter too large) — raise max_iterations"
-        )
+        raise _cc_exhausted(max_iterations)
     return labels.select(F.col("node"), F.col("comp").alias("component"))
+
+
+def _cc_exhausted(max_iterations: int) -> RuntimeError:
+    return RuntimeError(
+        f"connected_components did not converge in {max_iterations} "
+        "iterations (graph diameter too large) — raise max_iterations"
+    )
+
+
+def _cc_solve(batches, max_iterations: int):
+    """``connected_components``' synchronous min-label rounds over the
+    whole symmetric ``(src, dst)`` edge list in one task → ``(node, comp,
+    __changed)`` with the last round's change flag.  A null id never
+    joins, so it stays an isolated ``(null, null)`` row, as in the loop."""
+    import numpy as np
+    import pyarrow as pa
+
+    cols = arrow_id_columns(batches)
+    if cols is None:
+        return
+    s, s_null, d, d_null, id_type = cols
+    nodes = np.unique(s[~s_null])  # the edge list is symmetric
+    live = ~(s_null | d_null)
+    order = np.argsort(s[live], kind="stable")
+    si = np.searchsorted(nodes, s[live][order])
+    di = np.searchsorted(nodes, d[live][order])
+    starts = np.flatnonzero(np.r_[True, si[1:] != si[:-1]]) if len(si) else si
+    grp = si[starts]
+    comp = nodes.copy()
+    changed = np.zeros(len(nodes), dtype=bool)
+    for _r in range(max_iterations):
+        nmin = np.minimum.reduceat(comp[di], starts) if len(si) else comp[grp]
+        changed = np.zeros(len(nodes), dtype=bool)
+        changed[grp] = nmin < comp[grp]
+        comp[grp] = np.minimum(comp[grp], nmin)
+        if not changed.any():
+            break
+    has_null = bool(s_null.any())
+    yield pa.RecordBatch.from_arrays(
+        [
+            arrow_id_array(nodes, has_null, id_type),
+            arrow_id_array(comp, has_null, id_type),
+            pa.array(np.append(changed, [False] * has_null), pa.bool_()),
+        ],
+        names=["node", "comp", "__changed"],
+    )
 
 
 @pinning

@@ -20,15 +20,97 @@ per round (≤ 1e-6·deg), irrelevant for ranking use.
 Dangling nodes (no out-edges) keep the teleport mass only — the standard
 simplification; redistribute-dangling variants add one broadcast 1-row agg
 per round if mass conservation matters.
+
+Because every step is integer arithmetic, a numpy replay of the rounds is
+bit-exact too: below ``layout.fits_one_task`` the whole loop runs in one
+task (``pagerank_fixed``), as ``dedup.connected_components`` does with
+its min-label rounds.  :func:`integral_ids`, :func:`arrow_id_columns`
+and :func:`arrow_id_array` are the id plumbing both solvers share.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 
 from re_data_pipeline_spark.operators.ids import hold, pin, pinning, release
-from re_data_pipeline_spark.operators.layout import narrow_small_frame
+from re_data_pipeline_spark.operators.layout import fits_one_task, narrow_small_frame
+
+
+def integral_ids(edges: DataFrame) -> bool:
+    """True when both columns of the two-column edge frame share one
+    integral type, so a one-task solver can carry them as numpy int64."""
+    a, b = (f.dataType for f in edges.schema.fields)
+    return a == b and isinstance(a, IntegralType)
+
+
+def arrow_id_columns(batches):
+    """The two id columns of an iterator of Arrow record batches as
+    ``(src, src_null, dst, dst_null, id_type)``: int64 numpy values (null
+    slots 0), boolean null masks and the Arrow id type; None when there
+    are no batches."""
+    import numpy as np
+    import pyarrow as pa
+
+    batches = list(batches)
+    if not batches:
+        return None
+    out = []
+    for i in (0, 1):
+        a = pa.concat_arrays([b.column(i) for b in batches])
+        out += [
+            a.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64),
+            a.is_null().to_numpy(zero_copy_only=False),
+        ]
+    return (*out, batches[0].schema.field(0).type)
+
+
+def arrow_id_array(values, null_tail: bool, id_type):
+    """``values`` as an Arrow array of ``id_type``, plus one trailing null
+    when ``null_tail``."""
+    import numpy as np
+    import pyarrow as pa
+
+    mask = np.zeros(len(values) + null_tail, dtype=bool)
+    mask[len(values):] = True
+    vals = np.append(values, np.zeros(int(null_tail), np.int64))
+    return pa.array(vals, type=pa.int64(), mask=mask).cast(id_type)
+
+
+def _pagerank_solve(batches, iterations: int, scale: int):
+    """``pagerank_fixed``'s rounds over the whole ``(e_src, e_dst)`` edge
+    list in one task.  Same integer steps as the distributed loop: a null
+    endpoint never joins, so a null node keeps the teleport mass only and
+    edges into it lose their share."""
+    import numpy as np
+    import pyarrow as pa
+
+    cols = arrow_id_columns(batches)
+    if cols is None:
+        return
+    s, s_null, d, d_null, id_type = cols
+    nodes = np.unique(np.concatenate([s[~s_null], d[~d_null]]))
+    # every edge with a node source counts toward that source's degree
+    deg = np.bincount(np.searchsorted(nodes, s[~s_null]), minlength=len(nodes))
+    live = ~(s_null | d_null)
+    order = np.argsort(d[live], kind="stable")
+    si = np.searchsorted(nodes, s[live][order])
+    di = np.searchsorted(nodes, d[live][order])
+    starts = np.flatnonzero(np.r_[True, di[1:] != di[:-1]]) if len(di) else di
+    ranks = np.full(len(nodes), scale, dtype=np.int64)
+    teleport = (15 * scale) // 100
+    for _ in range(iterations):
+        inc = np.zeros(len(nodes), dtype=np.int64)
+        if len(di):
+            inc[di[starts]] = np.add.reduceat(ranks[si] // deg[si], starts)
+        ranks = teleport + (85 * inc) // 100
+    has_null = bool(s_null.any() or d_null.any())
+    rank_col = np.append(ranks, [scale if iterations == 0 else teleport] * has_null)
+    yield pa.RecordBatch.from_arrays(
+        [arrow_id_array(nodes, has_null, id_type), pa.array(rank_col.astype(np.int64), pa.int64())],
+        names=["node", "rank_fixed"],
+    )
 
 
 @pinning
@@ -50,7 +132,27 @@ def pagerank_fixed(
     invocation surviving ``clearCache`` for the session's lifetime).  The
     checkpoint the returned ranks read is pinned, so
     ``ids.release_spines`` frees it after materialization: the final
-    round's, or at ``iterations=0`` the node seed's."""
+    round's, or at ``iterations=0`` the node seed's.
+
+    One task: when the edge checkpoint measures under
+    ``layout.fits_one_task`` and both ids share an integral type, every
+    round runs in one task instead (``coalesce(1)`` + ``mapInArrow``,
+    numpy int64; executors need numpy and pyarrow, as for
+    ``ids.assign_prefix_sums``).  The integer steps make it bit-exact,
+    and the result is one eager, pinned checkpoint.  Above the gate, or
+    when the size is unknown, the distributed loop below runs."""
+    e = hold(edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).localCheckpoint())
+    if fits_one_task(e) and integral_ids(e):
+        schema = StructType([
+            StructField("node", e.schema.fields[0].dataType, any(f.nullable for f in e.schema.fields)),
+            # the loop's ``DIV`` is nullable; its seed literal is not
+            StructField("rank_fixed", LongType(), iterations > 0),
+        ])
+        return pin(
+            e.coalesce(1)
+            .mapInArrow(lambda it: _pagerank_solve(it, iterations, scale), schema)
+            .localCheckpoint()
+        )
     # the uniform seed ranks read the node checkpoint: pinned until round
     # 1 materializes, then only the loop reads it
     nodes = pin(narrow_small_frame(
@@ -58,7 +160,6 @@ def pagerank_fixed(
         .union(edges.select(F.col(dst).alias("n")))
         .distinct()
     ).localCheckpoint())
-    e = hold(edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).localCheckpoint())
     deg = e.groupBy("e_src").agg(F.count(F.lit(1)).alias("out_deg"))
     ranks = nodes.withColumn("rank_f", F.lit(scale).cast("long"))
     prev = None  # round r-1's checkpoint — dead once round r materializes

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -34,3 +35,19 @@ def persistent_ids(spark) -> set:
         int(k)
         for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     }
+
+
+def launched_jobs(spark, fn):
+    """Run ``fn()``; return its result and the number of Spark jobs it
+    launched."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

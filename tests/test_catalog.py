@@ -10,31 +10,15 @@ import os
 import subprocess
 import sys
 import time
-import uuid
 
 import pytest
 from pyspark.errors import AnalysisException
 
 from re_data_pipeline_spark import catalog
 from re_data_pipeline_spark.catalog import load_table, table_path
+from tests.conftest import launched_jobs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def launched_jobs(spark, fn):
-    """Run ``fn()``; return its result and the number of Spark jobs it
-    launched."""
-    sc = spark.sparkContext
-    group = f"catalog-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc.setLocalProperty("spark.job.interruptOnCancel", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def write_table(spark, sf_dir, name, sql):
